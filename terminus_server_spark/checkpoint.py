@@ -1,6 +1,15 @@
 """Lineage truncation for iterative loops (path closure, components,
 k-core, PageRank, commit-DAG walk).
 
+Every checkpoint goes through one helper, ``_checkpoint``, which holds
+the reliable/local choice; ``loop_checkpoint`` (eager),
+``loop_checkpoint_count`` / ``loop_checkpoint_sum`` (lazy, fused with
+the loop's fixpoint probe) and ``plan_checkpoint`` (lazy) only add
+their action.  A checkpointed frame is a single ``LogicalRDD`` over
+the checkpointed RDD, so ``release`` can drop exactly the blocks one
+checkpoint wrote once its maker is done with them (the semi-naive
+kernel in ``operators.path`` releases every round this way).
+
 Default is ``localCheckpoint`` — executor-local block storage, the
 fastest way to stop a loop's plan growing exponentially.  Its blocks
 die with the executor, so on preemption-prone clusters (spot
@@ -11,8 +20,8 @@ executor kills the job instead of recomputing.  Flip
     spark.conf.set("spark.terminus_server_spark.checkpointDir", "hdfs://...")  # optional
 
 to write reliable checkpoints to the (fault-tolerant) checkpoint dir
-instead — slower per iteration, survives executor loss.  The r1
-verdict asked for exactly this switch.
+instead — slower per iteration, survives executor loss.  The setting
+reaches every loop, min-plus path doubling included.
 """
 
 from __future__ import annotations
@@ -80,22 +89,27 @@ def _strip_exploded_stats(df: DataFrame) -> DataFrame:
         return df
     spark = df.sparkSession
     out = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False
+        jdf.queryExecution().analyzed().rdd(), jdf.schema(), False
     )
     return DataFrame(out, spark)
 
 
-def loop_checkpoint(df: DataFrame, size_hint: int | None = None) -> DataFrame:
-    """Eagerly checkpoint one loop iteration's result; chain as
-    ``.transform(loop_checkpoint)``."""
+def _checkpoint(df: DataFrame, size_hint: int | None, eager: bool) -> DataFrame:
+    """The one place that picks reliable or local checkpointing."""
     df = _sized(df, size_hint)
     spark = df.sparkSession
     if spark.conf.get(RELIABLE_CONF, "false").lower() == "true":
         sc = spark.sparkContext
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(spark.conf.get(DIR_CONF, _DEFAULT_DIR))
-        return _strip_exploded_stats(df.checkpoint(eager=True))
-    return _strip_exploded_stats(df.localCheckpoint(eager=True))
+        return _strip_exploded_stats(df.checkpoint(eager=eager))
+    return _strip_exploded_stats(df.localCheckpoint(eager=eager))
+
+
+def loop_checkpoint(df: DataFrame, size_hint: int | None = None) -> DataFrame:
+    """Eagerly checkpoint one loop iteration's result; chain as
+    ``.transform(loop_checkpoint)``."""
+    return _checkpoint(df, size_hint, eager=True)
 
 
 def loop_checkpoint_count(
@@ -109,16 +123,7 @@ def loop_checkpoint_count(
     second job over the just-materialized blocks doubles the
     per-round job count — pure driver/scheduler overhead that
     dominates small-data wall time and adds up on deep loops."""
-    df = _sized(df, size_hint)
-    spark = df.sparkSession
-    if spark.conf.get(RELIABLE_CONF, "false").lower() == "true":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(spark.conf.get(DIR_CONF, _DEFAULT_DIR))
-        out = df.checkpoint(eager=False)
-    else:
-        out = df.localCheckpoint(eager=False)
-    out = _strip_exploded_stats(out)
+    out = _checkpoint(df, size_hint, eager=False)
     return out, out.count()
 
 
@@ -131,16 +136,7 @@ def loop_checkpoint_sum(
     "is the frontier empty"."""
     from pyspark.sql import functions as F
 
-    df = _sized(df, size_hint)
-    spark = df.sparkSession
-    if spark.conf.get(RELIABLE_CONF, "false").lower() == "true":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(spark.conf.get(DIR_CONF, _DEFAULT_DIR))
-        out = df.checkpoint(eager=False)
-    else:
-        out = df.localCheckpoint(eager=False)
-    out = _strip_exploded_stats(out)
+    out = _checkpoint(df, size_hint, eager=False)
     total = out.agg(F.sum(col)).collect()[0][0]
     return out, int(total or 0)
 
@@ -152,14 +148,18 @@ def plan_checkpoint(df: DataFrame, size_hint: int | None = None) -> DataFrame:
     composing several such steps multiplies the leaf scans
     exponentially.  A lazy checkpoint makes the frame a single
     materialized leaf; blocks are written on first action."""
-    df = _sized(df, size_hint)
-    spark = df.sparkSession
-    if spark.conf.get(RELIABLE_CONF, "false").lower() == "true":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(spark.conf.get(DIR_CONF, _DEFAULT_DIR))
-        return _strip_exploded_stats(df.checkpoint(eager=False))
-    return _strip_exploded_stats(df.localCheckpoint(eager=False))
+    return _checkpoint(df, size_hint, eager=False)
+
+
+def release(df: DataFrame) -> None:
+    """Drop the blocks behind a frame returned by one of the
+    checkpoints above.  The frame is a single ``LogicalRDD`` over the
+    checkpointed RDD, so unpersisting that RDD frees exactly the
+    blocks this checkpoint wrote and nothing upstream.  Only the code
+    that made the checkpoint may call this, once nothing will read
+    the frame again; frames checkpointed FROM it keep their own
+    blocks and stay readable."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 from contextlib import contextmanager

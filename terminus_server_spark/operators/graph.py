@@ -23,7 +23,7 @@ from terminus_server_spark.checkpoint import (
     plan_checkpoint,
 )
 
-from terminus_server_spark.operators.path import no_constraint_propagation
+from terminus_server_spark.operators.path import no_constraint_propagation, semi_naive
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -760,12 +760,14 @@ def quadrilateral_count(edges: DataFrame) -> DataFrame:
 def shortest_hops(
     edges: DataFrame,
     sources: DataFrame,
-    max_iters: int = 50,
+    max_iters: int | None = None,
     assume_undirected: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: (source, node, hops) minimum hop counts from
     each source node.  sources: DataFrame(node).  Semi-naive frontier
-    expansion like path closure, but keyed by (source, node).
+    expansion like path closure (:func:`path.semi_naive`), but keyed
+    by (source, node).  ``max_iters`` is a hop radius for queries
+    that ask for a bounded ball; None runs to the fixpoint.
 
     ``assume_undirected``: the caller guarantees ``edges`` is
     symmetric — then BFS layers are exact distance classes, a level-d
@@ -774,53 +776,23 @@ def shortest_hops(
     cumulative reached set (frontier-sized rounds at any depth; the
     general directed case keeps the full anti-join because a back
     edge may jump to any earlier level)."""
-    with no_constraint_propagation(edges.sparkSession):
-        e = edges.select("src", "dst").distinct().transform(loop_checkpoint)
-        frontier, n_src = loop_checkpoint_count(
-            sources.select(
-                F.col("node").alias("source"), F.col("node").alias("node"), F.lit(0).alias("hops")
-            )
-        )
-        layers = [frontier]
-        with loop_tuning(edges.sparkSession, n_src):
-            layers = _hops_loop(e, frontier, layers, max_iters, assume_undirected)
-        reached = layers[0]
-        for layer in layers[1:]:
-            reached = reached.union(layer)
-    return reached
-
-
-def _hops_loop(e, frontier, layers, max_iters, assume_undirected=False):
-    reached_keys = frontier.select("source", "node")
-    with no_constraint_propagation(e.sparkSession):
-        for _ in range(max_iters):
-            grown = (
-                frontier.join(e, frontier["node"] == e["src"])
-                .select("source", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
-            )
-            if assume_undirected:
-                anti = layers[-1].select("source", "node")
-                if len(layers) >= 2:
-                    anti = anti.union(layers[-2].select("source", "node"))
-            else:
-                anti = reached_keys
-            new = (
-                grown.join(anti, ["source", "node"], "left_anti")
-                .groupBy("source", "node")
-                .agg(F.min("hops").alias("hops"))
-            )
-            new, n_new = loop_checkpoint_count(new)
-            if n_new == 0:
-                break
-            layers.append(new)
-            if not assume_undirected:
-                reached_keys = reached_keys.union(new.select("source", "node"))
-            frontier = new
-    return layers
+    return semi_naive(
+        edges.select("src", "dst").distinct(),
+        lambda e: sources.select(
+            F.col("node").alias("source"), F.col("node").alias("node"), F.lit(0).alias("hops")
+        ),
+        lambda f, e: f.join(e, f["node"] == e["src"]).select(
+            "source", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
+        ),
+        ["source", "node"],
+        [F.min("hops").alias("hops")],
+        recent_only=assume_undirected,
+        max_rounds=max_iters,
+    )
 
 
 def landmark_distance_audit(
-    edges: DataFrame, landmarks: DataFrame, queries: DataFrame, max_iters: int = 50
+    edges: DataFrame, landmarks: DataFrame, queries: DataFrame
 ) -> DataFrame:
     """(u, v, est, exact, rel_err): landmark-labeling distance
     estimation (the ALT / 2-hop-labeling family) with its own exact
@@ -845,7 +817,7 @@ def landmark_distance_audit(
 
     ``landmarks``: (node); ``queries``: (u, v) pairs to estimate."""
     und = _symmetrize(edges)
-    lab = shortest_hops(und, landmarks, max_iters, assume_undirected=True)
+    lab = shortest_hops(und, landmarks, assume_undirected=True)
     du = lab.select(
         F.col("source").alias("_L"), F.col("node").alias("u"), F.col("hops").alias("_du")
     )
@@ -859,8 +831,7 @@ def landmark_distance_audit(
         .agg(F.min(F.col("_du") + F.col("_dv")).alias("est"))
     )
     exact = shortest_hops(
-        und, queries.select(F.col("u").alias("node")).distinct(), max_iters,
-        assume_undirected=True,
+        und, queries.select(F.col("u").alias("node")).distinct(), assume_undirected=True
     ).select(
         F.col("source").alias("u"), F.col("node").alias("v"), F.col("hops").alias("exact")
     )
@@ -1034,7 +1005,7 @@ def betweenness_incremental(
         .union(added_edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    d = shortest_hops(und_old, eps, max_iters, assume_undirected=True)
+    d = shortest_hops(und_old, eps, assume_undirected=True)
     big = F.lit(1 << 40)
     du = d.select(
         F.col("source").alias("_u"), F.col("node").alias("pivot"), F.col("hops").alias("_du")
@@ -2403,7 +2374,7 @@ def scc_metadata(
     )
 
 
-def scc_by_closure(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def scc_by_closure(edges: DataFrame) -> DataFrame:
     """(node, component): SCCs via the full mutual-reachability
     closure — R = plus-closure ∪ identity joined with its transpose
     on both endpoints.  O(|closure|) = O(n²) on one big SCC, so this
@@ -2422,7 +2393,7 @@ def scc_by_closure(edges: DataFrame, max_iters: int = 50) -> DataFrame:
         .distinct()
     )
     reach = (
-        transitive_closure(base, max_iters=max_iters)
+        transitive_closure(base)
         .union(nodes.select(F.col("n").alias("src"), F.col("n").alias("dst")))
         .distinct()
     ).transform(loop_checkpoint)
@@ -3567,9 +3538,7 @@ def random_walks(
     return out
 
 
-def distance_stats(
-    edges: DataFrame, sources: DataFrame | None = None, max_iters: int = 50
-) -> DataFrame:
+def distance_stats(edges: DataFrame, sources: DataFrame | None = None) -> DataFrame:
     """(node, n_reached, ecc, closeness): exact per-node distance
     statistics over DIRECTED reachability — closeness centrality
     (classic (r−1)/Σd within the reachable set, 0 for sinks) and
@@ -3586,7 +3555,7 @@ def distance_stats(
             .union(edges.select(F.col("dst").alias("node")))
             .distinct()
         )
-    d = shortest_hops(edges, sources, max_iters)
+    d = shortest_hops(edges, sources)
     r = F.count(F.lit(1))
     s = F.sum("hops")
     return (
@@ -3878,7 +3847,7 @@ def bipartite_check(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     und = loop_checkpoint(_symmetrize(edges))
     comp = connected_components(und, max_iters)
     roots = comp.select(F.col("component").alias("node")).distinct()
-    hops = shortest_hops(und, roots, max_iters, assume_undirected=True).select(
+    hops = shortest_hops(und, roots, assume_undirected=True).select(
         F.col("node"), (F.col("hops") % 2).alias("_par")
     )
     labeled = comp.join(hops, "node")

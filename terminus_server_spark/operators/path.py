@@ -6,29 +6,38 @@ scale translation is *set-at-a-time*: compile the pattern to an
 ``(src, dst, hops)`` DataFrame; closure operators (plus/star) run
 **semi-naive iteration** — join only the newest frontier against the
 base edges each step, dedupe against the accumulated result, stop on
-an empty frontier.
+an empty frontier.  :func:`semi_naive` is that loop, written once; the
+closures here, the multi-source BFS in ``operators.graph`` and the
+distributed commit-DAG walk in ``versioning.dag`` are its callers.
 
 Scale notes (100 TB):
-- frontier/accumulator are ``localCheckpoint``-ed every iteration to
-  cut lineage (otherwise plan depth grows linearly and the optimizer
-  chokes by iteration ~20);
-- the per-step join shuffles on ``dst``/``src`` — base edges are
-  repartitioned once on ``src`` and reused so every iteration's join
-  key is pre-partitioned;
-- ``max_iters`` bounds pathological cyclic graphs; hop counts make
-  the result usable for shortest-path analytics.
+- the edge set once and every round's layer are checkpointed to cut
+  lineage (otherwise plan depth grows linearly and the optimizer
+  chokes by iteration ~20); layers are folded into a few runs so the
+  dedup anti-join reads few leaves at any depth, and the loop
+  releases every block but the answer's, so a closure holds one
+  block set;
+- the dedup anti-join against everything reached makes each round
+  add at least one new key from a finite set, so the loop runs to a
+  true fixpoint on any graph, cycles included — there is no round
+  cap to truncate an answer; hop counts make the result usable for
+  shortest-path analytics.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import reduce
+from typing import Callable
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from terminus_server_spark.checkpoint import (
+    _checkpoint,
     loop_checkpoint,
     loop_checkpoint_count,
     loop_tuning,
+    release,
 )
 
 from terminus_server_spark.woql import path_ast as P
@@ -54,55 +63,144 @@ def _dedup_min_hops(df: DataFrame) -> DataFrame:
     return df.groupBy("src", "dst").agg(F.min("hops").alias("hops"))
 
 
-def transitive_closure(
-    edges: DataFrame, max_iters: int = 50, with_hops: bool = False
+# A closure's reached state is a stack of checkpointed runs of
+# layers; once _FOLD runs of one length pile up they are folded into
+# one (a base-_FOLD counter), so the anti-join reads few leaves and a
+# row is rewritten about log_FOLD(rounds) times however deep the loop
+# runs.
+_FOLD = 8
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def semi_naive(
+    edges: DataFrame,
+    seed: Callable[[DataFrame], DataFrame],
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    key: list[str],
+    agg: list[Column],
+    recent_only: bool = False,
+    max_rounds: int | None = None,
 ) -> DataFrame:
+    """Semi-naive fixpoint, the one frontier loop of the engine.
+
+    ``edges`` is checkpointed once; ``seed(edges)`` is round 0's
+    layer; each round ``step(frontier, edges)`` proposes the next
+    rows from the last layer, the ones whose ``key`` was already
+    reached are anti-joined away, and the rest are grouped by ``key``
+    under ``agg`` (``min`` of the payload columns) into the next
+    layer.  A layer therefore holds exactly the keys first reached in
+    its round.  An empty layer ends the loop: every round adds a new
+    key from a finite set, so the loop always terminates.
+
+    ``recent_only``: the caller promises ``edges`` is symmetric, so a
+    round can only re-reach keys of the last two layers and the
+    anti-join reads those instead of the whole reached state.  Since
+    termination then rests on that promise, a loop that outruns the
+    edge count (a bound on any BFS depth over symmetric edges) raises.
+    ``max_rounds`` is a hop radius for queries that ask for one.
+
+    A round is one Spark job that checkpoints its layer and counts
+    it; the layer is the next round's frontier and joins the reached
+    state as a run of its own, and runs are folded as ``_FOLD``
+    describes.  The answer is the runs folded into one checkpointed
+    frame (one more job when more than one run is left).  Every
+    other block the call made, the edge set included, is released as
+    soon as it is dead: a call leaves exactly one block set behind,
+    the answer it returns."""
+    spark = edges.sparkSession
+    base = frontier = prev = answer = None
+    runs: list[tuple[DataFrame, int, int]] = []  # (frame, layers, rows)
+    try:
+        with no_constraint_propagation(spark):
+            base, n_edges = loop_checkpoint_count(edges)
+            frontier, n_new = loop_checkpoint_count(seed(base))
+            runs.append((frontier, 1, n_new))
+            rounds = 0
+            with loop_tuning(spark, max(n_new, 1)):
+                while n_new and (max_rounds is None or rounds < max_rounds):
+                    rounds += 1
+                    if recent_only and rounds > n_edges + 1:
+                        raise RuntimeError(
+                            f"semi_naive: {rounds} rounds over {n_edges} "
+                            "edges; recent_only requires symmetric edges"
+                        )
+                    anti = [frontier, prev] if recent_only else [f for f, _, _ in runs]
+                    reached = _union([f for f in anti if f is not None]).select(*key)
+                    # checkpoint + empty-layer probe fused into one job
+                    layer, n_new = loop_checkpoint_count(
+                        step(frontier, base)
+                        .join(reached, key, "left_anti")
+                        .groupBy(*key)
+                        .agg(*agg)
+                    )
+                    dead = frontier
+                    if recent_only:
+                        dead, prev = prev, frontier
+                    if dead is not None and not any(dead is f for f, _, _ in runs):
+                        release(dead)
+                    frontier = layer
+                    if n_new:
+                        runs.append((layer, 1, n_new))
+                    while len(runs) >= _FOLD and runs[-_FOLD][1] == runs[-1][1]:
+                        tail, runs = runs[-_FOLD:], runs[:-_FOLD]
+                        rows = sum(r for _, _, r in tail)
+                        runs.append((
+                            loop_checkpoint(_union([f for f, _, _ in tail]), rows),
+                            sum(n for _, n, _ in tail),
+                            rows,
+                        ))
+                        for f, _, _ in tail:
+                            if f is not frontier and f is not prev:
+                                release(f)
+            if len(runs) == 1:
+                answer = runs[0][0]
+            else:
+                answer = loop_checkpoint(
+                    _union([f for f, _, _ in runs]), sum(r for _, _, r in runs)
+                )
+            return answer
+    finally:
+        for df in [base, frontier, prev, *(f for f, _, _ in runs)]:
+            if df is not None and df is not answer:
+                release(df)
+
+
+def _not_null(edges: DataFrame) -> DataFrame:
+    return edges.select("src", "dst").where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
+
+
+def _hop(frontier: DataFrame, edges: DataFrame, *payload: Column) -> DataFrame:
+    """One (src, dst, hops, *payload) step of a closure frontier;
+    ``payload`` reads the frontier as ``f`` and the edges as ``e``."""
+    return (
+        frontier.alias("f")
+        .join(edges.alias("e"), F.col("f.dst") == F.col("e.src"))
+        .select(
+            F.col("f.src").alias("src"),
+            F.col("e.dst").alias("dst"),
+            (F.col("f.hops") + 1).alias("hops"),
+            *payload,
+        )
+    )
+
+
+def transitive_closure(edges: DataFrame, with_hops: bool = False) -> DataFrame:
     """plus-closure: all (src, dst) connected by >=1 edge.
 
     Semi-naive: frontier_{k+1} = frontier_k ⋈ edges − reached.
     """
-    spark = edges.sparkSession
-    with no_constraint_propagation(spark):
-        base = edges.select("src", "dst").where(
-            F.col("src").isNotNull() & F.col("dst").isNotNull()
-        )
-        # checkpoint the edge set once; each iteration's join shuffles
-        # it on src and AQE reuses the exchange across iterations
-        base = base.transform(loop_checkpoint)
-
-        # BFS layering: each frontier is anti-joined against everything
-        # seen, so layer k holds exactly the pairs first reached in k
-        # hops — min-hops falls out for free and `reached` stays a
-        # FLAT union of checkpointed layers (no re-dedup, no
-        # re-checkpoint of the accumulator).
-        frontier, n_base = loop_checkpoint_count(base.withColumn("hops", F.lit(1)))
-        layers = [frontier]
-        reached_keys = frontier.select("src", "dst")
-        with loop_tuning(spark, n_base):
-            for _ in range(max_iters):
-                grown = (
-                    frontier.alias("f")
-                    .join(base.alias("e"), F.col("f.dst") == F.col("e.src"))
-                    .select(
-                        F.col("f.src").alias("src"),
-                        F.col("e.dst").alias("dst"),
-                        (F.col("f.hops") + 1).alias("hops"),
-                    )
-                )
-                # checkpoint + empty-frontier probe fused into one job
-                new, n_new = loop_checkpoint_count(
-                    grown.join(reached_keys, on=["src", "dst"], how="left_anti")
-                    .groupBy("src", "dst")
-                    .agg(F.min("hops").alias("hops"))
-                )
-                if n_new == 0:
-                    break
-                layers.append(new)
-                reached_keys = reached_keys.union(new.select("src", "dst"))
-                frontier = new
-        reached = layers[0]
-        for layer in layers[1:]:
-            reached = reached.unionByName(layer)
+    reached = semi_naive(
+        _not_null(edges),
+        lambda e: e.withColumn("hops", F.lit(1)),
+        _hop,
+        ["src", "dst"],
+        [F.min("hops").alias("hops")],
+    )
     return reached if with_hops else reached.select("src", "dst")
 
 
@@ -127,17 +225,13 @@ def transitive_closure_doubling(
         # size-estimate strip matters doubly here — each doubling
         # round self-joins the checkpointed closure, the exact shape
         # that squares the propagated estimate per round
-        from terminus_server_spark.checkpoint import _strip_exploded_stats
-
-        out = _strip_exploded_stats(df.localCheckpoint(eager=False))
+        out = _checkpoint(df, None, eager=False)
         row = out.agg(F.count(F.lit(1)), F.sum("hops"), F.max("hops")).collect()[0]
         return out, (row[0], row[1]), row[2]
 
     with no_constraint_propagation(spark):
         r, stats, max_hops = ckpt_stats(
-            edges.select("src", "dst").where(
-                F.col("src").isNotNull() & F.col("dst").isNotNull()
-            )
+            _not_null(edges)
             .withColumn("hops", F.lit(1))
             .groupBy("src", "dst")
             .agg(F.min("hops").alias("hops"))
@@ -174,10 +268,7 @@ def transitive_closure_doubling(
 
 
 def anchored_closure(
-    edges: DataFrame,
-    anchors: DataFrame,
-    max_iters: int = 50,
-    with_zero: bool = False,
+    edges: DataFrame, anchors: DataFrame, with_zero: bool = False
 ) -> DataFrame:
     """(src, dst, hops): min-repetition closure pairs whose ``src``
     is in ``anchors`` (one ``node`` column) — the ``from:``-bound
@@ -189,61 +280,25 @@ def anchored_closure(
     Plus semantics: hops >= 1, INCLUDING cycle returns to the anchor
     (the seed is the anchors' one-step successors, so the anchor
     itself is reachable at hops >= 1 through a cycle — identical to
-    filtering the full plus-closure by src).  ``with_zero`` adds the
-    hops-0 self row and drops any costlier self pair (star) — ONLY
-    for anchors that appear in the edge universe, matching the
-    un-anchored plan exactly: ``compile_path(Star)`` derives its
-    zero rows from the graph's nodes, so an anchor absent from the
-    graph must yield zero rows, not a phantom (a, a, 0)."""
-    spark = edges.sparkSession
-    with no_constraint_propagation(spark):
-        base = loop_checkpoint(
-            edges.select("src", "dst").where(
-                F.col("src").isNotNull() & F.col("dst").isNotNull()
-            )
+    filtering the full plus-closure by src).  ``with_zero`` seeds the
+    hops-0 self row instead, so the anti-join drops any costlier self
+    pair (star) — ONLY for anchors that appear in the edge universe,
+    matching the un-anchored plan exactly: ``compile_path(Star)``
+    derives its zero rows from the graph's nodes, so an anchor absent
+    from the graph must yield zero rows, not a phantom (a, a, 0)."""
+    a = anchors.select(F.col("node").alias("src")).distinct()
+
+    def seed(e: DataFrame) -> DataFrame:
+        if not with_zero:
+            return e.join(a, "src").select("src", "dst", F.lit(1).alias("hops"))
+        universe = e.select(F.col("src").alias("n")).union(e.select("dst"))
+        return a.join(universe, a["src"] == universe["n"], "left_semi").select(
+            "src", F.col("src").alias("dst"), F.lit(0).alias("hops")
         )
-        a = anchors.select(F.col("node").alias("src")).distinct()
-        frontier, n0 = loop_checkpoint_count(
-            base.join(a, "src").select("src", "dst", F.lit(1).alias("hops"))
-        )
-        layers = [frontier]
-        reached_keys = frontier.select("src", "dst")
-        with loop_tuning(spark, max(n0, 1)):
-            for _ in range(max_iters - 1):
-                grown = (
-                    frontier.alias("f")
-                    .join(base.alias("e"), F.col("f.dst") == F.col("e.src"))
-                    .select(
-                        F.col("f.src").alias("src"),
-                        F.col("e.dst").alias("dst"),
-                        (F.col("f.hops") + 1).alias("hops"),
-                    )
-                )
-                new, n_new = loop_checkpoint_count(
-                    grown.join(reached_keys, ["src", "dst"], "left_anti")
-                    .groupBy("src", "dst")
-                    .agg(F.min("hops").alias("hops"))
-                )
-                if n_new == 0:
-                    break
-                layers.append(new)
-                reached_keys = reached_keys.union(new.select("src", "dst"))
-                frontier = new
-        out = layers[0]
-        for layer in layers[1:]:
-            out = out.unionByName(layer)
-        if with_zero:
-            universe = base.select(F.col("src").alias("n")).union(
-                base.select(F.col("dst"))
-            ).distinct()
-            zero = (
-                a.join(universe, a["src"] == universe["n"], "left_semi")
-                .select("src", F.col("src").alias("dst"), F.lit(0).alias("hops"))
-            )
-            out = zero.unionByName(
-                out.join(zero.select("src", "dst"), ["src", "dst"], "left_anti")
-            )
-    return out
+
+    return semi_naive(
+        _not_null(edges), seed, _hop, ["src", "dst"], [F.min("hops").alias("hops")]
+    )
 
 
 def _seq_into_closure(
@@ -385,7 +440,7 @@ def compile_path(
     raise NotImplementedError(f"path pattern {type(pattern).__name__}")
 
 
-def trace_paths(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def trace_paths(edges: DataFrame) -> DataFrame:
     """(src, dst, hops, path): the full node chain for every
     plus-closure pair, as 'a>b>c' strings — the projection of the
     reference's bound path objects (path.pl binds an edge list per
@@ -396,45 +451,17 @@ def trace_paths(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     broken by lexicographically smallest chain, a total order both
     engines share).  Intended for hierarchy-shaped graphs where paths
     are short; the accumulator row width grows with hop count."""
-    spark = edges.sparkSession
-    with no_constraint_propagation(spark):
-        base = (
-            edges.select("src", "dst")
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .transform(loop_checkpoint)
-        )
-        frontier, n_base = loop_checkpoint_count(
-            base.select(
-                "src", "dst", F.lit(1).alias("hops"),
-                F.concat_ws(">", F.col("src"), F.col("dst")).alias("path"),
-            )
-        )
-        layers = [frontier]
-        reached = frontier.select("src", "dst")
-        with loop_tuning(spark, n_base):
-            for _ in range(max_iters):
-                grown = (
-                    frontier.alias("f")
-                    .join(base.alias("e"), F.col("f.dst") == F.col("e.src"))
-                    .select(
-                        F.col("f.src").alias("src"),
-                        F.col("e.dst").alias("dst"),
-                        (F.col("f.hops") + 1).alias("hops"),
-                        F.concat_ws(">", F.col("f.path"), F.col("e.dst")).alias("path"),
-                    )
-                )
-                new = (
-                    grown.join(reached, on=["src", "dst"], how="left_anti")
-                    .groupBy("src", "dst")
-                    .agg(F.min("hops").alias("hops"), F.min("path").alias("path"))
-                )
-                new, n_new = loop_checkpoint_count(new)
-                if n_new == 0:
-                    break
-                layers.append(new)
-                reached = reached.union(new.select("src", "dst"))
-                frontier = new
-        out = layers[0]
-        for layer in layers[1:]:
-            out = out.unionByName(layer)
-    return out
+
+    def step(f: DataFrame, e: DataFrame) -> DataFrame:
+        return _hop(f, e, F.concat_ws(">", F.col("f.path"), F.col("e.dst")).alias("path"))
+
+    return semi_naive(
+        _not_null(edges),
+        lambda e: e.select(
+            "src", "dst", F.lit(1).alias("hops"),
+            F.concat_ws(">", F.col("src"), F.col("dst")).alias("path"),
+        ),
+        step,
+        ["src", "dst"],
+        [F.min("hops").alias("hops"), F.min("path").alias("path")],
+    )

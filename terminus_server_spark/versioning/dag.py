@@ -11,19 +11,20 @@ the graph: a ``commits`` DataFrame
      committed_at timestamp_ntz)
 
 where a merge commit simply carries two parent ids.  ``log_walk`` is
-the ancestors-of-head traversal ``git log`` performs — semi-naive
-BFS over the parent edges (the same frontier/anti-join shape as path
-closure), yielding each ancestor once with its minimum distance from
-the head.  Commit graphs are tiny next to the data they version, but
-the walk is still expressed as DataFrame joins so a pathological
-million-commit monorepo history would distribute fine.
+the ancestors-of-head traversal ``git log`` performs — a BFS over the
+parent edges yielding each ancestor once with its minimum distance
+from the head.  Commit graphs are tiny next to the data they version,
+so the walk runs on the driver (``_bfs_depths``); a pathological
+million-commit monorepo history falls back to the engine's
+semi-naive loop (``operators.path.semi_naive``).  Both walks run to
+the fixpoint: a commit DAG is acyclic and finite, so no depth cap.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from terminus_server_spark.checkpoint import loop_checkpoint_count, loop_tuning
+from terminus_server_spark.operators.path import semi_naive
 
 
 def parent_edges(commits: DataFrame) -> DataFrame:
@@ -63,74 +64,62 @@ def _collect_dag(commits: DataFrame):
     return ids, parents
 
 
-def log_walk(commits: DataFrame, head: str, max_depth: int = 1000) -> DataFrame:
+def log_walk(commits: DataFrame, head: str) -> DataFrame:
     """(commit_id, depth): every ancestor of ``head`` (inclusive,
     depth 0) with its minimum parent-hop distance — the commit set
     ``git log <head>`` prints, with merge parents both followed.
 
     Driver-side BFS under ``_DRIVER_WALK_LIMIT`` (see _collect_dag);
-    the distributed semi-naive loop (one frontier hop per round,
-    anti-join the reached set) remains the fallback for pathological
-    histories.  ``max_depth`` bounds runaway graphs (cycles cannot
-    occur in a commit DAG but defensive caps are free)."""
+    the distributed semi-naive loop remains the fallback for
+    pathological histories."""
     dag = _collect_dag(commits)
     if dag is not None:
-        ids, parents = dag
-        depth = _bfs_depths(ids, parents, head, max_depth)
+        depth = _bfs_depths(*dag, [head])
         return commits.sparkSession.createDataFrame(
             list(depth.items()), "commit_id string, depth int"
         )
-    return _log_walk_distributed(commits, head, max_depth)
+    return _log_walk_distributed(commits, [head])
 
 
-def _bfs_depths(ids, parents, head: str, max_depth: int) -> dict:
-    depth: dict[str, int] = {head: 0} if head in ids else {}
-    frontier = list(depth)
-    for d in range(1, max_depth + 1):
+def _bfs_depths(ids, parents, heads: list[str]) -> dict:
+    """{commit_id: depth} of every ancestor of any of ``heads``
+    (inclusive, depth 0), minimum over the heads."""
+    depth: dict[str, int] = {h: 0 for h in heads if h in ids}
+    frontier, d = list(depth), 0
+    while frontier:
+        d += 1
         nxt = []
         for c in frontier:
             for p in parents.get(c, []):
                 if p not in depth:
                     depth[p] = d
                     nxt.append(p)
-        if not nxt:
-            break
         frontier = nxt
     return depth
 
 
-def _log_walk_distributed(commits: DataFrame, head: str, max_depth: int = 1000) -> DataFrame:
-    edges = parent_edges(commits)
-    frontier = commits.where(F.col("commit_id") == head).select(
-        "commit_id", F.lit(0).alias("depth")
+def _log_walk_distributed(commits: DataFrame, heads: list[str]) -> DataFrame:
+    """(commit_id, depth) of :func:`_bfs_depths`, as a semi-naive loop
+    over the parent edges."""
+    return semi_naive(
+        parent_edges(commits),
+        lambda e: commits.where(F.col("commit_id").isin(heads)).select(
+            "commit_id", F.lit(0).alias("depth")
+        ),
+        lambda f, e: f.join(e, f["commit_id"] == e["child"]).select(
+            F.col("parent").alias("commit_id"), (F.col("depth") + 1).alias("depth")
+        ),
+        ["commit_id"],
+        [F.min("depth").alias("depth")],
     )
-    reached = frontier
-    # a commit graph is METADATA-scale (the reference keeps it in a
-    # tiny graph too) — run the whole walk at 1-partition width with
-    # AQE off, like every other fixpoint loop (checkpoint.loop_tuning)
-    with loop_tuning(commits.sparkSession, 1):
-        for _ in range(max_depth):
-            nxt = (
-                frontier.join(edges, frontier["commit_id"] == edges["child"])
-                .select(F.col("parent").alias("commit_id"), (F.col("depth") + 1).alias("depth"))
-                .join(reached.select("commit_id"), "commit_id", "left_anti")
-                .groupBy("commit_id")
-                .agg(F.min("depth").alias("depth"))
-            )
-            nxt, n_new = loop_checkpoint_count(nxt)
-            if n_new == 0:
-                break
-            reached = reached.unionByName(nxt)
-            frontier = nxt
-    return reached
 
 
-def log_from(commits: DataFrame, head: str, max_depth: int = 1000) -> DataFrame:
+def log_from(commits: DataFrame, head: str) -> DataFrame:
     """The full log view from a ref: ancestors of ``head`` joined back
     to their metadata, ordered by (depth, commit_id) — what the
     reference's db_log endpoint returns for a branch, including the
     second parent line a merge introduces."""
-    walk = log_walk(commits, head, max_depth)
+    walk = log_walk(commits, head)
     return (
         commits.join(walk, "commit_id")
         .select(
@@ -145,9 +134,7 @@ def log_from(commits: DataFrame, head: str, max_depth: int = 1000) -> DataFrame:
     )
 
 
-def reachable_commits(
-    commits: DataFrame, heads: list[str], max_depth: int = 1000
-) -> DataFrame:
+def reachable_commits(commits: DataFrame, heads: list[str]) -> DataFrame:
     """(commit_id): the union of ancestors of all ``heads`` — one
     multi-source BFS (all refs seed the same frontier), so the cost
     is one walk of the reachable subgraph regardless of how many
@@ -155,57 +142,19 @@ def reachable_commits(
     :func:`log_walk`."""
     dag = _collect_dag(commits)
     if dag is not None:
-        ids, parents = dag
-        seen = {h for h in heads if h in ids}
-        frontier = list(seen)
-        for _ in range(max_depth):
-            nxt = []
-            for c in frontier:
-                for p in parents.get(c, []):
-                    if p not in seen:
-                        seen.add(p)
-                        nxt.append(p)
-            if not nxt:
-                break
-            frontier = nxt
         return commits.sparkSession.createDataFrame(
-            [(c,) for c in sorted(seen)], "commit_id string"
+            [(c,) for c in sorted(_bfs_depths(*dag, heads))], "commit_id string"
         )
-    return _reachable_distributed(commits, heads, max_depth)
+    return _log_walk_distributed(commits, heads).select("commit_id")
 
 
-def _reachable_distributed(
-    commits: DataFrame, heads: list[str], max_depth: int = 1000
-) -> DataFrame:
-    """Distributed fallback for pathological commit graphs."""
-    edges = parent_edges(commits)
-    frontier = commits.where(F.col("commit_id").isin(heads)).select("commit_id")
-    reached = frontier
-    with loop_tuning(commits.sparkSession, 1):
-        for _ in range(max_depth):
-            nxt = (
-                frontier.join(edges, frontier["commit_id"] == edges["child"])
-                .select(F.col("parent").alias("commit_id"))
-                .distinct()
-                .join(reached, "commit_id", "left_anti")
-            )
-            nxt, n_new = loop_checkpoint_count(nxt)
-            if n_new == 0:
-                break
-            reached = reached.unionByName(nxt)
-            frontier = nxt
-    return reached
-
-
-def gc_commits(
-    commits: DataFrame, refs: dict[str, str], max_depth: int = 1000
-) -> DataFrame:
+def gc_commits(commits: DataFrame, refs: dict[str, str]) -> DataFrame:
     """Layer garbage collection (the reference's optimize/gc over
     terminusdb-store layers): a commit's layer is droppable iff no
     branch ref can reach it.  Returns every commit tagged
     (commit_id, status ∈ {kept, dropped}).  Deleting a branch then
     running gc is what actually reclaims its unmerged layers."""
-    live = reachable_commits(commits, list(refs.values()), max_depth).withColumn(
+    live = reachable_commits(commits, list(refs.values())).withColumn(
         "status", F.lit("kept")
     )
     return (
@@ -225,15 +174,14 @@ def merge_base(commits: DataFrame, head_a: str, head_b: str) -> DataFrame:
     minimal combined distance to the two heads (then lowest id — a
     deterministic criss-cross tie-break).
 
-    Two bounded BFS walks over the parent edges (log_walk's
-    semi-naive iteration) and one tiny join — commit graphs are
+    Two ancestor walks over the parent edges (log_walk's BFS) and
+    one tiny join — commit graphs are
     metadata-sized, so this is driver-latency work even on a store
     whose DATA is 100 TB."""
     dag = _collect_dag(commits)
     if dag is not None:
-        ids, parents = dag
-        da = _bfs_depths(ids, parents, head_a, 1000)
-        db = _bfs_depths(ids, parents, head_b, 1000)
+        da = _bfs_depths(*dag, [head_a])
+        db = _bfs_depths(*dag, [head_b])
         common = [(c, da[c], db[c]) for c in da if c in db]
         # disconnected histories (or a head missing from the commit
         # table) have no merge base — report it as an empty frame,
@@ -246,8 +194,8 @@ def merge_base(commits: DataFrame, head_a: str, head_b: str) -> DataFrame:
         return commits.sparkSession.createDataFrame(
             [best], "merge_base string, depth_a int, depth_b int"
         )
-    wa = _log_walk_distributed(commits, head_a).withColumnRenamed("depth", "depth_a")
-    wb = _log_walk_distributed(commits, head_b).withColumnRenamed("depth", "depth_b")
+    wa = _log_walk_distributed(commits, [head_a]).withColumnRenamed("depth", "depth_a")
+    wb = _log_walk_distributed(commits, [head_b]).withColumnRenamed("depth", "depth_b")
     return (
         wa.join(wb, "commit_id")
         .orderBy(
@@ -280,8 +228,7 @@ def resolve_at_time(commits: DataFrame, head: str, ts) -> DataFrame:
     )
 
 
-def describe(commits: DataFrame, tags: DataFrame, head: str,
-             max_depth: int = 1000) -> DataFrame:
+def describe(commits: DataFrame, tags: DataFrame, head: str) -> DataFrame:
     """(tag, distance, commit_id, described): the nearest TAGGED
     ancestor of ``head`` and its git-describe-style name —
     ``<tag>`` when the head is the tagged commit itself, else
@@ -293,7 +240,7 @@ def describe(commits: DataFrame, tags: DataFrame, head: str,
     name is deterministic under multiple tags at one depth.  One
     ancestor walk (driver-side under the metadata guard) + one tiny
     join — commit graphs are metadata even on a 100 TB store."""
-    walk = log_walk(commits, head, max_depth)
+    walk = log_walk(commits, head)
     return (
         walk.join(tags, "commit_id")
         .orderBy(F.col("depth").asc(), F.col("tag").asc())

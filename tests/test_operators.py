@@ -24,6 +24,91 @@ def test_transitive_closure_cycle_terminates(spark):
     assert all(r.hops <= 3 for r in rows)
 
 
+_CHAIN = [f"n{i:02d}" for i in range(71)]  # 70 edges, deeper than any old round cap
+
+
+def _chain_edges(spark):
+    return spark.createDataFrame(
+        list(zip(_CHAIN, _CHAIN[1:])), "src string, dst string"
+    )
+
+
+def _closure_rows(spark):
+    from terminus_server_spark.operators.path import transitive_closure
+
+    return {
+        tuple(r) for r in transitive_closure(_chain_edges(spark), with_hops=True).collect()
+    }
+
+
+def _anchored_rows(spark):
+    from terminus_server_spark.operators.path import anchored_closure
+
+    anchors = spark.createDataFrame([(_CHAIN[0],)], "node string")
+    return {tuple(r) for r in anchored_closure(_chain_edges(spark), anchors).collect()}
+
+
+def _trace_rows(spark):
+    from terminus_server_spark.operators.path import trace_paths
+
+    return {tuple(r) for r in trace_paths(_chain_edges(spark)).collect()}
+
+
+def _hops_rows(spark):
+    from terminus_server_spark.operators.graph import shortest_hops
+
+    sources = spark.createDataFrame([(_CHAIN[0],)], "node string")
+    return {tuple(r) for r in shortest_hops(_chain_edges(spark), sources).collect()}
+
+
+_N = len(_CHAIN)
+
+
+@pytest.mark.parametrize(
+    "run, want",
+    [
+        (
+            _closure_rows,
+            {(_CHAIN[i], _CHAIN[j], j - i) for i in range(_N) for j in range(i + 1, _N)},
+        ),
+        (_anchored_rows, {(_CHAIN[0], _CHAIN[j], j) for j in range(1, _N)}),
+        (
+            _trace_rows,
+            {
+                (_CHAIN[i], _CHAIN[j], j - i, ">".join(_CHAIN[i : j + 1]))
+                for i in range(_N)
+                for j in range(i + 1, _N)
+            },
+        ),
+        (_hops_rows, {(_CHAIN[0], _CHAIN[j], j) for j in range(_N)}),
+    ],
+    ids=["transitive_closure", "anchored_closure", "trace_paths", "shortest_hops"],
+)
+def test_frontier_loops_reach_the_end_of_a_long_chain(spark, run, want):
+    """Every semi-naive loop runs to its fixpoint: a 70-edge chain
+    yields the full answer, not the prefix a round cap would keep."""
+    assert run(spark) == want
+
+
+def test_closures_release_their_round_blocks(spark):
+    """A closure leaves one persisted block set behind (its answer),
+    not one per round plus its edge set."""
+    from terminus_server_spark.operators.path import anchored_closure, transitive_closure
+
+    def held():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    chain = _CHAIN[:11]
+    edges = spark.createDataFrame(list(zip(chain, chain[1:])), "src string, dst string")
+    anchors = spark.createDataFrame([(_CHAIN[0],)], "node string")
+    before = held()
+    anchored_closure(edges, anchors).collect()
+    assert held() - before <= 1
+    before = held()
+    transitive_closure(edges).collect()
+    assert held() - before <= 1
+
+
 def test_path_star_and_times(spark, store):
     from terminus_server_spark.operators.path import compile_path
     from terminus_server_spark.woql.path_ast import Pred, Star, Times, Seq, Inv
@@ -755,24 +840,41 @@ def test_ivf_refinement_does_not_hurt_recall(spark):
 
 
 def test_reliable_checkpoint_flag(spark, tmp_path):
+    import os
+    from urllib.parse import urlparse
+
     from terminus_server_spark.checkpoint import DIR_CONF, RELIABLE_CONF
     from terminus_server_spark.operators.graph import connected_components
+    from terminus_server_spark.operators.path import transitive_closure_doubling
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "src long, dst long"
     )
+    # the checkpoint dir is bound once per SparkContext, so each
+    # operator's files are told apart by what appeared after its run
     spark.conf.set(RELIABLE_CONF, "true")
     spark.conf.set(DIR_CONF, str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+
+    def written():
+        d = sc.getCheckpointDir()  # a file: URI once set
+        d = urlparse(d).path if d else None
+        return set(os.listdir(d)) if d and os.path.isdir(d) else set()
+
     try:
+        seen = written()
         comps = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+        assert written() - seen, "connected_components wrote no reliable checkpoint"
+        # the first reliable checkpoint of the session binds DIR_CONF
+        assert any(os.scandir(tmp_path / "ckpt"))
+        seen = written()
+        pairs = {(r.src, r.dst) for r in transitive_closure_doubling(edges).collect()}
+        assert written() - seen, "transitive_closure_doubling wrote no reliable checkpoint"
     finally:
         spark.conf.set(RELIABLE_CONF, "false")
     assert comps[1] == comps[2] == comps[3]
     assert comps[10] == comps[11] != comps[1]
-    # reliable checkpoint files actually landed on disk
-    import os
-
-    assert any(os.scandir(tmp_path / "ckpt"))
+    assert pairs == {(1, 2), (2, 3), (1, 3), (10, 11)}
 
 
 def test_inverted_index_and_bm25(spark):
@@ -2705,6 +2807,16 @@ def test_loop_tuning_restores_conf_even_on_raise(spark):
     cyc = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
     with _pytest.raises(RuntimeError):
         topo_layers(nodes, cyc, max_iters=5)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
+
+    from terminus_server_spark.operators.path import anchored_closure
+
+    key = "spark.sql.constraintPropagation.enabled"
+    prev_cp = spark.conf.get(key, "true")
+    anchors = spark.createDataFrame([(1,)], "node long")
+    anchored_closure(cyc, anchors).collect()
+    assert spark.conf.get(key, "true") == prev_cp
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
 

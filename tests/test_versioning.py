@@ -1,3 +1,5 @@
+import pytest
+
 
 
 def test_merge_readd_of_base_row_does_not_duplicate(spark):
@@ -139,6 +141,51 @@ def test_apply_and_cherry_pick(spark):
     assert (
         state2.where(F.col("k") == 4).collect()[0].commit_id == "picked"
     )
+
+
+@pytest.mark.parametrize("walk", ["driver", "distributed"])
+def test_log_walk_covers_a_long_linear_history(spark, monkeypatch, walk):
+    """The ancestor walk reaches the root of a 1,200-commit chain, on
+    the driver BFS and on the distributed semi-naive loop alike — no
+    depth cap truncates the history."""
+    from terminus_server_spark.versioning import dag
+
+    if walk == "distributed":
+        monkeypatch.setattr(dag, "_DRIVER_WALK_LIMIT", 0)
+    n = 1200
+    ids = [f"c{i:04d}" for i in range(n)]
+    commits = spark.createDataFrame(
+        [(c, [ids[i - 1]] if i else []) for i, c in enumerate(ids)],
+        "commit_id string, parent_ids array<string>",
+    )
+    depths = {r.commit_id: r.depth for r in dag.log_walk(commits, ids[-1]).collect()}
+    assert depths == {c: n - 1 - i for i, c in enumerate(ids)}
+
+
+def test_distributed_walks_match_driver_walks(spark, monkeypatch):
+    """log_walk, reachable_commits and merge_base give the same answer
+    on the distributed loop as on the driver BFS (merges included)."""
+    from terminus_server_spark.versioning import dag
+
+    commits = spark.createDataFrame(
+        [
+            ("a", []), ("b", ["a"]), ("c", ["a"]), ("d", ["b", "c"]),
+            ("e", ["d"]), ("x", ["c"]), ("y", ["x"]),
+        ],
+        "commit_id string, parent_ids array<string>",
+    )
+
+    def answers():
+        return (
+            sorted(map(tuple, dag.log_walk(commits, "e").collect())),
+            sorted(r.commit_id for r in dag.reachable_commits(commits, ["e", "y"]).collect()),
+            [tuple(r) for r in dag.merge_base(commits, "e", "y").collect()],
+        )
+
+    driver = answers()
+    monkeypatch.setattr(dag, "_DRIVER_WALK_LIMIT", 0)
+    assert answers() == driver
+    assert driver[2] == [("c", 2, 2)]
 
 
 def test_gc_commits_orphan_chain(spark):
