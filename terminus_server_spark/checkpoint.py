@@ -1,5 +1,5 @@
-"""Lineage truncation for iterative loops (path closure, components,
-k-core, PageRank, commit-DAG walk).
+"""Lineage truncation and session scoping for iterative loops (path
+closure, components, k-core, PageRank, commit-DAG walk).
 
 Every checkpoint goes through one helper, ``_checkpoint``, which holds
 the reliable/local choice; ``loop_checkpoint`` (eager),
@@ -10,23 +10,30 @@ the checkpointed RDD, so ``release`` can drop exactly the blocks one
 checkpoint wrote once its maker is done with them (the semi-naive
 kernel in ``operators.path`` releases every round this way).
 
+Every fixpoint loop runs through ``run_loop``, which plans the loop
+in a clone of the caller's session tuned for frontier-sized state;
+the caller's own conf is never written, so other requests on the
+same session never see a loop's tuning.
+
 Default is ``localCheckpoint`` — executor-local block storage, the
 fastest way to stop a loop's plan growing exponentially.  Its blocks
 die with the executor, so on preemption-prone clusters (spot
 instances, dynamic allocation with aggressive downscaling) a lost
-executor kills the job instead of recomputing.  Flip
-
-    spark.conf.set("spark.terminus_server_spark.reliableCheckpoint", "true")
-    spark.conf.set("spark.terminus_server_spark.checkpointDir", "hdfs://...")  # optional
-
-to write reliable checkpoints to the (fault-tolerant) checkpoint dir
-instead — slower per iteration, survives executor loss.  The setting
-reaches every loop, min-plus path doubling included.
+executor kills the job instead of recomputing.  Setting
+``spark.terminus_server_spark.reliableCheckpoint`` to ``true`` in the
+session conf (and, optionally, ``spark.terminus_server_spark.checkpointDir``
+to an ``hdfs://`` path) writes reliable checkpoints to the
+(fault-tolerant) checkpoint dir instead — slower per iteration,
+survives executor loss.  The setting reaches every loop, min-plus
+path doubling included.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Any, Callable
+
+from pyspark.core.rdd import RDD
+from pyspark.sql import DataFrame, SparkSession
 
 RELIABLE_CONF = "spark.terminus_server_spark.reliableCheckpoint"
 DIR_CONF = "spark.terminus_server_spark.checkpointDir"
@@ -162,36 +169,67 @@ def release(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-from contextlib import contextmanager
+# Rows of loop state per shuffle partition inside ``run_loop``.
+_LOOP_ROWS_PER_SHUFFLE = 50_000
 
 
-@contextmanager
-def loop_tuning(spark, state_rows: int | None = None):
-    """Per-loop session tuning for iterative fixpoint operators, on
-    the pattern proven in SCC (graph.py):
+def _move(x: Any, session: SparkSession) -> Any:
+    """``x`` rebound to ``session`` when it is a DataFrame: the same
+    analyzed plan (checkpoint leaves keep their RDDs, so ``release``
+    still finds them), planned from now on under ``session``'s conf."""
+    if not isinstance(x, DataFrame):
+        return x
+    plan = x._jdf.queryExecution().analyzed()
+    dataset = session._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(session._jsparkSession, plan), session)
 
-    - shuffle partitions sized to the LOOP STATE, not the session
-      default — a 32-way exchange over a few thousand frontier rows
-      repeated tens of rounds is pure task-scheduling overhead;
-    - AQE disabled — it schedules (and re-plans) a job per exchange,
-      which on frontier-sized state is per-round overhead (~18 % of
-      SCC wall time at sf0.1), while its small-partition coalescing
-      is exactly what the clamp already delivers.
 
-    Both settings restore on exit, so only loop-internal plans are
-    affected; one-time input materializations should run BEFORE
-    entering (at session width, with AQE)."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+def run_loop(
+    spark: SparkSession, state_rows: int | None, body: Callable[..., Any], *args: Any
+) -> Any:
+    """``body(*args)`` run in a clone of ``spark`` tuned for a fixpoint
+    loop, its result bound to ``spark`` again.
+
+    The clone keeps every setting of ``spark`` (``reliableCheckpoint``,
+    ANSI mode, temp views) and changes three in its own conf:
+
+    - constraint propagation off: Catalyst's Union.rewriteConstraints
+      crashes (key not found: attr) when a checkpointed plan is
+      unioned with a plan that shares its attribute ids — exactly the
+      shape of semi-naive iteration — and it proves nothing in these
+      loops (inputs are not-null-filtered up front);
+    - AQE off: it schedules and re-plans a job per exchange, which on
+      frontier-sized state is per-round overhead (~18 % of SCC wall
+      time at sf0.1), while its small-partition coalescing is what
+      the clamp below already delivers;
+    - shuffle partitions clamped to the loop state (one per
+      50k ``state_rows``, never above the session's width): a 32-way
+      exchange over a few thousand frontier rows repeated tens of
+      rounds is pure task-scheduling overhead.
+
+    ``state_rows=None`` runs a loop's prologue — the one-time input
+    materializations, which keep AQE and the session's width — with
+    only constraint propagation off.
+
+    DataFrame arguments are moved into the clone, and a DataFrame
+    result is moved back, so later queries on it plan under the
+    caller's conf.  The body must read its frames through its
+    arguments: a frame it closes over stays bound to the caller, and a
+    join it roots plans untuned.  Nothing is written to ``spark``'s
+    conf, so nothing needs restoring, a raising loop leaves no trace,
+    and nested loops nest clones."""
+    js = spark._jsparkSession.cloneSession()
+    conf = js.sessionState().conf()
+    conf.setConfString("spark.sql.constraintPropagation.enabled", "false")
     if state_rows is not None:
-        lp = max(1, min(int(prev_parts), -(-state_rows // 50_000)))
-        spark.conf.set("spark.sql.shuffle.partitions", str(lp))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        parts = max(1, min(width, -(-state_rows // _LOOP_ROWS_PER_SHUFFLE)))
+        conf.setConfString("spark.sql.shuffle.partitions", str(parts))
+        conf.setConfString("spark.sql.adaptive.enabled", "false")
+    to_df = RDD.toDF  # the SparkSession constructor rebinds it
+    clone = SparkSession(spark.sparkContext, js)
+    RDD.toDF = to_df
+    return _move(body(*(_move(a, clone) for a in args)), spark)
 
 
 def spread_input(df: DataFrame) -> DataFrame:

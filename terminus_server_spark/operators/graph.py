@@ -5,25 +5,27 @@ queries; analytical whole-graph algorithms (components, centrality)
 are the Spark-side extension (SURVEY §2.2).  GraphX is JVM-only and
 GraphFrames isn't a baked-in dependency, so these are pure DataFrame
 implementations — which is also the honest scale story: each
-iteration is a shuffle-on-key join that AQE can re-plan, and state is
-localCheckpoint-ed so lineage stays bounded.
+iteration is a shuffle-on-key join over checkpointed state, so
+lineage stays bounded, and every loop plans in its own session
+(``checkpoint.run_loop``) with AQE off and shuffles sized to its
+state, leaving the caller's session untouched.
 
 Edges: DataFrame (src: string|long, dst: same type).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from terminus_server_spark.checkpoint import (
     loop_checkpoint,
     loop_checkpoint_count,
     loop_checkpoint_sum,
-    loop_tuning,
     plan_checkpoint,
+    run_loop,
 )
 
-from terminus_server_spark.operators.path import no_constraint_propagation, semi_naive
+from terminus_server_spark.operators.path import semi_naive
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -68,7 +70,8 @@ def connected_components(
     ``assume_symmetric``: the caller already symmetrized+deduped the
     frame (``_symmetrize``) — skip the redundant union/distinct pass
     (one full exchange over the edge set)."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges: DataFrame) -> DataFrame:
         und = (
             edges.select("src", "dst").transform(loop_checkpoint)
             if assume_symmetric
@@ -85,9 +88,9 @@ def connected_components(
             .distinct()
             .withColumn("component", F.col("node"))
         )
-        with loop_tuning(edges.sparkSession, n_lab):
-            labels = _cc_loop(und, labels, max_iters)
-    return labels
+        return run_loop(edges.sparkSession, n_lab, _cc_loop, und, labels, max_iters)
+
+    return run_loop(edges.sparkSession, None, prologue, edges)
 
 
 def _cc_loop(und: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
@@ -352,39 +355,42 @@ def _edge_nodes(edges):
     )
 
 
-def _power_iterations(base, links, ranks, iters, damping, restart_term, share_ci):
+def _power_iterations(base, links, ranks, n_nodes, iters, damping, restart_term, share_ci):
     """The pagerank family's shared fixed-point power loop: per round
     one links⋈ranks join emitting floor-scaled integer contributions
     (``share_ci``), one decimal(38,0) sum (exact, order-free — a hot
     node's in-degree × 1e15 exceeds bigint range long before real
     graph scale), one left join back onto ``base`` applying
     ``restart_term`` + damping·contrib.  Rounds checkpoint LAZILY so
-    a fixed iteration count chains into one job cascade; the CALLER
-    eagerly materializes the result inside its loop_tuning context so
-    the clamp + AQE-off actually govern execution."""
-    for _ in range(iters):
-        contribs = (
-            links.join(ranks, links["src"] == ranks["node"])
-            .select(F.col("dst").alias("node"), share_ci.alias("ci"))
-            .groupBy("node")
-            .agg(
-                (
-                    F.sum(F.col("ci").cast("decimal(38,0)")).cast("double") / F.lit(1e15)
-                ).alias("contrib")
+    a fixed iteration count chains into one job cascade, which the
+    eager final checkpoint runs in the loop's tuned session."""
+
+    def power(base, links, ranks):
+        for _ in range(iters):
+            contribs = (
+                links.join(ranks, links["src"] == ranks["node"])
+                .select(F.col("dst").alias("node"), share_ci.alias("ci"))
+                .groupBy("node")
+                .agg(
+                    (
+                        F.sum(F.col("ci").cast("decimal(38,0)")).cast("double") / F.lit(1e15)
+                    ).alias("contrib")
+                )
             )
-        )
-        ranks = (
-            base.join(contribs, "node", "left_outer")
-            .select(
-                "node",
-                (
-                    restart_term
-                    + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
+            ranks = (
+                base.join(contribs, "node", "left_outer")
+                .select(
+                    "node",
+                    (
+                        restart_term
+                        + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+                .transform(plan_checkpoint)
             )
-            .transform(plan_checkpoint)
-        )
-    return ranks
+        return loop_checkpoint(ranks)
+
+    return run_loop(base.sparkSession, n_nodes, power, base, links, ranks)
 
 
 def _uniform_share():
@@ -411,23 +417,20 @@ def pagerank(
     a rows-only check to an exact value-hash oracle.  Loop body:
     :func:`_power_iterations` (shared with the weighted, warm-start,
     and personalized variants)."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges):
         nodes, n_nodes = _edge_nodes(edges)
         if n_nodes == 0:  # empty graph: empty typed rank table
             return nodes.withColumn("rank", F.lit(0.0))
         out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
         links = edges.join(out_deg, "src").transform(loop_checkpoint)
         ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            ranks = loop_checkpoint(
-                _power_iterations(
-                    nodes, links, ranks, iters, damping,
-                    F.lit((1.0 - damping) / n_nodes), _uniform_share(),
-                )
-            )
-    return ranks
+        return _power_iterations(
+            nodes, links, ranks, n_nodes, iters, damping,
+            F.lit((1.0 - damping) / n_nodes), _uniform_share(),
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges)
 
 
 def pagerank_weighted(
@@ -439,7 +442,8 @@ def pagerank_weighted(
     Same exact-arithmetic discipline as :func:`pagerank` (the shared
     :func:`_power_iterations` loop with a weighted share column).
     ``edges``: (src, dst, w) with positive integer-valued weights."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges):
         nodes, n_nodes = _edge_nodes(edges)
         if n_nodes == 0:  # empty graph: empty typed rank table
             return nodes.withColumn("rank", F.lit(0.0))
@@ -450,16 +454,12 @@ def pagerank_weighted(
             (F.col("rank") * F.col("w").cast("double") / F.col("w_out").cast("double"))
             * F.lit(1e15)
         )
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            ranks = loop_checkpoint(
-                _power_iterations(
-                    nodes, links, ranks, iters, damping,
-                    F.lit((1.0 - damping) / n_nodes), share,
-                )
-            )
-    return ranks
+        return _power_iterations(
+            nodes, links, ranks, n_nodes, iters, damping,
+            F.lit((1.0 - damping) / n_nodes), share,
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges)
 
 
 def pagerank_warm(
@@ -480,23 +480,20 @@ def pagerank_warm(
     :func:`pagerank` (shared :func:`_power_iterations` loop), so warm
     rounds are bit-reproducible and the oracle replays cold+warm
     exactly."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges, init_ranks):
         nodes, n_nodes = _edge_nodes(edges)
         if n_nodes == 0:  # empty graph: empty typed rank table
             return nodes.withColumn("rank", F.lit(0.0))
         out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
         links = edges.join(out_deg, "src").transform(loop_checkpoint)
         ranks = nodes.join(init_ranks, "node").transform(loop_checkpoint)
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            ranks = loop_checkpoint(
-                _power_iterations(
-                    nodes, links, ranks, iters, damping,
-                    F.lit((1.0 - damping) / n_nodes), _uniform_share(),
-                )
-            )
-    return ranks
+        return _power_iterations(
+            nodes, links, ranks, n_nodes, iters, damping,
+            F.lit((1.0 - damping) / n_nodes), _uniform_share(),
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges, init_ranks)
 
 
 def personalized_pagerank(
@@ -513,7 +510,8 @@ def personalized_pagerank(
     plan as a broadcast scalar (no collect), restart is checkpointed
     once, and the fixed-round loop chains lazily into one tuned job
     cascade like ``pagerank``."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges, sources):
         nodes, n_nodes = _edge_nodes(edges)
         n_src = sources.agg(F.count(F.lit(1)).alias("_ns"))
         restart = (
@@ -531,16 +529,12 @@ def personalized_pagerank(
         out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
         links = edges.join(out_deg, "src").transform(loop_checkpoint)
         ranks = restart.select("node", F.col("restart").alias("rank"))
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            ranks = loop_checkpoint(
-                _power_iterations(
-                    restart, links, ranks, iters, damping,
-                    F.lit(1.0 - damping) * F.col("restart"), _uniform_share(),
-                )
-            )
-    return ranks
+        return _power_iterations(
+            restart, links, ranks, n_nodes, iters, damping,
+            F.lit(1.0 - damping) * F.col("restart"), _uniform_share(),
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges, sources)
 
 
 def katz_centrality(
@@ -568,43 +562,46 @@ def katz_centrality(
 
     Per round: one edges⋈scores shuffle on src, one sum-by-dst, one
     left join back onto the node set — frontier is always the whole
-    node set, so ``loop_tuning`` clamps the exchanges to the node
+    node set, so the loop session clamps the exchanges to the node
     count and disables per-exchange AQE re-planning for the fixed
     cascade, same as the pagerank loops."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def walks(e, nodes):
+        scores = nodes.withColumn("s", F.lit(1).cast("decimal(38,0)"))
+        for t in range(1, iters + 1):
+            contrib = (
+                e.join(
+                    scores.select(F.col("node").alias("src"), "s"), "src"
+                )
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("s").alias("c"))
+            )
+            scores = (
+                nodes.join(contrib, "node", "left_outer")
+                .select(
+                    "node",
+                    (
+                        F.lit(alpha_denom**t).cast("decimal(38,0)")
+                        + F.coalesce(F.col("c"), F.lit(0))
+                    ).cast("decimal(38,0)").alias("s"),
+                )
+            )
+        return loop_checkpoint(scores)
+
+    def prologue(edges):
         nodes, n_nodes = _edge_nodes(edges)
         if n_nodes == 0:  # empty graph: empty typed score table
             return nodes.withColumn("katz", F.lit(0.0))
         e = edges.select("src", "dst").where(
             F.col("src").isNotNull() & F.col("dst").isNotNull()
         ).transform(loop_checkpoint)
-        scores = nodes.withColumn("s", F.lit(1).cast("decimal(38,0)"))
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            for t in range(1, iters + 1):
-                contrib = (
-                    e.join(
-                        scores.select(F.col("node").alias("src"), "s"), "src"
-                    )
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(F.sum("s").alias("c"))
-                )
-                scores = (
-                    nodes.join(contrib, "node", "left_outer")
-                    .select(
-                        "node",
-                        (
-                            F.lit(alpha_denom**t).cast("decimal(38,0)")
-                            + F.coalesce(F.col("c"), F.lit(0))
-                        ).cast("decimal(38,0)").alias("s"),
-                    )
-                )
-            scores = loop_checkpoint(scores)
-    scale = float(alpha_denom**iters)
-    return scores.select(
-        "node", (F.col("s").cast("double") / F.lit(scale)).alias("katz")
-    )
+        scores = run_loop(edges.sparkSession, n_nodes, walks, e, nodes)
+        scale = float(alpha_denom**iters)
+        return scores.select(
+            "node", (F.col("s").cast("double") / F.lit(scale)).alias("katz")
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges)
 
 
 def dag_path_counts(
@@ -624,7 +621,8 @@ def dag_path_counts(
     overflows at depth ~90 of a binary DAG.  Per round: one
     edges⋈counts shuffle + one sum-by-src + one left join onto the
     node set, loop-tuned."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges, targets):
         e = edges.select("src", "dst").where(
             F.col("src").isNotNull() & F.col("dst").isNotNull()
         ).transform(loop_checkpoint)
@@ -644,48 +642,50 @@ def dag_path_counts(
             "node",
             F.coalesce(F.col("_t"), F.lit(0)).cast("decimal(38,0)").alias("_seed"),
         ).transform(loop_checkpoint)
+        return run_loop(edges.sparkSession, n_nodes, relax, e, base, n_nodes)
+
+    def relax(e, base, n_nodes):
         counts = base.select("node", F.col("_seed").alias("n_paths"))
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            for _ in range(max_iters):
-                succ = (
-                    e.join(
-                        counts.select(F.col("node").alias("dst"), "n_paths"), "dst"
-                    )
-                    .groupBy(F.col("src").alias("node"))
-                    .agg(F.sum("n_paths").alias("_s"))
+        for _ in range(max_iters):
+            succ = (
+                e.join(
+                    counts.select(F.col("node").alias("dst"), "n_paths"), "dst"
                 )
-                stepped = base.join(succ, "node", "left_outer").select(
-                    "node",
-                    (
-                        F.col("_seed")
-                        + F.coalesce(F.col("_s"), F.lit(0)).cast("decimal(38,0)")
-                    ).cast("decimal(38,0)").alias("n_paths"),
-                    "_seed",
+                .groupBy(F.col("src").alias("node"))
+                .agg(F.sum("n_paths").alias("_s"))
+            )
+            stepped = base.join(succ, "node", "left_outer").select(
+                "node",
+                (
+                    F.col("_seed")
+                    + F.coalesce(F.col("_s"), F.lit(0)).cast("decimal(38,0)")
+                ).cast("decimal(38,0)").alias("n_paths"),
+                "_seed",
+            )
+            joined = stepped.join(
+                counts.select("node", F.col("n_paths").alias("_prev")), "node"
+            ).select(
+                "node",
+                "n_paths",
+                F.when(F.col("n_paths") != F.col("_prev"), 1)
+                .otherwise(0)
+                .alias("_chg"),
+            )
+            joined, n_chg = loop_checkpoint_sum(joined, "_chg", size_hint=n_nodes)
+            counts = joined.select("node", "n_paths")
+            if n_chg == 0:
+                # DOUBLE on the wire (engine-portable); the accumulator
+                # stays decimal(38,0) so intermediate sums never overflow.
+                return counts.select(
+                    "node", F.col("n_paths").cast("double").alias("n_paths")
                 )
-                joined = stepped.join(
-                    counts.select("node", F.col("n_paths").alias("_prev")), "node"
-                ).select(
-                    "node",
-                    "n_paths",
-                    F.when(F.col("n_paths") != F.col("_prev"), 1)
-                    .otherwise(0)
-                    .alias("_chg"),
-                )
-                joined, n_chg = loop_checkpoint_sum(joined, "_chg", size_hint=n_nodes)
-                counts = joined.select("node", "n_paths")
-                if n_chg == 0:
-                    break
-            else:
-                raise RuntimeError(
-                    f"dag_path_counts did not converge in {max_iters} rounds — "
-                    "the graph has a cycle reaching the target set (path count "
-                    "diverges) or longest path exceeds max_iters"
-                )
-    # DOUBLE on the wire (engine-portable); the accumulator above
-    # stays decimal(38,0) so intermediate sums never overflow.
-    return counts.select("node", F.col("n_paths").cast("double").alias("n_paths"))
+        raise RuntimeError(
+            f"dag_path_counts did not converge in {max_iters} rounds — "
+            "the graph has a cycle reaching the target set (path count "
+            "diverges) or longest path exceeds max_iters"
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges, targets)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -778,7 +778,7 @@ def shortest_hops(
     edge may jump to any earlier level)."""
     return semi_naive(
         edges.select("src", "dst").distinct(),
-        lambda e: sources.select(
+        lambda e, s: s.select(
             F.col("node").alias("source"), F.col("node").alias("node"), F.lit(0).alias("hops")
         ),
         lambda f, e: f.join(e, f["node"] == e["src"]).select(
@@ -786,6 +786,7 @@ def shortest_hops(
         ),
         ["source", "node"],
         [F.min("hops").alias("hops")],
+        sources,
         recent_only=assume_undirected,
         max_rounds=max_iters,
     )
@@ -886,10 +887,9 @@ def betweenness(
         F.lit(1.0).alias("sigma"),
     )
     frontier, n_f = loop_checkpoint_count(frontier)
-    with loop_tuning(edges.sparkSession, n_f), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        return _betweenness_passes(und, frontier, n_f, max_iters)
+    return run_loop(
+        edges.sparkSession, n_f, _betweenness_passes, und, frontier, n_f, max_iters
+    )
 
 
 def _betweenness_passes(und, frontier, n_f, max_iters):
@@ -1128,10 +1128,9 @@ def kcore(
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
-    with loop_tuning(edges.sparkSession, n_edges), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        return _kcore_loop(cur, n_edges, k, rounds, broadcast_edge_limit)
+    return run_loop(
+        edges.sparkSession, n_edges, _kcore_loop, cur, n_edges, k, rounds, broadcast_edge_limit
+    )
 
 
 def _kcore_loop(cur, n_edges, k, rounds, broadcast_edge_limit):
@@ -1355,7 +1354,8 @@ def kcore_incremental(
         # no non-core endpoint ⇒ core membership unchanged; only
         # old-core degrees can grow, via delta-only internal edges
         return _old_out(empty_cand)
-    with loop_tuning(spark, n_e), no_constraint_propagation(spark):
+
+    def grow(adj, old, x):
         # closure rounds at ONE job each: the frontier count doubles
         # as the fixpoint probe and the accumulated candidate set is a
         # plain union of the checkpointed frontier leaves (never
@@ -1421,6 +1421,8 @@ def kcore_incremental(
         )
         return _old_out(cur.select("n")).unionByName(surv_out)
 
+    return run_loop(spark, n_e, grow, adj, old, x)
+
 
 def kcore_decremental(
     core_old: DataFrame,
@@ -1477,7 +1479,8 @@ def kcore_decremental(
     )
     old_nodes = core_old.select("node").distinct()
     old_nodes = loop_checkpoint(old_nodes)
-    with loop_tuning(spark, n_e), no_constraint_propagation(spark):
+
+    def peel(adj, old_nodes):
         # stored degrees within core_old ∩ E_new — computed ONCE;
         # every later round only DECREMENTS neighbors of dropped
         # nodes (frontier-sized joins), never re-aggregates the core
@@ -1504,6 +1507,8 @@ def kcore_decremental(
             f"under-degree nodes in the core — raise max_iters",
         )
         return cur.select("node", F.col("d").cast("bigint").alias("degree"))
+
+    return run_loop(spark, n_e, peel, adj, old_nodes)
 
 
 def ktruss_decremental(
@@ -1537,7 +1542,8 @@ def ktruss_decremental(
         .union(removed.select(F.col("b")))
         .distinct()
     )
-    with loop_tuning(spark, n_e), no_constraint_propagation(spark):
+
+    def peel(cur_edges, dirty_nodes, n_e):
         for _ in range(max_iters):
             touched = (
                 cur_edges.join(
@@ -1568,7 +1574,9 @@ def ktruss_decremental(
                 .union(dropped.select(F.col("b")))
                 .distinct()
             )
-    raise RuntimeError(f"ktruss_decremental did not converge in {max_iters} rounds")
+        raise RuntimeError(f"ktruss_decremental did not converge in {max_iters} rounds")
+
+    return run_loop(spark, n_e, peel, cur_edges, dirty_nodes, n_e)
 
 
 def _delta_triangle_terms(ed: DataFrame, e_all: DataFrame, out_col: str) -> DataFrame:
@@ -1720,11 +1728,9 @@ def core_numbers(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    spark = edges.sparkSession
-    done: list[DataFrame] = []
-    empty = cur.select(F.col("src").alias("node"), F.lit(0).alias("core")).limit(0)
-    done.append(empty)
-    with loop_tuning(spark, n_edges), no_constraint_propagation(spark):
+
+    def peel(cur, n_edges):
+        done = [cur.select(F.col("src").alias("node"), F.lit(0).alias("core")).limit(0)]
         for k in range(1, max_k + 1):
             if n_edges == 0:
                 break
@@ -1770,10 +1776,12 @@ def core_numbers(
                     "node", F.lit(max_k + 1).alias("core")
                 )
             )
-    out = done[0]
-    for d in done[1:]:
-        out = out.unionByName(d)
-    return out.groupBy("node").agg(F.max("core").alias("core"))
+        out = done[0]
+        for d in done[1:]:
+            out = out.unionByName(d)
+        return out.groupBy("node").agg(F.max("core").alias("core"))
+
+    return run_loop(edges.sparkSession, n_edges, peel, cur, n_edges)
 
 
 def shortest_weighted(
@@ -1970,13 +1978,15 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     doubles — bit-identical on any engine / partitioning, so the
     oracle replays the iterations exactly.  Per round: two keyed
     join+agg shuffles; lineage bounded by checkpointing."""
-    with no_constraint_propagation(edges.sparkSession):
+
+    def prologue(edges):
         e = edges.select("src", "dst").distinct().transform(loop_checkpoint)
         nodes, n_nodes = loop_checkpoint_count(
             e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
         )
-        hubs = nodes.withColumn("hub", F.lit(1.0))
+        return run_loop(edges.sparkSession, n_nodes, rounds, e, nodes)
 
+    def rounds(e, nodes):
         def normalize(raw: DataFrame, val: str, out: str) -> DataFrame:
             # the global L1 total is a sum of 1e15-scaled integers —
             # decimal(38,0) keeps it exact past 2^63 (node counts
@@ -1996,38 +2006,37 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
             )
 
         # lazy per-half-round checkpoints chain the rounds into one
-        # cascade; the eager final checkpoint executes it inside the
-        # tuned context (state-clamped shuffle width, AQE off)
-        with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-            for _ in range(iters):
-                auth_raw = (
-                    e.join(hubs, e["src"] == hubs["node"])
-                    .groupBy(F.col("dst").alias("node"))
-                    .agg(
-                        F.sum(F.floor(F.col("hub") * F.lit(1e15)).cast("decimal(38,0)")).alias(
-                            "ai"
-                        )
+        # cascade; the eager final checkpoint executes it in the
+        # loop's tuned session (state-clamped shuffle width, AQE off)
+        hubs = nodes.withColumn("hub", F.lit(1.0))
+        for _ in range(iters):
+            auth_raw = (
+                e.join(hubs, e["src"] == hubs["node"])
+                .groupBy(F.col("dst").alias("node"))
+                .agg(
+                    F.sum(F.floor(F.col("hub") * F.lit(1e15)).cast("decimal(38,0)")).alias(
+                        "ai"
                     )
-                )
-                auth = normalize(auth_raw, "ai", "auth").transform(plan_checkpoint)
-                hub_raw = (
-                    e.join(auth, e["dst"] == auth["node"])
-                    .groupBy(F.col("src").alias("node"))
-                    .agg(
-                        F.sum(F.floor(F.col("auth") * F.lit(1e15)).cast("decimal(38,0)")).alias(
-                            "hi"
-                        )
-                    )
-                )
-                hubs = normalize(hub_raw, "hi", "hub").transform(plan_checkpoint)
-            out = loop_checkpoint(
-                hubs.join(auth, "node").select(
-                    "node", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
                 )
             )
-    return out
+            auth = normalize(auth_raw, "ai", "auth").transform(plan_checkpoint)
+            hub_raw = (
+                e.join(auth, e["dst"] == auth["node"])
+                .groupBy(F.col("src").alias("node"))
+                .agg(
+                    F.sum(F.floor(F.col("auth") * F.lit(1e15)).cast("decimal(38,0)")).alias(
+                        "hi"
+                    )
+                )
+            )
+            hubs = normalize(hub_raw, "hi", "hub").transform(plan_checkpoint)
+        return loop_checkpoint(
+            hubs.join(auth, "node").select(
+                "node", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
+            )
+        )
+
+    return run_loop(edges.sparkSession, None, prologue, edges)
 
 
 def strongly_connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
@@ -2062,48 +2071,24 @@ def strongly_connected_components(edges: DataFrame, max_iters: int = 50) -> Data
         base.select(F.col("src").alias("n")).union(base.select(F.col("dst"))).distinct()
     )
     e, n_e = loop_checkpoint_count(base)
-
-    # Size the loop's shuffles to the FRONTIER, not the session
-    # default: every inner round shuffles the remaining node/edge
-    # state, and a 32-way exchange over a few thousand rows is pure
-    # task-scheduling overhead repeated tens of times.  Restored on
-    # exit; the first materializations above already ran at session
-    # width, so only loop state is affected.
-    spark = edges.sparkSession
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    loop_parts = max(1, min(int(prev_parts), -(-n_rem // 50_000)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    # AQE re-plans (and schedules a job per) EVERY exchange — on the
-    # loop's frontier-sized state that is pure per-round overhead
-    # (measured ~18 % of SCC wall time at sf0.1), and its main
-    # benefit, small-partition coalescing, is already delivered by
-    # the frontier-sized partition clamp above.  Restored on exit;
-    # only loop-internal plans are affected.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        # Materialize the labeling before handing it back: the loop's
-        # result is a union of one lazy anti-join / mark frame per
-        # peel, and callers consume it MORE THAN ONCE (condensation
-        # joins it on both endpoints, topo layering reads it again
-        # for the node set) — every consumption would re-execute the
-        # whole multi-branch union under the session's full shuffle
-        # width and AQE re-planning (measured 4.4 s per evaluation at
-        # sf0.1 vs ~0.5 s materialized here under the loop's tuned
-        # conf).  One eager checkpoint inside the tuned scope turns
-        # the result into a single leaf.  Constraint propagation is
-        # scoped off like the closure loops in operators/path.py: it
-        # proves nothing here (inputs are not-null-filtered up front)
-        # and its optimizer cost repeats on every one of the loop's
-        # ~60 tiny per-round jobs.
-        with no_constraint_propagation(spark):
-            return loop_checkpoint(
-                _scc_loop(e, n_e, rem, n_rem, _restrict_fn, max_iters),
-                size_hint=n_rem,
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    # Materialize the labeling before handing it back: the loop's
+    # result is a union of one lazy anti-join / mark frame per peel,
+    # and callers consume it MORE THAN ONCE (condensation joins it on
+    # both endpoints, topo layering reads it again for the node set)
+    # — every consumption would re-execute the whole multi-branch
+    # union under the session's full shuffle width and AQE
+    # re-planning (measured 4.4 s per evaluation at sf0.1 vs ~0.5 s
+    # materialized in the loop's tuned session).  One eager
+    # checkpoint there turns the result into a single leaf.
+    return run_loop(
+        edges.sparkSession,
+        n_rem,
+        lambda e, rem: loop_checkpoint(
+            _scc_loop(e, n_e, rem, n_rem, _restrict_fn, max_iters), size_hint=n_rem
+        ),
+        e,
+        rem,
+    )
 
 
 def _restrict_fn(edges_df: DataFrame, nodes_df: DataFrame) -> DataFrame:
@@ -2441,6 +2426,65 @@ def harmonic_centrality(
     )
 
 
+def _kmv_estimate(k: int) -> Column:
+    """Ball size from a k-min sketch ``sk``: exact |sketch| while the
+    ball is smaller than k, else (k-1)/theta."""
+    return F.when(F.size("sk") < k, F.size("sk").cast("double")).otherwise(
+        F.lit(float(k - 1)) / F.element_at("sk", k)
+    )
+
+
+def _kmv_balls(
+    edges: DataFrame, sources: DataFrame, hops: int, k: int, per_round: bool
+) -> DataFrame:
+    """HyperBall rounds shared by the sketch operators: every node of
+    ``sources`` ∪ the edge endpoints starts with the k-min sketch of
+    its own md5 fraction, and each of ``hops`` rounds merges the
+    sketches of its out-neighbors (union of sorted k-min lists,
+    re-sorted, clipped to k — associative and exact, so round results
+    are partition-independent).  Each round is plan-checkpointed (the
+    state feeds both its own carry-over and the edge contribution);
+    the rounds chain lazily and the eager final checkpoint runs the
+    cascade in the loop's tuned session — state is |V|·k hashes, so
+    shuffles are sized to the node count.  Returns (node, sk) after
+    the last round, or with ``per_round`` (node, est_0 .. est_hops),
+    the estimated ball size after each round."""
+    frac = (
+        F.conv(F.substring(F.md5(F.col("node")), 1, 8), 16, 10).cast("double")
+        / F.lit(float(16**8))
+    )
+    nodes, n_nodes = loop_checkpoint_count(
+        sources.select("node")
+        .union(edges.select(F.col("src").alias("node")))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    e = edges.select("src", "dst").transform(loop_checkpoint)
+
+    def merge(e, nodes):
+        state = nodes.select("node", F.array(frac).alias("sk"))
+        ests = state.select("node", _kmv_estimate(k).alias("est_0"))
+        for r in range(1, hops + 1):
+            contrib = e.join(
+                state.withColumnRenamed("node", "dst"), "dst"
+            ).select(F.col("src").alias("node"), "sk")
+            state = plan_checkpoint(
+                state.unionByName(contrib)
+                .groupBy("node")
+                .agg(
+                    F.slice(
+                        F.array_sort(F.array_distinct(F.flatten(F.collect_list("sk")))),
+                        1,
+                        k,
+                    ).alias("sk")
+                )
+            )
+            ests = ests.join(state.select("node", _kmv_estimate(k).alias(f"est_{r}")), "node")
+        return loop_checkpoint(ests if per_round else state)
+
+    return run_loop(edges.sparkSession, n_nodes, merge, e, nodes)
+
+
 def neighborhood_sketch_audit(
     edges: DataFrame, sources: DataFrame, hops: int = 3, k: int = 8
 ) -> DataFrame:
@@ -2457,52 +2501,11 @@ def neighborhood_sketch_audit(
     HyperBall (Boldi & Vigna) with a KMV sketch instead of HLL
     because md5-derived k-min fractions are engine-portable and
     bit-deterministic (the module's KMV convention,
-    pipeline.kmv_distinct_estimate).  Merge = union of sorted k-min
-    lists, re-sorted, clipped to k — associative and exact, so round
-    results are partition-independent; each round is plan-checkpointed
-    (the state feeds both its own carry-over and the edge
-    contribution).  Estimate: exact |sketch| while the ball is
-    smaller than k, else (k-1)/theta."""
-    from terminus_server_spark.checkpoint import plan_checkpoint
-
-    frac = (
-        F.conv(F.substring(F.md5(F.col("node")), 1, 8), 16, 10).cast("double")
-        / F.lit(float(16**8))
+    pipeline.kmv_distinct_estimate).  Rounds: :func:`_kmv_balls`."""
+    state = _kmv_balls(edges, sources, hops, k, per_round=False)
+    sketched = state.select(
+        "node", F.size("sk").alias("n_sketch"), _kmv_estimate(k).alias("est")
     )
-    nodes, n_nodes = loop_checkpoint_count(
-        sources.select("node")
-        .union(edges.select(F.col("src").alias("node")))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    e = edges.select("src", "dst").transform(loop_checkpoint)
-    state = nodes.select("node", F.array(frac).alias("sk"))
-    # the merge rounds chain lazily; the eager final checkpoint runs
-    # the cascade inside the tuned context (state is |V|·k hashes, so
-    # the clamp sizes shuffles to the node count, AQE off per round)
-    with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        for _ in range(hops):
-            contrib = e.join(
-                state.withColumnRenamed("node", "dst"), "dst"
-            ).select(F.col("src").alias("node"), "sk")
-            state = plan_checkpoint(
-                state.unionByName(contrib)
-                .groupBy("node")
-                .agg(
-                    F.slice(
-                        F.array_sort(F.array_distinct(F.flatten(F.collect_list("sk")))),
-                        1,
-                        k,
-                    ).alias("sk")
-                )
-            )
-        state = loop_checkpoint(state)
-    est = F.when(F.size("sk") < k, F.size("sk").cast("double")).otherwise(
-        F.lit(float(k - 1)) / F.element_at("sk", k)
-    )
-    sketched = state.select("node", F.size("sk").alias("n_sketch"), est.alias("est"))
     exact = (
         shortest_hops(edges, sources, max_iters=hops)
         .groupBy("source")
@@ -2543,48 +2546,7 @@ def harmonic_sketch_audit(
     derived from md5-exact sketch state, so the ESTIMATE itself is
     bit-reproducible — approximate vs the graph, exact vs the
     oracle."""
-    from terminus_server_spark.checkpoint import plan_checkpoint
-
-    frac = (
-        F.conv(F.substring(F.md5(F.col("node")), 1, 8), 16, 10).cast("double")
-        / F.lit(float(16**8))
-    )
-    nodes, n_nodes = loop_checkpoint_count(
-        sources.select("node")
-        .union(edges.select(F.col("src").alias("node")))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    e = edges.select("src", "dst").transform(loop_checkpoint)
-    state = nodes.select("node", F.array(frac).alias("sk"))
-
-    def est_col():
-        return F.when(F.size("sk") < k, F.size("sk").cast("double")).otherwise(
-            F.lit(float(k - 1)) / F.element_at("sk", k)
-        )
-
-    ests = state.select("node", est_col().alias("est_0"))
-    # same tuned-cascade shape as neighborhood_sketch_audit
-    with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        for r in range(1, hops + 1):
-            contrib = e.join(
-                state.withColumnRenamed("node", "dst"), "dst"
-            ).select(F.col("src").alias("node"), "sk")
-            state = plan_checkpoint(
-                state.unionByName(contrib)
-                .groupBy("node")
-                .agg(
-                    F.slice(
-                        F.array_sort(F.array_distinct(F.flatten(F.collect_list("sk")))),
-                        1,
-                        k,
-                    ).alias("sk")
-                )
-            )
-            ests = ests.join(state.select("node", est_col().alias(f"est_{r}")), "node")
-        ests = loop_checkpoint(ests)
+    ests = _kmv_balls(edges, sources, hops, k, per_round=True)
     h_est = _sum_cols(
         [
             (F.col(f"est_{r}") - F.col(f"est_{r - 1}")) / F.lit(float(r))
@@ -2633,52 +2595,10 @@ def effective_diameter_sketch(
     sum (order-free), so NP(r), the fractions, and the effective
     diameter are bit-reproducible.  One aggregate over the |V|·k
     sketch state per round — no pairwise anything."""
-    from terminus_server_spark.checkpoint import plan_checkpoint
-
-    frac_hash = (
-        F.conv(F.substring(F.md5(F.col("node")), 1, 8), 16, 10).cast("double")
-        / F.lit(float(16**8))
+    # the neighborhood function sums over the tracked sources only
+    ests = sources.select("node").join(
+        _kmv_balls(edges, sources, hops, k, per_round=True), "node"
     )
-    nodes, n_nodes = loop_checkpoint_count(
-        sources.select("node")
-        .union(edges.select(F.col("src").alias("node")))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    e = edges.select("src", "dst").transform(loop_checkpoint)
-    state = nodes.select("node", F.array(frac_hash).alias("sk"))
-
-    def est_col():
-        return F.when(F.size("sk") < k, F.size("sk").cast("double")).otherwise(
-            F.lit(float(k - 1)) / F.element_at("sk", k)
-        )
-
-    rounds = [state.select("node", est_col().alias("est_0"))]
-    # same tuned-cascade shape as neighborhood_sketch_audit
-    with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        for r in range(1, hops + 1):
-            contrib = e.join(
-                state.withColumnRenamed("node", "dst"), "dst"
-            ).select(F.col("src").alias("node"), "sk")
-            state = plan_checkpoint(
-                state.unionByName(contrib)
-                .groupBy("node")
-                .agg(
-                    F.slice(
-                        F.array_sort(F.array_distinct(F.flatten(F.collect_list("sk")))),
-                        1,
-                        k,
-                    ).alias("sk")
-                )
-            )
-            rounds.append(state.select("node", est_col().alias(f"est_{r}")))
-        ests = rounds[0]
-        for fr in rounds[1:]:
-            ests = ests.join(fr, "node")
-        # restrict the neighborhood function to the tracked sources
-        ests = loop_checkpoint(sources.select("node").join(ests, "node"))
     sums = ests.agg(
         *[
             F.sum(F.col(f"est_{r}").cast("decimal(28,12)")).alias(f"np_{r}")
@@ -2738,7 +2658,8 @@ def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
             "label", F.col("node")
         )
     )
-    with loop_tuning(edges.sparkSession, n_lab):
+
+    def propagate(und, labels):
         for _ in range(rounds):
             nbr = und.join(
                 labels.select(F.col("node").alias("dst"), "label"), "dst"
@@ -2754,7 +2675,9 @@ def lpa_communities(edges: DataFrame, rounds: int = 4) -> DataFrame:
                 .select("node", F.col("m.lbl").alias("label"))
                 .transform(loop_checkpoint)
             )
-    return labels.select("node", F.col("label").alias("community"))
+        return labels.select("node", F.col("label").alias("community"))
+
+    return run_loop(edges.sparkSession, n_lab, propagate, und, labels)
 
 
 def label_spread(
@@ -2783,12 +2706,11 @@ def label_spread(
     seed_l = seeds.select("node", F.col("label").alias("_sl")).transform(
         loop_checkpoint
     )
-    labels = nodes.join(seed_l, "node", "left_outer").select(
-        "node", F.col("_sl").alias("label")
-    )
-    with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
+
+    def spread(und, nodes, seed_l):
+        labels = nodes.join(seed_l, "node", "left_outer").select(
+            "node", F.col("_sl").alias("label")
+        )
         for _ in range(rounds):
             nbr = (
                 und.join(
@@ -2822,7 +2744,9 @@ def label_spread(
                 )
                 .transform(loop_checkpoint)
             )
-    return labels
+        return labels
+
+    return run_loop(edges.sparkSession, n_nodes, spread, und, nodes, seed_l)
 
 
 def reciprocity(edges: DataFrame) -> DataFrame:
@@ -2914,9 +2838,8 @@ def topo_layers(nodes: DataFrame, edges: DataFrame, max_iters: int = 100) -> Dat
         nodes.select(F.col("node"), F.lit(0).cast("bigint").alias("layer"))
     )
     edges, _ = loop_checkpoint_count(edges.select("src", "dst"))
-    with loop_tuning(edges.sparkSession, n_nodes), no_constraint_propagation(
-        edges.sparkSession
-    ):
+
+    def relax(edges, layers):
         frontier, n_front = layers, n_nodes
         for _ in range(max_iters):
             f_src = frontier.select(
@@ -2946,7 +2869,9 @@ def topo_layers(nodes: DataFrame, edges: DataFrame, max_iters: int = 100) -> Dat
                 return layers
             frontier = stepped.where(F.col("_chg") == 1).select("node", "layer")
             n_front = n_chg
-    raise RuntimeError(f"topo_layers did not converge in {max_iters} rounds (cycle?)")
+        raise RuntimeError(f"topo_layers did not converge in {max_iters} rounds (cycle?)")
+
+    return run_loop(edges.sparkSession, n_nodes, relax, edges, layers)
 
 
 def ktruss(edges: DataFrame, k: int = 4, max_iters: int = 30) -> DataFrame:
@@ -3002,10 +2927,7 @@ def ktruss(edges: DataFrame, k: int = 4, max_iters: int = 30) -> DataFrame:
         "a", "b", F.coalesce(F.col("_sup"), F.lit(0).cast("bigint")).alias("_sup")
     )
     cur, n_e = loop_checkpoint_count(cur, size_hint=n_e)
-    with loop_tuning(edges.sparkSession, n_e), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        return _ktruss_loop(cur, n_e, need, max_iters, _support)
+    return run_loop(edges.sparkSession, n_e, _ktruss_loop, cur, n_e, need, max_iters, _support)
 
 
 def _ktruss_loop(cur, n_e, need, max_iters, _support):
@@ -3146,7 +3068,8 @@ def ktruss_incremental(
     need = k - 2
     if n_x == 0:
         return t_old
-    with loop_tuning(spark, n_new), no_constraint_propagation(spark):
+
+    def grow(e_new, not_t, x, t_old, n_x):
         # --- closure: pull in non-truss edges sharing a triangle
         # with the frontier, to fixpoint (fact 2's candidate set)
         frontier = x
@@ -3231,6 +3154,8 @@ def ktruss_incremental(
             cur, n_c = loop_checkpoint_count(cur, size_hint=n_surv)
         raise RuntimeError(f"ktruss_incremental did not converge in {max_iters} rounds")
 
+    return run_loop(spark, n_new, grow, e_new, not_t, x, t_old, n_x)
+
 
 def msf_boruvka(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     """(a, b, w): minimum spanning forest by Borůvka rounds — the
@@ -3266,14 +3191,11 @@ def msf_boruvka(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     )
     # lazy: materializes inside round 1's cross-edge count job
     labels = plan_checkpoint(labels)
-    forest_parts: list[DataFrame] = [und.limit(0)]
-    with loop_tuning(edges.sparkSession, n_e), no_constraint_propagation(
-        edges.sparkSession
-    ):
-        return _msf_loop(und, n_e, labels, forest_parts, max_iters)
+    return run_loop(edges.sparkSession, n_e, _msf_loop, und, n_e, labels, max_iters)
 
 
-def _msf_loop(und, n_e, labels, forest_parts, max_iters):
+def _msf_loop(und, n_e, labels, max_iters):
+    forest_parts = [und.limit(0)]
     for _ in range(max_iters):
         lab_a = labels.select(F.col("node").alias("a"), F.col("comp").alias("ca"))
         lab_b = labels.select(F.col("node").alias("b"), F.col("comp").alias("cb"))
@@ -3588,7 +3510,7 @@ def luby_mis(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     frontier.  Expected O(log n) rounds on random priorities; every
     round's shuffles are sized by the UNDECIDED subgraph, which
     shrinks geometrically — the classic symmetry-breaking primitive
-    under the same loop_tuning clamp as the other fixpoints."""
+    in the same tuned loop session as the other fixpoints."""
     und = _symmetrize(edges)
     und = loop_checkpoint(und)
     nodes = und.select(F.col("src").alias("node")).distinct()
@@ -3596,8 +3518,9 @@ def luby_mis(edges: DataFrame, max_iters: int = 50) -> DataFrame:
         nodes.select("node", F.md5(F.col("node").cast("string")).alias("_p"))
     )
     undecided, n_u = loop_checkpoint_count(pri)
-    mis_parts = []
-    with loop_tuning(edges.sparkSession, n_u):
+
+    def rounds(und, nodes, undecided, n_u):
+        mis_parts = []
         for _ in range(max_iters):
             if n_u == 0:
                 break
@@ -3628,21 +3551,23 @@ def luby_mis(edges: DataFrame, max_iters: int = 50) -> DataFrame:
                     excluded, "node", "left_anti"
                 )
             )
-    if n_u > 0:
-        raise RuntimeError(
-            f"luby_mis: {n_u} nodes still undecided after max_iters rounds; "
-            "raise max_iters (rounds are bounded by the longest "
-            "decreasing-priority path)"
+        if n_u > 0:
+            raise RuntimeError(
+                f"luby_mis: {n_u} nodes still undecided after max_iters rounds; "
+                "raise max_iters (rounds are bounded by the longest "
+                "decreasing-priority path)"
+            )
+        if not mis_parts:  # empty graph
+            return nodes.select("node", F.lit(False).alias("in_mis"))
+        mis = mis_parts[0]
+        for p in mis_parts[1:]:
+            mis = mis.unionByName(p)
+        mis = mis.select("node", F.lit(True).alias("in_mis"))
+        return nodes.join(mis, "node", "left_outer").select(
+            "node", F.coalesce("in_mis", F.lit(False)).alias("in_mis")
         )
-    if not mis_parts:  # empty graph
-        return nodes.select("node", F.lit(False).alias("in_mis"))
-    mis = mis_parts[0]
-    for p in mis_parts[1:]:
-        mis = mis.unionByName(p)
-    mis = mis.select("node", F.lit(True).alias("in_mis"))
-    return nodes.join(mis, "node", "left_outer").select(
-        "node", F.coalesce("in_mis", F.lit(False)).alias("in_mis")
-    )
+
+    return run_loop(edges.sparkSession, n_u, rounds, und, nodes, undecided, n_u)
 
 
 def bidirectional_distance(
@@ -3673,9 +3598,6 @@ def bidirectional_distance(
         )
 
     (ball_a, n_fa), (ball_b, n_fb) = ball0(src_nodes), ball0(dst_nodes)
-    front_a, front_b = ball_a, ball_b
-    ra = rb = 0
-    spark = edges.sparkSession
 
     def probe(ba, bb):
         # frontier-vs-ball, not ball-vs-ball: after the first probe a
@@ -3686,36 +3608,39 @@ def bidirectional_distance(
         row = j.agg(F.min(F.col("dist") + F.col("_db")).alias("h")).collect()[0]
         return row["h"]
 
-    def expand(front, own_ball, other_ball):
-        # ONE job per round (was three): the lazily-checkpointed
-        # frontier materializes inside an aggregation that counts it
-        # AND runs the midpoint probe against the other ball in the
-        # same pass.  Ball node sets are duplicate-free (every level
-        # anti-joins its ball), so the left-outer join preserves the
-        # frontier's cardinality and count(1) is exactly |grown|,
-        # while min(dist + _db) over the matched rows is the probe.
-        grown = plan_checkpoint(
-            front.join(und, front["node"] == und["src"])
-            .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .join(own_ball.select("node"), "node", "left_anti")
-            .distinct()
-        )
-        row = (
-            grown.join(
-                other_ball.select("node", F.col("dist").alias("_db")),
-                "node",
-                "left_outer",
+    def search(und, ball_a, ball_b, n_fa, n_fb):
+        def expand(front, own_ball, other_ball):
+            # ONE job per round: the lazily-checkpointed
+            # frontier materializes inside an aggregation that counts
+            # it AND runs the midpoint probe against the other ball in
+            # the same pass.  Ball node sets are duplicate-free (every
+            # level anti-joins its ball), so the left-outer join
+            # preserves the frontier's cardinality and count(1) is
+            # exactly |grown|, while min(dist + _db) over the matched
+            # rows is the probe.
+            grown = plan_checkpoint(
+                front.join(und, front["node"] == und["src"])
+                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+                .join(own_ball.select("node"), "node", "left_anti")
+                .distinct()
             )
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.min(F.col("dist") + F.col("_db")).alias("_h"),
+            row = (
+                grown.join(
+                    other_ball.select("node", F.col("dist").alias("_db")),
+                    "node",
+                    "left_outer",
+                )
+                .agg(
+                    F.count(F.lit(1)).alias("_n"),
+                    F.min(F.col("dist") + F.col("_db")).alias("_h"),
+                )
+                .collect()[0]
             )
-            .collect()[0]
-        )
-        return grown, int(row["_n"]), row["_h"]
+            return grown, int(row["_n"]), row["_h"]
 
-    best = probe(ball_a, ball_b)
-    with loop_tuning(spark, max(n_fa, n_fb)):
+        front_a, front_b = ball_a, ball_b
+        ra = rb = 0
+        best = probe(ball_a, ball_b)
         for _ in range(max_iters):
             if best is not None and best <= ra + rb:
                 break
@@ -3735,12 +3660,16 @@ def bidirectional_distance(
                 rb += 1
             if cand is not None and (best is None or cand < best):
                 best = cand
-    proven = (best is not None and best <= ra + rb) or (n_fa == 0 and n_fb == 0)
-    if not proven:
-        raise RuntimeError(
-            "bidirectional_distance: round cap hit before the midpoint "
-            "stopping rule proved exactness; raise max_iters"
-        )
+        proven = (best is not None and best <= ra + rb) or (n_fa == 0 and n_fb == 0)
+        if not proven:
+            raise RuntimeError(
+                "bidirectional_distance: round cap hit before the midpoint "
+                "stopping rule proved exactness; raise max_iters"
+            )
+        return best
+
+    spark = edges.sparkSession
+    best = run_loop(spark, max(n_fa, n_fb), search, und, ball_a, ball_b, n_fa, n_fb)
     # JVM-side one-row result: createDataFrame from a Python tuple
     # routes through a pickled PythonRDD (first use pays the Python
     # worker cold start); literals on range(1) stay JVM-side.
@@ -3767,8 +3696,9 @@ def jones_plassmann_coloring(edges: DataFrame, max_iters: int = 50) -> DataFrame
     nodes = und.select(F.col("src").alias("node")).distinct()
     pri = nodes.select("node", F.md5(F.col("node").cast("string")).alias("_p"))
     uncolored, n_u = loop_checkpoint_count(pri)
-    colored = None
-    with loop_tuning(edges.sparkSession, n_u):
+
+    def rounds(und, nodes, uncolored, n_u):
+        colored = None
         for _ in range(max_iters):
             if n_u == 0:
                 break
@@ -3822,16 +3752,18 @@ def jones_plassmann_coloring(edges: DataFrame, max_iters: int = 50) -> DataFrame
             uncolored, n_u = loop_checkpoint_count(
                 uncolored.join(newly.select("node"), "node", "left_anti")
             )
-    if n_u > 0:
-        raise RuntimeError(
-            f"jones_plassmann_coloring: {n_u} nodes still uncolored after "
-            "max_iters rounds; raise max_iters"
-        )
-    if colored is None:  # empty graph
-        return nodes.select("node", F.lit(None).cast("int").alias("color")).where(
-            F.lit(False)
-        )
-    return colored
+        if n_u > 0:
+            raise RuntimeError(
+                f"jones_plassmann_coloring: {n_u} nodes still uncolored after "
+                "max_iters rounds; raise max_iters"
+            )
+        if colored is None:  # empty graph
+            return nodes.select("node", F.lit(None).cast("int").alias("color")).where(
+                F.lit(False)
+            )
+        return colored
+
+    return run_loop(edges.sparkSession, n_u, rounds, und, nodes, uncolored, n_u)
 
 
 def bipartite_check(edges: DataFrame, max_iters: int = 50) -> DataFrame:
@@ -3840,7 +3772,7 @@ def bipartite_check(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     component's minimum node, then one edge-grain probe for edges
     whose endpoints share a parity (each is a witness to an odd
     cycle, so a component is bipartite iff it has none).  Reuses the
-    CC fixpoint + multi-source BFS machinery (their loop_tuning and
+    CC fixpoint + multi-source BFS machinery (their loop sessions and
     frontier discipline included); the parity probe is a single join
     keyed by the node — nothing here is new state beyond the label
     tables."""
@@ -3903,8 +3835,9 @@ def maximal_matching(edges: DataFrame, max_iters: int = 50) -> DataFrame:
             ),
         )
     )
-    matched_parts = []
-    with loop_tuning(edges.sparkSession, n_l):
+
+    def rounds(live, n_l):
+        matched_parts = []
         for _ in range(max_iters):
             if n_l == 0:
                 break
@@ -3935,17 +3868,19 @@ def maximal_matching(edges: DataFrame, max_iters: int = 50) -> DataFrame:
                     mnodes.withColumnRenamed("node", "b"), "b", "left_anti"
                 ).select("a", "b", "_p")
             )
-    if n_l > 0:
-        raise RuntimeError(
-            f"maximal_matching: {n_l} live edges remain after max_iters "
-            "rounds; raise max_iters"
-        )
-    if not matched_parts:  # empty graph
-        return canon.where(F.lit(False))
-    out = matched_parts[0]
-    for p in matched_parts[1:]:
-        out = out.unionByName(p)
-    return out
+        if n_l > 0:
+            raise RuntimeError(
+                f"maximal_matching: {n_l} live edges remain after max_iters "
+                "rounds; raise max_iters"
+            )
+        if not matched_parts:  # empty graph
+            return canon.where(F.lit(False))
+        out = matched_parts[0]
+        for p in matched_parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    return run_loop(edges.sparkSession, n_l, rounds, live, n_l)
 
 
 def euler_classify(edges: DataFrame, max_iters: int = 50) -> DataFrame:

@@ -21,12 +21,16 @@ Scale notes (100 TB):
   add at least one new key from a finite set, so the loop runs to a
   true fixpoint on any graph, cycles included — there is no round
   cap to truncate an answer; hop counts make the result usable for
-  shortest-path analytics.
+  shortest-path analytics;
+- the rounds plan in a clone of the caller's session
+  (``checkpoint.run_loop``) with AQE off and shuffles sized to the
+  frontier, and the answer comes back bound to the caller's session:
+  the caller's conf is never written, so other requests sharing the
+  session never plan under a loop's tuning.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from functools import reduce
 from typing import Callable
 
@@ -36,27 +40,11 @@ from terminus_server_spark.checkpoint import (
     _checkpoint,
     loop_checkpoint,
     loop_checkpoint_count,
-    loop_tuning,
     release,
+    run_loop,
 )
 
 from terminus_server_spark.woql import path_ast as P
-
-
-@contextmanager
-def no_constraint_propagation(spark):
-    """Catalyst's Union.rewriteConstraints crashes (key not found:
-    attr) when a localCheckpoint'ed plan is unioned with a plan that
-    shares its attribute ids — exactly the shape of semi-naive
-    iteration.  Constraint propagation buys nothing inside these
-    loops (inputs are already not-null-filtered), so scope it off."""
-    key = "spark.sql.constraintPropagation.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def _dedup_min_hops(df: DataFrame) -> DataFrame:
@@ -77,23 +65,26 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 
 def semi_naive(
     edges: DataFrame,
-    seed: Callable[[DataFrame], DataFrame],
+    seed: Callable[..., DataFrame],
     step: Callable[[DataFrame, DataFrame], DataFrame],
     key: list[str],
     agg: list[Column],
+    *inputs: DataFrame,
     recent_only: bool = False,
     max_rounds: int | None = None,
 ) -> DataFrame:
     """Semi-naive fixpoint, the one frontier loop of the engine.
 
-    ``edges`` is checkpointed once; ``seed(edges)`` is round 0's
-    layer; each round ``step(frontier, edges)`` proposes the next
+    ``edges`` is checkpointed once; ``seed(edges, *inputs)`` is round
+    0's layer; each round ``step(frontier, edges)`` proposes the next
     rows from the last layer, the ones whose ``key`` was already
     reached are anti-joined away, and the rest are grouped by ``key``
     under ``agg`` (``min`` of the payload columns) into the next
     layer.  A layer therefore holds exactly the keys first reached in
     its round.  An empty layer ends the loop: every round adds a new
-    key from a finite set, so the loop always terminates.
+    key from a finite set, so the loop always terminates.  ``seed``
+    reads any other frame it needs (anchors, sources) through
+    ``inputs``, so the loop's session plans it too.
 
     ``recent_only``: the caller promises ``edges`` is symmetric, so a
     round can only re-reach keys of the last two layers and the
@@ -102,59 +93,67 @@ def semi_naive(
     edge count (a bound on any BFS depth over symmetric edges) raises.
     ``max_rounds`` is a hop radius for queries that ask for one.
 
-    A round is one Spark job that checkpoints its layer and counts
-    it; the layer is the next round's frontier and joins the reached
+    The edge and seed checkpoints run as the loop's prologue, the
+    rounds in a session tuned to the seed's size (``run_loop``).  A
+    round is one Spark job that checkpoints its layer and counts it;
+    the layer is the next round's frontier and joins the reached
     state as a run of its own, and runs are folded as ``_FOLD``
     describes.  The answer is the runs folded into one checkpointed
     frame (one more job when more than one run is left).  Every
     other block the call made, the edge set included, is released as
     soon as it is dead: a call leaves exactly one block set behind,
     the answer it returns."""
-    spark = edges.sparkSession
-    base = frontier = prev = answer = None
-    runs: list[tuple[DataFrame, int, int]] = []  # (frame, layers, rows)
-    try:
-        with no_constraint_propagation(spark):
-            base, n_edges = loop_checkpoint_count(edges)
-            frontier, n_new = loop_checkpoint_count(seed(base))
-            runs.append((frontier, 1, n_new))
+
+    def prologue(edges: DataFrame, *inputs: DataFrame) -> DataFrame:
+        base, n_edges = loop_checkpoint_count(edges)
+        try:
+            frontier, n_new = loop_checkpoint_count(seed(base, *inputs))
+            return run_loop(
+                edges.sparkSession, max(n_new, 1), iterate, base, frontier, n_edges, n_new
+            )
+        finally:
+            release(base)
+
+    def iterate(base: DataFrame, frontier: DataFrame, n_edges: int, n_new: int) -> DataFrame:
+        prev = answer = None
+        runs: list[tuple[DataFrame, int, int]] = [(frontier, 1, n_new)]  # (frame, layers, rows)
+        try:
             rounds = 0
-            with loop_tuning(spark, max(n_new, 1)):
-                while n_new and (max_rounds is None or rounds < max_rounds):
-                    rounds += 1
-                    if recent_only and rounds > n_edges + 1:
-                        raise RuntimeError(
-                            f"semi_naive: {rounds} rounds over {n_edges} "
-                            "edges; recent_only requires symmetric edges"
-                        )
-                    anti = [frontier, prev] if recent_only else [f for f, _, _ in runs]
-                    reached = _union([f for f in anti if f is not None]).select(*key)
-                    # checkpoint + empty-layer probe fused into one job
-                    layer, n_new = loop_checkpoint_count(
-                        step(frontier, base)
-                        .join(reached, key, "left_anti")
-                        .groupBy(*key)
-                        .agg(*agg)
+            while n_new and (max_rounds is None or rounds < max_rounds):
+                rounds += 1
+                if recent_only and rounds > n_edges + 1:
+                    raise RuntimeError(
+                        f"semi_naive: {rounds} rounds over {n_edges} "
+                        "edges; recent_only requires symmetric edges"
                     )
-                    dead = frontier
-                    if recent_only:
-                        dead, prev = prev, frontier
-                    if dead is not None and not any(dead is f for f, _, _ in runs):
-                        release(dead)
-                    frontier = layer
-                    if n_new:
-                        runs.append((layer, 1, n_new))
-                    while len(runs) >= _FOLD and runs[-_FOLD][1] == runs[-1][1]:
-                        tail, runs = runs[-_FOLD:], runs[:-_FOLD]
-                        rows = sum(r for _, _, r in tail)
-                        runs.append((
-                            loop_checkpoint(_union([f for f, _, _ in tail]), rows),
-                            sum(n for _, n, _ in tail),
-                            rows,
-                        ))
-                        for f, _, _ in tail:
-                            if f is not frontier and f is not prev:
-                                release(f)
+                anti = [frontier, prev] if recent_only else [f for f, _, _ in runs]
+                reached = _union([f for f in anti if f is not None]).select(*key)
+                # checkpoint + empty-layer probe fused into one job
+                layer, n_new = loop_checkpoint_count(
+                    step(frontier, base)
+                    .join(reached, key, "left_anti")
+                    .groupBy(*key)
+                    .agg(*agg)
+                )
+                dead = frontier
+                if recent_only:
+                    dead, prev = prev, frontier
+                if dead is not None and not any(dead is f for f, _, _ in runs):
+                    release(dead)
+                frontier = layer
+                if n_new:
+                    runs.append((layer, 1, n_new))
+                while len(runs) >= _FOLD and runs[-_FOLD][1] == runs[-1][1]:
+                    tail, runs = runs[-_FOLD:], runs[:-_FOLD]
+                    rows = sum(r for _, _, r in tail)
+                    runs.append((
+                        loop_checkpoint(_union([f for f, _, _ in tail]), rows),
+                        sum(n for _, n, _ in tail),
+                        rows,
+                    ))
+                    for f, _, _ in tail:
+                        if f is not frontier and f is not prev:
+                            release(f)
             if len(runs) == 1:
                 answer = runs[0][0]
             else:
@@ -162,10 +161,12 @@ def semi_naive(
                     _union([f for f, _, _ in runs]), sum(r for _, _, r in runs)
                 )
             return answer
-    finally:
-        for df in [base, frontier, prev, *(f for f, _, _ in runs)]:
-            if df is not None and df is not answer:
-                release(df)
+        finally:
+            for df in [frontier, prev, *(f for f, _, _ in runs)]:
+                if df is not None and df is not answer:
+                    release(df)
+
+    return run_loop(edges.sparkSession, None, prologue, edges, *inputs)
 
 
 def _not_null(edges: DataFrame) -> DataFrame:
@@ -216,8 +217,9 @@ def transitive_closure_doubling(
     right choice for long-diameter graphs whose closure fits
     comfortably (hierarchies, linked lists, version chains).  For
     bushy graphs where |closure| ≫ |edges| the frontier method
-    shuffles far less per round; callers pick by shape."""
-    spark = edges.sparkSession
+    shuffles far less per round; callers pick by shape.  The rounds
+    run as a loop prologue (``run_loop`` with no state size): the
+    closure is the state, so they keep AQE and the session's width."""
 
     def ckpt_stats(df: DataFrame) -> tuple[DataFrame, tuple, int]:
         # lazy checkpoint + stats probe fused: the agg action
@@ -229,7 +231,7 @@ def transitive_closure_doubling(
         row = out.agg(F.count(F.lit(1)), F.sum("hops"), F.max("hops")).collect()[0]
         return out, (row[0], row[1]), row[2]
 
-    with no_constraint_propagation(spark):
+    def doubling(edges: DataFrame) -> DataFrame:
         r, stats, max_hops = ckpt_stats(
             _not_null(edges)
             .withColumn("hops", F.lit(1))
@@ -264,6 +266,9 @@ def transitive_closure_doubling(
             if new_stats == stats:  # no new pairs, no shorter paths
                 break
             stats = new_stats
+        return r
+
+    r = run_loop(edges.sparkSession, None, doubling, edges)
     return r if with_hops else r.select("src", "dst")
 
 
@@ -286,9 +291,7 @@ def anchored_closure(
     matching the un-anchored plan exactly: ``compile_path(Star)``
     derives its zero rows from the graph's nodes, so an anchor absent
     from the graph must yield zero rows, not a phantom (a, a, 0)."""
-    a = anchors.select(F.col("node").alias("src")).distinct()
-
-    def seed(e: DataFrame) -> DataFrame:
+    def seed(e: DataFrame, a: DataFrame) -> DataFrame:
         if not with_zero:
             return e.join(a, "src").select("src", "dst", F.lit(1).alias("hops"))
         universe = e.select(F.col("src").alias("n")).union(e.select("dst"))
@@ -297,7 +300,12 @@ def anchored_closure(
         )
 
     return semi_naive(
-        _not_null(edges), seed, _hop, ["src", "dst"], [F.min("hops").alias("hops")]
+        _not_null(edges),
+        seed,
+        _hop,
+        ["src", "dst"],
+        [F.min("hops").alias("hops")],
+        anchors.select(F.col("node").alias("src")).distinct(),
     )
 
 

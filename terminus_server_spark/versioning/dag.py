@@ -103,7 +103,7 @@ def _log_walk_distributed(commits: DataFrame, heads: list[str]) -> DataFrame:
     over the parent edges."""
     return semi_naive(
         parent_edges(commits),
-        lambda e: commits.where(F.col("commit_id").isin(heads)).select(
+        lambda e, c: c.where(F.col("commit_id").isin(heads)).select(
             "commit_id", F.lit(0).alias("depth")
         ),
         lambda f, e: f.join(e, f["commit_id"] == e["child"]).select(
@@ -111,6 +111,7 @@ def _log_walk_distributed(commits: DataFrame, heads: list[str]) -> DataFrame:
         ),
         ["commit_id"],
         [F.min("depth").alias("depth")],
+        commits,
     )
 
 

@@ -2784,10 +2784,12 @@ def test_cdc_apply_op_order_and_edge_cases(spark):
     assert got == {1: 11.0, 3: 99.0, 5: 50.0}
 
 
-def test_loop_tuning_restores_conf_even_on_raise(spark):
+def test_loop_tuning_restores_conf_even_on_raise(spark, monkeypatch):
     """A fixpoint loop must never leak its clamped shuffle width or
     disabled AQE into the session — including when the loop RAISES
-    (topo_layers on a cycle)."""
+    (topo_layers on a cycle) — nor write them to the session WHILE it
+    runs: another request on the same session must see the configured
+    values throughout, while the loop's own frames still plan tuned."""
     import pytest as _pytest
 
     from terminus_server_spark.operators.graph import (
@@ -2819,6 +2821,58 @@ def test_loop_tuning_restores_conf_even_on_raise(spark):
     assert spark.conf.get(key, "true") == prev_cp
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
+
+    from pyspark.core.rdd import RDD
+
+    from terminus_server_spark.operators import graph as graph_mod
+    from terminus_server_spark.operators import path as path_mod
+    from terminus_server_spark.operators.graph import strongly_connected_components
+
+    def triple(session):
+        return (
+            session.conf.get("spark.sql.adaptive.enabled"),
+            session.conf.get("spark.sql.shuffle.partitions"),
+            session.conf.get(key, "true"),
+        )
+
+    before = triple(spark)
+    to_df = RDD.toDF  # rdd.toDF() must keep building frames in the caller
+    seen = []
+
+    def spy(fn):
+        def wrapped(df, *args, **kwargs):
+            seen.append((triple(spark), triple(df.sparkSession)))
+            return fn(df, *args, **kwargs)
+
+        return wrapped
+
+    for mod, name in (
+        (path_mod, "loop_checkpoint_count"),
+        (graph_mod, "loop_checkpoint_count"),
+        (graph_mod, "loop_checkpoint_sum"),
+    ):
+        monkeypatch.setattr(mod, name, spy(getattr(mod, name)))
+
+    # a 30-edge chain closed into a 10-node cycle at its end
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(30, 20)], "src long, dst long"
+    )
+    for run in (
+        lambda: anchored_closure(chain, anchors),
+        lambda: connected_components(chain),
+        lambda: strongly_connected_components(chain),
+    ):
+        seen.clear()
+        out = run()
+        assert out.sparkSession is spark
+        out.collect()
+        assert seen
+        # the caller's session never changes while the loop runs ...
+        assert all(caller == before for caller, _ in seen), seen
+        # ... and the loop's rounds still plan AQE off, clamped to one
+        # partition, constraint propagation off
+        assert ("false", "1", "false") in {own for _, own in seen}, seen
+    assert RDD.toDF is to_df
 
 
 def test_adamic_adar_fanout_one_feature(spark):

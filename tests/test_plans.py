@@ -601,3 +601,27 @@ def test_cursor_keyset_predicate_reaches_scan(spark, tables):
     assert "GreaterThan(c_custkey,500)" in plan.replace(" ", "") or (
         "(c_custkey#" in plan and "> 500" in plan
     ), plan[:2000]
+
+
+def test_operators_never_write_session_conf():
+    """Operators plan loops in a cloned session (``checkpoint.run_loop``)
+    and pick write modes through writer options, so no package code
+    writes the caller's SQL conf.  The exceptions: ``load_tables``'
+    read setting (session.py) and the stream harnesses, which set a
+    streaming query's state partitions at start (streaming/events.py).
+    ``run_loop`` is the one place that writes a conf, its own clone's."""
+    import pathlib
+
+    import terminus_server_spark
+
+    root = pathlib.Path(terminus_server_spark.__file__).parent
+    allowed = {"conf.set(": {"session.py", "streaming/events.py"},
+               "setConfString(": {"checkpoint.py"}}
+    hits = [
+        f"{rel}: {needle}"
+        for src in sorted(root.rglob("*.py"))
+        for rel in [src.relative_to(root).as_posix()]
+        for needle, ok in allowed.items()
+        if needle in src.read_text() and rel not in ok
+    ]
+    assert hits == []
