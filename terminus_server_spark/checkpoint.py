@@ -11,9 +11,12 @@ checkpoint wrote once its maker is done with them (the semi-naive
 kernel in ``operators.path`` releases every round this way).
 
 Every fixpoint loop runs through ``run_loop``, which plans the loop
-in a clone of the caller's session tuned for frontier-sized state;
-the caller's own conf is never written, so other requests on the
-same session never see a loop's tuning.
+in a clone of the caller's session tuned for frontier-sized state.
+The clone helper under it, ``run_in_clone``, also scopes the stream
+replay harnesses (streaming/events.py): a query started there keeps
+its state partition count in the clone.  The caller's own conf is
+never written, so other requests on the same session never see a
+loop's or a stream's settings.
 
 Default is ``localCheckpoint`` — executor-local block storage, the
 fastest way to stop a loop's plan growing exponentially.  Its blocks
@@ -184,14 +187,35 @@ def _move(x: Any, session: SparkSession) -> Any:
     return DataFrame(dataset.ofRows(session._jsparkSession, plan), session)
 
 
+def run_in_clone(
+    spark: SparkSession, conf: dict[str, str], body: Callable[[SparkSession], Any]
+) -> Any:
+    """``body(clone)`` run in a clone of ``spark`` whose own conf carries
+    ``conf``, a DataFrame result bound to ``spark`` again.
+
+    The clone keeps every other setting of ``spark`` (``reliableCheckpoint``,
+    ANSI mode, temp views).  Frames the body makes in the clone plan
+    under its conf; a DataFrame result is moved back, so later queries
+    on it plan under the caller's conf.  Nothing is written to
+    ``spark``'s conf, so nothing needs restoring, a raising body leaves
+    no trace, and nested calls nest clones."""
+    js = spark._jsparkSession.cloneSession()
+    own = js.sessionState().conf()
+    for key, value in conf.items():
+        own.setConfString(key, value)
+    to_df = RDD.toDF  # the SparkSession constructor rebinds it
+    clone = SparkSession(spark.sparkContext, js)
+    RDD.toDF = to_df
+    return _move(body(clone), spark)
+
+
 def run_loop(
     spark: SparkSession, state_rows: int | None, body: Callable[..., Any], *args: Any
 ) -> Any:
     """``body(*args)`` run in a clone of ``spark`` tuned for a fixpoint
-    loop, its result bound to ``spark`` again.
+    loop (``run_in_clone``), its result bound to ``spark`` again.
 
-    The clone keeps every setting of ``spark`` (``reliableCheckpoint``,
-    ANSI mode, temp views) and changes three in its own conf:
+    The clone changes three settings:
 
     - constraint propagation off: Catalyst's Union.rewriteConstraints
       crashes (key not found: attr) when a checkpointed plan is
@@ -211,25 +235,18 @@ def run_loop(
     materializations, which keep AQE and the session's width — with
     only constraint propagation off.
 
-    DataFrame arguments are moved into the clone, and a DataFrame
-    result is moved back, so later queries on it plan under the
-    caller's conf.  The body must read its frames through its
-    arguments: a frame it closes over stays bound to the caller, and a
-    join it roots plans untuned.  Nothing is written to ``spark``'s
-    conf, so nothing needs restoring, a raising loop leaves no trace,
-    and nested loops nest clones."""
-    js = spark._jsparkSession.cloneSession()
-    conf = js.sessionState().conf()
-    conf.setConfString("spark.sql.constraintPropagation.enabled", "false")
+    DataFrame arguments are moved into the clone.  The body must read
+    its frames through its arguments: a frame it closes over stays
+    bound to the caller, and a join it roots plans untuned."""
+    conf = {"spark.sql.constraintPropagation.enabled": "false"}
     if state_rows is not None:
         width = int(spark.conf.get("spark.sql.shuffle.partitions"))
         parts = max(1, min(width, -(-state_rows // _LOOP_ROWS_PER_SHUFFLE)))
-        conf.setConfString("spark.sql.shuffle.partitions", str(parts))
-        conf.setConfString("spark.sql.adaptive.enabled", "false")
-    to_df = RDD.toDF  # the SparkSession constructor rebinds it
-    clone = SparkSession(spark.sparkContext, js)
-    RDD.toDF = to_df
-    return _move(body(*(_move(a, clone) for a in args)), spark)
+        conf["spark.sql.shuffle.partitions"] = str(parts)
+        conf["spark.sql.adaptive.enabled"] = "false"
+    return run_in_clone(
+        spark, conf, lambda clone: body(*(_move(a, clone) for a in args))
+    )
 
 
 def spread_input(df: DataFrame) -> DataFrame:

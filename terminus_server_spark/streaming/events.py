@@ -7,10 +7,22 @@ tests with a file source + ``availableNow`` trigger so the *same
 code* runs in production as ``readStream`` → kafka/files →
 ``writeStream``.
 
-Both operators below are pure transformations over a (possibly
-streaming) DataFrame, so batch oracles can verify their semantics
-exactly (stream-batch unification is the point of Structured
-Streaming).
+The operators are pure transformations over a (possibly streaming)
+DataFrame, so batch oracles can verify their semantics exactly
+(stream-batch unification is the point of Structured Streaming).
+
+Every ``run_stream_*`` harness replays its batches through one
+private primitive, ``_replay``: it stages each batch as one file,
+runs ONE query over them (one micro-batch per batch) into a memory,
+file or ``foreachBatch`` sink, and deletes its directories once the
+query has ended.  A query that pins its state partition count is
+built in a cloned session (checkpoint.run_in_clone), so no harness
+writes the caller's conf.  The state sinks (CDC, upsert, sketches,
+graph maintenance) write only their per-batch step; ``_fold`` owns
+the versioned parquet state that step reads and writes.
+``backfill_file_source`` and ``run_stream_fanout`` test source
+semantics (multi-file triggers, batch-id replays), so they keep their
+own queries and share only the directory cleanup.
 """
 
 from __future__ import annotations
@@ -21,6 +33,8 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from terminus_server_spark.checkpoint import run_in_clone
 
 
 def _event_time(events: DataFrame, col: str = "ts") -> DataFrame:
@@ -63,78 +77,168 @@ def stream_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return deduped.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
-def _drive_batches(
-    spark: SparkSession,
-    batches,
-    src: str,
-    ckpt: str,
-    merge,
-    heavy_batches: bool = False,
-) -> None:
-    """Feed ``batches`` through ONE streaming query, one micro-batch
-    per input batch, in order — the production shape (a long-running
-    query processing many triggers), not a query restart per batch.
-    A restart re-pays source listing, offset-log recovery and query
-    planning on every delivery; measured on this harness it is the
-    dominant fixed cost of every versioned-parquet state-swap sink.
+def _clear(root: str, keep: tuple[str, ...] = ()) -> None:
+    """Delete the harness directory ``root`` but for its entries
+    ``keep`` — the files the returned frame reads; ``root`` itself
+    goes too when nothing is kept."""
+    for entry in os.listdir(root):
+        if entry not in keep:
+            shutil.rmtree(os.path.join(root, entry))
+    if not keep:
+        os.rmdir(root)
 
-    Each batch lands as a single parquet file whose pinned mtime
-    fixes the file-source order (oldest first, the
-    run_stream_batches_to_table pattern), and maxFilesPerTrigger=1
-    makes file i exactly micro-batch i — ``merge`` sees the same
-    (batch_df, batch_id) sequence as the old restart-per-batch
-    driver, so per-batch state composition (and CDC within-batch
-    semantics) is unchanged.  Staging strategy is the caller's call:
-    the default coalesce(1) serializes only the batch's final stage
-    (upstream shuffles keep their parallelism) and is right for
-    DELTA-SIZED batches — a production stream's files arrive from the
-    source already written, staging exists only in this replay
-    harness, and the two-phase variant's extra write+read+job per
-    batch measurably regresses many-small-batch sinks (stream_kcore
-    13.3→20.7 s, stream_cc_incremental 9.5→14.7 s).  Callers whose
-    replay batches are CORPUS-SIZED scans pass heavy_batches=True:
-    coalesce(1) would collapse the whole scan+transform into one task
-    (stream_json_docs: 4 serialized corpus scans, 5.4→34 s), so those
-    stage two-phase — a plain parallel write, then a file-level
-    read+coalesce(1) task that concatenates the staged bytes into the
-    one delivery file without touching the upstream plan (13.3 s).
-    repartition(1) loses both ways: its round-robin shuffle + sort
-    per batch dominates delta-sized batches (stream_kcore +4 s)."""
-    os.makedirs(src, exist_ok=True)
-    schema = batches[0].schema
-    for i, b in enumerate(batches):
-        stage = os.path.join(src, f"_stage{i}")
-        dst = os.path.join(src, f"batch{i:05d}.parquet")
-        if heavy_batches:
-            b.write.mode("overwrite").parquet(stage)
+
+def _replay(
+    spark: SparkSession,
+    root: str,
+    batches: list[DataFrame],
+    sink,
+    keep: tuple[str, ...] = (),
+    heavy_batches: bool = False,
+    shuffle_partitions: int | None = None,
+) -> tuple[DataFrame | None, list]:
+    """Feed ``batches`` through ONE streaming query, one micro-batch
+    per batch, in order: the replay every harness in this module runs
+    on.  It is the production shape (a long-running query processing
+    many triggers), not a query restart per batch — a restart re-pays
+    source listing, offset-log recovery and query planning on every
+    delivery, measured as the dominant fixed cost of every
+    versioned-state sink.
+
+    Staging: each batch lands in ``root/src`` as a single parquet
+    file whose pinned mtime fixes the file-source order (oldest
+    first), and ``maxFilesPerTrigger=1`` makes file i exactly
+    micro-batch i.  The default coalesce(1) serializes only the
+    batch's final stage (upstream shuffles keep their parallelism)
+    and is right for DELTA-SIZED batches — a production stream's
+    files arrive from the source already written, staging exists
+    only in this harness, and the two-phase variant's extra
+    write+read+job per batch measurably regresses many-small-batch
+    sinks (stream_kcore 13.3→20.7 s, stream_cc_incremental 9.5→14.7
+    s).  Callers whose batches are CORPUS-SIZED scans pass
+    ``heavy_batches=True``: coalesce(1) would collapse the whole
+    scan+transform into one task (stream_json_docs: 4 serialized
+    corpus scans, 5.4→34 s), so those stage two-phase — a plain
+    parallel write, then a file-level read+coalesce(1) task that
+    concatenates the staged bytes into the one delivery file without
+    touching the upstream plan (13.3 s).  repartition(1) loses both
+    ways: its round-robin shuffle + sort per batch dominates
+    delta-sized batches (stream_kcore +4 s).
+
+    ``sink(stream)`` turns the file stream into the writer the caller
+    asks for (memory, file or ``foreachBatch``); the replay adds the
+    checkpoint (``root/ckpt``) and the availableNow trigger, starts
+    the query and waits for it to drain.  ``shuffle_partitions`` pins
+    the query's STATE partition count: the query is then built and
+    started in a clone of ``spark`` carrying that one setting
+    (checkpoint.run_in_clone).  A query fixes the count in its offset
+    log at start, so the clone scopes it to this query alone and the
+    caller's conf is never written.
+
+    Once the query has ended (or failed), everything under ``root``
+    but the entries ``keep`` is deleted.  Returns ``(table,
+    progresses)``: the table a memory sink filled (named by its
+    ``queryName``) bound to ``spark``, or None for the other sinks,
+    and the query's per-batch progress objects."""
+    src = os.path.join(root, "src")
+    progresses: list = []
+
+    def run(s: SparkSession) -> DataFrame | None:
+        stream = (
+            s.readStream.schema(batches[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            sink(stream)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        progresses.extend(q.recentProgress)
+        return s.table(q.name) if q.name else None
+
+    try:
+        os.makedirs(src)
+        for i, b in enumerate(batches):
+            stage = os.path.join(root, f"stage{i}")
+            (b if heavy_batches else b.coalesce(1)).write.parquet(stage)
             parts = glob.glob(os.path.join(stage, "part-*.parquet"))
             if len(parts) > 1:
-                merged = os.path.join(src, f"_merge{i}")
-                spark.read.parquet(stage).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(merged)
+                merged = os.path.join(root, f"merge{i}")
+                spark.read.parquet(stage).coalesce(1).write.parquet(merged)
                 parts = glob.glob(os.path.join(merged, "part-*.parquet"))
-                os.replace(parts[0], dst)
-                shutil.rmtree(merged)
-            else:
-                os.replace(parts[0], dst)
+            dst = os.path.join(src, f"batch{i:05d}.parquet")
+            os.replace(parts[0], dst)
+            # file-source batch order follows modification time (oldest
+            # first): pin mtimes so batch i is micro-batch i
+            os.utime(dst, (i + 1, i + 1))
+        if shuffle_partitions is None:
+            table = run(spark)
         else:
-            b.coalesce(1).write.mode("overwrite").parquet(stage)
-            os.replace(glob.glob(os.path.join(stage, "part-*.parquet"))[0], dst)
-        shutil.rmtree(stage)
-        # file-source batch order follows modification time (oldest
-        # first): pin mtimes so batch i is micro-batch i
-        os.utime(dst, (i + 1, i + 1))
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+            conf = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+            table = run_in_clone(spark, conf, run)
+    finally:
+        _clear(root, keep)
+    return table, progresses
+
+
+def _fold(
+    spark: SparkSession,
+    batches: list[DataFrame],
+    step,
+    answer: str,
+    heavy_batches: bool = False,
+    append: tuple[str, ...] = (),
+) -> DataFrame:
+    """Versioned state folded over a stream replay: the
+    read-modify-write-swap every state sink in this module runs on.
+
+    ``step(prev, batch_df)`` maps the last state version (a dict of
+    named frames, ``None`` before the first batch) and one micro-batch
+    to the next version's dict.  The fold owns the rest: micro-batch
+    i reads version i-1 and writes version i of each table as
+    immutable parquet (never overwriting a file it reads, the
+    cross-batch contract a transactional table format provides), and
+    drops version i-1 once version i is written, so the state on disk
+    is one version whatever the stream's length.  Tables named in
+    ``append`` are insert-only stores kept in one directory: the step
+    returns only the rows to add, appended AFTER the versioned tables
+    are written so their lazy plans read the pre-batch store.
+
+    Returns the last version of table ``answer``; nothing else the
+    fold wrote is left on disk."""
+    root = tempfile.mkdtemp(prefix="tss_stream_")
+    version, names = -1, []
+
+    def path(name: str, v: int) -> str:
+        if name in append:
+            return os.path.join(root, name)
+        return os.path.join(root, name, f"v{v}")
+
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal version, names
+        s = batch_df.sparkSession
+        prev = {n: s.read.parquet(path(n, version)) for n in names} or None
+        out = step(prev, batch_df)
+        for name in sorted(out, key=lambda n: n in append):
+            mode = "append" if name in append else "overwrite"
+            out[name].write.mode(mode).parquet(path(name, version + 1))
+        for name in names:
+            if name not in append:
+                shutil.rmtree(path(name, version))
+        version, names = version + 1, list(out)
+
+    _replay(
+        spark,
+        root,
+        batches,
+        lambda stream: stream.writeStream.foreachBatch(merge),
+        keep=(answer,),
+        heavy_batches=heavy_batches,
     )
-    q.awaitTermination()
+    return spark.read.parquet(path(answer, version))
 
 
 def run_stream_to_table(
@@ -147,38 +251,15 @@ def run_stream_to_table(
 ) -> DataFrame:
     """Test/driver harness: replay a batch events DataFrame through a
     real streaming query (file source, availableNow trigger, memory
-    sink) and return the resulting batch DataFrame.
+    sink) as one micro-batch and return the resulting batch DataFrame.
 
     This is the honest way to prove the streaming operator works as a
     *stream* (state, watermarks, triggers) while still returning a
-    comparable DataFrame.  ``shuffle_partitions`` pins the state
-    partition count for this query (see run_stream_batches_to_table:
-    per-partition state-store file traffic dominates local runs of
-    multi-store operators like stream-stream joins)."""
-    tmp = tempfile.mkdtemp(prefix="tss_stream_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    events_path_df.write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(table_name)
+    comparable DataFrame.  ``shuffle_partitions``: see
+    run_stream_batches_to_table."""
+    return run_stream_batches_to_table(
+        spark, [events_path_df], transform, table_name, output_mode, shuffle_partitions
+    )[0]
 
 
 def run_stream_batches_to_table(
@@ -191,63 +272,31 @@ def run_stream_batches_to_table(
 ) -> tuple[DataFrame, list]:
     """Replay a *sequence* of batch DataFrames as one micro-batch
     each (file source, one file per batch, ``maxFilesPerTrigger=1``,
-    availableNow) — the harness that proves cross-batch state and
-    watermark-driven EventTimeTimeout expiry for real: the watermark
-    only advances between micro-batches, so state TTL is unobservable
-    under the single-batch harness above.
+    availableNow, memory sink) — the harness that proves cross-batch
+    state and watermark-driven EventTimeTimeout expiry for real: the
+    watermark only advances between micro-batches, so state TTL is
+    unobservable under a single batch.
 
     ``shuffle_partitions`` pins the STATE partition count for this
-    query (stream-stream joins keep four HDFS-backed state stores per
-    partition and snapshot each one every micro-batch — at local
-    bench scale that per-partition file traffic, not the data,
+    query alone (stream-stream joins keep four HDFS-backed state
+    stores per partition and snapshot each one every micro-batch — at
+    local bench scale that per-partition file traffic, not the data,
     dominates; the production default stays the session's setting).
 
     Returns ``(result_df, progresses)`` — progresses are the
     streaming query's per-batch progress objects, whose
     ``stateOperators[].numRowsRemoved`` exposes expired state."""
-    import glob
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="tss_stream_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    os.makedirs(src)
-    for i, b in enumerate(batches):
-        part_dir = os.path.join(tmp, f"b{i}")
-        # repartition (not coalesce): coalesce(1) collapses the upstream
-        # scan into the single writer task; the shuffle keeps the read
-        # parallel and only the one-file write serial.
-        b.repartition(1).write.mode("overwrite").parquet(part_dir)
-        part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(src, f"batch{i:05d}.parquet")
-        shutil.copy(part, dst)
-        # file-source batch order follows modification time (oldest
-        # first): pin mtimes so batch i is micro-batch i
-        os.utime(dst, (i + 1, i + 1))
-    schema = batches[0].schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    return _replay(
+        spark,
+        tempfile.mkdtemp(prefix="tss_stream_"),
+        batches,
+        lambda stream: transform(stream)
+        .writeStream.format("memory")
+        .queryName(table_name)
+        .outputMode(output_mode),
+        heavy_batches=True,
+        shuffle_partitions=shuffle_partitions,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(table_name), list(q.recentProgress)
 
 
 def session_windows(
@@ -550,43 +599,21 @@ def run_stream_upsert(
     equivalent is sources' ``upsert``.
 
     Harness: replay ``batches`` through a real stream (file source,
-    one availableNow pass per batch, same checkpoint dir so offsets
-    carry across passes); each ``foreachBatch`` writes an immutable
-    new table version (read-modify-write-swap — never overwriting a
-    file it is reading), the cross-batch contract a transactional
-    table format provides.  Returns the final table."""
-    tmp = tempfile.mkdtemp(prefix="tss_upsert_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
+    one micro-batch per batch); each ``foreachBatch`` writes an
+    immutable new table version (``_fold``).  Returns the final
+    table."""
+    from pyspark.sql.window import Window
 
-    def merged_newest_wins(cur: DataFrame) -> DataFrame:
-        from pyspark.sql.window import Window
+    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
 
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        return (
-            cur.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+    def step(prev, batch_df: DataFrame) -> dict:
+        cur = batch_df
+        if prev is not None:
+            cur = prev["table"].unionByName(batch_df.select(*prev["table"].columns))
+        newest = cur.withColumn("_rn", F.row_number().over(w))
+        return {"table": newest.where(F.col("_rn") == 1).drop("_rn")}
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        if state["version"] >= 0:
-            cur = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
-            combined = cur.unionByName(batch_df.select(*cur.columns))
-        else:
-            combined = batch_df
-        out = merged_newest_wins(combined)
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"v{state['version']}")
-        )
-
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    return _fold(spark, batches, step, "table")
 
 
 def run_stream_batches_to_files(
@@ -604,47 +631,20 @@ def run_stream_batches_to_files(
     the memory-sink harness can't exercise.  Returns the read-back
     DataFrame (the metadata-log-filtered view of the output
     directory)."""
-    import glob
-    import shutil
-
-    tmp = tempfile.mkdtemp(prefix="tss_fsink_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    out = os.path.join(tmp, "out")
-    ckpt = os.path.join(tmp, "ckpt")
-    os.makedirs(src)
-    for i, b in enumerate(batches):
-        part_dir = os.path.join(tmp, f"b{i}")
-        # repartition (not coalesce): coalesce(1) collapses the upstream
-        # scan into the single writer task; the shuffle keeps the read
-        # parallel and only the one-file write serial.
-        b.repartition(1).write.mode("overwrite").parquet(part_dir)
-        part = glob.glob(os.path.join(part_dir, "part-*.parquet"))[0]
-        dst = os.path.join(src, f"batch{i:05d}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (i + 1, i + 1))
-    schema = batches[0].schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    root = tempfile.mkdtemp(prefix="tss_stream_")
+    out = os.path.join(root, "out")
+    _replay(
+        spark,
+        root,
+        batches,
+        lambda stream: transform(stream)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .outputMode(output_mode),
+        keep=("out",),
+        heavy_batches=True,
+        shuffle_partitions=shuffle_partitions,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            transform(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(out)
 
 
@@ -671,9 +671,7 @@ def backfill_file_source(
     Returns ``(sink_df, n_batches_run1, n_batches_run2)`` — batch
     counts prove the cap sliced the backfill (ceil(files/cap)) and
     that run 2 read only the new files."""
-    import os
-
-    tmp = tempfile.mkdtemp(prefix="tss_backfill_", dir="/tmp")
+    tmp = tempfile.mkdtemp(prefix="tss_stream_")
     src = os.path.join(tmp, "src")
     ckpt = os.path.join(tmp, "ckpt")
     sink = os.path.join(tmp, "sink")
@@ -699,6 +697,7 @@ def backfill_file_source(
     n1 = drain()
     second.repartition(n_files_each).write.mode("append").parquet(src)
     n2 = drain()
+    _clear(tmp, ("sink",))
     return spark.read.parquet(sink), n1, n2
 
 
@@ -729,14 +728,11 @@ def run_stream_fanout(
     failure); both sinks must be byte-identical afterwards, which the
     caller's oracle comparison enforces.  Returns
     ``(archive_df, rollup_df)``."""
-    import glob
-    import os as _os
-
-    tmp = tempfile.mkdtemp(prefix="tss_fanout_", dir="/tmp")
-    src = _os.path.join(tmp, "src")
-    ckpt = _os.path.join(tmp, "ckpt")
-    archive = _os.path.join(tmp, "archive")
-    state = {"last": -1}
+    tmp = tempfile.mkdtemp(prefix="tss_stream_")
+    src = os.path.join(tmp, "src")
+    ckpt = os.path.join(tmp, "ckpt")
+    archive = os.path.join(tmp, "archive")
+    last = -1
 
     def rollup_of(df: DataFrame) -> DataFrame:
         return df.groupBy(*key_cols).agg(
@@ -745,13 +741,14 @@ def run_stream_fanout(
         )
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal last
         s = batch_df.sparkSession
         batch_df.write.mode("overwrite").parquet(
-            _os.path.join(archive, f"b{batch_id}")
+            os.path.join(archive, f"b{batch_id}")
         )
         agg = rollup_of(batch_df)
-        prev = _os.path.join(tmp, f"roll_v{batch_id - 1}")
-        if _os.path.exists(prev):
+        prev = os.path.join(tmp, f"roll_v{batch_id - 1}")
+        if os.path.exists(prev):
             agg = (
                 s.read.parquet(prev)
                 .unionByName(agg)
@@ -761,8 +758,8 @@ def run_stream_fanout(
                     F.sum("_sv").cast("decimal(28,6)").alias("_sv"),
                 )
             )
-        agg.write.mode("overwrite").parquet(_os.path.join(tmp, f"roll_v{batch_id}"))
-        state["last"] = max(state["last"], batch_id)
+        agg.write.mode("overwrite").parquet(os.path.join(tmp, f"roll_v{batch_id}"))
+        last = max(last, batch_id)
 
     source_df.repartition(n_files).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
@@ -779,17 +776,17 @@ def run_stream_fanout(
     )
     q.awaitTermination()
     # simulate the at-least-once retry: re-run the LAST batch through
-    # the same writer — both sinks must come out unchanged
-    last = state["last"]
-    # materialize the replay rows BEFORE the retry overwrites the very
+    # the same writer — both sinks must come out unchanged.
+    # Materialize the replay rows BEFORE the retry overwrites the very
     # directory they come from (a real retry re-reads the source, not
     # its own sink — localCheckpoint stands in for that)
-    replay = spark.read.parquet(_os.path.join(archive, f"b{last}")).localCheckpoint(
+    replay = spark.read.parquet(os.path.join(archive, f"b{last}")).localCheckpoint(
         eager=True
     )
     fanout(replay, last)
-    archive_df = spark.read.parquet(_os.path.join(archive, "b*"))
-    rollup_df = spark.read.parquet(_os.path.join(tmp, f"roll_v{last}")).select(
+    _clear(tmp, ("archive", f"roll_v{last}"))
+    archive_df = spark.read.parquet(os.path.join(archive, "b*"))
+    rollup_df = spark.read.parquet(os.path.join(tmp, f"roll_v{last}")).select(
         *key_cols, "n", F.col("_sv").cast("double").alias("sum_value")
     )
     return archive_df, rollup_df
@@ -813,40 +810,23 @@ def run_stream_cdc(
     out-of-order replay — without the sequence the merge degrades to
     last-applied-wins across batches, and without the tombstone an
     older 'U' arriving after a newer 'D' would resurrect the deleted
-    key (it would see no stored competitor at all).  Same replay
-    harness as the upsert sink (real file-source micro-batches,
-    shared checkpoint, immutable read-modify-write-swap versions)."""
+    key (it would see no stored competitor at all).  Same versioned
+    fold as the upsert sink."""
     from pyspark.sql.window import Window
 
-    tmp = tempfile.mkdtemp(prefix="tss_cdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
     data_cols = [c for c in batches[0].columns if c not in ("op", seq_col)]
+    w = Window.partitionBy(*key_cols).orderBy(F.col("__seq__").desc())
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        ops = batch_df.select(
-            *data_cols, F.col("op"), F.col(seq_col).alias("__seq__")
-        )
-        if state["version"] >= 0:
+    def step(prev, batch_df: DataFrame) -> dict:
+        ops = batch_df.select(*data_cols, F.col("op"), F.col(seq_col).alias("__seq__"))
+        if prev is not None:
             # stored rows (incl. 'D' tombstones) compete with their
             # winning op and seq
-            cur = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
-            ops = cur.unionByName(ops)
-        w = Window.partitionBy(*key_cols).orderBy(F.col("__seq__").desc())
-        out = (
-            ops.withColumn("__rn__", F.row_number().over(w))
-            .where(F.col("__rn__") == 1)
-            .select(*data_cols, "op", "__seq__")
-        )
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"v{state['version']}")
-        )
+            ops = prev["table"].unionByName(ops)
+        newest = ops.withColumn("__rn__", F.row_number().over(w))
+        return {"table": newest.where(F.col("__rn__") == 1).select(*data_cols, "op", "__seq__")}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    final = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    final = _fold(spark, batches, step, "table")
     return final.where(F.col("op") != "D").drop("op", "__seq__")
 
 
@@ -854,7 +834,6 @@ def run_stream_landmark_refresh(
     spark: SparkSession,
     edge_batches: list[DataFrame],
     landmarks: DataFrame,
-    max_iters: int = 50,
 ) -> DataFrame:
     """Streaming landmark-distance maintenance: the (landmark, node,
     hops) label table of :func:`terminus_server_spark.operators.graph.
@@ -867,25 +846,22 @@ def run_stream_landmark_refresh(
     can only create or SHORTEN distances, so the delta is a
     relaxation wave seeded from the new edges alone — label(L, u) + 1
     candidates over the batch edges, then improvements propagate
-    through the accumulated edge set until no label decreases.  Per
-    batch the work scales with the improvement frontier (labels the
-    batch actually changed), not |L|·|V|; a batch that closes no new
-    paths costs one empty-frontier probe.
+    through the accumulated edge set until no label decreases.  Every
+    round strictly shortens a label, so the wave runs to that
+    fixpoint with no round cap.  Per batch the work scales with the
+    improvement frontier (labels the batch actually changed), not
+    |L|·|V|; a batch that closes no new paths costs one
+    empty-frontier probe.
 
-    State (labels + accumulated undirected edges) lives as immutable
-    versioned parquet, swapped per micro-batch — same
-    read-modify-write-swap convention as the CDC/upsert sinks.
-    ``landmarks``: (node) — fixed upfront; graphs are undirected
-    (edges symmetrized internally)."""
+    State (labels + accumulated undirected edges) is a versioned
+    fold (``_fold``), like the CDC/upsert sinks.  ``landmarks``:
+    (node) — fixed upfront; graphs are undirected (edges symmetrized
+    internally)."""
     from terminus_server_spark.checkpoint import (
         loop_checkpoint,
         loop_checkpoint_count,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_lmk_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
     seed = landmarks.select(
         F.col("node").alias("landmark"),
         F.col("node").alias("node"),
@@ -907,48 +883,33 @@ def run_stream_landmark_refresh(
             .select("landmark", "node", "hops")
         )
 
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         und = (
             batch_df.select("src", "dst")
             .union(batch_df.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .where(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
             .distinct()
         )
-        if state["version"] >= 0:
-            labels = s.read.parquet(os.path.join(tmp, f"lab{state['version']}"))
-            edges_all = (
-                s.read.parquet(os.path.join(tmp, f"edg{state['version']}"))
-                .union(und)
-                .distinct()
-            )
+        if prev is not None:
+            labels = prev["labels"]
+            edges_all = prev["edges"].union(und).distinct()
         else:
-            labels = seed
-            edges_all = und
+            labels, edges_all = seed, und
         edges_all = loop_checkpoint(edges_all)
         # seed the wave from the NEW edges only
         cand = labels.join(und, labels["node"] == und["src"]).select(
             "landmark", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
         )
         frontier, n_f = loop_checkpoint_count(_improvements(cand, labels))
-        rounds = 0
-        while n_f > 0 and rounds < max_iters:
+        while n_f > 0:
             labels = loop_checkpoint(_merge_labels(labels, frontier))
             cand = frontier.join(edges_all, frontier["node"] == edges_all["src"]).select(
                 "landmark", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
             )
             frontier, n_f = loop_checkpoint_count(_improvements(cand, labels))
-            rounds += 1
-        state["version"] += 1
-        labels.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"lab{state['version']}")
-        )
-        edges_all.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"edg{state['version']}")
-        )
+        return {"labels": labels, "edges": edges_all}
 
-    _drive_batches(spark, edge_batches, src, ckpt, refresh)
-    return spark.read.parquet(os.path.join(tmp, f"lab{state['version']}"))
+    return _fold(spark, edge_batches, step, "labels")
 
 
 def run_stream_kmv_sketch(
@@ -972,30 +933,19 @@ def run_stream_kmv_sketch(
     (HLL would be cheaper per byte but isn't engine-portable;
     md5-KMV trades 2 KB for a testable, exactly-reproducible
     estimate)."""
-    tmp = tempfile.mkdtemp(prefix="tss_kmv_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-    denom = float(16**8)
+    frac = (
+        F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
+        .cast("double")
+        / F.lit(float(16**8))
+    )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        frac = (
-            F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
-            .cast("double")
-            / F.lit(denom)
-        )
+    def step(prev, batch_df: DataFrame) -> dict:
         mins = batch_df.select(frac.alias("f")).distinct()
-        if state["version"] >= 0:
-            mins = s.read.parquet(os.path.join(tmp, f"v{state['version']}")).union(
-                mins
-            )
-        out = mins.distinct().orderBy("f").limit(k)
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(os.path.join(tmp, f"v{state['version']}"))
+        if prev is not None:
+            mins = prev["mins"].union(mins)
+        return {"mins": mins.distinct().orderBy("f").limit(k)}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    mins = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    mins = _fold(spark, batches, step, "mins")
     return mins.agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.max("f").alias("theta"),
@@ -1025,61 +975,33 @@ def run_stream_hll_sketch(
     Per batch: one scan emitting (bucket, rank), one ≤2^b-row MAX
     merge against the stored registers, one ≤2^b-row parquet swap.
     State is O(2^b) forever."""
-    m = 1 << b
-    tmp = tempfile.mkdtemp(prefix="tss_hll_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
+    from terminus_server_spark.operators.pipeline import _hll_alpha
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        h32 = F.conv(
-            F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        wit = F.conv(
-            F.substring(F.md5(F.col(col).cast("string")), 9, 8), 16, 10
-        ).cast("long")
-        rank = F.when(wit == 0, F.lit(33)).otherwise(
-            F.lit(33) - F.length(F.bin(wit))
-        )
+    m = 1 << b
+    h32 = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10).cast("long")
+    wit = F.conv(F.substring(F.md5(F.col(col).cast("string")), 9, 8), 16, 10).cast("long")
+    rank = F.when(wit == 0, F.lit(33)).otherwise(F.lit(33) - F.length(F.bin(wit)))
+
+    def step(prev, batch_df: DataFrame) -> dict:
         regs = (
             batch_df.select((h32 % m).alias("bucket"), rank.alias("r"))
             .groupBy("bucket")
             .agg(F.max("r").alias("mr"))
         )
-        if state["version"] >= 0:
-            prev = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+        if prev is not None:
             regs = (
-                regs.unionByName(prev)
+                regs.unionByName(prev["regs"])
                 .groupBy("bucket")
                 .agg(F.max("mr").alias("mr"))
             )
-        state["version"] += 1
-        regs.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"v{state['version']}")
-        )
+        return {"regs": regs}
 
-    schema = batches[0].schema
-    for i, bdf in enumerate(batches):
-        bdf.write.mode("overwrite").parquet(os.path.join(src, f"b{i}"))
-        stream = spark.readStream.schema(schema).option(
-            "maxFilesPerTrigger", "1000"
-        ).parquet(src + "/*")
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    regs = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    regs = _fold(spark, batches, step, "regs")
     grid = spark.range(m).select(F.col("id").alias("bucket"))
     full = grid.join(regs, "bucket", "left_outer").select(
         "bucket", F.coalesce("mr", F.lit(0)).alias("mr")
     )
     inv = F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), mr)").cast("double")
-    from terminus_server_spark.operators.pipeline import _hll_alpha
-
     alpha = _hll_alpha(m)
     return full.agg(
         F.sum(F.when(F.col("mr") == 0, 1).otherwise(0)).alias("n_zero_buckets"),
@@ -1117,13 +1039,9 @@ def run_stream_scd2(
     collapsed into.  In-batch disorder is fine (the rebuild sorts)."""
     from pyspark.sql.window import Window
 
-    tmp = tempfile.mkdtemp(prefix="tss_scd2_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
+    w = Window.partitionBy("key").orderBy("vf", "eid")
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         changes = batch_df.select(
             F.col(key_col).alias("key"),
             F.col(attr_col).alias("attr"),
@@ -1131,15 +1049,14 @@ def run_stream_scd2(
             F.col(id_col).alias("eid"),
         )
         untouched = None
-        if state["version"] >= 0:
-            cur = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+        if prev is not None:
+            cur = prev["intervals"]
             keys = changes.select("key").distinct()
             untouched = cur.join(keys, "key", "left_anti")
             touched = cur.join(keys, "key", "left_semi").select(
                 "key", "attr", F.col("valid_from").alias("vf"), F.col("eid")
             )
             changes = changes.unionByName(touched)
-        w = Window.partitionBy("key").orderBy("vf", "eid")
         runs = changes.select(
             "key", "attr", "vf", "eid",
             F.when(
@@ -1151,21 +1068,18 @@ def run_stream_scd2(
         # a run's first row IS its (vf, eid)-minimal row, so the
         # _chg==1 filter alone yields one row per interval
         iv = runs.where(F.col("_chg") == 1).select("key", "attr", "vf", "eid")
-        w2 = Window.partitionBy("key").orderBy("vf", "eid")
         out = iv.select(
             "key",
             "attr",
             F.col("vf").alias("valid_from"),
-            F.lead("vf").over(w2).alias("valid_to"),
+            F.lead("vf").over(w).alias("valid_to"),
             "eid",
         )
         if untouched is not None:
             out = out.unionByName(untouched)
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(os.path.join(tmp, f"v{state['version']}"))
+        return {"intervals": out}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    final = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    final = _fold(spark, batches, step, "intervals")
     return final.select("key", "attr", "valid_from", "valid_to")
 
 
@@ -1194,14 +1108,9 @@ def run_stream_quantile_grid(
     forever."""
     from pyspark.sql.window import Window
 
-    tmp = tempfile.mkdtemp(prefix="tss_qgrid_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
     width = (hi - lo) / float(n_buckets)
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         # clamp BOTH grid edges (values < lo land in bucket 0, just
         # as values > hi land in the top bucket) and drop NULL
         # measures — otherwise the CDF inversion can return a
@@ -1222,18 +1131,15 @@ def run_stream_quantile_grid(
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if state["version"] >= 0:
-            prev = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+        if prev is not None:
             hist = (
-                hist.unionByName(prev)
+                hist.unionByName(prev["hist"])
                 .groupBy("bucket")
                 .agg(F.sum("c").alias("c"))
             )
-        state["version"] += 1
-        hist.write.mode("overwrite").parquet(os.path.join(tmp, f"v{state['version']}"))
+        return {"hist": hist}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    hist = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    hist = _fold(spark, batches, step, "hist")
     n = hist.agg(F.sum("c").alias("n"))
     cum = hist.select(
         "bucket", F.sum("c").over(Window.orderBy("bucket")).alias("cum")
@@ -1275,10 +1181,6 @@ def run_stream_countmin(
     shape.  The final heavy-hitter readout joins the sketch against
     the candidate key set exactly like the batch operator, so the
     oracle is the SAME cell-replay SQL as `sketch_countmin`."""
-    tmp = tempfile.mkdtemp(prefix="tss_cms_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
 
     def buckets(key):
         return F.array(
@@ -1291,8 +1193,7 @@ def run_stream_countmin(
             ]
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         cells = (
             batch_df.select(
                 F.posexplode(buckets(F.col(col).cast("string"))).alias("row", "bucket")
@@ -1300,18 +1201,15 @@ def run_stream_countmin(
             .groupBy("row", "bucket")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        if state["version"] >= 0:
-            prev = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+        if prev is not None:
             cells = (
-                prev.unionByName(cells)
+                prev["cells"].unionByName(cells)
                 .groupBy("row", "bucket")
                 .agg(F.sum("c").alias("c"))
             )
-        state["version"] += 1
-        cells.write.mode("overwrite").parquet(os.path.join(tmp, f"v{state['version']}"))
+        return {"cells": cells}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    cells = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    cells = _fold(spark, batches, step, "cells")
     full = batches[0]
     for b in batches[1:]:
         full = full.unionByName(b)
@@ -1344,30 +1242,22 @@ def run_stream_cc(
     batch edges' label PAIRS contract through a ≤|batch|-edge
     meta-graph, so per-batch cost scales with the delta while the
     stored label table stays exactly what full CC on everything
-    seen so far would produce.  Same versioned-parquet state-swap
-    harness as the landmark/CDC sinks."""
-    from pyspark.sql import functions as F  # noqa: F811
-
+    seen so far would produce.  Same versioned fold as the
+    landmark/CDC sinks."""
     from terminus_server_spark.operators.graph import (
         _symmetrize,
         connected_components_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_scc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         und = _symmetrize(batch_df)
         batch_nodes = (
             und.select(F.col("src").alias("node"))
             .union(und.select(F.col("dst").alias("node")))
             .distinct()
         )
-        if state["version"] >= 0:
-            labels = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+        if prev is not None:
+            labels = prev["labels"]
             # which batch nodes are already labeled?  Narrow the store
             # map-side first (broadcast semi — output is batch-sized),
             # then anti-join the batch against THAT: a plain anti-join
@@ -1383,11 +1273,9 @@ def run_stream_cc(
         else:
             labels = batch_nodes.select("node", F.col("node").alias("component"))
         out = connected_components_incremental(labels, und, max_iters)
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(os.path.join(tmp, f"v{state['version']}"))
+        return {"labels": out}
 
-    _drive_batches(spark, edge_batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    return _fold(spark, edge_batches, step, "labels")
 
 
 def run_stream_cc_cdc(
@@ -1410,17 +1298,10 @@ def run_stream_cc_cdc(
     label table; the final labels equal batch CC of the NET edge set
     under any batch split that respects that convention — per-batch
     cost rides the delta and the dirty components, never the corpus."""
-    from pyspark.sql import functions as F  # noqa: F811
-
     from terminus_server_spark.operators.graph import (
         connected_components_decremental,
         connected_components_incremental,
     )
-
-    tmp = tempfile.mkdtemp(prefix="tss_cccdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
 
     def canon(e):
         return (
@@ -1433,13 +1314,12 @@ def run_stream_cc_cdc(
             .distinct()
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = canon(batch_df.where(F.col("op") == "add"))
         dels = canon(batch_df.where(F.col("op") == "del"))
-        if state["version"] >= 0:
-            edges = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            labels = s.read.parquet(os.path.join(tmp, f"l{state['version']}"))
+        if prev is not None:
+            edges = prev["edges"]
+            labels = prev["labels"]
         else:
             edges = adds.limit(0)
             labels = adds.select(
@@ -1481,16 +1361,9 @@ def run_stream_cc_cdc(
             "left_anti",
         )
         edges = edges.unionByName(adds_only)
-        state["version"] += 1
-        edges.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        labels.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"l{state['version']}")
-        )
+        return {"edges": edges, "labels": labels}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"l{state['version']}"))
+    return _fold(spark, batches, step, "labels")
 
 
 def run_stream_gql_subscription(
@@ -1510,38 +1383,19 @@ def run_stream_gql_subscription(
     snapshot; filters still push to the scan, orderBy+limit still
     plan as TakeOrderedAndProject).
 
-    State: the accumulated docs + the latest result, versioned
-    parquet like the other sinks.  Returns the final result table —
+    State: the accumulated docs + the latest result, a versioned
+    fold like the other sinks.  Returns the final result table —
     which must equal the same query over ALL documents (the oracle's
     check), proving the per-batch re-evaluation converges to the
     batch answer."""
     from terminus_server_spark.docs.graphql import execute_graphql
 
-    tmp = tempfile.mkdtemp(prefix="tss_gqlsub_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
+    def step(prev, batch_df: DataFrame) -> dict:
+        docs = batch_df if prev is None else prev["docs"].unionByName(batch_df)
+        result = execute_graphql({class_name: docs}, gql_src, variables=variables)[root]
+        return {"docs": docs, "result": result}
 
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        if state["version"] >= 0:
-            docs = s.read.parquet(os.path.join(tmp, f"docs{state['version']}")).unionByName(
-                batch_df
-            )
-        else:
-            docs = batch_df
-        state["version"] += 1
-        docs.write.mode("overwrite").parquet(os.path.join(tmp, f"docs{state['version']}"))
-        snapshot = s.read.parquet(os.path.join(tmp, f"docs{state['version']}"))
-        result = execute_graphql({class_name: snapshot}, gql_src, variables=variables)[
-            root
-        ]
-        result.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"res{state['version']}")
-        )
-
-    _drive_batches(spark, doc_batches, src, ckpt, refresh)
-    return spark.read.parquet(os.path.join(tmp, f"res{state['version']}"))
+    return _fold(spark, doc_batches, step, "result")
 
 
 def run_stream_bisect(
@@ -1574,35 +1428,24 @@ def run_stream_bisect(
     layers with retractions monitor the same way (net counts stay
     monotone iff the predicate's subject does — the monotonicity
     requirement is the caller's, exactly as in the batch bisect)."""
-    tmp = tempfile.mkdtemp(prefix="tss_bisect_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
+    from pyspark.sql.window import Window
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        w = (
-            F.when(F.col(op_col) == "del", F.lit(-1)).otherwise(F.lit(1))
-            if op_col is not None
-            else F.lit(1)
-        )
+    w = (
+        F.when(F.col(op_col) == "del", F.lit(-1)).otherwise(F.lit(1))
+        if op_col is not None
+        else F.lit(1)
+    )
+
+    def step(prev, batch_df: DataFrame) -> dict:
         part = batch_df.groupBy(F.col(seq_col).alias("commit_seq")).agg(
             F.sum(w).cast("bigint").alias("n")
         )
-        if state["version"] >= 0:
-            part = s.read.parquet(
-                os.path.join(tmp, f"v{state['version']}")
-            ).unionByName(part)
+        if prev is not None:
+            part = prev["counts"].unionByName(part)
         out = part.groupBy("commit_seq").agg(F.sum("n").cast("bigint").alias("n"))
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"v{state['version']}")
-        )
+        return {"counts": out}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    from pyspark.sql.window import Window
-
-    counts = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    counts = _fold(spark, batches, step, "counts")
     total = counts.agg(F.sum("n").alias("t"))
     # the running sum's window is ordered WITHOUT a partition — safe
     # here by construction: it runs over the O(#commits) state table
@@ -1651,19 +1494,13 @@ def run_stream_inverted_index(
     from terminus_server_spark.checkpoint import plan_checkpoint
     from terminus_server_spark.operators.retrieval import _ltoks
 
-    tmp = tempfile.mkdtemp(prefix="tss_invidx_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         part = plan_checkpoint(
             batch_df.select("doc_id", F.explode(_ltoks(text_col)).alias("tok"))
             .groupBy("tok", "doc_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
         )
-        if state["version"] >= 0:
+        if prev is not None:
             # Delta-sized merge: the stored table never re-shuffles.
             # Colliding keys get their tf bumped via a broadcast LEFT
             # join (map-side over the store), and the batch rows whose
@@ -1675,9 +1512,9 @@ def run_stream_inverted_index(
             # per delivery; only the delta is ever shuffled.  Sums
             # stay associative+commutative, so the merged table is
             # bit-identical to the union+groupBy it replaces.
-            prev = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+            stored = prev["postings"]
             bumped = (
-                prev.join(
+                stored.join(
                     F.broadcast(part.withColumnRenamed("tf", "_tf_new")),
                     ["tok", "doc_id"],
                     "left",
@@ -1690,7 +1527,7 @@ def run_stream_inverted_index(
                     .alias("tf"),
                 )
             )
-            hit_keys = prev.join(
+            hit_keys = stored.join(
                 F.broadcast(part), ["tok", "doc_id"], "left_semi"
             ).select("tok", "doc_id")
             appended = part.join(
@@ -1699,13 +1536,9 @@ def run_stream_inverted_index(
             out = bumped.unionByName(appended)
         else:
             out = part
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"v{state['version']}")
-        )
+        return {"postings": out}
 
-    _drive_batches(spark, batches, src, ckpt, merge, heavy_batches=True)
-    post = spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    post = _fold(spark, batches, step, "postings", heavy_batches=True)
     # df/cf via a window over the same tok partitioning: one exchange
     # instead of the groupBy+join-back pair (identical values — both
     # are exact per-tok count/sum over the merged postings)
@@ -1739,15 +1572,9 @@ def run_stream_json_docs(
     shared oracle checks."""
     from terminus_server_spark.docs.json_docs import schemaless_to_triples
 
-    tmp = tempfile.mkdtemp(prefix="tss_jsondocs_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         part = schemaless_to_triples(batch_df, json_col, prefix=prefix).distinct()
-        if state["version"] >= 0:
+        if prev is not None:
             # The stored side is already distinct (invariant of this
             # merge), so distinct-union reduces to "store rows not
             # re-delivered in this batch, plus the batch" — a
@@ -1757,8 +1584,7 @@ def run_stream_json_docs(
             # eqNullSafe, not `=`: obj_num/obj_type carry NULLs and a
             # NULL-blind anti-join would keep (duplicate) redelivered
             # rows whose only difference is NULL = NULL.
-            prev = s.read.parquet(os.path.join(tmp, f"v{state['version']}"))
-            pv, pa = prev.alias("_old"), part.alias("_new")
+            pv, pa = prev["triples"].alias("_old"), part.alias("_new")
             cond = None
             for c in part.columns:
                 e = F.col(f"_old.{c}").eqNullSafe(F.col(f"_new.{c}"))
@@ -1766,13 +1592,9 @@ def run_stream_json_docs(
             out = pv.join(F.broadcast(pa), cond, "left_anti").unionByName(part)
         else:
             out = part
-        state["version"] += 1
-        out.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"v{state['version']}")
-        )
+        return {"triples": out}
 
-    _drive_batches(spark, batches, src, ckpt, merge, heavy_batches=True)
-    return spark.read.parquet(os.path.join(tmp, f"v{state['version']}"))
+    return _fold(spark, batches, step, "triples", heavy_batches=True)
 
 
 def run_stream_triangle_count(
@@ -1796,18 +1618,12 @@ def run_stream_triangle_count(
         triangle_count_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_tricount_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    edir = os.path.join(tmp, "edges")
-    state = {"version": -1}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
+    def step(prev, batch_df: DataFrame) -> dict:
         s = batch_df.sparkSession
         delta = batch_df.select("src", "dst")
-        if state["version"] >= 0:
-            stored = s.read.parquet(edir)
-            count = s.read.parquet(os.path.join(tmp, f"n{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            count = prev["count"]
         else:
             stored = delta.limit(0)
             count = s.range(1).select(
@@ -1821,9 +1637,8 @@ def run_stream_triangle_count(
         # disjoint remainder — the old unionByName+distinct
         # re-shuffled AND rewrote the whole accumulated edge set
         # every delivery; now both the shuffle and the store I/O are
-        # delta-sized.  Ordering matters: the count snapshot is
-        # written BEFORE the append so its lazy plan reads the
-        # pre-batch store state.
+        # delta-sized.  The fold writes the count snapshot BEFORE the
+        # append, so its lazy plan reads the pre-batch store.
         delta_c = (
             delta.select(
                 F.least("src", "dst").alias("src"),
@@ -1841,14 +1656,9 @@ def run_stream_triangle_count(
             ["src", "dst"],
             "left_anti",
         )
-        state["version"] += 1
-        new_count.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"n{state['version']}")
-        )
-        adds_only.write.mode("append").parquet(edir)
+        return {"count": new_count, "edges": adds_only}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"n{state['version']}"))
+    return _fold(spark, batches, step, "count", append=("edges",))
 
 
 def run_stream_kcore(
@@ -1871,18 +1681,11 @@ def run_stream_kcore(
     canonical edge-set union's distinct."""
     from terminus_server_spark.operators.graph import kcore_incremental
 
-    tmp = tempfile.mkdtemp(prefix="tss_kcore_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    edir = os.path.join(tmp, "edges")
-    state = {"version": -1}
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         delta = batch_df.select("src", "dst")
-        if state["version"] >= 0:
-            stored = s.read.parquet(edir)
-            core = s.read.parquet(os.path.join(tmp, f"c{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            core = prev["core"]
         else:
             stored = delta.limit(0)
             core = delta.select(
@@ -1920,18 +1723,13 @@ def run_stream_kcore(
         # INSERT-ONLY store: APPEND the disjoint delta instead of
         # rewriting the whole accumulated edge set every delivery —
         # store I/O per batch is now delta-sized like the update
-        # itself.  The core snapshot (mutable state) is written
-        # FIRST so its lazy plan reads the pre-batch store files.
-        state["version"] += 1
-        new_core.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"c{state['version']}")
-        )
-        adds_only.write.mode("append").parquet(edir)
+        # itself.  The fold writes the core snapshot (mutable state)
+        # FIRST, so its lazy plan reads the pre-batch store files.
+        return {"core": new_core, "edges": adds_only}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
     # the state already carries the maintained per-node degrees —
     # read it back verbatim, no edge re-aggregation at the sink
-    return spark.read.parquet(os.path.join(tmp, f"c{state['version']}"))
+    return _fold(spark, batches, step, "core", append=("edges",))
 
 
 def run_stream_kcore_cdc(
@@ -1963,11 +1761,6 @@ def run_stream_kcore_cdc(
         kcore_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_kcorecdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
     def canon(e):
         return (
             e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -1979,13 +1772,12 @@ def run_stream_kcore_cdc(
             .distinct()
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = canon(batch_df.where(F.col("op") == "add"))
         dels = canon(batch_df.where(F.col("op") == "del"))
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            core = s.read.parquet(os.path.join(tmp, f"c{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            core = prev["core"]
         else:
             stored = adds.limit(0)
             core = adds.select(
@@ -2024,16 +1816,9 @@ def run_stream_kcore_cdc(
                 "left_anti",
             )
             stored = stored.unionByName(adds_only)
-        state["version"] += 1
-        stored.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        core.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"c{state['version']}")
-        )
+        return {"edges": stored, "core": core}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"c{state['version']}"))
+    return _fold(spark, batches, step, "core")
 
 
 def run_stream_ktruss_cdc(
@@ -2063,11 +1848,6 @@ def run_stream_ktruss_cdc(
         ktruss_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_ktrusscdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
     def canon(e):
         return (
             e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -2079,15 +1859,14 @@ def run_stream_ktruss_cdc(
             .distinct()
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = canon(batch_df.where(F.col("op") == "add"))
         dels = canon(batch_df.where(F.col("op") == "del"))
         adds = adds.localCheckpoint(eager=True)
         dels = dels.localCheckpoint(eager=True)
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            truss = s.read.parquet(os.path.join(tmp, f"t{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            truss = prev["truss"]
         else:
             stored = adds.limit(0)
             truss = adds.select(
@@ -2120,16 +1899,9 @@ def run_stream_ktruss_cdc(
                 "left_anti",
             )
             stored = stored.unionByName(adds_only)
-        state["version"] += 1
-        stored.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        truss.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"t{state['version']}")
-        )
+        return {"edges": stored, "truss": truss}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"t{state['version']}"))
+    return _fold(spark, batches, step, "truss")
 
 
 def run_stream_pagerank(
@@ -2155,22 +1927,17 @@ def run_stream_pagerank(
     the oracle."""
     from terminus_server_spark.operators.graph import pagerank, pagerank_warm
 
-    tmp = tempfile.mkdtemp(prefix="tss_spr_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = (
             batch_df.select("src", "dst")
             .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .distinct()
             .localCheckpoint(eager=True)
         )
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            ranks = s.read.parquet(os.path.join(tmp, f"r{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            ranks = prev["ranks"]
         else:
             stored, ranks = adds.limit(0), None
         adds_only = adds.join(
@@ -2198,16 +1965,9 @@ def run_stream_pagerank(
             new_ranks = pagerank_warm(
                 edges, seeded, damping=damping, iters=warm_iters
             )
-        state["version"] += 1
-        edges.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        new_ranks.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"r{state['version']}")
-        )
+        return {"edges": edges, "ranks": new_ranks}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"r{state['version']}"))
+    return _fold(spark, batches, step, "ranks")
 
 
 def run_stream_msf_cdc(
@@ -2248,11 +2008,6 @@ def run_stream_msf_cdc(
         msf_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_msfcdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
     def canon(e, keep_w):
         p = (
             e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -2269,14 +2024,13 @@ def run_stream_msf_cdc(
             return p.groupBy("src", "dst").agg(F.min("w").alias("w"))
         return p.select("src", "dst").distinct()
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = canon(batch_df.where(F.col("op") == "add"), keep_w=True)
         dels = canon(batch_df.where(F.col("op") == "del"), keep_w=False)
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            forest = s.read.parquet(os.path.join(tmp, f"f{state['version']}"))
-            labels = s.read.parquet(os.path.join(tmp, f"l{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            forest = prev["forest"]
+            labels = prev["labels"]
         else:
             stored = adds.limit(0)
             forest = adds.select(
@@ -2337,19 +2091,9 @@ def run_stream_msf_cdc(
                 "left_anti",
             )
             stored = stored.unionByName(adds_only)
-        state["version"] += 1
-        stored.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        forest.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"f{state['version']}")
-        )
-        labels.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"l{state['version']}")
-        )
+        return {"edges": stored, "forest": forest, "labels": labels}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"f{state['version']}"))
+    return _fold(spark, batches, step, "forest")
 
 
 def run_stream_triangles_cdc(
@@ -2377,11 +2121,6 @@ def run_stream_triangles_cdc(
         triangle_count_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_tricdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
     def canon(e):
         return (
             e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -2393,13 +2132,13 @@ def run_stream_triangles_cdc(
             .distinct()
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
+    def step(prev, batch_df: DataFrame) -> dict:
         s = batch_df.sparkSession
         adds = canon(batch_df.where(F.col("op") == "add"))
         dels = canon(batch_df.where(F.col("op") == "del"))
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            count = s.read.parquet(os.path.join(tmp, f"n{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            count = prev["count"]
         else:
             stored = adds.limit(0)
             count = s.range(1).select(
@@ -2428,16 +2167,9 @@ def run_stream_triangles_cdc(
                 "left_anti",
             )
             stored = stored.unionByName(adds_only)
-        state["version"] += 1
-        stored.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        count.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"n{state['version']}")
-        )
+        return {"edges": stored, "count": count}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"n{state['version']}"))
+    return _fold(spark, batches, step, "count")
 
 
 def run_stream_pagerank_cdc(
@@ -2465,10 +2197,6 @@ def run_stream_pagerank_cdc(
     evolving net edge sets — that replay IS the oracle."""
     from terminus_server_spark.operators.graph import pagerank, pagerank_warm
 
-    tmp = tempfile.mkdtemp(prefix="tss_sprcdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
 
     def canon(e):
         return (
@@ -2478,17 +2206,16 @@ def run_stream_pagerank_cdc(
             .distinct()
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = canon(batch_df.where(F.col("op") == "add")).localCheckpoint(
             eager=True
         )
         dels = canon(batch_df.where(F.col("op") == "del")).localCheckpoint(
             eager=True
         )
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            ranks = s.read.parquet(os.path.join(tmp, f"r{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            ranks = prev["ranks"]
         else:
             stored, ranks = adds.limit(0), None
         if dels.count():
@@ -2523,16 +2250,9 @@ def run_stream_pagerank_cdc(
             new_ranks = pagerank_warm(
                 edges, seeded, damping=damping, iters=warm_iters
             )
-        state["version"] += 1
-        edges.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        new_ranks.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"r{state['version']}")
-        )
+        return {"edges": edges, "ranks": new_ranks}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"r{state['version']}"))
+    return _fold(spark, batches, step, "ranks")
 
 
 def run_stream_scc_cdc(
@@ -2567,11 +2287,6 @@ def run_stream_scc_cdc(
         scc_incremental,
     )
 
-    tmp = tempfile.mkdtemp(prefix="tss_scccdc_", dir="/tmp")
-    src = os.path.join(tmp, "src")
-    ckpt = os.path.join(tmp, "ckpt")
-    state = {"version": -1}
-
     def canon(e):
         return (
             e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -2580,18 +2295,17 @@ def run_stream_scc_cdc(
             .distinct()
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def step(prev, batch_df: DataFrame) -> dict:
         adds = canon(batch_df.where(F.col("op") == "add")).localCheckpoint(
             eager=True
         )
         dels = canon(batch_df.where(F.col("op") == "del")).localCheckpoint(
             eager=True
         )
-        if state["version"] >= 0:
-            stored = s.read.parquet(os.path.join(tmp, f"e{state['version']}"))
-            labels = s.read.parquet(os.path.join(tmp, f"l{state['version']}"))
-            cond = s.read.parquet(os.path.join(tmp, f"c{state['version']}"))
+        if prev is not None:
+            stored = prev["edges"]
+            labels = prev["labels"]
+            cond = prev["cond"]
         else:
             stored = adds.limit(0)
             labels = adds.select(
@@ -2755,16 +2469,6 @@ def run_stream_scc_cdc(
                 "left_anti",
             )
             stored = stored.unionByName(adds_only)
-        state["version"] += 1
-        stored.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"e{state['version']}")
-        )
-        labels.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"l{state['version']}")
-        )
-        cond.write.mode("overwrite").parquet(
-            os.path.join(tmp, f"c{state['version']}")
-        )
+        return {"edges": stored, "labels": labels, "cond": cond}
 
-    _drive_batches(spark, batches, src, ckpt, merge)
-    return spark.read.parquet(os.path.join(tmp, f"l{state['version']}"))
+    return _fold(spark, batches, step, "labels")

@@ -3169,18 +3169,28 @@ def test_graphql_mutation_report_counts(spark):
 
 def test_stream_landmark_refresh_no_op_batch(spark):
     """A batch whose edges close no shorter path leaves labels
-    identical; reachability still extends when a later batch does."""
+    identical; reachability still extends when a later batch does,
+    however long the path it closes (a 70-edge chain joined to the
+    landmark by the last batch is labelled to its tail)."""
     from terminus_server_spark.streaming.events import run_stream_landmark_refresh
+
+    def labels(batches):
+        return {
+            (r["landmark"], r["node"]): r["hops"]
+            for r in run_stream_landmark_refresh(spark, batches, landmarks).collect()
+        }
 
     b1 = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     b2 = spark.createDataFrame([(1, 0)], "src long, dst long")  # no-op dup
     b3 = spark.createDataFrame([(2, 3)], "src long, dst long")
     landmarks = spark.createDataFrame([(0,)], "node long")
-    out = {
-        (r["landmark"], r["node"]): r["hops"]
-        for r in run_stream_landmark_refresh(spark, [b1, b2, b3], landmarks).collect()
-    }
-    assert out == {(0, 0): 0, (0, 1): 1, (0, 2): 2, (0, 3): 3}
+    assert labels([b1, b2, b3]) == {(0, 0): 0, (0, 1): 1, (0, 2): 2, (0, 3): 3}
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 71)], "src long, dst long"
+    )
+    head = spark.createDataFrame([(0, 1)], "src long, dst long")
+    assert labels([chain, head]) == {(0, i): i for i in range(72)}
 
 
 def test_winnow_density_and_whitespace_invariance(spark):

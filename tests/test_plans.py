@@ -604,18 +604,19 @@ def test_cursor_keyset_predicate_reaches_scan(spark, tables):
 
 
 def test_operators_never_write_session_conf():
-    """Operators plan loops in a cloned session (``checkpoint.run_loop``)
-    and pick write modes through writer options, so no package code
-    writes the caller's SQL conf.  The exceptions: ``load_tables``'
-    read setting (session.py) and the stream harnesses, which set a
-    streaming query's state partitions at start (streaming/events.py).
-    ``run_loop`` is the one place that writes a conf, its own clone's."""
+    """Operators plan loops, and stream harnesses start queries with
+    pinned state partitions, in a cloned session
+    (``checkpoint.run_in_clone``), and pick write modes through writer
+    options, so no package code writes the caller's SQL conf.  The one
+    exception is ``load_tables``' read setting (session.py).
+    ``run_in_clone`` is the one place that writes a conf, its own
+    clone's."""
     import pathlib
 
     import terminus_server_spark
 
     root = pathlib.Path(terminus_server_spark.__file__).parent
-    allowed = {"conf.set(": {"session.py", "streaming/events.py"},
+    allowed = {"conf.set(": {"session.py"},
                "setConfString(": {"checkpoint.py"}}
     hits = [
         f"{rel}: {needle}"

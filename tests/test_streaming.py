@@ -270,6 +270,70 @@ def test_stream_inverted_index_cross_batch_key_collisions(spark):
     assert got == want
 
 
+def test_stream_state_partitions_leave_caller_conf(spark):
+    """A harness that pins a query's state partitions builds the query
+    in a cloned session: the caller's conf reads its own width while
+    the query is built, the query reports the pinned count, and the
+    answer comes back bound to the caller."""
+    import json
+
+    from terminus_server_spark.streaming.events import (
+        run_stream_batches_to_table,
+    )
+
+    seen = []
+
+    def transform(stream):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return stream.groupBy("k").count()
+
+    b = spark.createDataFrame([(1,), (2,), (1,)], "k long")
+    out, progresses = run_stream_batches_to_table(
+        spark, [b, b], transform, "tss_conf_scope",
+        output_mode="complete", shuffle_partitions=4,
+    )
+    assert seen == ["8"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    parts = {
+        so["numShufflePartitions"]
+        for p in progresses
+        for so in json.loads(p.json)["stateOperators"]
+    }
+    assert parts == {4}
+    assert out.sparkSession is spark
+    assert sorted(map(tuple, out.collect())) == [(1, 4), (2, 2)]
+
+
+def test_stream_harnesses_leave_only_the_answer(spark, tmp_path, monkeypatch):
+    """Harness directories live under the temp dir and are removed
+    once the query has ended: a memory-sink replay leaves nothing, and
+    a versioned-state sink leaves only the files its answer reads."""
+    import os
+    import tempfile
+    from urllib.parse import urlparse
+
+    from terminus_server_spark.streaming.events import (
+        run_stream_batches_to_table,
+        run_stream_cdc,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    b = spark.createDataFrame([(1,), (2,)], "k long")
+    out, _ = run_stream_batches_to_table(spark, [b, b], lambda s: s, "tss_hygiene")
+    assert out.count() == 4
+    assert list(tmp_path.iterdir()) == []
+
+    schema = "k long, v string, op string, seq long"
+    b1 = spark.createDataFrame([(1, "a", "I", 1), (2, "b", "I", 2)], schema)
+    b2 = spark.createDataFrame([(1, "c", "U", 3), (2, None, "D", 4)], schema)
+    got = run_stream_cdc(spark, [b1, b2], ["k"])
+    answer = {urlparse(f).path for f in got.inputFiles()}
+    left = {str(f) for f in tmp_path.rglob("*") if f.is_file()}
+    assert answer and answer <= left
+    assert {os.path.dirname(f) for f in left} == {os.path.dirname(f) for f in answer}
+    assert sorted(map(tuple, got.collect())) == [(1, "c")]
+
+
 def test_bpe_fold_rewrite_matches_python_greedy(spark):
     """The aggregate-fold rewrite must reproduce greedy left-to-right
     non-overlapping merging exactly, including runs of a self-pair
