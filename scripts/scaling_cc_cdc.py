@@ -63,12 +63,10 @@ def delta(spark, n):
     return a, d
 
 
-def steady_batch(edges, labels, adds, dels, max_iters=50):
+def steady_batch(edges, labels, adds, dels):
     """The run_stream_cc_cdc merge body (streaming/events.py), minus
     the parquet I/O — exactly the per-batch steady-path plan."""
-    labels = connected_components_decremental(
-        labels, edges, dels, max_iters, canonical_base=True
-    )
+    labels = connected_components_decremental(labels, edges, dels, canonical_base=True)
     edges = edges.join(F.broadcast(dels), ["src", "dst"], "left_anti")
     add_nodes = (
         adds.select(F.col("src").alias("node"))
@@ -79,7 +77,7 @@ def steady_batch(edges, labels, adds, dels, max_iters=50):
     labels = labels.unionByName(
         fresh.select("node", F.col("node").alias("component"))
     )
-    labels = connected_components_incremental(labels, adds, max_iters)
+    labels = connected_components_incremental(labels, adds)
     adds_only = adds.join(
         edges.join(
             F.broadcast(adds.select("src").distinct()), "src", "left_semi"

@@ -10,6 +10,18 @@ lineage stays bounded, and every loop plans in its own session
 (``checkpoint.run_loop``) with AQE off and shuffles sized to its
 state, leaving the caller's session untouched.
 
+Termination: every converging loop stops on the probe it already
+runs each round (no changed row, an empty frontier, no row dropped),
+never on a round counter, so no answer depends on recursion depth.
+Each such loop strictly lowers or shrinks a finite state per round,
+so it always ends.  The two loops whose fixpoint exists only on
+acyclic input, ``topo_layers`` and ``dag_path_counts``, raise "input
+has a cycle" once their rounds pass the input's node count, which
+bounds any DAG's depth.  The round counts that remain
+(``kcore(rounds)``, the PageRank/Katz/HITS iterations, the label
+propagation rounds, ``shortest_weighted(rounds)``, the ``max_hops``
+radii) are part of the answer's definition.
+
 Edges: DataFrame (src: string|long, dst: same type).
 """
 
@@ -56,9 +68,7 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iters: int = 50, assume_symmetric: bool = False
-) -> DataFrame:
+def connected_components(edges: DataFrame, assume_symmetric: bool = False) -> DataFrame:
     """(node, component) with component = min node id reachable over
     undirected edges.  Min-label propagation with pointer jumping:
     each round propagates labels over graph edges AND shortcuts
@@ -88,13 +98,20 @@ def connected_components(
             .distinct()
             .withColumn("component", F.col("node"))
         )
-        return run_loop(edges.sparkSession, n_lab, _cc_loop, und, labels, max_iters)
+        return run_loop(edges.sparkSession, n_lab, _cc_loop, und, labels)
 
     return run_loop(edges.sparkSession, None, prologue, edges)
 
 
-def _cc_loop(und: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
-    for _ in range(max_iters):
+def _cc_loop(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """(node, component) with component = the min label reaching the
+    node along ``und``'s (src → dst) edges, to the fixpoint: min-label
+    propagation plus a pointer jump per round.  Labels only fall, so
+    the changed-row probe reaches 0.  Undirected CC hands in both edge
+    orientations; SCC's forward coloring hands in directed edges
+    (a label is always a node that reaches its holder, so jumping
+    through it stays sound)."""
+    while True:
         # candidate labels arriving over edges
         prop = (
             und.join(labels, und["src"] == labels["node"])
@@ -137,12 +154,11 @@ def _cc_loop(und: DataFrame, labels: DataFrame, max_iters: int) -> DataFrame:
         new_labels, n_changed = loop_checkpoint_sum(new_labels, "_chg")
         labels = new_labels.drop("_chg")
         if n_changed == 0:
-            break
-    return labels
+            return labels
 
 
 def connected_components_incremental(
-    labels: DataFrame, delta_edges: DataFrame, max_iters: int = 50
+    labels: DataFrame, delta_edges: DataFrame
 ) -> DataFrame:
     """(node, component): fold a DELTA edge batch into existing
     component labels WITHOUT re-running CC on the full graph — the
@@ -175,7 +191,7 @@ def connected_components_incremental(
     # The label-pair meta-graph is delta-bounded — label it through
     # the adaptive cc_metadata path (driver union-find under the
     # 100k-edge guard, distributed loop fallback above it).
-    mapping = cc_metadata(pairs, max_iters=max_iters).select(
+    mapping = cc_metadata(pairs).select(
         F.col("node").alias("component"), F.col("component").alias("_super")
     )
     # the mapping is bounded by the delta's label pairs — broadcast it
@@ -192,7 +208,6 @@ def connected_components_decremental(
     labels: DataFrame,
     base_edges: DataFrame,
     delete_edges: DataFrame,
-    max_iters: int = 50,
     canonical_base: bool = False,
 ) -> DataFrame:
     """(node, component): component labels AFTER a delete-only commit
@@ -273,18 +288,14 @@ def connected_components_decremental(
     ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
     # Dirty-component internal edges are delta-bounded in the common
     # case — adaptive driver/distributed labeling, see cc_metadata.
-    recomputed = cc_metadata(sub, max_iters=max_iters)
+    recomputed = cc_metadata(sub)
     singles = aff_nodes.join(
         recomputed.select("node"), "node", "left_anti"
     ).select("node", F.col("node").alias("component"))
     return untouched.unionByName(recomputed).unionByName(singles)
 
 
-def cc_metadata(
-    edges: DataFrame,
-    limit: int | None = None,
-    max_iters: int = 50,
-) -> DataFrame:
+def cc_metadata(edges: DataFrame, limit: int | None = None) -> DataFrame:
     """(node, component): UNDIRECTED connected components of a graph
     expected to be delta/metadata-sized — the cc analogue of
     ``scc_metadata`` and the label engine for the incremental
@@ -308,7 +319,7 @@ def cc_metadata(
     )
     rows = base.limit(limit + 1).collect()
     if len(rows) > limit:
-        return connected_components(edges, max_iters)
+        return connected_components(edges)
 
     parent: dict = {}
 
@@ -604,18 +615,19 @@ def katz_centrality(
     return run_loop(edges.sparkSession, None, prologue, edges)
 
 
-def dag_path_counts(
-    edges: DataFrame, targets: DataFrame, max_iters: int = 100
-) -> DataFrame:
+def dag_path_counts(edges: DataFrame, targets: DataFrame) -> DataFrame:
     """(node, n_paths): number of DISTINCT directed paths from each
     node to the target set in a DAG — the counting DP behind
     provenance multiplicity, attack-path enumeration and DAG
     centralities: cnt[v] = [v ∈ T] + Σ_{v→u} cnt[u].
 
     BSP relaxation: after t rounds cnt_t[v] counts paths of length
-    ≤ t, so the fixpoint arrives in longest-path rounds (cycle ⇒
-    no fixpoint ⇒ the round cap raises, doubling as a cycle check —
-    same contract as topo_layers).  Counts accumulate in
+    ≤ t, so the fixpoint arrives in longest-path rounds.  A DAG of n
+    nodes has no path longer than n − 1 edges, so counts still
+    changing after n rounds prove a cycle reaching the target set
+    (the count diverges): the loop raises "input has a cycle" there,
+    after about n rounds on a cyclic input of n nodes — same contract
+    as topo_layers.  Counts accumulate in
     decimal(38,0): path counts grow EXPONENTIALLY in depth (that is
     the point of counting instead of enumerating), and bigint
     overflows at depth ~90 of a binary DAG.  Per round: one
@@ -646,7 +658,7 @@ def dag_path_counts(
 
     def relax(e, base, n_nodes):
         counts = base.select("node", F.col("_seed").alias("n_paths"))
-        for _ in range(max_iters):
+        for _ in range(n_nodes):
             succ = (
                 e.join(
                     counts.select(F.col("node").alias("dst"), "n_paths"), "dst"
@@ -680,9 +692,9 @@ def dag_path_counts(
                     "node", F.col("n_paths").cast("double").alias("n_paths")
                 )
         raise RuntimeError(
-            f"dag_path_counts did not converge in {max_iters} rounds — "
-            "the graph has a cycle reaching the target set (path count "
-            "diverges) or longest path exceeds max_iters"
+            f"dag_path_counts: input has a cycle reaching the target set "
+            f"(counts still change after {n_nodes} rounds, more than any "
+            f"DAG of {n_nodes} nodes needs)"
         )
 
     return run_loop(edges.sparkSession, None, prologue, edges, targets)
@@ -760,13 +772,13 @@ def quadrilateral_count(edges: DataFrame) -> DataFrame:
 def shortest_hops(
     edges: DataFrame,
     sources: DataFrame,
-    max_iters: int | None = None,
+    max_hops: int | None = None,
     assume_undirected: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: (source, node, hops) minimum hop counts from
     each source node.  sources: DataFrame(node).  Semi-naive frontier
     expansion like path closure (:func:`path.semi_naive`), but keyed
-    by (source, node).  ``max_iters`` is a hop radius for queries
+    by (source, node).  ``max_hops`` is a hop radius for queries
     that ask for a bounded ball; None runs to the fixpoint.
 
     ``assume_undirected``: the caller guarantees ``edges`` is
@@ -788,7 +800,7 @@ def shortest_hops(
         [F.min("hops").alias("hops")],
         sources,
         recent_only=assume_undirected,
-        max_rounds=max_iters,
+        max_rounds=max_hops,
     )
 
 
@@ -859,9 +871,7 @@ def landmark_distance_audit(
     )
 
 
-def betweenness(
-    edges: DataFrame, sources: DataFrame | None = None, max_iters: int = 50
-) -> DataFrame:
+def betweenness(edges: DataFrame, sources: DataFrame | None = None) -> DataFrame:
     """(node, betweenness): exact Brandes betweenness centrality over
     the undirected, unweighted graph, restricted to shortest paths
     FROM the pivot set ``sources`` (None = every node = the exact
@@ -887,14 +897,12 @@ def betweenness(
         F.lit(1.0).alias("sigma"),
     )
     frontier, n_f = loop_checkpoint_count(frontier)
-    return run_loop(
-        edges.sparkSession, n_f, _betweenness_passes, und, frontier, n_f, max_iters
-    )
+    return run_loop(edges.sparkSession, n_f, _betweenness_passes, und, frontier, n_f)
 
 
-def _betweenness_passes(und, frontier, n_f, max_iters):
+def _betweenness_passes(und, frontier, n_f):
     levels = [frontier]
-    for _ in range(max_iters):
+    while True:
         grown = frontier.join(und, frontier["node"] == und["src"]).select(
             "source", F.col("dst").alias("node"), "sigma"
         )
@@ -949,13 +957,14 @@ def _betweenness_passes(und, frontier, n_f, max_iters):
                 (F.coalesce(F.col("_c"), F.lit(0.0)) * F.col("sigma")).alias("delta"),
             )
         )
-        # LAZY checkpoint: each level's delta is referenced twice (the
-        # parts union and the next level's join), so it must be
-        # materialized-once — but materializing eagerly costs one job
-        # per level.  The lazy form persists each delta on first
-        # computation inside the single final aggregation job, so the
-        # whole backward pass runs as ONE job instead of depth jobs.
-        delta = plan_checkpoint(delta)
+        # Each level's delta is referenced twice (the parts union and
+        # the next level's join), so it must be materialized once.  The
+        # LAZY form persists it on first computation inside one later
+        # job instead of costing a job per level; but a chain of lazy
+        # checkpoints is one nested lineage, which overflows the JVM
+        # stack past ~40 levels.  So every 8th level materializes
+        # eagerly, cutting the chain: about depth/8 jobs at any depth.
+        delta = (loop_checkpoint if lv % 8 == 0 else plan_checkpoint)(delta)
     parts.append(delta)
     alld = parts[0]
     for p in parts[1:]:
@@ -971,7 +980,6 @@ def betweenness_incremental(
     old_edges: DataFrame,
     added_edges: DataFrame,
     bc_old: DataFrame,
-    max_iters: int = 50,
 ) -> DataFrame:
     """(node, betweenness): fold an edge-insertion batch into an
     existing exact betweenness table WITHOUT re-running Brandes from
@@ -1028,10 +1036,10 @@ def betweenness_incremental(
     all_edges = old_edges.select("src", "dst").unionByName(
         added_edges.select("src", "dst")
     )
-    bc_aff_old = betweenness(old_edges, sources=affected, max_iters=max_iters).select(
+    bc_aff_old = betweenness(old_edges, sources=affected).select(
         "node", F.col("betweenness").alias("_old")
     )
-    bc_aff_new = betweenness(all_edges, sources=affected, max_iters=max_iters).select(
+    bc_aff_new = betweenness(all_edges, sources=affected).select(
         "node", F.col("betweenness").alias("_new")
     )
     patch = (
@@ -1157,22 +1165,21 @@ def _kcore_loop(cur, n_edges, k, rounds, broadcast_edge_limit):
     return cur.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
-def _decrement_peel(adj, cur0, k, max_iters, key, err, size_hint=None):
+def _decrement_peel(adj, cur0, k, key, size_hint=None):
     """Shared from-above peel for the k-core maintainers: ``cur0`` is
     (key, d) candidate degrees; rounds drop every row with d < k and
     DECREMENT only the dropped rows' surviving neighbors.  ONE Spark
     job per round — the drop flag is summed in the same action that
     materializes the round (loop_checkpoint_sum), replacing the
     separate survivor-count + re-checkpoint pair (2 jobs/round) the
-    loops previously paid.  Returns the converged survivors with
-    their fixpoint degrees; raises ``err`` past ``max_iters``."""
+    loops previously paid.  Every round drops at least one row, so
+    the loop ends; returns the survivors with their fixpoint
+    degrees."""
     flag = F.when(F.col("d") < k, 1).otherwise(0)
     stepped, n_drop = loop_checkpoint_sum(
         cur0.withColumn("_drop", flag), "_drop", size_hint=size_hint
     )
-    for _ in range(max_iters):
-        if n_drop == 0:
-            return stepped.select(key, "d")
+    while n_drop:
         dropped = stepped.where(F.col("_drop") == 1)
         surv = stepped.where(F.col("_drop") == 0)
         dec = (
@@ -1188,7 +1195,7 @@ def _decrement_peel(adj, cur0, k, max_iters, key, err, size_hint=None):
         stepped, n_drop = loop_checkpoint_sum(
             nxt.withColumn("_drop", flag), "_drop", size_hint=size_hint
         )
-    raise RuntimeError(err)
+    return stepped.select(key, "d")
 
 
 def kcore_incremental(
@@ -1196,7 +1203,6 @@ def kcore_incremental(
     base_edges: DataFrame,
     delta_edges: DataFrame,
     k: int = 3,
-    max_iters: int = 30,
     canonical_base: bool = False,
 ) -> DataFrame:
     """(node, degree): the k-core AFTER an insert-only commit delta,
@@ -1226,10 +1232,9 @@ def kcore_incremental(
     old-core nodes), both cascade/delta-sized aggregates; without the
     column a one-time cold-start aggregate over the old core's
     internal edges is paid (documented fallback, not the steady
-    state).  Raises ``RuntimeError`` if the candidate closure or the
-    peel fails to reach fixpoint within ``max_iters`` (matching
-    ``ktruss_incremental`` — silent fall-through would return an
-    incomplete closure / unconverged core).  Deletions invalidate
+    state).  The candidate closure and the peel both run to their
+    fixpoint (the candidate set only grows, the peel only drops), so
+    the closure is never incomplete.  Deletions invalidate
     fact 1 — route them through ``kcore_decremental`` or batch
     ``kcore``."""
     spark = core_old.sparkSession
@@ -1361,8 +1366,7 @@ def kcore_incremental(
         # plain union of the checkpointed frontier leaves (never
         # re-checkpointed per round — rounds are cascade-depth few)
         frontier, parts, n_cand = x, [x], n_x
-        closed = False
-        for _ in range(max_iters):
+        while True:
             nbrs = (
                 adj.join(
                     frontier.select(F.col("n").alias("a")), "a", "left_semi"
@@ -1376,18 +1380,10 @@ def kcore_incremental(
             fresh = non_core_sel(nbrs).join(xall, "n", "left_anti")
             fresh, n_fresh = loop_checkpoint_count(fresh, size_hint=n_cand)
             if n_fresh == 0:
-                closed = True
                 break
             parts.append(fresh)
             n_cand += n_fresh
             frontier = fresh
-        if not closed:
-            raise RuntimeError(
-                f"kcore_incremental: candidate closure did not "
-                f"converge within max_iters={max_iters}; an incomplete "
-                f"closure would silently miss entering nodes — raise "
-                f"max_iters"
-            )
         cand = parts[0]
         for p in parts[1:]:
             cand = cand.unionByName(p)
@@ -1405,17 +1401,7 @@ def kcore_incremental(
             "n", F.coalesce(F.col("d"), F.lit(0)).alias("d")
         )
         # decrement-only from-above peel, one job per round
-        cur = _decrement_peel(
-            adj,
-            cur0,
-            k,
-            max_iters,
-            "n",
-            f"kcore_incremental: candidate peel did not converge "
-            f"within max_iters={max_iters}; an unconverged peel "
-            f"would admit under-degree candidates — raise max_iters",
-            size_hint=n_cand,
-        )
+        cur = _decrement_peel(adj, cur0, k, "n", size_hint=n_cand)
         surv_out = cur.select(
             F.col("n").alias("node"), F.col("d").cast("long").alias("degree")
         )
@@ -1429,7 +1415,6 @@ def kcore_decremental(
     base_edges: DataFrame,
     delete_edges: DataFrame,
     k: int = 3,
-    max_iters: int = 30,
     canonical_base: bool = False,
 ) -> DataFrame:
     """(node, degree): the k-core AFTER a delete-only commit delta —
@@ -1442,10 +1427,8 @@ def kcore_decremental(
     graph.  Non-dirty nodes keep their membership until a neighbor
     leaves; each round recomputes degrees only over the surviving
     core subgraph (the peel is the batch loop restricted to
-    core_old).  Raises ``RuntimeError`` if the peel fails to reach
-    fixpoint within ``max_iters`` (matching ``ktruss_decremental`` —
-    a silent fall-through would keep under-degree nodes in the
-    core).  Insertions route through ``kcore_incremental``.
+    core_old) to its fixpoint, so no under-degree node stays in the
+    core.  Insertions route through ``kcore_incremental``.
     ``canonical_base=True`` promises the base is already canonical
     (a<b, duplicate-free — e.g. the streaming edge store) and skips
     the full-base canonicalizing ``distinct()``."""
@@ -1496,26 +1479,14 @@ def kcore_decremental(
             "node", F.coalesce(F.col("d"), F.lit(0)).alias("d")
         )
         # decrement-only from-above peel, one job per round
-        cur = _decrement_peel(
-            adj,
-            cur0,
-            k,
-            max_iters,
-            "node",
-            f"kcore_decremental: peel did not converge within "
-            f"max_iters={max_iters}; an unconverged peel would keep "
-            f"under-degree nodes in the core — raise max_iters",
-        )
+        cur = _decrement_peel(adj, cur0, k, "node")
         return cur.select("node", F.col("d").cast("bigint").alias("degree"))
 
     return run_loop(spark, n_e, peel, adj, old_nodes)
 
 
 def ktruss_decremental(
-    truss_old: DataFrame,
-    delete_edges: DataFrame,
-    k: int = 4,
-    max_iters: int = 30,
+    truss_old: DataFrame, delete_edges: DataFrame, k: int = 4
 ) -> DataFrame:
     """(a, b): the k-truss AFTER a delete-only commit delta — the
     reverse of ``ktruss_incremental``: removing edges can only
@@ -1544,7 +1515,7 @@ def ktruss_decremental(
     )
 
     def peel(cur_edges, dirty_nodes, n_e):
-        for _ in range(max_iters):
+        while True:
             touched = (
                 cur_edges.join(
                     dirty_nodes.select(F.col("n").alias("a")), "a", "left_semi"
@@ -1574,7 +1545,6 @@ def ktruss_decremental(
                 .union(dropped.select(F.col("b")))
                 .distinct()
             )
-        raise RuntimeError(f"ktruss_decremental did not converge in {max_iters} rounds")
 
     return run_loop(spark, n_e, peel, cur_edges, dirty_nodes, n_e)
 
@@ -1700,9 +1670,7 @@ def triangle_count_incremental(
     )
 
 
-def core_numbers(
-    edges: DataFrame, max_k: int = 8, rounds_per_k: int = 10_000
-) -> DataFrame:
+def core_numbers(edges: DataFrame, max_k: int = 8) -> DataFrame:
     """(node, core): the FULL coreness decomposition — each node's
     core number is the largest k for which it survives k-core pruning
     (Batagelj-Zaversnik peeling, the distributed bucket form):
@@ -1715,13 +1683,13 @@ def core_numbers(
 
     Same monotone-pruning dataflow as kcore: per peel round one
     degree aggregate + two semi-joins, the edge set only shrinks.
-    The per-k peel MUST reach its fixpoint or later phases would
-    mislabel unfinished nodes with higher cores (a 100-node path
-    needs ~50 rounds at k=1 — peel depth is O(longest chain), NOT the
-    degeneracy), so ``rounds_per_k`` is a loud safety valve, not a
-    tuning knob: exceeding it raises instead of silently corrupting
-    the labels.  Isolated base nodes never enter (edge-derived), so
-    every input node with an edge gets a core."""
+    The per-k peel runs until the edge count stops falling: it MUST
+    reach its fixpoint or later phases would mislabel unfinished
+    nodes with higher cores (a 100-node path needs ~50 rounds at
+    k=1 — peel depth is O(longest chain), NOT the degeneracy), and
+    the edge set only shrinks, so it always does.  Isolated base
+    nodes never enter (edge-derived), so every input node with an
+    edge gets a core."""
     cur, n_edges = loop_checkpoint_count(
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -1732,17 +1700,16 @@ def core_numbers(
     def peel(cur, n_edges):
         done = [cur.select(F.col("src").alias("node"), F.lit(0).alias("core")).limit(0)]
         for k in range(1, max_k + 1):
-            if n_edges == 0:
-                break
-            at_fixpoint = False
-            for _ in range(rounds_per_k):
+            prev = -1
+            while n_edges not in (0, prev):
+                prev = n_edges
                 deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
                 peel = deg.where(F.col("d") <= k).select("src")
                 keep = deg.where(F.col("d") > k).select("src")
                 done.append(
                     peel.select(F.col("src").alias("node"), F.lit(k).alias("core"))
                 )
-                cur, new_n = loop_checkpoint_count(
+                cur, n_edges = loop_checkpoint_count(
                     cur.join(keep, "src", "left_semi").join(
                         keep.select(F.col("src").alias("dst")), "dst", "left_semi"
                     ),
@@ -1756,19 +1723,6 @@ def core_numbers(
                 done.append(
                     keep.join(cur.select("src").distinct(), "src", "left_anti")
                     .select(F.col("src").alias("node"), F.lit(k).alias("core"))
-                )
-                if new_n == n_edges:
-                    at_fixpoint = True
-                    break
-                n_edges = new_n
-                if n_edges == 0:
-                    at_fixpoint = True
-                    break
-            if not at_fixpoint:
-                raise RuntimeError(
-                    f"core_numbers: k={k} peel did not reach fixpoint within "
-                    f"rounds_per_k={rounds_per_k}; raise the cap (peel depth "
-                    "is O(longest chain))"
                 )
         if n_edges > 0:
             done.append(
@@ -2039,7 +1993,7 @@ def hits(edges: DataFrame, iters: int = 2) -> DataFrame:
     return run_loop(edges.sparkSession, None, prologue, edges)
 
 
-def strongly_connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def strongly_connected_components(edges: DataFrame) -> DataFrame:
     """(node, component): directed SCCs — component = the minimum
     node id of the node's mutual-reachability class (reference
     exposes only undirected reach via path queries; SCC is the
@@ -2056,7 +2010,9 @@ def strongly_connected_components(edges: DataFrame, max_iters: int = 50) -> Data
     (any path from a class member back to its root stays inside the
     class — a smaller-id node touching the path would recolor the
     root), peeled in parallel across ALL color classes.  Outer rounds
-    ~ depth of the condensation DAG; state is O(V + E) per round —
+    ~ depth of the condensation DAG, and each peels at least the
+    smallest remaining node (its own color root), so the loop ends
+    with every node labeled; state is O(V + E) per round —
     never the O(n²) transitive closure the naive mutual-reachability
     formulation materializes (one social-graph-sized SCC would make
     |closure| = n² rows; see ``scc_by_closure``, kept as the
@@ -2083,15 +2039,13 @@ def strongly_connected_components(edges: DataFrame, max_iters: int = 50) -> Data
     return run_loop(
         edges.sparkSession,
         n_rem,
-        lambda e, rem: loop_checkpoint(
-            _scc_loop(e, n_e, rem, n_rem, _restrict_fn, max_iters), size_hint=n_rem
-        ),
+        lambda e, rem: loop_checkpoint(_scc_loop(e, n_e, rem, n_rem), size_hint=n_rem),
         e,
         rem,
     )
 
 
-def _restrict_fn(edges_df: DataFrame, nodes_df: DataFrame) -> DataFrame:
+def _restrict(edges_df: DataFrame, nodes_df: DataFrame) -> DataFrame:
     return (
         edges_df.join(nodes_df.select(F.col("n").alias("src")), "src", "left_semi")
         .join(nodes_df.select(F.col("n").alias("dst")), "dst", "left_semi")
@@ -2099,7 +2053,7 @@ def _restrict_fn(edges_df: DataFrame, nodes_df: DataFrame) -> DataFrame:
     )
 
 
-def _scc_loop(e, n_e, rem, n_rem, _restrict, max_iters: int) -> DataFrame:
+def _scc_loop(e, n_e, rem, n_rem) -> DataFrame:
     # Empty typed seed: an empty/all-NULL edge frame must yield an
     # empty (node, component) frame, not an IndexError — and it keeps
     # the union chain below total when the loop never appends.
@@ -2108,9 +2062,7 @@ def _scc_loop(e, n_e, rem, n_rem, _restrict, max_iters: int) -> DataFrame:
     ).limit(0)
     done: list[DataFrame] = [empty]
 
-    for _ in range(max_iters):
-        if n_rem == 0:
-            break
+    while n_rem > 0:
         # (1) trim: peel zero-in/zero-out nodes until none remain.
         # One Spark job per peel round: ``live`` (nodes with BOTH an
         # in- and an out-edge in the remaining graph) is exactly the
@@ -2148,59 +2100,14 @@ def _scc_loop(e, n_e, rem, n_rem, _restrict, max_iters: int) -> DataFrame:
             e = plan_checkpoint(_restrict(e, rem), size_hint=n_e)
         if n_rem == 0:
             break
-        # (2) forward min-color propagation to fixpoint, with a
-        # pointer-jumping step: color[v] is always the id of SOME
-        # node that reaches v, so color[color[v]] reaches color[v]
-        # reaches v — taking the min of (own color, in-neighbors'
-        # colors, color's color) per round is sound and turns the
-        # round count from the longest condensation path L into
-        # O(log L): the hop step alone walked a chain one edge per
-        # Spark round.
-        colors = rem.select(F.col("n").alias("node"), F.col("n").alias("color"))
-        while True:
-            inc = (
-                e.join(
-                    colors.select(F.col("node").alias("src"), F.col("color").alias("c_in")),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("c_in").alias("c_min"))
-            )
-            jump = colors.join(
-                colors.select(
-                    F.col("node").alias("color"), F.col("color").alias("c_jump")
-                ),
-                "color",
-            ).select("node", "c_jump")
-            stepped = (
-                colors.join(inc, "node", "left_outer")
-                .join(jump, "node", "left_outer")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("color"),
-                        F.coalesce("c_min", "color"),
-                        F.coalesce("c_jump", "color"),
-                    ).alias("color"),
-                    F.when(
-                        (
-                            F.col("c_min").isNotNull()
-                            & (F.col("c_min") < F.col("color"))
-                        )
-                        | (
-                            F.col("c_jump").isNotNull()
-                            & (F.col("c_jump") < F.col("color"))
-                        ),
-                        1,
-                    )
-                    .otherwise(0)
-                    .alias("_chg"),
-                )
-            )
-            stepped, n_chg = loop_checkpoint_sum(stepped, "_chg", size_hint=n_rem)
-            colors = stepped.select("node", "color")
-            if n_chg == 0:
-                break
+        # (2) forward min-color propagation to fixpoint: the CC loop
+        # over directed edges.  color[v] is always the id of SOME node
+        # that reaches v, so its pointer jump (color := color's color)
+        # stays sound and the round count is O(log L) in the longest
+        # condensation path L instead of L.
+        colors = _cc_loop(
+            e, rem.select(F.col("n").alias("node"), F.col("n").alias("component"))
+        ).select("node", F.col("component").alias("color"))
         # (3) backward mark from each class root over same-color edges
         same = plan_checkpoint(
             e.join(
@@ -2245,12 +2152,6 @@ def _scc_loop(e, n_e, rem, n_rem, _restrict, max_iters: int) -> DataFrame:
         rem = plan_checkpoint(rem.join(peeled, "n", "left_anti"), size_hint=n_rem)
         n_rem -= n_marked
         e = plan_checkpoint(_restrict(e, rem), size_hint=n_e)
-    if n_rem > 0:
-        raise RuntimeError(
-            f"strongly_connected_components did not converge in {max_iters} "
-            f"outer rounds ({n_rem} nodes unlabeled); the condensation DAG "
-            "is deeper than max_iters — raise max_iters"
-        )
     out = done[0]
     for frame in done[1:]:
         out = out.unionByName(frame)
@@ -2260,11 +2161,7 @@ def _scc_loop(e, n_e, rem, n_rem, _restrict, max_iters: int) -> DataFrame:
 _METADATA_SCC_LIMIT = 100_000
 
 
-def scc_metadata(
-    edges: DataFrame,
-    limit: int = _METADATA_SCC_LIMIT,
-    max_iters: int = 50,
-) -> DataFrame:
+def scc_metadata(edges: DataFrame, limit: int = _METADATA_SCC_LIMIT) -> DataFrame:
     """(node, component): SCCs of a METADATA-sized graph — the schema
     subsumption hierarchy, whose size is set by the human-authored
     schema and does not grow with instance data.  Same design as
@@ -2290,7 +2187,7 @@ def scc_metadata(
     )
     rows = base.limit(limit + 1).collect()
     if len(rows) > limit:
-        return strongly_connected_components(edges, max_iters)
+        return strongly_connected_components(edges)
 
     adj: dict = {}
     nodes: set = set()
@@ -2406,7 +2303,7 @@ def harmonic_centrality(
     the centrality is partition-independent.  At extreme scale swap
     the exact ball for a HyperBall/HLL neighborhood sketch; this
     operator is the exact form that validates it."""
-    sp = shortest_hops(edges, sources, max_iters=max_hops)
+    sp = shortest_hops(edges, sources, max_hops=max_hops)
     term = (F.lit(1.0) / F.col("hops").cast("double")).cast("decimal(28,12)")
     agg = (
         sp.where(F.col("hops") > 0)
@@ -2507,7 +2404,7 @@ def neighborhood_sketch_audit(
         "node", F.size("sk").alias("n_sketch"), _kmv_estimate(k).alias("est")
     )
     exact = (
-        shortest_hops(edges, sources, max_iters=hops)
+        shortest_hops(edges, sources, max_hops=hops)
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
         .withColumnRenamed("source", "node")
@@ -2811,7 +2708,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     return m.select("n_edges", (num / den).alias("assortativity"))
 
 
-def topo_layers(nodes: DataFrame, edges: DataFrame, max_iters: int = 100) -> DataFrame:
+def topo_layers(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node, layer): longest-path depth of every node of an acyclic
     graph — the topological layering a scheduler executes level by
     level (and the order dependency analysis reads off a
@@ -2821,9 +2718,11 @@ def topo_layers(nodes: DataFrame, edges: DataFrame, max_iters: int = 100) -> Dat
     the fixpoint probe fused into the materializing job.
 
     ``nodes``: one column ``node``; ``edges``: (src, dst), assumed
-    acyclic (run condensation first — on a cyclic input the layer
-    relaxation would never converge, so exhausting ``max_iters``
-    raises rather than returning wrong depths).
+    acyclic (run condensation first).  A DAG of n nodes has no path
+    longer than n − 1 edges, so its layers settle by round n; layers
+    still changing after that prove a cycle, and the loop raises
+    "input has a cycle" rather than returning wrong depths — after
+    about n rounds on a cyclic input of n nodes.
 
     Frontier-restricted: only nodes whose layer CHANGED last round
     re-emit candidates (a node's layer is monotone and every
@@ -2841,7 +2740,9 @@ def topo_layers(nodes: DataFrame, edges: DataFrame, max_iters: int = 100) -> Dat
 
     def relax(edges, layers):
         frontier, n_front = layers, n_nodes
-        for _ in range(max_iters):
+        # a DAG settles by round n_nodes; one more lets an empty input
+        # run its no-change round
+        for _ in range(n_nodes + 1):
             f_src = frontier.select(
                 F.col("node").alias("src"), F.col("layer").alias("_sl")
             )
@@ -2869,12 +2770,15 @@ def topo_layers(nodes: DataFrame, edges: DataFrame, max_iters: int = 100) -> Dat
                 return layers
             frontier = stepped.where(F.col("_chg") == 1).select("node", "layer")
             n_front = n_chg
-        raise RuntimeError(f"topo_layers did not converge in {max_iters} rounds (cycle?)")
+        raise RuntimeError(
+            f"topo_layers: input has a cycle (layers still change after "
+            f"{n_nodes + 1} rounds; a DAG of {n_nodes} nodes converges sooner)"
+        )
 
     return run_loop(edges.sparkSession, n_nodes, relax, edges, layers)
 
 
-def ktruss(edges: DataFrame, k: int = 4, max_iters: int = 30) -> DataFrame:
+def ktruss(edges: DataFrame, k: int = 4) -> DataFrame:
     """(a, b): the k-truss of the undirected graph — the maximal
     subgraph where every edge closes at least ``k-2`` triangles
     (cohesive-community mining; the edge-grain analogue of k-core and
@@ -2927,11 +2831,11 @@ def ktruss(edges: DataFrame, k: int = 4, max_iters: int = 30) -> DataFrame:
         "a", "b", F.coalesce(F.col("_sup"), F.lit(0).cast("bigint")).alias("_sup")
     )
     cur, n_e = loop_checkpoint_count(cur, size_hint=n_e)
-    return run_loop(edges.sparkSession, n_e, _ktruss_loop, cur, n_e, need, max_iters, _support)
+    return run_loop(edges.sparkSession, n_e, _ktruss_loop, cur, n_e, need, _support)
 
 
-def _ktruss_loop(cur, n_e, need, max_iters, _support):
-    for _ in range(max_iters):
+def _ktruss_loop(cur, n_e, need, _support):
+    while True:
         dropped = cur.where(F.col("_sup") < need)
         surv = cur.where(F.col("_sup") >= need).select("a", "b", "_sup")
         surv, n_surv = loop_checkpoint_count(surv, size_hint=n_e)
@@ -2960,7 +2864,6 @@ def _ktruss_loop(cur, n_e, need, max_iters, _support):
             .unionByName(fresh)
         )
         cur, n_e = loop_checkpoint_count(cur, size_hint=n_surv)
-    raise RuntimeError(f"ktruss did not converge in {max_iters} rounds")
 
 
 def _edge_support(lhs: DataFrame, full: DataFrame) -> DataFrame:
@@ -3002,7 +2905,6 @@ def ktruss_incremental(
     base_edges: DataFrame,
     delta_edges: DataFrame,
     k: int = 4,
-    max_iters: int = 30,
     canonical_base: bool = False,
 ) -> DataFrame:
     """(a, b): the k-truss AFTER an insert-only commit delta, at cost
@@ -3073,7 +2975,7 @@ def ktruss_incremental(
         # --- closure: pull in non-truss edges sharing a triangle
         # with the frontier, to fixpoint (fact 2's candidate set)
         frontier = x
-        for _ in range(max_iters):
+        while True:
             adj = e_new.select("a", "b").union(
                 e_new.select(F.col("b").alias("a"), F.col("a").alias("b"))
             )
@@ -3117,7 +3019,7 @@ def ktruss_incremental(
             "a", "b", F.coalesce(F.col("_sup"), F.lit(0).cast("bigint")).alias("_sup")
         )
         cur, n_c = loop_checkpoint_count(cur, size_hint=n_x)
-        for _ in range(max_iters):
+        while True:
             dropped = cur.where(F.col("_sup") < need)
             surv = cur.where(F.col("_sup") >= need).select("a", "b", "_sup")
             surv, n_surv = loop_checkpoint_count(surv, size_hint=n_c)
@@ -3152,12 +3054,11 @@ def ktruss_incremental(
             )
             cur = surv.join(touched, ["a", "b"], "left_anti").unionByName(fresh_sup)
             cur, n_c = loop_checkpoint_count(cur, size_hint=n_surv)
-        raise RuntimeError(f"ktruss_incremental did not converge in {max_iters} rounds")
 
     return run_loop(spark, n_new, grow, e_new, not_t, x, t_old, n_x)
 
 
-def msf_boruvka(edges: DataFrame, max_iters: int = 30) -> DataFrame:
+def msf_boruvka(edges: DataFrame) -> DataFrame:
     """(a, b, w): minimum spanning forest by Borůvka rounds — the
     distributed MST algorithm (each round every component picks its
     minimum-weight outgoing edge, picked edges join the forest,
@@ -3191,12 +3092,12 @@ def msf_boruvka(edges: DataFrame, max_iters: int = 30) -> DataFrame:
     )
     # lazy: materializes inside round 1's cross-edge count job
     labels = plan_checkpoint(labels)
-    return run_loop(edges.sparkSession, n_e, _msf_loop, und, n_e, labels, max_iters)
+    return run_loop(edges.sparkSession, n_e, _msf_loop, und, n_e, labels)
 
 
-def _msf_loop(und, n_e, labels, max_iters):
+def _msf_loop(und, n_e, labels):
     forest_parts = [und.limit(0)]
-    for _ in range(max_iters):
+    while True:
         lab_a = labels.select(F.col("node").alias("a"), F.col("comp").alias("ca"))
         lab_b = labels.select(F.col("node").alias("b"), F.col("comp").alias("cb"))
         cross = (
@@ -3251,7 +3152,7 @@ def _msf_loop(und, n_e, labels, max_iters):
         # inside the first jump round's sum job (it is self-joined
         # there, so the lazy checkpoint also stops plan duplication)
         ptr, n_ptr = plan_checkpoint(ptr, size_hint=n_cross), n_cross
-        for _ in range(max_iters):
+        while True:
             jumped = (
                 ptr.alias("x")
                 .join(
@@ -3287,9 +3188,7 @@ def _msf_loop(und, n_e, labels, max_iters):
     return out.distinct()
 
 
-def msf_incremental(
-    forest_old: DataFrame, delta_edges: DataFrame, max_iters: int = 30
-) -> DataFrame:
+def msf_incremental(forest_old: DataFrame, delta_edges: DataFrame) -> DataFrame:
     """(a, b, w): the minimum spanning forest AFTER an insert-only
     commit delta, by the SPARSIFICATION identity (Eppstein et al.,
     "Sparsification — a technique for speeding up dynamic graph
@@ -3311,7 +3210,7 @@ def msf_incremental(
     ).unionByName(
         delta_edges.select("src", "dst", F.col("w").cast("double").alias("w"))
     )
-    return msf_boruvka(union, max_iters=max_iters)
+    return msf_boruvka(union)
 
 
 def msf_decremental(
@@ -3319,7 +3218,6 @@ def msf_decremental(
     labels: DataFrame,
     base_edges: DataFrame,
     delete_edges: DataFrame,
-    max_iters: int = 30,
 ) -> DataFrame:
     """(a, b, w): the minimum spanning forest AFTER a delete-only
     commit delta — the direction the sparsification identity does NOT
@@ -3389,7 +3287,7 @@ def msf_decremental(
     sub = e_new.join(
         dirty_nodes.select(F.col("node").alias("a")), "a", "left_semi"
     ).select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-    return untouched.unionByName(msf_boruvka(sub, max_iters=max_iters))
+    return untouched.unionByName(msf_boruvka(sub))
 
 
 def random_walks(
@@ -3495,7 +3393,7 @@ def distance_stats(edges: DataFrame, sources: DataFrame | None = None) -> DataFr
     )
 
 
-def luby_mis(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def luby_mis(edges: DataFrame) -> DataFrame:
     """(node, in_mis): maximal independent set by Luby's parallel
     algorithm with FIXED hash priorities (p(v) = md5(v), distinct
     with overwhelming probability and identical in every engine) —
@@ -3521,9 +3419,7 @@ def luby_mis(edges: DataFrame, max_iters: int = 50) -> DataFrame:
 
     def rounds(und, nodes, undecided, n_u):
         mis_parts = []
-        for _ in range(max_iters):
-            if n_u == 0:
-                break
+        while n_u > 0:
             live = (
                 und.join(
                     undecided.select(F.col("node").alias("src"), F.col("_p").alias("_pa")),
@@ -3551,12 +3447,6 @@ def luby_mis(edges: DataFrame, max_iters: int = 50) -> DataFrame:
                     excluded, "node", "left_anti"
                 )
             )
-        if n_u > 0:
-            raise RuntimeError(
-                f"luby_mis: {n_u} nodes still undecided after max_iters rounds; "
-                "raise max_iters (rounds are bounded by the longest "
-                "decreasing-priority path)"
-            )
         if not mis_parts:  # empty graph
             return nodes.select("node", F.lit(False).alias("in_mis"))
         mis = mis_parts[0]
@@ -3574,7 +3464,6 @@ def bidirectional_distance(
     edges: DataFrame,
     src_nodes: DataFrame,
     dst_nodes: DataFrame,
-    max_iters: int = 50,
 ) -> DataFrame:
     """One row (hops): exact shortest hop distance between two node
     SETS over the undirected graph by BIDIRECTIONAL BFS — the
@@ -3641,11 +3530,9 @@ def bidirectional_distance(
         front_a, front_b = ball_a, ball_b
         ra = rb = 0
         best = probe(ball_a, ball_b)
-        for _ in range(max_iters):
-            if best is not None and best <= ra + rb:
-                break
-            if n_fa == 0 and n_fb == 0:
-                break
+        # each round grows one ball by a fresh level, so either the
+        # midpoint rule proves ``best`` or both frontiers run dry
+        while (best is None or best > ra + rb) and (n_fa or n_fb):
             expand_a = n_fb == 0 or (n_fa != 0 and n_fa <= n_fb)
             if expand_a:
                 grown, n_fa, cand = expand(front_a, ball_a, ball_b)
@@ -3660,12 +3547,6 @@ def bidirectional_distance(
                 rb += 1
             if cand is not None and (best is None or cand < best):
                 best = cand
-        proven = (best is not None and best <= ra + rb) or (n_fa == 0 and n_fb == 0)
-        if not proven:
-            raise RuntimeError(
-                "bidirectional_distance: round cap hit before the midpoint "
-                "stopping rule proved exactness; raise max_iters"
-            )
         return best
 
     spark = edges.sparkSession
@@ -3676,7 +3557,7 @@ def bidirectional_distance(
     return spark.range(1).select(F.lit(best).cast("bigint").alias("hops"))
 
 
-def jones_plassmann_coloring(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def jones_plassmann_coloring(edges: DataFrame) -> DataFrame:
     """(node, color): greedy graph coloring by the Jones-Plassmann
     parallel schedule with FIXED md5 priorities — deterministic, so
     the parallel rounds produce EXACTLY the sequential greedy
@@ -3699,9 +3580,7 @@ def jones_plassmann_coloring(edges: DataFrame, max_iters: int = 50) -> DataFrame
 
     def rounds(und, nodes, uncolored, n_u):
         colored = None
-        for _ in range(max_iters):
-            if n_u == 0:
-                break
+        while n_u > 0:
             blocked = (
                 und.join(
                     uncolored.select(F.col("node").alias("src"), F.col("_p").alias("_pa")),
@@ -3752,11 +3631,6 @@ def jones_plassmann_coloring(edges: DataFrame, max_iters: int = 50) -> DataFrame
             uncolored, n_u = loop_checkpoint_count(
                 uncolored.join(newly.select("node"), "node", "left_anti")
             )
-        if n_u > 0:
-            raise RuntimeError(
-                f"jones_plassmann_coloring: {n_u} nodes still uncolored after "
-                "max_iters rounds; raise max_iters"
-            )
         if colored is None:  # empty graph
             return nodes.select("node", F.lit(None).cast("int").alias("color")).where(
                 F.lit(False)
@@ -3766,7 +3640,7 @@ def jones_plassmann_coloring(edges: DataFrame, max_iters: int = 50) -> DataFrame
     return run_loop(edges.sparkSession, n_u, rounds, und, nodes, uncolored, n_u)
 
 
-def bipartite_check(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def bipartite_check(edges: DataFrame) -> DataFrame:
     """(component, n_nodes, n_odd_edges, is_bipartite): two-colorable
     test per connected component — BFS parity labels from each
     component's minimum node, then one edge-grain probe for edges
@@ -3777,7 +3651,7 @@ def bipartite_check(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     keyed by the node — nothing here is new state beyond the label
     tables."""
     und = loop_checkpoint(_symmetrize(edges))
-    comp = connected_components(und, max_iters)
+    comp = connected_components(und)
     roots = comp.select(F.col("component").alias("node")).distinct()
     hops = shortest_hops(und, roots, assume_undirected=True).select(
         F.col("node"), (F.col("hops") % 2).alias("_par")
@@ -3804,7 +3678,7 @@ def bipartite_check(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     )
 
 
-def maximal_matching(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def maximal_matching(edges: DataFrame) -> DataFrame:
     """(a, b): a maximal matching by greedy edge selection with FIXED
     md5 edge priorities — the third symmetry-breaking primitive next
     to :func:`luby_mis` / :func:`jones_plassmann_coloring`, i.e.
@@ -3838,9 +3712,7 @@ def maximal_matching(edges: DataFrame, max_iters: int = 50) -> DataFrame:
 
     def rounds(live, n_l):
         matched_parts = []
-        for _ in range(max_iters):
-            if n_l == 0:
-                break
+        while n_l > 0:
             stubs = live.select(F.col("a").alias("node"), "a", "b", "_p").unionByName(
                 live.select(F.col("b").alias("node"), "a", "b", "_p")
             )
@@ -3868,11 +3740,6 @@ def maximal_matching(edges: DataFrame, max_iters: int = 50) -> DataFrame:
                     mnodes.withColumnRenamed("node", "b"), "b", "left_anti"
                 ).select("a", "b", "_p")
             )
-        if n_l > 0:
-            raise RuntimeError(
-                f"maximal_matching: {n_l} live edges remain after max_iters "
-                "rounds; raise max_iters"
-            )
         if not matched_parts:  # empty graph
             return canon.where(F.lit(False))
         out = matched_parts[0]
@@ -3883,7 +3750,7 @@ def maximal_matching(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     return run_loop(edges.sparkSession, n_l, rounds, live, n_l)
 
 
-def euler_classify(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def euler_classify(edges: DataFrame) -> DataFrame:
     """(component, n_nodes, n_odd, euler): Euler-walk classification
     per connected component — 'circuit' (every degree even), 'path'
     (exactly two odd-degree nodes), or 'none' — the classic
@@ -3891,7 +3758,7 @@ def euler_classify(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     the symmetrized edges joined to the CC labels.  The route-
     inspection shape (can this pipeline of edges be walked once?)."""
     und = _symmetrize(edges)
-    comp = connected_components(und, max_iters, assume_symmetric=True)
+    comp = connected_components(und, assume_symmetric=True)
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("_d")
     )
@@ -3989,7 +3856,6 @@ def scc_incremental(
     labels: DataFrame,
     condensation: DataFrame,
     delta_edges: DataFrame,
-    max_iters: int = 50,
 ) -> DataFrame:
     """(node, component): strongly connected components AFTER an
     insert-only commit delta, maintained from the stored labels plus
@@ -4048,7 +3914,7 @@ def scc_incremental(
     # Tarjan (bit-identical labels, see scc_metadata); above the
     # guard the distributed loop is the fallback, so a huge quotient
     # still converges at scale.
-    mscc = scc_metadata(meta, max_iters=max_iters)
+    mscc = scc_metadata(meta)
     relab = mscc.select(
         F.col("node").alias("component"), F.col("component").alias("_newc")
     )
@@ -4070,7 +3936,6 @@ def scc_decremental(
     labels: DataFrame,
     base_edges: DataFrame,
     delete_edges: DataFrame,
-    max_iters: int = 50,
     canonical_base: bool = False,
 ) -> DataFrame:
     """(node, component): strongly connected components AFTER a
@@ -4148,7 +4013,7 @@ def scc_decremental(
     # case; the adaptive scc_metadata path labels them driver-side
     # under the 100k-edge guard (bit-identical, see scc_incremental's
     # quotient note) and falls back to the distributed loop above it.
-    relabeled = scc_metadata(sub, max_iters=max_iters)
+    relabeled = scc_metadata(sub)
     singletons = dirty_nodes.join(
         relabeled.select("node"), "node", "left_anti"
     ).select("node", F.col("node").alias("component"))

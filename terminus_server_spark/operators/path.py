@@ -205,9 +205,7 @@ def transitive_closure(edges: DataFrame, with_hops: bool = False) -> DataFrame:
     return reached if with_hops else reached.select("src", "dst")
 
 
-def transitive_closure_doubling(
-    edges: DataFrame, max_doublings: int = 20, with_hops: bool = False
-) -> DataFrame:
+def transitive_closure_doubling(edges: DataFrame, with_hops: bool = False) -> DataFrame:
     """plus-closure by min-plus path doubling: R_{i+1} = min-hops of
     R_i ∪ (R_i ⋈ R_i).  Converges in ceil(log2(diameter)) rounds vs
     the frontier method's `diameter` rounds.
@@ -239,15 +237,13 @@ def transitive_closure_doubling(
             .agg(F.min("hops").alias("hops"))
         )
         covered = 1  # R holds every min-hop pair with hops <= covered
-        for _ in range(max_doublings):
-            if max_hops is not None and max_hops < covered:
-                # Diameter proof, no confirmation round needed: if a
-                # pair at min-distance d > covered existed, the length-
-                # `covered` prefix of its shortest path is itself a
-                # shortest path (subpaths of shortest paths are
-                # shortest), so R would contain a pair with hops ==
-                # covered exactly — contradicting max_hops < covered.
-                break
+        # Diameter proof, no confirmation round needed: if a pair at
+        # min-distance d > covered existed, the length-`covered` prefix
+        # of its shortest path is itself a shortest path (subpaths of
+        # shortest paths are shortest), so R would contain a pair with
+        # hops == covered exactly — so max_hops < covered ends the loop,
+        # after at most log2(diameter) rounds.
+        while max_hops is not None and max_hops >= covered:
             squared = (
                 r.alias("a")
                 .join(r.alias("b"), F.col("a.dst") == F.col("b.src"))

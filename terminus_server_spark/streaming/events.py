@@ -1229,11 +1229,7 @@ def run_stream_countmin(
     )
 
 
-def run_stream_cc(
-    spark: SparkSession,
-    edge_batches: list[DataFrame],
-    max_iters: int = 50,
-) -> DataFrame:
+def run_stream_cc(spark: SparkSession, edge_batches: list[DataFrame]) -> DataFrame:
     """(node, component): connected-component labels maintained
     incrementally as edge INSERTIONS stream in — the streaming twin
     of :func:`terminus_server_spark.operators.graph.
@@ -1272,17 +1268,13 @@ def run_stream_cc(
             )
         else:
             labels = batch_nodes.select("node", F.col("node").alias("component"))
-        out = connected_components_incremental(labels, und, max_iters)
+        out = connected_components_incremental(labels, und)
         return {"labels": out}
 
     return _fold(spark, edge_batches, step, "labels")
 
 
-def run_stream_cc_cdc(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    max_iters: int = 50,
-) -> DataFrame:
+def run_stream_cc_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFrame:
     """(node, component): connected-component labels maintained over
     a CDC edge stream — each micro-batch carries ``(op, src, dst)``
     rows with op ∈ {add, del}, and the update composes BOTH
@@ -1330,9 +1322,7 @@ def run_stream_cc_cdc(
         # store is written canonical (a<b) + duplicate-free below, so
         # canonical_base skips the full-store distinct() — the steady
         # path never shuffles the accumulated edge set
-        labels = connected_components_decremental(
-            labels, edges, dels, max_iters, canonical_base=True
-        )
+        labels = connected_components_decremental(labels, edges, dels, canonical_base=True)
         edges = edges.join(F.broadcast(dels), ["src", "dst"], "left_anti")
         # then inserts: fresh nodes as singletons, label pairs contract
         add_nodes = (
@@ -1344,7 +1334,7 @@ def run_stream_cc_cdc(
         labels = labels.unionByName(
             fresh.select("node", F.col("node").alias("component"))
         )
-        labels = connected_components_incremental(labels, adds, max_iters)
+        labels = connected_components_incremental(labels, adds)
         # store update stays DELTA-sized: narrow the store map-side to
         # add-endpoint-incident rows (broadcast semi join, no store
         # shuffle), anti-join the batch against that tiny slice, and
@@ -1970,11 +1960,7 @@ def run_stream_pagerank(
     return _fold(spark, batches, step, "ranks")
 
 
-def run_stream_msf_cdc(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    max_iters: int = 30,
-) -> DataFrame:
+def run_stream_msf_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFrame:
     """(a, b, w): streaming minimum-spanning-forest maintenance over
     a CDC edge stream — each micro-batch carries ``(op, src, dst, w)``
     rows with op ∈ {add, del}, and the update composes BOTH
@@ -2052,13 +2038,11 @@ def run_stream_msf_cdc(
                 labels,
                 stored,
                 dels.withColumn("w", F.lit(0.0)),
-                max_iters=max_iters,
             )
             labels = connected_components_decremental(
                 labels,
                 stored.select("src", "dst"),
                 dels,
-                max_iters,
                 canonical_base=True,
             )
             stored = stored.join(
@@ -2068,7 +2052,7 @@ def run_stream_msf_cdc(
         # re-runs Borůvka over forest ∪ Δ only; labels contract via
         # the batch meta-graph, fresh nodes entering as singletons.
         if adds.count():
-            forest = msf_incremental(forest, adds, max_iters=max_iters)
+            forest = msf_incremental(forest, adds)
             add_nodes = (
                 adds.select(F.col("src").alias("node"))
                 .union(adds.select(F.col("dst")))
@@ -2078,9 +2062,7 @@ def run_stream_msf_cdc(
             labels = labels.unionByName(
                 fresh.select("node", F.col("node").alias("component"))
             )
-            labels = connected_components_incremental(
-                labels, adds.select("src", "dst"), max_iters
-            )
+            labels = connected_components_incremental(labels, adds.select("src", "dst"))
             adds_only = adds.join(
                 stored.join(
                     F.broadcast(adds.select("src").distinct()),
@@ -2255,11 +2237,7 @@ def run_stream_pagerank_cdc(
     return _fold(spark, batches, step, "ranks")
 
 
-def run_stream_scc_cdc(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    max_iters: int = 50,
-) -> DataFrame:
+def run_stream_scc_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFrame:
     """(node, component): streaming STRONGLY CONNECTED component
     maintenance over a CDC edge stream — ``(op, src, dst)`` DIRECTED
     rows, composing ``scc_decremental`` THEN ``scc_incremental``
@@ -2335,7 +2313,7 @@ def run_stream_scc_cdc(
                 .localCheckpoint(eager=True)
             )
             new_labels = scc_decremental(
-                labels, stored, dels, max_iters, canonical_base=True
+                labels, stored, dels, canonical_base=True
             ).localCheckpoint(eager=True)
             stored = stored.join(
                 F.broadcast(dels), ["src", "dst"], "left_anti"
@@ -2394,9 +2372,7 @@ def run_stream_scc_cdc(
                 F.col("node").alias("dst"), F.col("component").alias("_ld")
             )
         if adds.count():
-            new_labels = scc_incremental(
-                labels, cond, adds, max_iters
-            ).localCheckpoint(eager=True)
+            new_labels = scc_incremental(labels, cond, adds).localCheckpoint(eager=True)
             # merge relabel map: classes whose label changed
             relab = (
                 labels.select(F.col("component").alias("old"))

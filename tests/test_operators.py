@@ -2161,21 +2161,60 @@ def test_scc_empty_and_all_null_edges(spark):
     assert strongly_connected_components(nulls).count() == 0
 
 
-def test_scc_nonconvergence_raises(spark):
-    """r4 ADVICE: exhausting max_iters with nodes unlabeled must be
-    loud, not silently incomplete."""
-    import pytest as _pytest
-
+def test_scc_labels_deep_chain_of_two_cycles(spark):
+    """A 3-deep chain of 2-cycles needs several outer peels; the loop
+    runs until every node is labeled, whatever the depth."""
     from terminus_server_spark.operators.graph import strongly_connected_components
 
-    # a 3-deep chain of 2-cycles: condensation depth 3 > max_iters=1
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"), ("d", "c"),
          ("d", "e"), ("e", "f"), ("f", "e")],
         "src string, dst string",
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        strongly_connected_components(edges, max_iters=1)
+    got = {(r.node, r.component)
+           for r in strongly_connected_components(edges).collect()}
+    assert got == {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c"),
+                   ("e", "e"), ("f", "e")}
+
+
+def test_betweenness_exact_on_deep_path(spark):
+    """On a path of n nodes, node i lies on the shortest path of every
+    pair it separates: i·(n−1−i).  At n = 56 the backward Brandes pass
+    is 55 levels deep, past where one chain of lazy checkpoints
+    overflows the JVM stack."""
+    from terminus_server_spark.operators.graph import betweenness
+
+    n = 56
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+    got = {r.node: r.betweenness for r in betweenness(edges).collect()}
+    assert got == {i: float(i * (n - 1 - i)) for i in range(n)}
+
+
+@pytest.mark.parametrize("case", ["bidirectional", "topo", "path_counts"])
+def test_graph_loops_converge_on_deep_chains(spark, case):
+    """Chains of 60 and 101 edges converge exactly: the loops stop on
+    their probe, and the acyclic-input guard allows one round per node."""
+    from terminus_server_spark.operators import graph as G
+
+    n = 60 if case == "bidirectional" else 101  # edges in the chain
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "src long, dst long"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(n + 1)], "node long")
+    if case == "bidirectional":
+        ends = G.bidirectional_distance(
+            edges, nodes.where("node = 0"), nodes.where(f"node = {n}")
+        )
+        assert ends.collect()[0].hops == n
+    elif case == "topo":
+        got = {r.node: r.layer for r in G.topo_layers(nodes, edges).collect()}
+        assert got == {i: i for i in range(n + 1)}
+    else:
+        got = {r.node: r.n_paths for r in G.dag_path_counts(
+            edges, nodes.where(f"node = {n}")).collect()}
+        assert got == {i: 1.0 for i in range(n + 1)}
 
 
 def test_embed_near_dup_size_hint_lazy_paths_agree(spark):
@@ -2704,7 +2743,7 @@ def test_topo_layers_raises_on_cycle(spark):
     nodes = spark.createDataFrame([(1,), (2,), (3,)], "node long")
     cyc = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
     with _pytest.raises(RuntimeError, match="converge"):
-        topo_layers(nodes, cyc, max_iters=10)
+        topo_layers(nodes, cyc)
 
 
 def test_kneser_ney_prefers_seen_continuations(spark):
@@ -2808,7 +2847,7 @@ def test_loop_tuning_restores_conf_even_on_raise(spark, monkeypatch):
     nodes = spark.createDataFrame([(1,), (2,), (3,)], "node long")
     cyc = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
     with _pytest.raises(RuntimeError):
-        topo_layers(nodes, cyc, max_iters=5)
+        topo_layers(nodes, cyc)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
 
@@ -3575,21 +3614,6 @@ def test_resample_interpolate_offgrid_passthrough(spark):
     assert rows["00:30"] == (1.0, False)  # passes through
     # 01:00 interpolates between 00:30 (1.0) and 02:00 (4.0): 30/90 of 3
     assert rows["01:00"] == (2.0, True)
-
-
-def test_loop_caps_raise_loudly(spark):
-    import pytest as _pytest
-
-    from terminus_server_spark.operators.graph import (
-        jones_plassmann_coloring,
-        luby_mis,
-        maximal_matching,
-    )
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    for fn in (luby_mis, jones_plassmann_coloring, maximal_matching):
-        with _pytest.raises(RuntimeError, match="max_iters"):
-            fn(edges, max_iters=0)
 
 
 def test_pagerank_and_octopus_empty_inputs(spark):
@@ -5239,7 +5263,7 @@ def test_scc_maintainers_distributed_fallback(spark, monkeypatch):
     monkeypatch.setattr(G, "_METADATA_SCC_LIMIT", 0)
     orig = G.scc_metadata
     monkeypatch.setattr(
-        G, "scc_metadata", lambda e, limit=0, max_iters=50: orig(e, 0, max_iters)
+        G, "scc_metadata", lambda e, limit=0: orig(e, 0)
     )
     base = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 4), (5, 6), (6, 5)],
@@ -5309,7 +5333,7 @@ def test_cc_maintainers_distributed_fallback(spark, monkeypatch):
 
     orig = G.cc_metadata
     monkeypatch.setattr(
-        G, "cc_metadata", lambda e, limit=None, max_iters=50: orig(e, 0, max_iters)
+        G, "cc_metadata", lambda e, limit=None: orig(e, 0)
     )
     base = spark.createDataFrame(
         [(1, 2), (3, 4), (5, 6)], "src long, dst long"

@@ -626,3 +626,23 @@ def test_operators_never_write_session_conf():
         if needle in src.read_text() and rel not in ok
     ]
     assert hits == []
+
+
+def test_fixpoint_operators_take_no_round_cap():
+    """Fixpoint loops stop on their own probe (changed rows, an empty
+    frontier, no row dropped), so an answer never depends on a round
+    cap: no function in the package takes one."""
+    import ast
+    import pathlib
+
+    import terminus_server_spark
+
+    caps = {"max_iters", "rounds_per_k", "max_doublings"}
+    root = pathlib.Path(terminus_server_spark.__file__).parent
+    hits = [
+        f"{src.relative_to(root).as_posix()}:{arg.lineno} {arg.arg}"
+        for src in sorted(root.rglob("*.py"))
+        for arg in ast.walk(ast.parse(src.read_text()))
+        if isinstance(arg, ast.arg) and arg.arg in caps
+    ]
+    assert hits == []
