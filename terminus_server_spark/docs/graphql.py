@@ -1170,36 +1170,17 @@ def _path_query(store, args, fields):
     same path.pl regex grammar).  Args: ``pattern`` (the textual
     path regex, see ``woql.path_ast.parse_path_string``), optional
     ``from`` / ``to`` node anchors.  Selection fields are the path
-    scalars ``src`` / ``dst`` / ``hops``.
-
-    Plan shape: an un-anchored pattern compiles to the generic
-    closure (``operators.path.compile_path``); a ``from:``-anchored
-    plus/star closure uses ``anchored_closure`` instead — state is
-    the anchor's reachable set, never the all-pairs closure filtered
-    after the fact, which is the difference between a bounded BFS
-    and an O(V²) materialization at 100 TB."""
+    scalars ``src`` / ``dst`` / ``hops``.  ``from`` is
+    ``compile_path``'s start node (``operators.path`` docstring: where
+    the closures are anchored)."""
     from pyspark.sql import functions as F
 
-    from terminus_server_spark.operators.path import anchored_closure, compile_path
-    from terminus_server_spark.woql import path_ast as P
+    from terminus_server_spark.operators.path import compile_path
     from terminus_server_spark.woql.path_ast import parse_path_string
 
     if "pattern" not in args:
         raise ValueError("graphql: _path requires a pattern argument")
-    pat = parse_path_string(args["pattern"])
-    frm = args.get("from")
-    if frm is not None and isinstance(pat, (P.Plus, P.Star)):
-        spark = store.df.sparkSession
-        anchors = spark.createDataFrame([(frm,)], "node string")
-        df = anchored_closure(
-            compile_path(store, pat.part).select("src", "dst"),
-            anchors,
-            with_zero=isinstance(pat, P.Star),
-        )
-    else:
-        df = compile_path(store, pat)
-        if frm is not None:
-            df = df.where(F.col("src") == F.lit(frm))
+    df = compile_path(store, parse_path_string(args["pattern"]), src=args.get("from"))
     if "to" in args:
         df = df.where(F.col("dst") == F.lit(args["to"]))
     names = [f if isinstance(f, str) else f["name"] for f in fields]

@@ -2796,45 +2796,19 @@ def ktruss(edges: DataFrame, k: int = 4) -> DataFrame:
     Edge state shrinks monotonically and is checkpointed per round;
     the k-truss is unique, so peel order cannot affect the result."""
 
-    def _support(lhs, full):
-        # triangle support of each lhs edge against the full survivor
-        # set: wedge (a,b)+(a,c), closed iff (min,max)(b,c) is an edge
-        adj = full.select("a", "b").union(
-            full.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        return (
-            lhs.join(adj.select(F.col("a"), F.col("b").alias("c")), "a")
-            .where(F.col("c") != F.col("b"))
-            .join(
-                full.select(F.col("a").alias("_x"), F.col("b").alias("_y")),
-                (F.least("b", "c") == F.col("_x"))
-                & (F.greatest("b", "c") == F.col("_y")),
-                "left_semi",
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("_sup"))
-        )
-
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .distinct()
-    )
-    und, n_e = loop_checkpoint_count(und)
+    und, n_e = loop_checkpoint_count(_und(edges))
     need = k - 2
     if n_e == 0:
         return und
     # cur: (a, b, _sup) — stored support, exact vs the current edge set
-    cur = und.join(_support(und, und), ["a", "b"], "left_outer").select(
+    cur = und.join(_edge_support(und, und), ["a", "b"], "left_outer").select(
         "a", "b", F.coalesce(F.col("_sup"), F.lit(0).cast("bigint")).alias("_sup")
     )
     cur, n_e = loop_checkpoint_count(cur, size_hint=n_e)
-    return run_loop(edges.sparkSession, n_e, _ktruss_loop, cur, n_e, need, _support)
+    return run_loop(edges.sparkSession, n_e, _ktruss_loop, cur, n_e, need)
 
 
-def _ktruss_loop(cur, n_e, need, _support):
+def _ktruss_loop(cur, n_e, need):
     while True:
         dropped = cur.where(F.col("_sup") < need)
         surv = cur.where(F.col("_sup") >= need).select("a", "b", "_sup")
@@ -2856,7 +2830,7 @@ def _ktruss_loop(cur, n_e, need, _support):
         ).unionByName(
             edges_only.join(dirty.select(F.col("n").alias("b")), "b", "left_semi")
         ).distinct()
-        fresh = touched.join(_support(touched, edges_only), ["a", "b"], "left_outer").select(
+        fresh = touched.join(_edge_support(touched, edges_only), ["a", "b"], "left_outer").select(
             "a", "b", F.coalesce(F.col("_sup"), F.lit(0).cast("bigint")).alias("_sup")
         )
         cur = (

@@ -10,6 +10,17 @@ an empty frontier.  :func:`semi_naive` is that loop, written once; the
 closures here, the multi-source BFS in ``operators.graph`` and the
 distributed commit-DAG walk in ``versioning.dag`` are its callers.
 
+Anchoring: :func:`compile_path` takes the start node ``src`` when the
+caller has one, and it alone decides where a closure is anchored.
+Leaves filter ``src`` (pushed into the scan), ``Seq`` anchors its
+first part on ``src`` and every later ``Plus``/``Star`` part on the
+distinct ``dst`` of the rows so far, ``OrP`` anchors every part and
+``Times`` its first step.  An anchored ``Plus``/``Star`` runs
+:func:`anchored_closure`, whose state is the anchors' reachable set,
+whatever the pattern's ``strategy``; only an unanchored one builds
+the all-pairs closure.  ``compile_path(p, src=x)`` equals
+``compile_path(p)`` filtered on ``src == x``.
+
 Scale notes (100 TB):
 - the edge set once and every round's layer are checkpointed to cut
   lineage (otherwise plan depth grows linearly and the optimizer
@@ -49,6 +60,29 @@ from terminus_server_spark.woql import path_ast as P
 
 def _dedup_min_hops(df: DataFrame) -> DataFrame:
     return df.groupBy("src", "dst").agg(F.min("hops").alias("hops"))
+
+
+def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``a ; b``: (a.src, b.dst, a.hops + b.hops) over a.dst = b.src."""
+    return (
+        a.alias("a")
+        .join(b.alias("b"), F.col("a.dst") == F.col("b.src"))
+        .select(
+            F.col("a.src").alias("src"),
+            F.col("b.dst").alias("dst"),
+            (F.col("a.hops") + F.col("b.hops")).alias("hops"),
+        )
+    )
+
+
+def _nodes(edges: DataFrame) -> DataFrame:
+    """Every end of every edge, as one ``src`` column (not deduped)."""
+    return edges.select("src").union(edges.select(F.col("dst").alias("src")))
+
+
+def _zero(nodes: DataFrame) -> DataFrame:
+    """(n, n, 0) for each ``src`` node: the empty repetition."""
+    return nodes.select("src", F.col("src").alias("dst"), F.lit(0).alias("hops"))
 
 
 # A closure's reached state is a stack of checkpointed runs of
@@ -244,17 +278,8 @@ def transitive_closure_doubling(edges: DataFrame, with_hops: bool = False) -> Da
         # hops == covered exactly — so max_hops < covered ends the loop,
         # after at most log2(diameter) rounds.
         while max_hops is not None and max_hops >= covered:
-            squared = (
-                r.alias("a")
-                .join(r.alias("b"), F.col("a.dst") == F.col("b.src"))
-                .select(
-                    F.col("a.src").alias("src"),
-                    F.col("b.dst").alias("dst"),
-                    (F.col("a.hops") + F.col("b.hops")).alias("hops"),
-                )
-            )
             r, new_stats, max_hops = ckpt_stats(
-                r.unionByName(squared)
+                r.unionByName(_compose(r, r))
                 .groupBy("src", "dst")
                 .agg(F.min("hops").alias("hops"))
             )
@@ -290,10 +315,7 @@ def anchored_closure(
     def seed(e: DataFrame, a: DataFrame) -> DataFrame:
         if not with_zero:
             return e.join(a, "src").select("src", "dst", F.lit(1).alias("hops"))
-        universe = e.select(F.col("src").alias("n")).union(e.select("dst"))
-        return a.join(universe, a["src"] == universe["n"], "left_semi").select(
-            "src", F.col("src").alias("dst"), F.lit(0).alias("hops")
-        )
+        return _zero(a.join(_nodes(e), "src", "left_semi"))
 
     return semi_naive(
         _not_null(edges),
@@ -305,142 +327,88 @@ def anchored_closure(
     )
 
 
-def _seq_into_closure(
-    left: DataFrame, b: DataFrame, with_zero: bool
+def _from(df: DataFrame, src: str | None) -> DataFrame:
+    return df if src is None else df.where(F.col("src") == F.lit(src))
+
+
+def _closure(
+    store, pattern: P.Plus | P.Star, graph: str, anchors: DataFrame | None
 ) -> DataFrame:
-    """``left ; B*`` / ``left ; B+`` without the global closure:
-    anchor the B-closure on left's distinct endpoints (the only
-    middles the join could keep), then extend left by the anchored
-    distances.  ``with_zero`` (star) keeps each left pair itself —
-    but only when its endpoint exists in B's node universe, matching
-    ``compile_path(Star)``'s graph-derived zero rows exactly."""
-    mids = left.select(F.col("dst").alias("node")).distinct()
-    d = anchored_closure(b, mids)
-    grown = (
-        left.alias("a")
-        .join(d.alias("c"), F.col("a.dst") == F.col("c.src"))
-        .select(
-            F.col("a.src").alias("src"),
-            F.col("c.dst").alias("dst"),
-            (F.col("a.hops") + F.col("c.hops")).alias("hops"),
-        )
-    )
-    if with_zero:
-        universe = (
-            b.select(F.col("src").alias("n"))
-            .union(b.select(F.col("dst")))
-            .distinct()
-        )
-        kept = left.join(
-            universe, left["dst"] == universe["n"], "left_semi"
-        ).select("src", "dst", "hops")
-        grown = grown.unionByName(kept)
-    return grown
+    """``pattern``'s closure grown from ``anchors`` (one ``node``
+    column), or the all-pairs closure when there are none."""
+    edges = compile_path(store, pattern.part, graph)
+    star = isinstance(pattern, P.Star)
+    if anchors is not None:
+        return anchored_closure(edges, anchors, with_zero=star)
+    close = transitive_closure_doubling if pattern.strategy == "doubling" else transitive_closure
+    plus = close(edges, with_hops=True)
+    return _dedup_min_hops(plus.unionByName(_zero(_nodes(edges)))) if star else plus
 
 
 def compile_path(
-    store, pattern: P.PathPattern, graph: str = "instance"
+    store, pattern: P.PathPattern, graph: str = "instance", src: str | None = None
 ) -> DataFrame:
     """Compile a path pattern to an (src, dst, hops) DataFrame.
 
     ``graph`` scopes every step's edge scan (the WOQL compiler passes
     the active Using(...) graph down, so path words see the same
-    graph the surrounding triple patterns do)."""
+    graph the surrounding triple patterns do).  ``src`` is the start
+    node, when bound; the module docstring gives the anchoring rule."""
     if isinstance(pattern, P.Pred):
-        return store.edges(pattern.predicate, graph).withColumn("hops", F.lit(1))
+        return _from(store.edges(pattern.predicate, graph), src).withColumn("hops", F.lit(1))
     if isinstance(pattern, P.Any):
         # wildcard: every node-to-node edge in the instance graph —
         # the obj_type filter keeps literal objects out of the node
         # domain (a literal is a dead end, not a vertex), and it
         # pushes into the union's branch scans like any predicate
         # filter would.
-        return (
+        return _from(
             store.spo(None, graph)
             .where(F.col("obj_type") == "iri")
-            .select(F.col("subject").alias("src"), F.col("obj").alias("dst"))
-            .withColumn("hops", F.lit(1))
-        )
+            .select(F.col("subject").alias("src"), F.col("obj").alias("dst")),
+            src,
+        ).withColumn("hops", F.lit(1))
     if isinstance(pattern, P.Inv):
         e = store.edges(pattern.predicate, graph)
-        return e.select(F.col("dst").alias("src"), F.col("src").alias("dst")).withColumn(
-            "hops", F.lit(1)
-        )
+        return _from(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), src
+        ).withColumn("hops", F.lit(1))
     if isinstance(pattern, P.Seq):
-        out = compile_path(store, pattern.parts[0], graph)
-        for nxt_ast in pattern.parts[1:]:
-            if (
-                isinstance(nxt_ast, (P.Plus, P.Star))
-                and getattr(nxt_ast, "strategy", "frontier") == "frontier"
-            ):
-                # Push the sequence restriction INTO the closure: a
-                # plain compile would materialize the GLOBAL star/plus
-                # closure and then join (filter-after-closure — the
-                # all-pairs state this module exists to avoid).  The
-                # anchored closure grows only from the left side's
-                # endpoints; its first-reach/min-hop discipline is the
-                # same as transitive_closure restricted to those
-                # sources, so results are identical, just cheaper.
-                out = _seq_into_closure(
-                    _dedup_min_hops(out),
-                    compile_path(store, nxt_ast.part, graph),
-                    with_zero=isinstance(nxt_ast, P.Star),
+        out = compile_path(store, pattern.parts[0], graph, src)
+        for part in pattern.parts[1:]:
+            if isinstance(part, (P.Plus, P.Star)):
+                # grow the closure only from the middles the join can keep
+                out = _dedup_min_hops(out)
+                nxt = _closure(
+                    store, part, graph, out.select(F.col("dst").alias("node")).distinct()
                 )
             else:
-                nxt = compile_path(store, nxt_ast, graph)
-                out = (
-                    out.alias("a")
-                    .join(nxt.alias("b"), F.col("a.dst") == F.col("b.src"))
-                    .select(
-                        F.col("a.src").alias("src"),
-                        F.col("b.dst").alias("dst"),
-                        (F.col("a.hops") + F.col("b.hops")).alias("hops"),
-                    )
-                )
+                nxt = compile_path(store, part, graph)
+            out = _compose(out, nxt)
         return _dedup_min_hops(out)
     if isinstance(pattern, P.OrP):
-        parts = [compile_path(store, p, graph) for p in pattern.parts]
-        out = parts[0]
-        for nxt in parts[1:]:
-            out = out.unionByName(nxt)
-        return _dedup_min_hops(out)
-    if isinstance(pattern, P.Plus):
-        close = transitive_closure_doubling if pattern.strategy == "doubling" else transitive_closure
-        return close(compile_path(store, pattern.part, graph), with_hops=True)
-    if isinstance(pattern, P.Star):
-        close = transitive_closure_doubling if pattern.strategy == "doubling" else transitive_closure
-        plus = close(compile_path(store, pattern.part, graph), with_hops=True)
-        base = compile_path(store, pattern.part, graph)
-        nodes = base.select(F.col("src").alias("n")).union(base.select(F.col("dst"))).distinct()
-        zero = nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"), F.lit(0).alias("hops"))
-        return _dedup_min_hops(plus.unionByName(zero))
+        return _dedup_min_hops(
+            _union([compile_path(store, p, graph, src) for p in pattern.parts])
+        )
+    if isinstance(pattern, (P.Plus, P.Star)):
+        anchors = None if src is None else store.df.sparkSession.createDataFrame(
+            [(src,)], "node string"
+        )
+        return _closure(store, pattern, graph, anchors)
     if isinstance(pattern, P.Times):
         base = compile_path(store, pattern.part, graph)
-        acc = None
-        if pattern.n == 0:
-            # {0,m} admits the empty repetition: identity pairs over
-            # the base pattern's node universe, matching Star's
-            # zero-hop rows ({0,0} is pure identity)
-            nodes = base.select(F.col("src").alias("n")).union(
-                base.select(F.col("dst"))
-            ).distinct()
-            acc = nodes.select(
-                F.col("n").alias("src"), F.col("n").alias("dst"), F.lit(0).alias("hops")
-            )
+        # {0,m} admits the empty repetition ({0,0} is pure identity)
+        acc = [_zero(_from(_nodes(base), src))] if pattern.n == 0 else []
         cur = None
         for k in range(1, pattern.m + 1):
-            cur = base if cur is None else (
-                cur.alias("a")
-                .join(base.alias("b"), F.col("a.dst") == F.col("b.src"))
-                .select(
-                    F.col("a.src").alias("src"),
-                    F.col("b.dst").alias("dst"),
-                    (F.col("a.hops") + F.col("b.hops")).alias("hops"),
-                )
-            )
+            if cur is None:
+                cur = base if src is None else compile_path(store, pattern.part, graph, src)
+            else:
+                cur = _compose(cur, base)
             cur = _dedup_min_hops(cur)
             if k >= pattern.n:
-                acc = cur if acc is None else acc.unionByName(cur)
-        return _dedup_min_hops(acc)
+                acc.append(cur)
+        return _dedup_min_hops(_union(acc))
     raise NotImplementedError(f"path pattern {type(pattern).__name__}")
 
 

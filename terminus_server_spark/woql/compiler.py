@@ -29,7 +29,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from terminus_server_spark.model.triples import TripleStore
+from terminus_server_spark.model.triples import _NUMERIC_SPARK_TYPES, TripleStore, _xsd_type
 from terminus_server_spark.woql import ast as A
 from terminus_server_spark.woql.path_ast import PathPattern
 
@@ -132,15 +132,12 @@ class WOQLContext:
         )
         return df_in.crossJoin(df_new)
 
-    def _match_pattern(
-        self, frame: DataFrame, s: Any, p: Any, o: Any, extras: tuple = ()
-    ) -> DataFrame:
-        """Match (s,p,o) against a frame with triple columns; constants
-        become filters (pushed to the scan), variables become renames.
-        ``extras``: additional (value, column) pairs with the same
-        semantics — typed-literal projections (obj_lang/obj_ts/obj_num)."""
+    def _match_pattern(self, frame: DataFrame, *pairs: tuple[Any, str]) -> DataFrame:
+        """Match (value, column) pairs against ``frame``: constants
+        become filters (pushed to the scan), variables become renames,
+        and a variable named twice unifies its columns."""
         out_cols: dict[str, Column] = {}
-        for val, col in ((s, "subject"), (p, "predicate"), (o, "obj"), *extras):
+        for val, col in pairs:
             if _is_var(val):
                 if val.name in out_cols:
                     frame = frame.where(F.col(col) == out_cols[val.name])
@@ -168,16 +165,9 @@ class WOQLContext:
         frame = self.store.spo(
             predicate=t.p if not _is_var(t.p) else None, graph=graph
         )
-        extras = tuple(
-            (v, c)
-            for v, c in ((t.lang, "obj_lang"), (t.ts, "obj_ts"), (t.num, "obj_num"))
-            if v is not None
-        )
-        matched = self._match_pattern(
-            frame, t.s, A.Var("__p__") if _is_var(t.p) else t.p, t.o, extras
-        )
-        if _is_var(t.p):
-            matched = matched.withColumnRenamed("__p__", t.p.name)
+        pairs = ((t.s, "subject"), (t.p, "predicate"), (t.o, "obj"),
+                 (t.lang, "obj_lang"), (t.ts, "obj_ts"), (t.num, "obj_num"))
+        matched = self._match_pattern(frame, *((v, c) for v, c in pairs if v is not None))
         return self._merge(df_in, matched)
 
     def _c_Quad(self, t: A.Quad, df_in):
@@ -193,7 +183,9 @@ class WOQLContext:
         if self.layers is None:
             raise ValueError("no layers attached to WOQLContext")
         frame = self.layers.where((F.col("op") == op) & (F.col("commit_id") == t.commit))
-        return self._merge(df_in, self._match_pattern(frame, t.s, t.p, t.o))
+        return self._merge(df_in, self._match_pattern(
+            frame, (t.s, "subject"), (t.p, "predicate"), (t.o, "obj")
+        ))
 
     # -- connectives ------------------------------------------------------
 
@@ -544,7 +536,9 @@ class WOQLContext:
                 )
                 .distinct()
             )
-        matched = self._match_pattern(type_triples, t.element, A.Var("__t__"), t.type_)
+        matched = self._match_pattern(
+            type_triples, (t.element, "subject"), (A.Var("__t__"), "predicate"), (t.type_, "obj")
+        )
         matched = matched.drop("__t__")
         return self._merge(df_in, matched)
 
@@ -565,51 +559,24 @@ class WOQLContext:
         return closure.union(reflexive).distinct()
 
     def _c_Path(self, t: A.Path, df_in):
-        from terminus_server_spark.operators.path import anchored_closure, compile_path
-        from terminus_server_spark.woql import path_ast as P
+        from terminus_server_spark.operators.path import compile_path
 
-        # constant-subject plus/star closure: seed a bounded BFS at
-        # the anchor (state = the anchor's reachable set) instead of
-        # materializing the all-pairs closure and filtering it — the
-        # same anchored fast path the GraphQL _path field takes, now
-        # applied whenever the WOQL word's subject is bound
+        # a bound subject is compile_path's start node (operators.path
+        # docstring: where the closures are anchored)
         graph = self._graph_stack[-1] if self._graph_stack else "instance"
-        if not _is_var(t.s) and isinstance(t.pattern, (P.Plus, P.Star)):
-            anchors = self.spark.createDataFrame([(t.s,)], "node string")
-            edges = anchored_closure(
-                compile_path(self.store, t.pattern.part, graph).select("src", "dst"),
-                anchors,
-                with_zero=isinstance(t.pattern, P.Star),
-            )
-        else:
-            edges = compile_path(self.store, t.pattern, graph)  # (src, dst, hops)
-        out_cols = []
-        frame = edges
-        for val, col in ((t.s, "src"), (t.o, "dst")):
-            if _is_var(val):
-                out_cols.append(F.col(col).alias(val.name))
-            else:
-                frame = frame.where(F.col(col) == F.lit(val))
-        if t.hops is not None:
-            out_cols.append(F.col("hops").alias(t.hops.name))
-        matched = frame.select(*out_cols) if out_cols else frame.limit(1).select(F.lit(1).alias("__exists__"))
+        edges = compile_path(self.store, t.pattern, graph, None if _is_var(t.s) else t.s)
+        pairs = ((t.s, "src"), (t.o, "dst"), (t.hops, "hops"))
+        matched = self._match_pattern(edges, *((v, c) for v, c in pairs if v is not None))
         return self._merge(df_in, matched)
 
     def _c_Sub(self, t: A.Sub, df_in):
         closure = self._subclass_closure()
         if closure is None:
             raise ValueError("Sub requires a schema graph on the store")
-        frame = closure  # (sub, sup) reflexive-transitive
-        out_cols: dict[str, Column] = {}
-        for val, col in ((t.child, "sub"), (t.parent, "sup")):
-            if _is_var(val):
-                out_cols[val.name] = F.col(col)
-            else:
-                frame = frame.where(F.col(col) == F.lit(val))
-        if not out_cols:
-            return self._merge(df_in, frame.limit(1).select(F.lit(1).alias("__exists__")))
-        matched = frame.select(*[c.alias(n) for n, c in out_cols.items()])
-        return self._merge(df_in, matched)
+        # (sub, sup) reflexive-transitive
+        return self._merge(
+            df_in, self._match_pattern(closure, (t.child, "sub"), (t.parent, "sup"))
+        )
 
     def _c_TripleCount(self, t: A.TripleCount, df_in):
         cnt = self.store.spo(graph=t.graph).agg(
@@ -619,20 +586,6 @@ class WOQLContext:
 
     def _c_Once(self, t: A.Once, df_in):
         return self._compile(t.term, df_in).limit(1)
-
-    _XSD_BY_DTYPE = {
-        "string": "xsd:string",
-        "boolean": "xsd:boolean",
-        "int": "xsd:integer",
-        "bigint": "xsd:integer",
-        "smallint": "xsd:integer",
-        "tinyint": "xsd:integer",
-        "double": "xsd:decimal",
-        "float": "xsd:decimal",
-        "date": "xsd:date",
-        "timestamp": "xsd:dateTime",
-        "timestamp_ntz": "xsd:dateTime",
-    }
 
     def _c_TypeOf(self, t: A.TypeOf, df_in):
         # The type of a bound column is static under Spark's schema —
@@ -644,7 +597,7 @@ class WOQLContext:
         else:
             probe = self.spark.range(1).select(F.lit(t.value).alias("x"))
             dtype = dict(probe.dtypes)["x"]
-        xsd = self._XSD_BY_DTYPE.get(dtype.split("(")[0], "xsd:string")
+        xsd = _xsd_type(dtype)
         if _is_var(t.type_):
             return df_in.withColumn(t.type_.name, F.lit(xsd))
         # ground type: statically decidable filter
@@ -846,13 +799,10 @@ class WOQLContext:
             dtype = dtypes.get(o.name, "string").split("(")[0]
         else:
             dtype = {bool: "boolean", int: "bigint", float: "double"}.get(type(o), "string")
-        is_num = dtype in ("int", "bigint", "smallint", "tinyint", "double", "float", "decimal")
-        xsd = {
-            "boolean": "xsd:boolean", "int": "xsd:integer", "bigint": "xsd:integer",
-            "smallint": "xsd:integer", "tinyint": "xsd:integer", "double": "xsd:decimal",
-            "float": "xsd:decimal", "decimal": "xsd:decimal", "timestamp": "xsd:dateTime",
-            "date": "xsd:date",
-        }.get(dtype, "xsd:string")
+        is_num = dtype in _NUMERIC_SPARK_TYPES
+        xsd = _xsd_type(dtype)
+        # binary renders as base64, the lexical form of its xsd tag
+        lexical = F.base64(obj) if dtype == "binary" else obj.cast("string")
         return bindings.select(
             F.lit(commit_seq).alias("commit_seq"),
             F.lit(commit_id).alias("commit_id"),
@@ -860,7 +810,7 @@ class WOQLContext:
             F.lit(graph).alias("graph"),
             _part(s).cast("string").alias("subject"),
             _part(p).cast("string").alias("predicate"),
-            obj.cast("string").alias("obj"),
+            lexical.alias("obj"),
             F.lit(
                 type_override
                 if type_override is not None

@@ -124,6 +124,85 @@ def test_path_star_and_times(spark, store):
     assert inv.select("src").distinct().count() == 5
 
 
+def _cycle_store(spark):
+    """3-cycle a->b->c->a with tail c->d over ``next``, ``link`` edges
+    e->a and d->e, and one literal (a name) that no path may cross."""
+    from terminus_server_spark.model.triples import TripleStore
+
+    rows = [("instance", s, p, o, "iri", None) for s, p, o in [
+        ("a", "next", "b"), ("b", "next", "c"), ("c", "next", "a"),
+        ("c", "next", "d"), ("e", "link", "a"), ("d", "link", "e"),
+    ]] + [("instance", "a", "name", "Alice", "xsd:string", None)]
+    return TripleStore(spark.createDataFrame(
+        rows,
+        "graph string, subject string, predicate string, obj string, "
+        "obj_type string, obj_num double",
+    ))
+
+
+def _anchor_patterns():
+    from terminus_server_spark.woql import path_ast as P
+
+    nxt, link = P.Pred("next"), P.Pred("link")
+    return {
+        "pred": nxt,
+        "inv": P.Inv("next"),
+        "any": P.Any(),
+        "plus": P.Plus(nxt),
+        "star": P.Star(nxt),
+        "seq_pred_plus": P.Seq(link, P.Plus(nxt)),
+        "seq_pred_star": P.Seq(link, P.Star(nxt)),
+        "seq_plus_pred": P.Seq(P.Plus(nxt), link),
+        "orp": P.OrP(link, P.Plus(nxt)),
+        "times_0_2": P.Times(nxt, 0, 2),
+        "times_1_3": P.Times(nxt, 1, 3),
+        "times_open": P.parse_path_string("next{2,}"),
+        "star_doubling": P.Star(nxt, strategy="doubling"),
+        "star_seq": P.Star(P.Seq(nxt, nxt)),
+    }
+
+
+@pytest.mark.parametrize("name", list(_anchor_patterns()))
+def test_compile_path_anchor_law(spark, name):
+    """``compile_path(p, src=x)`` equals ``compile_path(p)`` filtered on
+    ``src == x``, for a node on the cycle, a node reached only by
+    ``link`` and a node absent from the graph."""
+    from terminus_server_spark.operators.path import compile_path
+
+    store = _cycle_store(spark)
+    pattern = _anchor_patterns()[name]
+    full = sorted(tuple(r) for r in compile_path(store, pattern).collect())
+    for x in ("a", "e", "ghost"):
+        got = sorted(tuple(r) for r in compile_path(store, pattern, src=x).collect())
+        assert got == [r for r in full if r[0] == x], x
+
+
+def test_graphql_path_matches_woql_path(spark):
+    """The GraphQL ``_path`` field and the WOQL ``Path`` word compile
+    the same anchored pattern to the same rows."""
+    from terminus_server_spark.docs.graphql import execute_graphql
+    from terminus_server_spark.woql import ast as A
+    from terminus_server_spark.woql.compiler import WOQLContext
+    from terminus_server_spark.woql.path_ast import parse_path_string
+
+    store = _cycle_store(spark)
+    for x in ("a", "e", "ghost"):
+        gql = execute_graphql(
+            {}, f'query {{ _path(pattern: "link,next+", from: "{x}") {{ src dst hops }} }}',
+            store=store,
+        )["_path"]
+        woql = WOQLContext(store).run(A.Path(
+            x, parse_path_string("link,next+"), A.v("dst"), hops=A.v("hops")
+        ))
+        assert sorted((r.dst, r.hops) for r in gql.collect()) == sorted(
+            (r.dst, r.hops) for r in woql.collect()
+        ), x
+    e = sorted(tuple(r) for r in execute_graphql(
+        {}, 'query { _path(pattern: "link,next+", from: "e") { src dst hops } }', store=store
+    )["_path"].collect())
+    assert e == [("e", "a", 4), ("e", "b", 2), ("e", "c", 3), ("e", "d", 4)]
+
+
 def test_connected_components_two_islands(spark):
     from terminus_server_spark.operators.graph import connected_components
 

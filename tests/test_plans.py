@@ -646,3 +646,23 @@ def test_fixpoint_operators_take_no_round_cap():
         if isinstance(arg, ast.arg) and arg.arg in caps
     ]
     assert hits == []
+
+
+def test_only_compile_path_picks_a_closure_plan():
+    """``compile_path`` alone decides between an anchored and a global
+    closure: no package module outside ``operators/path.py`` calls
+    ``anchored_closure`` or ``transitive_closure_doubling`` itself."""
+    import pathlib
+
+    import terminus_server_spark
+
+    root = pathlib.Path(terminus_server_spark.__file__).parent
+    hits = [
+        f"{rel}: {needle}"
+        for src in sorted(root.rglob("*.py"))
+        for rel in [src.relative_to(root).as_posix()]
+        if rel != "operators/path.py"
+        for needle in ("anchored_closure(", "transitive_closure_doubling(")
+        if needle in src.read_text()
+    ]
+    assert hits == []

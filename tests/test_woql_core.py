@@ -768,3 +768,90 @@ def test_path_constant_subject_uses_anchored_closure(spark):
         ).collect()
     }
     assert star == {("a", 0), ("b", 1), ("c", 2), ("d", 3)}
+
+
+def test_path_same_variable_at_both_ends_unifies(spark):
+    """Path(x, next+, x) binds the nodes on a cycle: the variable named
+    twice unifies ``src`` with ``dst``."""
+    from terminus_server_spark.model.triples import TripleStore
+    from terminus_server_spark.woql import ast as A
+    from terminus_server_spark.woql.compiler import WOQLContext
+    from terminus_server_spark.woql.path_ast import Plus, Pred
+
+    rows = [("instance", s, "next", o, "iri", None) for s, o in
+            [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]]
+    trips = spark.createDataFrame(
+        rows,
+        "graph string, subject string, predicate string, obj string, "
+        "obj_type string, obj_num double",
+    )
+    got = WOQLContext(TripleStore(trips)).run(
+        A.Select([A.v("x")], A.Path(A.v("x"), Plus(Pred("next")), A.v("x")))
+    )
+    assert sorted(r.x for r in got.collect()) == ["a", "b", "c"]
+
+
+def test_sub_same_variable_unifies(spark):
+    """Sub(x, x) holds once per class (subsumption is reflexive), not
+    once per subclass pair."""
+    from terminus_server_spark.model.triples import TripleStore
+    from terminus_server_spark.woql import ast as A
+    from terminus_server_spark.woql.compiler import WOQLContext
+
+    schema = spark.createDataFrame(
+        [("schema", "Customer", "subClassOf", "Agent", "iri", None),
+         ("schema", "Supplier", "subClassOf", "Agent", "iri", None)],
+        "graph string, subject string, predicate string, obj string, "
+        "obj_type string, obj_num double",
+    )
+    got = WOQLContext(TripleStore(schema, schema_df=schema)).run(
+        A.Select([A.v("x")], A.Sub(A.v("x"), A.v("x")))
+    )
+    assert sorted(r.x for r in got.collect()) == ["Agent", "Customer", "Supplier"]
+
+
+def test_typeof_decimal_column_is_xsd_decimal(spark):
+    """TypeOf reads the same xsd table the triple store writes: a
+    decimal column (Typecast to xsd:decimal) is ``xsd:decimal``."""
+    from terminus_server_spark.model.triples import TripleStore
+    from terminus_server_spark.woql import ast as A
+    from terminus_server_spark.woql.compiler import WOQLContext
+
+    trips = spark.createDataFrame(
+        [("instance", "a", "weight", "1.5", "xsd:decimal", 1.5)],
+        "graph string, subject string, predicate string, obj string, "
+        "obj_type string, obj_num double",
+    )
+    got = WOQLContext(TripleStore(trips)).run(A.Select([A.v("t")], A.And(
+        A.Triple("a", "weight", A.v("raw")),
+        A.Typecast(A.v("raw"), "xsd:decimal", A.v("w")),
+        A.TypeOf(A.v("w"), A.v("t")),
+    )))
+    assert [r.t for r in got.collect()] == ["xsd:decimal"]
+
+
+def test_update_tags_decimal_and_binary_like_the_store(spark):
+    """An update's delta rows carry the store's xsd tags, and a binary
+    binding is written in base64, the lexical form of
+    ``xsd:base64Binary``."""
+    import base64
+
+    from terminus_server_spark.model.triples import TripleStore
+    from terminus_server_spark.woql import ast as A
+    from terminus_server_spark.woql.compiler import WOQLContext
+
+    trips = spark.createDataFrame(
+        [("instance", "a", "weight", "1.5", "xsd:decimal", 1.5)],
+        "graph string, subject string, predicate string, obj string, "
+        "obj_type string, obj_num double",
+    )
+    delta = WOQLContext(TripleStore(trips)).run_update(A.And(
+        A.Triple("a", "weight", A.v("raw")),
+        A.Typecast(A.v("raw"), "xsd:decimal", A.v("w")),
+        A.Typecast(A.v("raw"), "binary", A.v("b")),
+        A.AddTriple("a", "w2", A.v("w")),
+        A.AddTriple("a", "blob", A.v("b")),
+    ), 1, "t1")
+    got = {r.predicate: (r.obj_type, r.obj, r.obj_num) for r in delta.collect()}
+    assert got["w2"][0] == "xsd:decimal" and got["w2"][2] == 1.5
+    assert got["blob"] == ("xsd:base64Binary", base64.b64encode(b"1.5").decode(), None)
