@@ -35,6 +35,7 @@ Grammar subset (the shapes the generated schema admits):
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 _TOKEN = re.compile(
     r"""\s*(?:
@@ -477,342 +478,202 @@ def filter_to_tree(obj: dict):
     return ("and", parts)
 
 
-def _query_level(frames, relations, cls, args, fields, id_cols=None,
-                 inherits=None):
-    from pyspark.sql import functions as F
+_PAGING = ("orderBy", "limit", "offset", "first", "after", "last", "before")
+_PAGE_INFO = ("endCursor", "hasNextPage", "hasPreviousPage", "startCursor")
 
-    from terminus_server_spark.docs.documents import filter_documents, query_documents
 
-    # fragment spreads / inline fragments resolve against THIS level's
-    # class (type conditions may subsume via the inherits map); every
-    # consumer below sees only plain scalar strings and relation dicts
-    fields = _flatten_selection(fields, cls, inherits, relations)
-    predicates = []
-    if "filter" in args:
-        predicates = [filter_to_tree(args["filter"])]
-    # id / ids query arguments (reference: every generated query type
-    # accepts them): compile to an `in` predicate on the class's
-    # registered id column, so the filter pushes to the scan and
-    # composes with filter/orderBy/limit/offset like any predicate.
-    if "id" in args or "ids" in args:
-        key_col = (id_cols or {}).get(cls)
-        if key_col is None:
-            raise ValueError(
-                f"graphql: id/ids argument needs an id column registered "
-                f"for {cls} (pass id_cols={{...}})"
-            )
-        # each argument contributes its own predicate, so giving both
-        # id and ids means their intersection (AND), like any filters
-        if "id" in args:
-            predicates.append((key_col, "in", [args["id"]]))
-        if "ids" in args:
-            predicates.append((key_col, "in", list(args["ids"])))
-    # Relay-style cursor pagination (first/after): KEYSET paging over
-    # the registered id column.  `after` compiles to a pushed-down
-    # `>` predicate — the scan skips the cursor prefix instead of
-    # materializing and discarding it (what offset does, and why
-    # cursor beats offset at depth) — and `first` is the page size;
-    # results order by the id column so pages are stable.  The cursor
-    # is the id value itself (Relay treats cursors as opaque; this
-    # schema documents them as the document key).
-    limit_val, offset_val = args.get("limit"), args.get("offset")
-    order_by = None
-    # `_pageInfo` pseudo-field (Relay connection metadata on a
-    # cursor-paged root): renders one JSON column
-    # {"endCursor": <last key>, "hasNextPage": bool} — hasNextPage
-    # comes from a first+1 probe row, so no COUNT over the full
-    # match set; the page-sized key fetch is a bounded driver read
-    # (≤ first+1 rows), the same class as the adjudicated metadata
-    # collects.
-    # the Relay connection wrapper (edges { node cursor } pageInfo)
-    # also needs the first+1 probe when its pageInfo member is
-    # selected — a relation registered under the name "pageInfo"
-    # takes precedence (it compiles as an ordinary nested field)
-    want_pi = "_pageInfo" in [f for f in fields if isinstance(f, str)] or any(
-        isinstance(f, dict)
-        and f["name"] == "pageInfo"
-        and (cls, "pageInfo") not in relations
-        for f in fields
-    )
-    cursor_key = None
-    backward = False
-    fwd_args = "first" in args or "after" in args
-    bwd_args = "last" in args or "before" in args
-    if fwd_args and bwd_args:
+class _Paging(NamedTuple):
+    order: list  # [(column, ascending)]
+    offset: int
+    limit: int | None
+    bounds: list  # keyset predicates [(column, op, value)]
+    cursor: str | None  # the id column, under cursor paging
+    backward: bool
+
+
+def _id_col(cls, id_cols, what):
+    key = (id_cols or {}).get(cls)
+    if key is None:
+        raise ValueError(
+            f"graphql: {what} needs an id column registered for {cls} "
+            f"(pass id_cols={{...}})"
+        )
+    return key
+
+
+def _paging(args, cls, id_cols) -> _Paging:
+    """The paging spec of one field's arguments (the rule is in
+    :func:`execute_graphql`'s docstring)."""
+    fwd = "first" in args or "after" in args
+    bwd = "last" in args or "before" in args
+    if fwd and bwd:
         raise ValueError(
             "graphql: forward (first/after) and backward (last/before) "
             "cursor args do not combine — pick one paging direction"
         )
-    if fwd_args or bwd_args:
-        key_col = (id_cols or {}).get(cls)
-        if key_col is None:
-            raise ValueError(
-                f"graphql: cursor args (first/after/last/before) need an "
-                f"id column registered for {cls} (pass id_cols={{...}})"
-            )
+    if fwd or bwd:
+        key = _id_col(cls, id_cols, "cursor paging (first/after/last/before)")
         if any(k in args for k in ("orderBy", "limit", "offset")):
             raise ValueError(
                 "graphql: cursor args (first/after/last/before) do not "
                 "combine with orderBy/limit/offset — pick one paging style"
             )
-        backward = bwd_args
-        # predicates WITHOUT the cursor bound — the opposite-direction
-        # pageInfo existence probe filters the same connection set
-        # under the reversed bound
-        cursor_base_preds = list(predicates)
-        if "after" in args:
-            predicates.append((key_col, "gt", args["after"]))
-        if "before" in args:
-            predicates.append((key_col, "lt", args["before"]))
-        # backward paging walks the connection tail-first: the keyset
-        # `<` predicate pushes to the scan exactly like `after`'s `>`,
-        # the page is the `last` LARGEST keys under the bound (desc
-        # order + limit), and the rendered page is re-ordered ascending
-        # afterwards per the Relay spec ("edges must be in the same
-        # order in both directions") — a sort over <= last+1 rows.
-        order_by = [(key_col, "desc" if backward else "asc")]
-        limit_val = args.get("last") if backward else args.get("first")
-        cursor_key = key_col
-    elif "orderBy" in args:
-        ob = args["orderBy"]
-        items = ob if isinstance(ob, list) else [ob]
-        order_by = [
-            (field, "asc" if str(direction).upper() == "ASC" else "desc")
-            for item in items
-            for field, direction in item.items()
-        ]
-    if want_pi and (cursor_key is None or limit_val is None):
+        bounds = [(key, op, args[a]) for a, op in (("after", "gt"), ("before", "lt"))
+                  if a in args]
+        return _Paging([(key, fwd)], 0, args.get("first" if fwd else "last"),
+                       bounds, key, bwd)
+    ob = args.get("orderBy") or []
+    order = []
+    for item in ob if isinstance(ob, list) else [ob]:
+        for col, direction in item.items():
+            d = str(direction).upper()
+            if d not in ("ASC", "DESC"):
+                raise ValueError(
+                    f"graphql: orderBy direction for {col} must be ASC or "
+                    f"DESC, got {direction!r}"
+                )
+            order.append((col, d == "ASC"))
+    return _Paging(order, int(args.get("offset") or 0), args.get("limit"), [],
+                   None, False)
+
+
+def _query_level(frames, relations, cls, args, fields, id_cols=None,
+                 inherits=None):
+    """``(frame, names)`` for one level of a request: ``cls`` under
+    ``args``, with the columns ``names`` rendering ``fields`` in
+    request order.  Relation fields recurse here without their paging
+    args and apply them per parent."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from terminus_server_spark.docs.documents import filter_documents, query_documents
+
+    fields = _flatten_selection(fields, cls, inherits, relations)
+    names = [f if isinstance(f, str) else f["name"] for f in fields]
+    scalars = [f for f in fields if isinstance(f, str)]
+    nested = [f for f in fields if isinstance(f, dict)]
+    predicates = [filter_to_tree(args["filter"])] if "filter" in args else []
+    if "id" in args or "ids" in args:
+        key = _id_col(cls, id_cols, "the id/ids argument")
+        # id and ids each add a predicate, so both give their intersection
+        if "id" in args:
+            predicates.append((key, "in", [args["id"]]))
+        if "ids" in args:
+            predicates.append((key, "in", list(args["ids"])))
+    spec = _paging(args, cls, id_cols)
+
+    # Relay connection: edges { node { ... } cursor } and pageInfo render
+    # one row per edge; a relation registered under either name wins
+    conn = {f["name"]: f for f in nested if f["name"] in ("edges", "pageInfo")
+            and (cls, f["name"]) not in relations}
+    row = scalars  # the scalar fields of each rendered row
+    if conn:
+        if len(conn) != len(fields):
+            raise ValueError(
+                "graphql: connection selections (edges/pageInfo) do not mix "
+                "with other fields"
+            )
+        if spec.cursor is None:
+            raise ValueError(
+                "graphql: connection selections require cursor paging "
+                "(first/after and a registered id column)"
+            )
+        if "edges" in conn:
+            node = next((f for f in conn["edges"]["fields"]
+                         if isinstance(f, dict) and f["name"] == "node"), None)
+            if node is None:
+                raise ValueError("graphql: edges selection needs a node set")
+            if any(not isinstance(f, str) for f in node["fields"]):
+                raise ValueError(
+                    "graphql: connection node selections are scalar-only"
+                )
+            row = node["fields"]
+        if "pageInfo" in conn:
+            picked = [s for s in conn["pageInfo"]["fields"] if isinstance(s, str)]
+            bad = [s for s in picked if s not in _PAGE_INFO]
+            if bad:
+                raise ValueError(f"graphql: unknown pageInfo members {bad!r}")
+        nested = []
+    want_pi = "_pageInfo" in scalars or "pageInfo" in conn
+    if want_pi and (spec.cursor is None or spec.limit is None):
         raise ValueError(
             "graphql: _pageInfo requires cursor paging (first or last, and "
             "an id column registered for the class)"
         )
     df = query_documents(
         frames[cls],
-        predicates=predicates,
-        order_by=order_by,
-        limit=(limit_val + 1) if want_pi else limit_val,
-        offset=offset_val,
+        predicates=predicates + spec.bounds,
+        order_by=[(c, "asc" if a else "desc") for c, a in spec.order],
+        limit=(spec.limit + 1) if want_pi else spec.limit,
+        offset=spec.offset,
     )
     if want_pi:
-        from pyspark.sql import Window as _W
-
-        # pageInfo derived LAZILY inside the one plan: the n+1
-        # keyset page flows through a window bounded by the page size
-        # (never a COUNT over the full frame, never a driver-side
-        # collect — the returned rows and endCursor/hasNextPage come
-        # from the SAME computed page, so they can never disagree)
-        first = int(limit_val)
-        w_rn = _W.orderBy(
-            F.col(cursor_key).desc() if backward else F.col(cursor_key).asc()
+        # pageInfo comes from the page itself: one probe row past the
+        # page answers the paging direction's own question, and a
+        # LIMIT-1 probe under the reversed bound answers the other one,
+        # so there is no COUNT over the match set and no driver collect
+        first, key = int(spec.limit), F.col(spec.cursor)
+        w_rn = Window.orderBy(key.desc() if spec.backward else key.asc())
+        w_all = w_rn.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        df = (
+            df.limit(first + 1)
+            .withColumn("_rn", F.row_number().over(w_rn))
+            .withColumn("_cnt", F.count(F.lit(1)).over(w_all))
         )
-        w_all = w_rn.rowsBetween(
-            _W.unboundedPreceding, _W.unboundedFollowing
-        )
-        page = df.limit(first + 1).withColumn(
-            "_rn", F.row_number().over(w_rn)
-        )
-        kept = F.col("_rn") <= first
-        # the probe row answers the paging DIRECTION's own question
-        # (forward: hasNextPage, backward: hasPreviousPage); the
-        # opposite flag is exact too — a bounded LIMIT-1 existence
-        # probe over the same filtered frame under the REVERSED keyset
-        # bound (broadcast into the page plan), so a cursor that
-        # precedes/follows every row reports false, not "a cursor was
-        # supplied".  No cursor bound at all means no opposite rows by
-        # construction.
-        bound = args.get("before") if backward else args.get("after")
-        df = page.withColumn("_cnt", F.count(F.lit(1)).over(w_all))
-        if bound is None:
-            opp = F.lit(False)
-        else:
-            probe = (
-                query_documents(
-                    frames[cls],
-                    predicates=cursor_base_preds
-                    + [(cursor_key, "ge" if backward else "le", bound)],
-                    limit=1,
-                )
-                .select(F.lit(1).alias("_one"))
-                .agg((F.count(F.lit(1)) > 0).alias("_opp"))
+        kept, more = F.col("_rn") <= first, F.col("_cnt") > first
+        bound = args.get("before" if spec.backward else "after")
+        opp = F.lit(False)
+        if bound is not None:
+            probe = query_documents(
+                frames[cls],
+                predicates=predicates
+                + [(spec.cursor, "ge" if spec.backward else "le", bound)],
+                limit=1,
+            ).select(F.lit(1).alias("_one")).agg(
+                (F.count(F.lit(1)) > 0).alias("_opp")
             )
             df = df.crossJoin(F.broadcast(probe))
             opp = F.col("_opp")
-        has_next = opp if backward else (F.col("_cnt") > first)
-        has_prev = (F.col("_cnt") > first) if backward else opp
+
+        # min/max over the native-typed key, cast afterwards: a string
+        # max over a page spanning 95..105 would be "99"
+        def edge(agg):
+            return agg(F.when(kept, key)).over(w_all).cast("string")
+
         df = (
-            # endCursor/startCursor aggregate the NATIVE-typed key and
-            # cast to string only afterwards — a lexicographic max over
-            # stringified numeric keys returns "99" for a page spanning
-            # 95..105.  min/max over the kept rows is direction-free:
-            # the page is a contiguous key range either way.
-            df.withColumn(
-                "_end",
-                F.max(F.when(kept, F.col(cursor_key)))
-                .over(w_all)
-                .cast("string"),
-            )
-            .withColumn(
-                "_start",
-                F.min(F.when(kept, F.col(cursor_key)))
-                .over(w_all)
-                .cast("string"),
-            )
+            df.withColumn("_pi", F.struct(
+                edge(F.max).alias("endCursor"),
+                (opp if spec.backward else more).alias("hasNextPage"),
+                (more if spec.backward else opp).alias("hasPreviousPage"),
+                edge(F.min).alias("startCursor"),
+            ))
             .where(kept)
-            .withColumn(
-                "_pageInfo",
-                F.to_json(
-                    F.struct(
-                        F.col("_end").alias("endCursor"),
-                        has_next.alias("hasNextPage"),
-                    )
-                ),
-            )
-            # the full Relay pageInfo member set, for connection
-            # pageInfo SUB-selections — all four members exact in both
-            # paging directions
-            .withColumn(
-                "_pageInfoFull",
-                F.to_json(
-                    F.struct(
-                        F.col("_end").alias("endCursor"),
-                        has_next.alias("hasNextPage"),
-                        has_prev.alias("hasPreviousPage"),
-                        F.col("_start").alias("startCursor"),
-                    )
-                ),
-            )
-            .drop("_rn", "_cnt", "_end", "_start", "_opp")
+            .drop("_rn", "_cnt", "_opp")
         )
-    if backward:
-        # Relay spec: edges render in the SAME order as forward paging
-        # — re-order the <= last+1 rendered rows ascending
-        df = df.orderBy(F.col(cursor_key).asc())
-    nested = [f for f in fields if isinstance(f, dict)]
-    # Relay CONNECTION wrapper: a cursor-paged root selecting
-    # edges { node { ... } cursor } / pageInfo { ... } renders one
-    # row per edge — `edges` is the JSON {"node": {...}, "cursor":
-    # "<key>"} object, `pageInfo` reuses the probe JSON.  Node
-    # selections are scalar fields (nested relations belong on the
-    # plain root shape); mixing connection members with other
-    # selections raises instead of guessing.
-    conn = [
-        f
-        for f in nested
-        if f["name"] in ("edges", "pageInfo")
-        and (cls, f["name"]) not in relations
-    ]
-    if conn:
-        if len(conn) != len(nested) or [
-            f for f in fields if isinstance(f, str)
-        ]:
-            raise ValueError(
-                "graphql: connection selections (edges/pageInfo) do not mix "
-                "with other fields"
-            )
-        if cursor_key is None:
-            raise ValueError(
-                "graphql: connection selections require cursor paging "
-                "(first/after and a registered id column)"
-            )
-        edges_spec = next((f for f in conn if f["name"] == "edges"), None)
-        out = df
-        if edges_spec is not None:
-            node_spec = next(
-                (
-                    f
-                    for f in edges_spec["fields"]
-                    if isinstance(f, dict) and f["name"] == "node"
-                ),
-                None,
-            )
-            if node_spec is None:
-                raise ValueError("graphql: edges selection needs a node set")
-            bad = [f for f in node_spec["fields"] if not isinstance(f, str)]
-            if bad:
-                raise ValueError(
-                    "graphql: connection node selections are scalar-only"
-                )
-            members = [
-                F.struct(
-                    *[F.col(c) for c in node_spec["fields"]]
-                ).alias("node")
-            ]
-            if "cursor" in [
-                f for f in edges_spec["fields"] if isinstance(f, str)
-            ]:
-                members.append(
-                    F.col(cursor_key).cast("string").alias("cursor")
-                )
-            out = out.withColumn("edges", F.to_json(F.struct(*members)))
-        pi_spec = next((f for f in conn if f["name"] == "pageInfo"), None)
-        if pi_spec is not None:
-            members = ("endCursor", "hasNextPage", "hasPreviousPage",
-                       "startCursor")
-            picked = [s for s in pi_spec.get("fields") or []
-                      if isinstance(s, str)]
-            bad = [s for s in picked if s not in members]
-            if bad:
-                raise ValueError(
-                    f"graphql: unknown pageInfo members {bad!r}"
-                )
-            if not picked or sorted(picked) == ["endCursor", "hasNextPage"]:
-                # legacy two-member shape, byte-stable
-                out = out.withColumn("pageInfo", F.col("_pageInfo"))
-            else:
-                # render the SELECTED members in canonical
-                # (name-sorted) order from the full member set
-                full = F.from_json(
-                    F.col("_pageInfoFull"),
-                    "struct<endCursor:string,hasNextPage:boolean,"
-                    "hasPreviousPage:boolean,startCursor:string>",
-                )
-                out = out.withColumn(
-                    "pageInfo",
-                    F.to_json(
-                        F.struct(
-                            *[full[m].alias(m) for m in members
-                              if m in set(picked)]
-                        )
-                    ),
-                )
-        return out
-    out = df
-    # `__typename` (GraphQL spec meta-field, valid on ANY selection
-    # set — Apollo-family clients add it to every query for cache
-    # normalization): a constant projection of the class name,
-    # available at any nesting depth like _id below
-    if "__typename" in [f for f in fields if isinstance(f, str)]:
-        out = out.withColumn("__typename", F.lit(cls))
-    # the generated schema's `_id: ID!` field: document identifier
-    # rendered `<Class>/<key>` from the registered id column — a pure
-    # projection, available at any nesting depth (child levels pass
-    # through this same function)
-    if "_id" in [f for f in fields if isinstance(f, str)]:
-        key_col = (id_cols or {}).get(cls)
-        if key_col is None:
-            raise ValueError(
-                f"graphql: the _id field needs an id column registered "
-                f"for {cls} (pass id_cols={{...}})"
-            )
-        out = out.withColumn(
-            "_id", F.concat(F.lit(cls + "/"), F.col(key_col).cast("string"))
+        if "_pageInfo" in scalars:
+            df = df.withColumn("_pageInfo", _page_info_json(()))
+    if spec.backward:
+        # Relay: edges render in the same order in both directions
+        df = df.orderBy(F.col(spec.cursor).asc())
+    if "__typename" in row:
+        df = df.withColumn("__typename", F.lit(cls))
+    if "_id" in row:
+        key = _id_col(cls, id_cols, "the _id field")
+        df = df.withColumn(
+            "_id", F.concat(F.lit(cls + "/"), F.col(key).cast("string"))
         )
-    # aggregation-field sugar over registered relations: a SCALAR
-    # selection named <rel>_count / <rel>_sum_<col> compiles to one
-    # child aggregation joined back on the parent key — the wire-level
-    # form of the read-algebra aggregates (documents.related_agg /
-    # doc_related_count), so tooling can ask for rollups without a
-    # nested selection set.  Absent children count 0 / sum 0.0.
-    for name in [f for f in fields if isinstance(f, str)]:
-        for (c, rel), spec in relations.items():
-            child_cls, parent_key, child_fk = spec[:3]
+    # <rel>_count / <rel>_sum_<col>: one child aggregation joined back on
+    # the parent key; absent children count 0 / sum 0.0
+    for name in row:
+        for (c, rel), r in relations.items():
+            child_cls, parent_key, child_fk = r[:3]
             if c != cls:
                 continue
             if name == f"{rel}_count":
                 a = frames[child_cls].groupBy(
                     F.col(child_fk).alias(parent_key)
                 ).agg(F.count(F.lit(1)).alias(name))
-                out = out.join(a, parent_key, "left_outer").withColumn(
+                df = df.join(a, parent_key, "left_outer").withColumn(
                     name, F.coalesce(F.col(name), F.lit(0))
                 )
             elif name.startswith(f"{rel}_sum_"):
@@ -824,184 +685,92 @@ def _query_level(frames, relations, cls, args, fields, id_cols=None,
                     .cast("double")
                     .alias(name)
                 )
-                out = out.join(a, parent_key, "left_outer").withColumn(
+                df = df.join(a, parent_key, "left_outer").withColumn(
                     name, F.coalesce(F.col(name), F.lit(0.0))
                 )
     for sub in nested:
-        rel = relations.get((cls, sub["name"]))
+        name = sub["name"]
+        rel = relations.get((cls, name))
         if rel is None:
+            raise ValueError(f"graphql: no relation registered for {cls}.{name}")
+        child_cls, parent_key, child_fk = rel[:3]
+        to_one = len(rel) > 3 and rel[3] == "one"
+        paging = {k: v for k, v in sub["args"].items() if k in _PAGING}
+        if to_one and paging:
             raise ValueError(
-                f"graphql: no relation registered for {cls}.{sub['name']}"
+                f"graphql: paging args {sorted(paging)} invalid on to-one "
+                f"field {cls}.{name}"
             )
-        if len(rel) > 3 and rel[3] == "one":
-            # TO-ONE link field (the reference's document link: the fk
-            # lives on the PARENT and points at the child's key, so
-            # each parent renders ONE nested JSON object, not a list).
-            # Per-parent paging args are meaningless on a single
-            # object — surface the error instead of mis-compiling.
-            if any(k in sub["args"] for k in ("orderBy", "limit", "offset")):
-                raise ValueError(
-                    f"graphql: orderBy/limit/offset invalid on to-one "
-                    f"field {cls}.{sub['name']}"
-                )
-            child_cls, parent_key, child_fk = rel[:3]
-            child = _query_level(
-                frames, relations, child_cls, sub["args"], sub["fields"],
-                id_cols=id_cols, inherits=inherits,
-            )
-            flat_sub = _flatten_selection(
-                sub["fields"], child_cls, inherits, relations
-            )
-            names = [f if isinstance(f, str) else f["name"] for f in flat_sub]
-            # To-one PRECONDITION: the child key is unique.  A plain
-            # left join would silently FAN OUT parent rows if the
-            # child frame violated it; aggregate to one row per key
-            # (deterministic min over the rendered JSON) so the
-            # parent cardinality is invariant by construction and a
-            # duplicate-key child resolves deterministically instead
-            # of duplicating parents.
+        child_spec = _paging(paging, child_cls, id_cols)
+        child, child_names = _query_level(
+            frames, relations, child_cls,
+            {k: v for k, v in sub["args"].items() if k not in _PAGING},
+            sub["fields"], id_cols=id_cols, inherits=inherits,
+        )
+        value = F.struct(*[F.col(c) for c in child_names])
+        if to_one:
+            # the child key is unique by contract; min keeps one row per
+            # key if it is not, so parents never fan df
             obj = (
                 child.select(
-                    F.col(child_fk).alias(parent_key),
-                    F.to_json(
-                        F.struct(*[F.col(c) for c in names])
-                    ).alias(sub["name"]),
+                    F.col(child_fk).alias(parent_key), F.to_json(value).alias(name)
                 )
                 .groupBy(parent_key)
-                .agg(F.min(sub["name"]).alias(sub["name"]))
+                .agg(F.min(name).alias(name))
             )
-            out = out.join(obj, parent_key, "left_outer").withColumn(
-                sub["name"], F.coalesce(F.col(sub["name"]), F.lit("null"))
-            )
-            continue
-        child_cls, parent_key, child_fk = rel
-        # orderBy/limit/offset on a nested field are PER-PARENT
-        # semantics — strip them before recursing (a global limit in
-        # query_documents would be wrong) and apply them here as one
-        # row_number window partitioned by the fk, never a per-parent
-        # subquery.
-        cursor_fwd = any(k in sub["args"] for k in ("first", "after"))
-        cursor_bwd = any(k in sub["args"] for k in ("last", "before"))
-        if cursor_fwd and cursor_bwd:
-            raise ValueError(
-                "graphql: forward (first/after) and backward (last/before) "
-                "cursor args do not combine — pick one paging direction"
-            )
-        cursor = cursor_fwd or cursor_bwd
-        paged = cursor or any(
-            k in sub["args"] for k in ("orderBy", "limit", "offset")
-        )
-        child_args = {
-            k: v
-            for k, v in sub["args"].items()
-            if k
-            not in ("orderBy", "limit", "offset", "first", "after", "last",
-                    "before")
-        }
-        # the child frame keeps its full columns (incl. the fk) —
-        # projection happens only at the JSON rendering below
-        child = _query_level(
-            frames, relations, child_cls, child_args, sub["fields"],
-            id_cols=id_cols, inherits=inherits,
-        )
-        flat_sub = _flatten_selection(
-            sub["fields"], child_cls, inherits, relations
-        )
-        sub_names = [f if isinstance(f, str) else f["name"] for f in flat_sub]
-        if paged:
-            from pyspark.sql.window import Window
-
-            if cursor:
-                # per-parent Relay cursor paging: the `after` bound is
-                # a MAP-SIDE keyset predicate applied before the
-                # window (pushes to the child scan — rows before the
-                # cursor are never ranked, which is what makes cursor
-                # cheaper than offset at depth), then the same
-                # row_number-over-fk window caps each parent's page
-                # at `first`, ordered by the child's id column.
-                ckey = (id_cols or {}).get(child_cls)
-                if ckey is None:
-                    raise ValueError(
-                        f"graphql: cursor args (first/after/last/before) "
-                        f"need an id column registered for {child_cls} "
-                        f"(pass id_cols={{...}})"
-                    )
-                if any(
-                    k in sub["args"] for k in ("orderBy", "limit", "offset")
-                ):
-                    raise ValueError(
-                        "graphql: cursor args (first/after/last/before) do "
-                        "not combine with orderBy/limit/offset — pick one "
-                        "paging style"
-                    )
-                if "after" in sub["args"]:
-                    child = child.where(F.col(ckey) > F.lit(sub["args"]["after"]))
-                if "before" in sub["args"]:
-                    child = child.where(F.col(ckey) < F.lit(sub["args"]["before"]))
-                # backward nested paging ranks desc to pick each
-                # parent's LAST page; the rendered JSON array still
-                # sorts ascending by the child key below (Relay order)
-                order_cols = (
-                    [F.col(ckey).desc()] if cursor_bwd else [F.col(ckey).asc()]
-                )
-                off, lim = 0, sub["args"].get("last" if cursor_bwd else "first")
-            else:
-                ob = sub["args"].get("orderBy")
-                items = ob if isinstance(ob, list) else ([ob] if ob else [])
-                order_cols = [
-                    F.col(field).asc()
-                    if str(direction).upper() == "ASC"
-                    else F.col(field).desc()
-                    for item in items
-                    for field, direction in item.items()
-                ]
-                # deterministic tie-break on the selected fields so the
-                # page content is partitioning-independent
-                order_cols += [F.col(c).asc() for c in sub_names]
-                off = int(sub["args"].get("offset", 0))
-                lim = sub["args"].get("limit")
-            w = Window.partitionBy(child_fk).orderBy(*order_cols)
-            keep = F.col("__rn") > F.lit(off)
-            if lim is not None:
-                keep = keep & (F.col("__rn") <= F.lit(off + int(lim)))
-            child = child.withColumn("__rn", F.row_number().over(w)).where(keep)
-            # JSON array preserves the per-parent orderBy order: sort
-            # the collected structs by rn (first struct field wins the
-            # sort), then strip it.  Backward cursor pages ranked desc
-            # negate rn so the rendered array still ascends by key
-            # (Relay: edges order is direction-independent).
-            sort_rn = (
-                (-F.col("__rn")) if (cursor and cursor_bwd) else F.col("__rn")
-            )
-            agg = child.groupBy(F.col(child_fk).alias(parent_key)).agg(
-                F.to_json(
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(
-                                F.struct(
-                                    sort_rn.alias("rn"),
-                                    F.struct(
-                                        *[F.col(c) for c in sub_names]
-                                    ).alias("v"),
-                                )
-                            )
-                        ),
-                        lambda x: x["v"],
-                    )
-                ).alias(sub["name"])
-            )
+            empty = "null"
         else:
-            agg = child.groupBy(F.col(child_fk).alias(parent_key)).agg(
-                F.to_json(
-                    F.sort_array(
-                        F.collect_list(F.struct(*[F.col(c) for c in sub_names]))
-                    )
-                ).alias(sub["name"])
+            if paging:
+                # one row_number window over the fk pages every parent
+                # at once; the keyset bounds filter before it, so rows
+                # before a cursor are never ranked
+                child = filter_documents(child, child_spec.bounds)
+                order = [F.col(c).asc() if a else F.col(c).desc()
+                         for c, a in child_spec.order]
+                if child_spec.cursor is None:
+                    # tie-break: the page must not depend on partitioning
+                    order += [F.col(c).asc() for c in child_names]
+                lo = child_spec.offset
+                keep = F.col("__rn") > F.lit(lo)
+                if child_spec.limit is not None:
+                    keep = keep & (F.col("__rn") <= F.lit(lo + int(child_spec.limit)))
+                child = child.withColumn(
+                    "__rn", F.row_number().over(
+                        Window.partitionBy(child_fk).orderBy(*order))
+                ).where(keep)
+                # sort the array by rank; a backward page ranks
+                # descending, so its negated rank still ascends by key
+                rn = -F.col("__rn") if child_spec.backward else F.col("__rn")
+                value = F.struct(rn.alias("rn"), value.alias("v"))
+            items = F.sort_array(F.collect_list(value))
+            if paging:
+                items = F.transform(items, lambda x: x["v"])
+            obj = child.groupBy(F.col(child_fk).alias(parent_key)).agg(
+                F.to_json(items).alias(name)
             )
-        out = out.join(agg, parent_key, "left_outer").withColumn(
-            sub["name"], F.coalesce(F.col(sub["name"]), F.lit("[]"))
+            empty = "[]"
+        df = df.join(obj, parent_key, "left_outer").withColumn(
+            name, F.coalesce(F.col(name), F.lit(empty))
         )
-    return out
+    if "edges" in conn:
+        members = [F.struct(*[F.col(c) for c in row]).alias("node")]
+        if "cursor" in conn["edges"]["fields"]:
+            members.append(F.col(spec.cursor).cast("string").alias("cursor"))
+        df = df.withColumn("edges", F.to_json(F.struct(*members)))
+    if "pageInfo" in conn:
+        df = df.withColumn("pageInfo", _page_info_json(picked))
+    return df, names
+
+
+def _page_info_json(picked):
+    """The ``_pi`` struct's members in ``picked`` (endCursor and
+    hasNextPage when none are), rendered in canonical name order."""
+    from pyspark.sql import functions as F
+
+    picked = set(picked or ("endCursor", "hasNextPage"))
+    return F.to_json(
+        F.struct(*[F.col("_pi")[m].alias(m) for m in _PAGE_INFO if m in picked])
+    )
 
 
 # every field shape the schema document emits (OBJECT name/type/
@@ -1017,6 +786,21 @@ _INTROSPECT_DOC = (
 )
 
 _TYPE_FIELD_ATTRS = ("name", "type", "nonNull", "description", "ops", "args")
+
+
+def _sub_json(array, f, allowed, type_name):
+    """The array column ``array`` projected by the selection ``f`` (a
+    set of member names out of ``allowed``), as one JSON array column
+    named after ``f``."""
+    from pyspark.sql import functions as F
+
+    subs = [s for s in f["fields"] if isinstance(s, str)]
+    bad = [s for s in subs if s not in allowed]
+    if bad:
+        raise ValueError(f"graphql: unknown {type_name} attrs {bad}")
+    return F.to_json(
+        F.transform(array, lambda x: F.struct(*[x[s].alias(s) for s in subs]))
+    ).alias(f["name"])
 
 
 def _type_selection(schema_doc, sel_fields, name=None):
@@ -1044,36 +828,13 @@ def _type_selection(schema_doc, sel_fields, name=None):
             else:
                 raise ValueError(f"graphql: unknown __Type field {f!r}")
         elif f["name"] == "fields":
-            subs = [s for s in f["fields"] if isinstance(s, str)]
-            bad = [s for s in subs if s not in _TYPE_FIELD_ATTRS]
-            if bad:
-                raise ValueError(f"graphql: unknown __Field attrs {bad}")
-            cols.append(
-                F.to_json(
-                    F.transform(
-                        parsed["fields"],
-                        lambda x: F.struct(*[x[s].alias(s) for s in subs]),
-                    )
-                ).alias("fields")
-            )
+            cols.append(_sub_json(parsed["fields"], f, _TYPE_FIELD_ATTRS, "__Field"))
         elif f["name"] == "enumValues":
-            # the Relay/introspection __EnumValue selection — name +
-            # the @documentation @values description (NULL members
-            # drop on render, so undocumented values stay {name})
-            subs = [s for s in f["fields"] if isinstance(s, str)]
-            bad = [s for s in subs if s not in ("name", "description")]
-            if bad:
-                raise ValueError(
-                    f"graphql: unknown __EnumValue attrs {bad}"
-                )
-            cols.append(
-                F.to_json(
-                    F.transform(
-                        parsed["enumValues"],
-                        lambda x: F.struct(*[x[s].alias(s) for s in subs]),
-                    )
-                ).alias("enumValues")
-            )
+            # __EnumValue: name + the @documentation @values description
+            # (NULL members drop on render, so undocumented values stay {name})
+            cols.append(_sub_json(
+                parsed["enumValues"], f, ("name", "description"), "__EnumValue"
+            ))
         else:
             raise ValueError(
                 f"graphql: unknown __Type selection {f['name']!r}"
@@ -1141,20 +902,7 @@ def _directive_introspection(schema_doc, sel_fields):
         elif isinstance(f, str) and f == "locations":
             cols.append(F.to_json(F.col("locations")).alias("locations"))
         elif isinstance(f, dict) and f["name"] == "args":
-            subs = [s for s in f["fields"] if isinstance(s, str)]
-            bad = [s for s in subs if s not in ("name", "type")]
-            if bad:
-                raise ValueError(
-                    f"graphql: unknown __InputValue attrs {bad}"
-                )
-            cols.append(
-                F.to_json(
-                    F.transform(
-                        F.col("args"),
-                        lambda x: F.struct(*[x[s].alias(s) for s in subs]),
-                    )
-                ).alias("args")
-            )
+            cols.append(_sub_json(F.col("args"), f, ("name", "type"), "__InputValue"))
         else:
             n = f if isinstance(f, str) else f.get("name")
             raise ValueError(
@@ -1207,9 +955,27 @@ def execute_graphql(
     parent_key_col, child_fk_col) for nested related-field selection
     sets; a nested field renders as a deterministic JSON array of the
     selected child fields (sorted, so the rendering is
-    partitioning-independent).  Compilation only — filters push to
-    scans, a nested level is one filtered child aggregation joined
-    back on the parent key.
+    partitioning-independent).  A fourth member ``"one"`` makes a
+    to-one link field: the fk is the parent's, and each parent
+    renders one JSON object (``null`` when the link dangles).
+    Compilation only — filters push to scans, a nested level is one
+    filtered child aggregation joined back on the parent key.
+
+    Paging: a field's ``orderBy`` ({col: ASC|DESC} or a list of them),
+    ``limit``/``offset``, or Relay cursor args ``first``/``after``
+    (forward) or ``last``/``before`` (backward) read into one spec.
+    Cursor paging is keyset paging over the class's ``id_cols``
+    column: ``after``/``before`` are predicates pushed to the scan,
+    the page orders by the key and renders ascending either way, and
+    it mixes with neither the other direction nor orderBy/limit/
+    offset.  A root field applies the spec globally (orderBy+limit is
+    one TakeOrderedAndProject); a to-many field applies it per parent,
+    as one ``row_number`` window over the fk after the keyset bounds
+    (non-cursor pages break ties on the selected fields); a to-one
+    field takes no paging args.  A cursor-paged root may select
+    ``_pageInfo`` (endCursor, hasNextPage) or the connection shape
+    ``edges { node { ... } cursor } pageInfo { ... }`` with any of the
+    four Relay pageInfo members, exact in both directions.
 
     ``schema``: the generated schema document DataFrame
     (:func:`terminus_server_spark.docs.documents.graphql_schema`
@@ -1244,12 +1010,10 @@ def execute_graphql(
             continue
         if cls not in frames:
             raise ValueError(f"graphql: unknown class {cls!r}")
-        level = _query_level(
+        level, names = _query_level(
             frames, relations, cls, req["args"], req["fields"],
             id_cols=id_cols, inherits=inherits,
         )
-        flat = _flatten_selection(req["fields"], cls, inherits, relations)
-        names = [f if isinstance(f, str) else f["name"] for f in flat]
         out[key] = level.select(*names)
     return out
 

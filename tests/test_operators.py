@@ -156,6 +156,8 @@ def _anchor_patterns():
         "orp": P.OrP(link, P.Plus(nxt)),
         "times_0_2": P.Times(nxt, 0, 2),
         "times_1_3": P.Times(nxt, 1, 3),
+        "times_plus_1_1": P.Times(P.Plus(nxt), 1, 1),
+        "times_plus_1_2": P.Times(P.Plus(nxt), 1, 2),
         "times_open": P.parse_path_string("next{2,}"),
         "star_doubling": P.Star(nxt, strategy="doubling"),
         "star_seq": P.Star(P.Seq(nxt, nxt)),
@@ -175,6 +177,25 @@ def test_compile_path_anchor_law(spark, name):
     for x in ("a", "e", "ghost"):
         got = sorted(tuple(r) for r in compile_path(store, pattern, src=x).collect())
         assert got == [r for r in full if r[0] == x], x
+
+
+@pytest.mark.parametrize("name", ["times_plus_1_1", "times_plus_1_2"])
+def test_anchored_times_closure_never_builds_all_pairs(spark, monkeypatch, name):
+    """An anchored ``Times`` over a closure grows every step from the
+    rows so far; it never builds the all-pairs closure."""
+    from terminus_server_spark.operators import path
+
+    def all_pairs(*args, **kwargs):
+        raise AssertionError("all-pairs closure built")
+
+    monkeypatch.setattr(path, "transitive_closure", all_pairs)
+    got = sorted(
+        tuple(r)
+        for r in path.compile_path(_cycle_store(spark), _anchor_patterns()[name], src="a")
+        .collect()
+    )
+    # {1,2} adds no pair the first step misses, nor a shorter one
+    assert got == [("a", "a", 3), ("a", "b", 1), ("a", "c", 2), ("a", "d", 3)]
 
 
 def test_graphql_path_matches_woql_path(spark):
@@ -2609,12 +2630,13 @@ def test_graphql_to_one_link_field(spark):
     assert json.loads(rows[1]) == {"cn": "alice"}
     assert json.loads(rows[2]) == {"cn": "bob"}
     assert rows[3] == "null"  # dangling link -> JSON null, parent kept
-    with _pytest.raises(ValueError, match="to-one"):
-        execute_graphql(
-            {"O": orders, "C": custs},
-            "query { O { ok cust(limit: 1) { cn } } }",
-            relations=rels,
-        )["O"].collect()
+    for args in ("limit: 1", "first: 1", "last: 1", "after: 0"):
+        with _pytest.raises(ValueError, match="to-one"):
+            execute_graphql(
+                {"O": orders, "C": custs},
+                f"query {{ O {{ ok cust({args}) {{ cn }} }} }}",
+                relations=rels, id_cols={"C": "ck"},
+            )["O"].collect()
 
 
 def test_graphql_nested_depth2_with_paging(spark):
@@ -4460,11 +4482,46 @@ def test_graphql_cursor_pagination(spark):
             "query { D(first: 2, limit: 3) { k } }",
             relations=rels, id_cols=ids,
         )["D"].collect()
+    # an orderBy direction other than ASC/DESC raises at every level
+    for q in ("query { D(orderBy: {k: ASCENDING}) { k } }",
+              "query { D { k cs(orderBy: {ck: ASCENDING}) { ck } } }"):
+        with _pytest.raises(ValueError, match="orderBy direction"):
+            execute_graphql(
+                {"D": docs, "C": kids}, q, relations=rels, id_cols=ids
+            )["D"].collect()
     with _pytest.raises(ValueError, match="id column"):
         execute_graphql(
             {"D": docs, "C": kids}, "query { D(first: 2) { k } }",
             relations=rels,
         )["D"].collect()
+
+
+_PAGING_ERRORS = {
+    "first_last": ("first: 2, last: 2", {"C": "ck"}, "paging direction"),
+    "first_limit": ("first: 2, limit: 3", {"C": "ck"}, "paging style"),
+    "no_id_col": ("first: 2", {}, "id column registered for C"),
+}
+
+
+@pytest.mark.parametrize("case", list(_PAGING_ERRORS))
+def test_graphql_paging_errors_same_at_every_level(spark, case):
+    """A paging argument error raises the same message on a root field
+    and on a nested to-many field."""
+    from terminus_server_spark.docs.graphql import execute_graphql
+
+    args, ids, match = _PAGING_ERRORS[case]
+    frames = {
+        "P": spark.createDataFrame([(1,)], "pk long"),
+        "C": spark.createDataFrame([(1, 10)], "pfk long, ck long"),
+    }
+    rels = {("P", "cs"): ("C", "pk", "pfk")}
+    messages = []
+    for src in (f"query {{ C({args}) {{ ck }} }}",
+                f"query {{ P {{ pk cs({args}) {{ ck }} }} }}"):
+        with pytest.raises(ValueError, match=match) as err:
+            execute_graphql(frames, src, relations=rels, id_cols=ids)
+        messages.append(str(err.value))
+    assert messages[0] == messages[1]
 
 
 def test_graphql_schema_backlink_naming(spark):
@@ -4903,6 +4960,13 @@ def test_graphql_connection_wrapper(spark):
     e0 = json.loads(out[0].edges)
     assert e0 == {"node": {"k": 2, "n": "n2"}, "cursor": "2"}
     assert json.loads(out[0].pageInfo) == {"endCursor": "3", "hasNextPage": True}
+    # meta-fields are projected before the connection renders
+    [meta] = execute_graphql(
+        {"D": docs},
+        "query { D(first: 1, after: 1) { edges { node { k _id __typename } } } }",
+        id_cols={"D": "k"},
+    )["D"].collect()
+    assert meta.edges == '{"node":{"k":2,"_id":"D/2","__typename":"D"}}'
     with _pytest.raises(ValueError, match="do not mix"):
         execute_graphql(
             {"D": docs},

@@ -415,27 +415,42 @@ def test_zorder_layout_skips_in_both_dimensions(spark, tables, tmp_path):
     assert z_time < total
 
 
+def _scan_block(plan: str, table: str) -> str:
+    """The formatted plan's ``Scan parquet`` node reading ``table``."""
+    [block] = [b for b in plan.split("\n\n")
+               if "Scan parquet" in b and f"{table}.parquet" in b]
+    return block
+
+
 def test_gql_execute_pushes_filter_and_prunes(spark):
     """The GraphQL wire format must cost nothing: the compiled plan
     pushes the filter disjunction to the parquet scan and prunes to
-    the selected fields (+ filter columns)."""
+    the selected fields (+ filter columns).  An unpaged nested
+    relation (the shape of perfbench's read_mix GraphQL request)
+    pushes its own filter to the child scan and is never ranked."""
     import os
 
     from terminus_server_spark.docs.graphql import execute_graphql
     from terminus_server_spark.session import load_tables
 
     sf = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    cust = load_tables(spark, sf, ("customer",))["customer"]
-    out = execute_graphql(
-        {"Customer": cust},
-        'query { Customer(filter: {c_acctbal: {gt: 1000.0}}, '
-        "orderBy: {c_acctbal: DESC}, limit: 10) { c_custkey c_name } }",
-    )["Customer"]
-    p = plan_str(out)
-    assert re.search(r"PushedFilters:.*c_acctbal", p), p[:2000]
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    assert m and "c_mktsegment" not in m.group(1)  # unselected, unfiltered
-    assert "TakeOrderedAndProject" in p  # orderBy+limit never a global sort
+    t = load_tables(spark, sf, ("customer", "orders"))
+    for orders in ("", 'orders(filter: {o_orderstatus: {eq: "F"}}) { o_orderkey }'):
+        out = execute_graphql(
+            {"Customer": t["customer"], "Order": t["orders"]},
+            'query { Customer(filter: {c_acctbal: {gt: 1000.0}}, '
+            f"orderBy: {{c_acctbal: DESC}}, limit: 10) {{ c_custkey c_name {orders} }} }}",
+            relations={("Customer", "orders"): ("Order", "c_custkey", "o_custkey")},
+        )["Customer"]
+        p = plan_str(out)
+        scan = _scan_block(p, "customer")
+        assert re.search(r"PushedFilters:.*c_acctbal", scan), p[:2000]
+        m = re.search(r"ReadSchema: struct<([^>]*)>", scan)
+        assert m and "c_mktsegment" not in m.group(1)  # unselected, unfiltered
+        assert "TakeOrderedAndProject" in p  # orderBy+limit never a global sort
+    assert re.search(r"PushedFilters:.*EqualTo\(o_orderstatus,F\)",
+                     _scan_block(p, "orders")), p
+    assert "Window" not in p  # unpaged children are never ranked
 
 
 def test_resolve_curies_broadcasts_prefix_table(spark):
@@ -601,6 +616,15 @@ def test_cursor_keyset_predicate_reaches_scan(spark, tables):
     assert "GreaterThan(c_custkey,500)" in plan.replace(" ", "") or (
         "(c_custkey#" in plan and "> 500" in plan
     ), plan[:2000]
+    # a nested page's bound filters the child scan, before its ranking
+    nested = execute_graphql(
+        {"Customer": tables["customer"], "Order": tables["orders"]},
+        "query { Customer(id: 4) { c_custkey cs(first: 2, after: 41) { o_orderkey } } }",
+        relations={("Customer", "cs"): ("Order", "c_custkey", "o_custkey")},
+        id_cols={"Customer": "c_custkey", "Order": "o_orderkey"},
+    )["Customer"]
+    scan = _scan_block(plan_str(nested), "orders")
+    assert re.search(r"PushedFilters:.*GreaterThan\(o_orderkey,41\)", scan), scan
 
 
 def test_operators_never_write_session_conf():
