@@ -567,6 +567,7 @@ def _query_level(frames, relations, cls, args, fields, id_cols=None,
     conn = {f["name"]: f for f in nested if f["name"] in ("edges", "pageInfo")
             and (cls, f["name"]) not in relations}
     row = scalars  # the scalar fields of each rendered row
+    picked = ()  # the connection's pageInfo members
     if conn:
         if len(conn) != len(fields):
             raise ValueError(
@@ -636,22 +637,32 @@ def _query_level(frames, relations, cls, args, fields, id_cols=None,
             opp = F.col("_opp")
 
         # min/max over the native-typed key, cast afterwards: a string
-        # max over a page spanning 95..105 would be "99"
+        # max over a page spanning 95..105 would be "99"; min/max over
+        # the kept rows is direction-free, the page is a contiguous
+        # key range either way
         def edge(agg):
             return agg(F.when(kept, key)).over(w_all).cast("string")
 
+        info = {
+            "endCursor": edge(F.max),
+            "hasNextPage": opp if spec.backward else more,
+            "hasPreviousPage": more if spec.backward else opp,
+            "startCursor": edge(F.min),
+        }
+        # only the picked members are rendered (endCursor and
+        # hasNextPage when none are), in canonical name order; a
+        # struct of all four would keep the unread ones in the plan
+        picked = set(picked or ("endCursor", "hasNextPage"))
         df = (
-            df.withColumn("_pi", F.struct(
-                edge(F.max).alias("endCursor"),
-                (opp if spec.backward else more).alias("hasNextPage"),
-                (more if spec.backward else opp).alias("hasPreviousPage"),
-                edge(F.min).alias("startCursor"),
-            ))
+            df.withColumn(
+                "_pageInfo" if "_pageInfo" in scalars else "pageInfo",
+                F.to_json(F.struct(
+                    *[info[m].alias(m) for m in _PAGE_INFO if m in picked]
+                )),
+            )
             .where(kept)
             .drop("_rn", "_cnt", "_opp")
         )
-        if "_pageInfo" in scalars:
-            df = df.withColumn("_pageInfo", _page_info_json(()))
     if spec.backward:
         # Relay: edges render in the same order in both directions
         df = df.orderBy(F.col(spec.cursor).asc())
@@ -707,6 +718,8 @@ def _query_level(frames, relations, cls, args, fields, id_cols=None,
             {k: v for k, v in sub["args"].items() if k not in _PAGING},
             sub["fields"], id_cols=id_cols, inherits=inherits,
         )
+        # the child frame keeps every column, the fk too, until the
+        # render below projects child_names
         value = F.struct(*[F.col(c) for c in child_names])
         if to_one:
             # the child key is unique by contract; min keeps one row per
@@ -757,20 +770,7 @@ def _query_level(frames, relations, cls, args, fields, id_cols=None,
         if "cursor" in conn["edges"]["fields"]:
             members.append(F.col(spec.cursor).cast("string").alias("cursor"))
         df = df.withColumn("edges", F.to_json(F.struct(*members)))
-    if "pageInfo" in conn:
-        df = df.withColumn("pageInfo", _page_info_json(picked))
     return df, names
-
-
-def _page_info_json(picked):
-    """The ``_pi`` struct's members in ``picked`` (endCursor and
-    hasNextPage when none are), rendered in canonical name order."""
-    from pyspark.sql import functions as F
-
-    picked = set(picked or ("endCursor", "hasNextPage"))
-    return F.to_json(
-        F.struct(*[F.col("_pi")[m].alias(m) for m in _PAGE_INFO if m in picked])
-    )
 
 
 # every field shape the schema document emits (OBJECT name/type/

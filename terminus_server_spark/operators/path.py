@@ -15,13 +15,13 @@ caller has one, and it alone decides where a closure is anchored.
 Leaves filter ``src`` (pushed into the scan), ``Seq`` anchors its
 first part on ``src`` and every later ``Plus``/``Star`` part on the
 distinct ``dst`` of the rows so far, ``OrP`` anchors every part and
-``Times`` its first step, then its later steps as ``Seq`` does unless
-its unanchored part is built anyway (a leaf part, no ``src`` or the
-``{0,m}`` identity rows).  An anchored ``Plus``/``Star`` runs
-:func:`anchored_closure`, whose state is the anchors' reachable set,
-whatever the pattern's ``strategy``; only an unanchored one builds
-the all-pairs closure.  ``compile_path(p, src=x)`` equals
-``compile_path(p)`` filtered on ``src == x``.
+``Times`` its first step (its later steps and ``{0,m}`` identity rows
+compose the unanchored part, which ``{1,1}`` never builds).  An
+anchored ``Plus``/``Star`` runs :func:`anchored_closure`, whose state
+is the anchors' reachable set, whatever the pattern's ``strategy``;
+only an unanchored one builds the all-pairs closure.
+``compile_path(p, src=x)`` equals ``compile_path(p)`` filtered on
+``src == x``.
 
 Scale notes (100 TB):
 - the edge set once and every round's layer are checkpointed to cut
@@ -347,17 +347,6 @@ def _closure(
     return _dedup_min_hops(plus.unionByName(_zero(_nodes(edges)))) if star else plus
 
 
-def _then(store, out: DataFrame, part: P.PathPattern, graph: str) -> DataFrame:
-    """``out`` followed by one step of ``part``; a ``Plus``/``Star``
-    grows only from the middles the join can keep, the distinct
-    ``dst`` of ``out``."""
-    if isinstance(part, (P.Plus, P.Star)):
-        out = _dedup_min_hops(out)
-        anchors = out.select(F.col("dst").alias("node")).distinct()
-        return _compose(out, _closure(store, part, graph, anchors))
-    return _compose(out, compile_path(store, part, graph))
-
-
 def compile_path(
     store, pattern: P.PathPattern, graph: str = "instance", src: str | None = None
 ) -> DataFrame:
@@ -389,7 +378,15 @@ def compile_path(
     if isinstance(pattern, P.Seq):
         out = compile_path(store, pattern.parts[0], graph, src)
         for part in pattern.parts[1:]:
-            out = _then(store, out, part, graph)
+            if isinstance(part, (P.Plus, P.Star)):
+                # grow the closure only from the middles the join can keep
+                out = _dedup_min_hops(out)
+                nxt = _closure(
+                    store, part, graph, out.select(F.col("dst").alias("node")).distinct()
+                )
+            else:
+                nxt = compile_path(store, part, graph)
+            out = _compose(out, nxt)
         return _dedup_min_hops(out)
     if isinstance(pattern, P.OrP):
         return _dedup_min_hops(
@@ -401,12 +398,9 @@ def compile_path(
         )
         return _closure(store, pattern, graph, anchors)
     if isinstance(pattern, P.Times):
-        # the unanchored part is built once where it is read: as the
-        # first step, for the {0,m} identity rows, or as every later
-        # step of a leaf; otherwise a later closure step runs anchored
-        closure = isinstance(pattern.part, (P.Plus, P.Star))
+        # the unanchored part, built only where it is read
         base = None
-        if src is None or pattern.n == 0 or (pattern.m > 1 and not closure):
+        if src is None or pattern.n == 0 or pattern.m > 1:
             base = compile_path(store, pattern.part, graph)
         # {0,m} admits the empty repetition ({0,0} is pure identity)
         acc = [_zero(_from(_nodes(base), src))] if pattern.n == 0 else []
@@ -415,9 +409,7 @@ def compile_path(
             if cur is None:
                 cur = base if src is None else compile_path(store, pattern.part, graph, src)
             else:
-                cur = _compose(cur, base) if base is not None else _then(
-                    store, cur, pattern.part, graph
-                )
+                cur = _compose(cur, base)
             cur = _dedup_min_hops(cur)
             if k >= pattern.n:
                 acc.append(cur)
