@@ -5,24 +5,22 @@ FIXED small CDC delta (adds AND dels), the per-batch update must ride
 the delta and the dirty components, never the corpus.  Two costs were
 corpus-sized before r11 and are probed here after the fix:
 
-1. ``connected_components_decremental``'s ``und()`` ended in a
-   full-base ``distinct()`` even when the base was the canonical
-   streaming store — ``canonical_base=True`` (threaded from
-   ``run_stream_cc_cdc``) now skips it;
+1. ``connected_components_decremental`` canonicalised its base with
+   a full-base ``distinct()``; it now takes the canonical store
+   (``graph._und``) as it is;
 2. the store update was ``edges.unionByName(adds).distinct()`` — a
-   second full-store exchange — now the delta-only anti-join +
-   disjoint unionByName (the kcore_incremental store pattern).
+   second full-store exchange — now ``graph._fresh``'s delta-only
+   anti-join + disjoint unionByName.
 
 Topology: disjoint 100-node chains (n/100 components — deleting one
 edge dirties ONE 100-node component, not the corpus).  Fixed delta:
 3 splits (one mid-chain delete each in components 0/1/2), one merge
 (edge bridging components 5 and 6), one fresh node attached to
 component 3, and one delete of an absent edge (no-op path).  The
-probe times the composed steady-path body (decremental with
-canonical_base → store delete → fresh singletons → incremental →
-delta-only store append) over a cached canonical store at 1x and
-10x, best-of-3, and checks the 1x result against batch CC of the net
-edge set.
+probe times the CDC step's steady-path body (decremental → store
+delete → fresh singletons + incremental → delta-only store append)
+over a cached canonical store at 1x and 10x, best-of-3, and checks
+the 1x result against batch CC of the net edge set.
 
 Run: python scripts/scaling_cc_cdc.py
 """
@@ -38,11 +36,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from terminus_server_spark.operators.graph import (
+    _delete,
+    _fresh,
     connected_components,
     connected_components_decremental,
-    connected_components_incremental,
 )
 from terminus_server_spark.session import get_spark
+from terminus_server_spark.streaming.events import _cc_insert
 
 
 def chains(spark, n):
@@ -64,28 +64,12 @@ def delta(spark, n):
 
 
 def steady_batch(edges, labels, adds, dels):
-    """The run_stream_cc_cdc merge body (streaming/events.py), minus
-    the parquet I/O — exactly the per-batch steady-path plan."""
-    labels = connected_components_decremental(labels, edges, dels, canonical_base=True)
-    edges = edges.join(F.broadcast(dels), ["src", "dst"], "left_anti")
-    add_nodes = (
-        adds.select(F.col("src").alias("node"))
-        .union(adds.select(F.col("dst")))
-        .distinct()
-    )
-    fresh = add_nodes.join(labels.select("node"), "node", "left_anti")
-    labels = labels.unionByName(
-        fresh.select("node", F.col("node").alias("component"))
-    )
-    labels = connected_components_incremental(labels, adds)
-    adds_only = adds.join(
-        edges.join(
-            F.broadcast(adds.select("src").distinct()), "src", "left_semi"
-        ),
-        ["src", "dst"],
-        "left_anti",
-    )
-    edges = edges.unionByName(adds_only)
+    """run_stream_cc_cdc's CDC step (streaming/events.py), minus the
+    parquet I/O — exactly the per-batch steady-path plan."""
+    labels = connected_components_decremental(labels, edges, dels)
+    edges = _delete(edges, dels)
+    labels = _cc_insert(labels, adds)
+    edges = edges.unionByName(_fresh(edges, adds))
     return edges, labels
 
 

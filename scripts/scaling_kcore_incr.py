@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from terminus_server_spark.operators.graph import kcore, kcore_incremental
+from terminus_server_spark.operators.graph import _und, kcore, kcore_incremental
 from terminus_server_spark.session import get_spark
 
 
@@ -62,7 +62,7 @@ def main():
     spark = get_spark("tss-kcore-scale")
     spark.sparkContext.setLogLevel("ERROR")
     for n in (50_000, 500_000):
-        base = ring(spark, n).cache()
+        base = _und(ring(spark, n)).cache()
         base.count()
         core = kcore(base, k=3, rounds=20).cache()
         n_core = core.count()  # == n by construction

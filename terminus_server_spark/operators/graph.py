@@ -52,6 +52,74 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def _pairs(edges: DataFrame, *carry: Column) -> DataFrame:
+    """(src, dst, *carry) with src < dst, NULL endpoints and
+    self-loops dropped, not yet deduplicated: the one place an
+    undirected pair is ordered."""
+    return (
+        edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .select(
+            F.least("src", "dst").alias("src"),
+            F.greatest("src", "dst").alias("dst"),
+            *carry,
+        )
+        .where(F.col("src") != F.col("dst"))
+    )
+
+
+def _und(edges: DataFrame) -> DataFrame:
+    """The canonical UNDIRECTED edge store: (src, dst) with src < dst,
+    NULL endpoints and self-loops dropped, distinct.  Every undirected
+    maintainer takes its base in this form and every CDC stream
+    harness keeps its store in it; code that names the pair (a, b)
+    renames with ``toDF``."""
+    return _pairs(edges).distinct()
+
+
+def _und_w(edges: DataFrame) -> DataFrame:
+    """The canonical WEIGHTED undirected store: ``_und``'s pairs, each
+    with its minimum weight ``w`` as a double, so a restated pair picks
+    one weight deterministically (the MSF store)."""
+    return (
+        _pairs(edges, F.col("w").cast("double").alias("w"))
+        .groupBy("src", "dst")
+        .agg(F.min("w").alias("w"))
+    )
+
+
+def _directed(edges: DataFrame) -> DataFrame:
+    """The canonical DIRECTED edge store: (src, dst), NULL endpoints
+    dropped, distinct.  Self-loops stay, as batch ``pagerank`` and SCC
+    count them."""
+    return (
+        edges.select("src", "dst")
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
+
+
+def _delete(store: DataFrame, dels: DataFrame) -> DataFrame:
+    """``store`` without the canonical pairs ``dels``: a map-side
+    broadcast anti join, so the store is never shuffled."""
+    key = ["src", "dst"]
+    return store.join(F.broadcast(dels.select(*key)), key, "left_anti")
+
+
+def _fresh(store: DataFrame, adds: DataFrame) -> DataFrame:
+    """``adds ∖ store`` for a canonical store and canonical adds: the
+    rows an insert appends, so ``store.unionByName(_fresh(store,
+    adds))`` is the store after the insert, a disjoint union of two
+    distinct sets that never shuffles or re-deduplicates the store.
+    The cost is the adds': the store is narrowed map-side (broadcast
+    semi join) to the rows that share a ``src`` with an add before
+    the anti join.  The union is left to the caller, so one that
+    checkpoints the remainder unions the checkpoint and narrows the
+    store once."""
+    key = ["src", "dst"]
+    touched = store.join(F.broadcast(adds.select("src").distinct()), "src", "left_semi")
+    return adds.join(touched, key, "left_anti")
+
+
 def degrees(edges: DataFrame) -> DataFrame:
     """(node, out_degree, in_degree, degree) — two partial aggs and a
     full-outer merge; no driver collection."""
@@ -208,7 +276,6 @@ def connected_components_decremental(
     labels: DataFrame,
     base_edges: DataFrame,
     delete_edges: DataFrame,
-    canonical_base: bool = False,
 ) -> DataFrame:
     """(node, component): component labels AFTER a delete-only commit
     delta — the reverse of ``connected_components_incremental``, and
@@ -219,13 +286,10 @@ def connected_components_decremental(
     the post-delete edge set, and every other component's labels pass
     through verbatim:
 
-    1. really-deleted = delete ∩ base (canonical pairs; deleting an
-       absent edge is a no-op) — a map-side broadcast semi join;
-       with ``canonical_base=True`` (the caller guarantees the base
-       is already canonical a<b and duplicate-free, e.g. the
-       streaming edge store) the base is never shuffled at all —
-       otherwise one canonicalizing ``distinct()`` pass over the
-       base runs first;
+    1. really-deleted = delete ∩ base — a map-side broadcast semi
+       join over the canonical base store (``_und``), never shuffled;
+       the deletes may come in either orientation (deleting an absent
+       edge is a no-op);
     2. dirty = the deleted endpoints' component ids (delta-sized);
     3. the affected subgraph = post-delete edges with an endpoint in
        a dirty component (base edges never cross components, so one
@@ -239,39 +303,18 @@ def connected_components_decremental(
     Cost rides the dirty components' size, never the corpus: at
     100 TB a commit deleting edges in k components re-runs CC on
     those k components only."""
-
-    def und(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    if canonical_base:
-        # caller guarantees the base is already canonical (a<b) and
-        # duplicate-free — skips the full-base distinct() exchange,
-        # the only base-sized shuffle in the steady streaming path
-        eb = base_edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        )
-    else:
-        eb = und(base_edges)
-    dels = und(delete_edges)
-    real = eb.join(F.broadcast(dels), ["a", "b"], "left_semi")
+    dels = _und(delete_edges)
+    real = base_edges.join(F.broadcast(dels), ["src", "dst"], "left_semi")
     real = loop_checkpoint(real)
-    e_new = eb.join(F.broadcast(dels), ["a", "b"], "left_anti")
+    e_new = _delete(base_edges, dels)
     # deleted-endpoint → component lookup: broadcast the (delta-sized)
     # endpoint set so the stored label table is probed MAP-SIDE — the
     # plain join shuffled the whole store per commit (the endpoint set
     # is a checkpoint leaf with no stats, so the planner can't see
     # it's small)
     _del_nodes = (
-        real.select(F.col("a").alias("node"))
-        .union(real.select(F.col("b")))
+        real.select(F.col("src").alias("node"))
+        .union(real.select(F.col("dst")))
         .distinct()
     )
     dirty = (
@@ -284,8 +327,8 @@ def connected_components_decremental(
     untouched = labels.join(F.broadcast(dirty), "component", "left_anti")
     aff_nodes = loop_checkpoint(lab_aff.select("node"))
     sub = e_new.join(
-        aff_nodes.select(F.col("node").alias("a")), "a", "left_semi"
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        aff_nodes.select(F.col("node").alias("src")), "src", "left_semi"
+    ).select("src", "dst")
     # Dirty-component internal edges are delta-bounded in the common
     # case — adaptive driver/distributed labeling, see cc_metadata.
     recomputed = cc_metadata(sub)
@@ -1203,7 +1246,6 @@ def kcore_incremental(
     base_edges: DataFrame,
     delta_edges: DataFrame,
     k: int = 3,
-    canonical_base: bool = False,
 ) -> DataFrame:
     """(node, degree): the k-core AFTER an insert-only commit delta,
     at delta-cascade cost — the node-grain sibling of
@@ -1234,54 +1276,24 @@ def kcore_incremental(
     internal edges is paid (documented fallback, not the steady
     state).  The candidate closure and the peel both run to their
     fixpoint (the candidate set only grows, the peel only drops), so
-    the closure is never incomplete.  Deletions invalidate
-    fact 1 — route them through ``kcore_decremental`` or batch
-    ``kcore``."""
+    the closure is never incomplete.  ``base_edges`` is the canonical
+    store (``_und``); the delta may come in either orientation.
+    Deletions invalidate fact 1 — route them through
+    ``kcore_decremental`` or batch ``kcore``."""
     spark = core_old.sparkSession
     has_deg = "degree" in core_old.columns
     old = core_old.select("node").distinct()
     old = loop_checkpoint(old)
 
-    def und(e):
-        # canonical (min,max) pairs: reversed redeliveries of the
-        # same undirected edge dedup instead of double-counting
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    if canonical_base:
-        # caller guarantees the base is already canonical (a<b) and
-        # duplicate-free — e.g. the streaming edge store, written
-        # with least/greatest + distinct.  Skips the only full-base
-        # shuffle in the steady path.
-        base_und = base_edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        )
-    else:
-        base_und = und(base_edges)
-    delta_und = und(delta_edges)
-    # delta edges not already present in the base — the only edges
-    # that can raise an old-core-internal degree.  The base is first
-    # narrowed map-side to delta-endpoint-incident rows (broadcast
-    # semi join, no base shuffle), so the anti join is tiny × tiny
-    delta_only = delta_und.join(
-        base_und.join(
-            F.broadcast(delta_und.select("a").distinct()), "a", "left_semi"
-        ),
-        ["a", "b"],
-        "left_anti",
-    )
-    delta_only = loop_checkpoint(delta_only)
-    # base ∪ (delta \ base) is a DISJOINT union of two deduped sets —
-    # no distinct over the full edge list is ever needed
-    e_new = base_und.unionByName(delta_only)
+    # reversed redeliveries of one undirected edge dedup instead of
+    # double-counting; delta_only (delta edges the base lacks) are
+    # the only edges that can raise an old-core-internal degree
+    delta = _und(delta_edges)
+    delta_und = delta.toDF("a", "b")
+    delta_only = loop_checkpoint(_fresh(base_edges, delta))
+    e_new = base_edges.unionByName(delta_only).toDF("a", "b")
     e_new, n_e = loop_checkpoint_count(e_new)
+    delta_only = delta_only.toDF("a", "b")
     adj = e_new.union(
         e_new.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -1415,7 +1427,6 @@ def kcore_decremental(
     base_edges: DataFrame,
     delete_edges: DataFrame,
     k: int = 3,
-    canonical_base: bool = False,
 ) -> DataFrame:
     """(node, degree): the k-core AFTER a delete-only commit delta —
     the reverse direction of ``kcore_incremental``, and the easy one
@@ -1429,33 +1440,10 @@ def kcore_decremental(
     core subgraph (the peel is the batch loop restricted to
     core_old) to its fixpoint, so no under-degree node stays in the
     core.  Insertions route through ``kcore_incremental``.
-    ``canonical_base=True`` promises the base is already canonical
-    (a<b, duplicate-free — e.g. the streaming edge store) and skips
-    the full-base canonicalizing ``distinct()``."""
+    ``base_edges`` is the canonical store (``_und``); a delete listed
+    in either orientation removes its edge."""
     spark = core_old.sparkSession
-
-    def und(e):
-        # canonical (min,max) pairs so a delete listed in either
-        # orientation removes the base edge regardless of how the
-        # base stored it
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    if canonical_base:
-        eb = base_edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        )
-    else:
-        eb = und(base_edges)
-    dels = und(delete_edges)
-    e_new = eb.join(dels, ["a", "b"], "left_anti")
+    e_new = _delete(base_edges, _und(delete_edges)).toDF("a", "b")
     e_new, n_e = loop_checkpoint_count(e_new)
     adj = e_new.union(
         e_new.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -1502,7 +1490,7 @@ def ktruss_decremental(
     ``ktruss_incremental``."""
     spark = truss_old.sparkSession
     t_old = truss_old.select("a", "b").distinct()
-    dels = _und(delete_edges)
+    dels = _und(delete_edges).toDF("a", "b")
     removed = dels.join(t_old, ["a", "b"], "left_semi")
     removed = plan_checkpoint(removed)
     cur_edges = t_old.join(dels, ["a", "b"], "left_anti")
@@ -1601,8 +1589,6 @@ def triangle_count_incremental(
     old_count: DataFrame,
     base_edges: DataFrame,
     delta_edges: DataFrame,
-    delete_edges: DataFrame | None = None,
-    canonical_base: bool = False,
 ) -> DataFrame:
     """(n_triangles): the triangle count AFTER an insert-only delta,
     by exact inclusion-exclusion over the delta's wedge neighborhood
@@ -1620,53 +1606,42 @@ def triangle_count_incremental(
     alternating sum telescopes to a1+a2+a3, the distinct new
     triangles.  ``old_count``: one-row (n_triangles) frame (the
     stored statistic — triangle state is a single number, the
-    cheapest incremental state there is).
-
-    ``delete_edges``: a delete-only (or mixed) delta — deletions
-    apply FIRST with the same identity mirrored (triangles of E_OLD
-    containing a deleted edge subtract), then insertions count
-    against the post-delete edge set; an edge both deleted and
-    re-added cancels exactly.
-
-    ``canonical_base=True``: the caller guarantees ``base_edges`` is
-    already canonical (src<dst) and duplicate-free — e.g. the
-    streaming edge store — skipping the full-base canonicalizing
-    ``distinct()``, the only base-sized shuffle in the steady
-    streaming path (the same escape hatch as
-    ``connected_components_decremental`` / ``kcore_incremental``)."""
-
-    def canon(e):
-        return (
-            e.select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    if canonical_base:
-        eb = base_edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        )
-    else:
-        eb = canon(base_edges)
-    total = old_count.select(F.col("n_triangles").cast("bigint").alias("n_triangles"))
-    if delete_edges is not None:
-        edel = canon(delete_edges).join(eb, ["a", "b"], "left_semi")
-        edel = plan_checkpoint(edel)
-        eb_all = plan_checkpoint(eb)
-        gone = _delta_triangle_terms(edel, eb_all, "gone")
-        total = total.crossJoin(F.broadcast(gone)).select(
-            (F.col("n_triangles") - F.col("gone")).alias("n_triangles")
-        )
-        eb = eb_all.join(edel, ["a", "b"], "left_anti")
-    ed = canon(delta_edges).join(eb, ["a", "b"], "left_anti")
-    ed = plan_checkpoint(ed)
-    e_new = plan_checkpoint(eb.unionByName(ed))
-    new = _delta_triangle_terms(ed, e_new, "new")
-    return total.crossJoin(F.broadcast(new)).select(
+    cheapest incremental state there is).  ``base_edges`` is the
+    canonical store (``_und``); the delta may come in either
+    orientation.  Deletions route through
+    ``triangle_count_decremental``, against the base before the
+    inserts."""
+    # eager: the terms read both frames from concurrent broadcast
+    # jobs, and a lazy checkpoint completing in one of them while
+    # another is submitted can deadlock Spark's scheduler (RDD and
+    # RDDCheckpointData locks taken in opposite orders)
+    ed = loop_checkpoint(_fresh(base_edges, _und(delta_edges)))
+    e_new = loop_checkpoint(base_edges.unionByName(ed).toDF("a", "b"))
+    new = _delta_triangle_terms(ed.toDF("a", "b"), e_new, "new")
+    return old_count.crossJoin(F.broadcast(new)).select(
         (F.col("n_triangles") + F.col("new")).cast("bigint").alias("n_triangles")
+    )
+
+
+def triangle_count_decremental(
+    old_count: DataFrame,
+    base_edges: DataFrame,
+    delete_edges: DataFrame,
+) -> DataFrame:
+    """(n_triangles): the triangle count AFTER a delete-only delta —
+    ``triangle_count_incremental``'s identity mirrored: the triangles
+    of the OLD edge set that contain a really-deleted edge subtract.
+    ``base_edges`` is the canonical store (``_und``); a delete listed
+    in either orientation removes its edge, and deleting an absent
+    edge is a no-op.  A mixed delta runs this first, then the insert
+    half against ``_delete(base, dels)``, so an edge deleted and
+    re-added cancels exactly."""
+    edel = base_edges.join(F.broadcast(_und(delete_edges)), ["src", "dst"], "left_semi")
+    # eager, as in triangle_count_incremental
+    edel = loop_checkpoint(edel.toDF("a", "b"))
+    gone = _delta_triangle_terms(edel, loop_checkpoint(base_edges.toDF("a", "b")), "gone")
+    return old_count.crossJoin(F.broadcast(gone)).select(
+        (F.col("n_triangles") - F.col("gone")).cast("bigint").alias("n_triangles")
     )
 
 
@@ -2020,9 +1995,7 @@ def strongly_connected_components(edges: DataFrame) -> DataFrame:
     SCCs are algorithm-independent and whole classes peel together,
     so the class min is the global min.
     """
-    base = edges.select("src", "dst").where(
-        F.col("src").isNotNull() & F.col("dst").isNotNull()
-    ).distinct()
+    base = _directed(edges)
     rem, n_rem = loop_checkpoint_count(
         base.select(F.col("src").alias("n")).union(base.select(F.col("dst"))).distinct()
     )
@@ -2796,7 +2769,7 @@ def ktruss(edges: DataFrame, k: int = 4) -> DataFrame:
     Edge state shrinks monotonically and is checkpointed per round;
     the k-truss is unique, so peel order cannot affect the result."""
 
-    und, n_e = loop_checkpoint_count(_und(edges))
+    und, n_e = loop_checkpoint_count(_und(edges).toDF("a", "b"))
     need = k - 2
     if n_e == 0:
         return und
@@ -2862,24 +2835,11 @@ def _edge_support(lhs: DataFrame, full: DataFrame) -> DataFrame:
     )
 
 
-def _und(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(
-            F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-    )
-
-
 def ktruss_incremental(
     truss_old: DataFrame,
     base_edges: DataFrame,
     delta_edges: DataFrame,
     k: int = 4,
-    canonical_base: bool = False,
 ) -> DataFrame:
     """(a, b): the k-truss AFTER an insert-only commit delta, at cost
     proportional to the delta's cascade region — never a full-graph
@@ -2911,35 +2871,16 @@ def ktruss_incremental(
     DELETIONS are not handled here: a delete can evict T_old edges,
     which invalidates fact 1 — route deletion deltas through the
     batch ``ktruss`` (its inner loop already recomputes only
-    cascade frontiers)."""
+    cascade frontiers).  ``base_edges`` is the canonical store
+    (``_und``); the delta may come in either orientation."""
     spark = truss_old.sparkSession
     t_old = truss_old.select("a", "b").distinct()
-    delta_und = _und(delta_edges)
-    if canonical_base:
-        # caller guarantees the base is already canonical (a<b) and
-        # duplicate-free (the streaming edge store contract): e_new
-        # is the DISJOINT union of the base and the delta-only
-        # remainder — no full-store distinct() exchange (the same
-        # escape hatch as kcore_incremental / the decremental verbs)
-        base_und = base_edges.select(
-            F.col("src").alias("a"), F.col("dst").alias("b")
-        )
-        delta_only = delta_und.join(
-            base_und.join(
-                F.broadcast(delta_und.select("a").distinct()),
-                "a",
-                "left_semi",
-            ),
-            ["a", "b"],
-            "left_anti",
-        )
-        e_new = base_und.unionByName(delta_only)
-    else:
-        e_new = _und(base_edges).unionByName(delta_und).distinct()
+    delta = _und(delta_edges)
+    e_new = base_edges.unionByName(_fresh(base_edges, delta)).toDF("a", "b")
     e_new, n_new = loop_checkpoint_count(e_new)
     not_t = e_new.join(t_old, ["a", "b"], "left_anti")
     not_t = loop_checkpoint(not_t)
-    x = delta_und.join(t_old, ["a", "b"], "left_anti")
+    x = delta.toDF("a", "b").join(t_old, ["a", "b"], "left_anti")
     x, n_x = loop_checkpoint_count(x)
     need = k - 2
     if n_x == 0:
@@ -3047,17 +2988,7 @@ def msf_boruvka(edges: DataFrame) -> DataFrame:
     combined), and a pointer-jumping label merge over the PICKED
     edges only — a frame bounded by the component count, not the
     edge count."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            F.col("w").cast("double").alias("w"),
-        )
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
-    )
-    und, n_e = loop_checkpoint_count(und)
+    und, n_e = loop_checkpoint_count(_und_w(edges).toDF("a", "b", "w"))
     labels = (
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b")))
@@ -3202,9 +3133,10 @@ def msf_decremental(
     that actually lost an edge.  So, mirroring
     ``connected_components_decremental``:
 
-    1. really-deleted = delete ∩ base (canonical (a,b) pairs;
-       deleting an absent edge is a no-op) — broadcast semi join,
-       the base is never shuffled;
+    1. really-deleted = delete ∩ base (the canonical weighted store,
+       ``_und_w``; deletes in either orientation, deleting an absent
+       edge is a no-op) — broadcast semi join, the base is never
+       shuffled;
     2. dirty = the deleted endpoints' component labels
        (``labels``: (node, component) stored state from the base
        graph — the spanning forest labels the same components);
@@ -3217,31 +3149,18 @@ def msf_decremental(
     MSF of base∖delete; under ties it is a valid deterministic MSF
     but may tie-break differently from the stored forest.  Cost
     rides the dirty components, never the corpus."""
-
-    def und(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("a"),
-                F.greatest("src", "dst").alias("b"),
-                F.col("w").cast("double").alias("w"),
-            )
-            .where(F.col("a") != F.col("b"))
-        )
-
-    eb = und(base_edges)
-    dels = und(delete_edges).select("a", "b").distinct()
-    real = eb.join(F.broadcast(dels), ["a", "b"], "left_semi")
+    dels = _und(delete_edges)
+    real = base_edges.join(F.broadcast(dels), ["src", "dst"], "left_semi")
     real = loop_checkpoint(real)
-    e_new = eb.join(F.broadcast(dels), ["a", "b"], "left_anti")
+    e_new = _delete(base_edges, dels)
     # deleted-endpoint → component lookup: broadcast the (delta-sized)
     # endpoint set so the stored label table is probed MAP-SIDE — the
     # plain join shuffled the whole store per commit (the endpoint set
     # is a checkpoint leaf with no stats, so the planner can't see
     # it's small)
     _del_nodes = (
-        real.select(F.col("a").alias("node"))
-        .union(real.select(F.col("b")))
+        real.select(F.col("src").alias("node"))
+        .union(real.select(F.col("dst")))
         .distinct()
     )
     dirty = (
@@ -3259,8 +3178,8 @@ def msf_decremental(
         dirty_nodes.select(F.col("node").alias("a")), "a", "left_anti"
     ).select("a", "b", "w")
     sub = e_new.join(
-        dirty_nodes.select(F.col("node").alias("a")), "a", "left_semi"
-    ).select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
+        dirty_nodes.select(F.col("node").alias("src")), "src", "left_semi"
+    ).select("src", "dst", "w")
     return untouched.unionByName(msf_boruvka(sub))
 
 
@@ -3667,13 +3586,7 @@ def maximal_matching(edges: DataFrame) -> DataFrame:
     endpoint-keyed self-join finds edges that see a smaller-priority
     neighbor (losers), winners = live − losers; all shuffles sized
     by the live subgraph."""
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _und(edges).toDF("a", "b")
     live, n_l = loop_checkpoint_count(
         canon.select(
             "a",
@@ -3859,11 +3772,7 @@ def scc_incremental(
     lab_d = labels.select(
         F.col("node").alias("dst"), F.col("component").alias("_ld")
     )
-    d = (
-        delta_edges.select("src", "dst")
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
+    d = _directed(delta_edges)
     dl = (
         d.join(lab_s, "src", "left_outer")
         .join(lab_d, "dst", "left_outer")
@@ -3910,7 +3819,6 @@ def scc_decremental(
     labels: DataFrame,
     base_edges: DataFrame,
     delete_edges: DataFrame,
-    canonical_base: bool = False,
 ) -> DataFrame:
     """(node, component): strongly connected components AFTER a
     delete-only commit delta — the split direction
@@ -3926,25 +3834,12 @@ def scc_decremental(
     are global minima for their (subset) classes, so the result
     equals batch SCC of base∖delete bit-for-bit.
 
-    Cost: one map-side broadcast semi join over the base (never
-    shuffled; ``canonical_base=True`` additionally skips the
-    distinct() when the store is already directed-distinct), then
+    Cost: one map-side broadcast semi join over the base, the
+    canonical directed store (``_directed``), never shuffled; then
     everything rides the dirty classes' size.  Deleting an absent
     edge is a no-op."""
-    if canonical_base:
-        eb = base_edges.select("src", "dst")
-    else:
-        eb = (
-            base_edges.select("src", "dst")
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .distinct()
-        )
-    dels = (
-        delete_edges.select("src", "dst")
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    real = eb.join(F.broadcast(dels), ["src", "dst"], "left_semi")
+    dels = _directed(delete_edges)
+    real = base_edges.join(F.broadcast(dels), ["src", "dst"], "left_semi")
     real = loop_checkpoint(real)
     lab_s = labels.select(
         F.col("node").alias("src"), F.col("component").alias("_ls")
@@ -3971,7 +3866,7 @@ def scc_decremental(
     )
     # the dirty classes' INTERNAL post-delete edges: both endpoints
     # dirty AND same old class (intra-class by construction)
-    e_new = eb.join(F.broadcast(dels), ["src", "dst"], "left_anti")
+    e_new = _delete(base_edges, dels)
     sub = (
         e_new.join(
             F.broadcast(dirty_nodes.select(F.col("node").alias("src"))),

@@ -23,6 +23,23 @@ the versioned parquet state that step reads and writes.
 ``backfill_file_source`` and ``run_stream_fanout`` test source
 semantics (multi-file triggers, batch-id replays), so they keep their
 own queries and share only the directory cleanup.
+
+The CDC graph harnesses (``run_stream_*_cdc``) fold one step,
+``_cdc_step``.  Each micro-batch carries ``(op, src, dst)`` rows with
+op ∈ {add, del}, and the ops of one batch are an UNORDERED set.  The
+step splits the batch on ``op`` and canonicalises both halves into
+the edge store's form (``operators.graph._und``; ``_und_w`` for the
+weighted store, ``_directed`` for directed graphs, whose self-loops
+stay).  Deletes run first, against the pre-batch store; inserts run
+next, against the post-delete store, so an edge deleted and re-added
+in one batch is present.  A direction with no rows is skipped.  The
+step updates the store itself at the cost of the batch
+(``graph._delete``, ``graph._fresh``): the accumulated edges are
+never shuffled or re-deduplicated.  A harness supplies only its empty
+state and its ``on_delete``/``on_insert`` maintainers, and its final
+state equals its batch operator over the NET edge set, whatever the
+batch split (nodes that lose their last edge stay as singletons where
+the state is a node labelling).
 """
 
 from __future__ import annotations
@@ -35,6 +52,28 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from terminus_server_spark.checkpoint import run_in_clone
+from terminus_server_spark.operators.graph import (
+    _delete,
+    _directed,
+    _fresh,
+    _symmetrize,
+    _und,
+    _und_w,
+    connected_components_decremental,
+    connected_components_incremental,
+    kcore_decremental,
+    kcore_incremental,
+    ktruss_decremental,
+    ktruss_incremental,
+    msf_decremental,
+    msf_incremental,
+    pagerank,
+    pagerank_warm,
+    scc_decremental,
+    scc_incremental,
+    triangle_count_decremental,
+    triangle_count_incremental,
+)
 
 
 def _event_time(events: DataFrame, col: str = "ts") -> DataFrame:
@@ -239,6 +278,33 @@ def _fold(
         heavy_batches=heavy_batches,
     )
     return spark.read.parquet(path(answer, version))
+
+
+def _cdc_step(empty, on_delete, on_insert, canon=_und):
+    """The fold step of every CDC graph harness (contract in the
+    module docstring).  ``empty(adds)`` is the state before the first
+    batch, a dict of named frames; ``on_delete(state, store, dels)``
+    and ``on_insert(state, store, adds)`` map it to the next state,
+    given the store as it stands before that direction applies.  The
+    store itself is the state's ``edges`` table, which the step
+    alone updates."""
+
+    def step(prev, batch_df: DataFrame) -> dict:
+        adds = canon(batch_df.where(F.col("op") == "add")).localCheckpoint(eager=True)
+        dels = canon(batch_df.where(F.col("op") == "del")).localCheckpoint(eager=True)
+        if prev is None:
+            prev = {"edges": adds.limit(0), **empty(adds)}
+        state = dict(prev)
+        store = state.pop("edges")
+        if dels.count():
+            state = on_delete(state, store, dels)
+            store = _delete(store, dels)
+        if adds.count():
+            state = on_insert(state, store, adds)
+            store = store.unionByName(_fresh(store, adds))
+        return {"edges": store, **state}
+
+    return step
 
 
 def run_stream_to_table(
@@ -1229,6 +1295,30 @@ def run_stream_countmin(
     )
 
 
+def _cc_insert(labels: DataFrame, edges: DataFrame) -> DataFrame:
+    """``connected_components_incremental`` of ``labels`` over
+    ``edges``, after every endpoint the labels lack enters as a
+    singleton.  The known endpoints are found on the label table
+    narrowed map-side (broadcast semi join, batch-sized output): a
+    plain anti join against it would shuffle the whole accumulated
+    table every batch."""
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst")))
+        .distinct()
+    )
+    known = labels.select("node").join(F.broadcast(nodes), "node", "left_semi")
+    fresh = nodes.join(F.broadcast(known), "node", "left_anti")
+    labels = labels.unionByName(fresh.select("node", F.col("node").alias("component")))
+    return connected_components_incremental(labels, edges)
+
+
+def _no_labels(adds: DataFrame) -> DataFrame:
+    return adds.select(
+        F.col("src").alias("node"), F.col("src").alias("component")
+    ).limit(0)
+
+
 def run_stream_cc(spark: SparkSession, edge_batches: list[DataFrame]) -> DataFrame:
     """(node, component): connected-component labels maintained
     incrementally as edge INSERTIONS stream in — the streaming twin
@@ -1240,120 +1330,32 @@ def run_stream_cc(spark: SparkSession, edge_batches: list[DataFrame]) -> DataFra
     stored label table stays exactly what full CC on everything
     seen so far would produce.  Same versioned fold as the
     landmark/CDC sinks."""
-    from terminus_server_spark.operators.graph import (
-        _symmetrize,
-        connected_components_incremental,
-    )
-
     def step(prev, batch_df: DataFrame) -> dict:
         und = _symmetrize(batch_df)
-        batch_nodes = (
-            und.select(F.col("src").alias("node"))
-            .union(und.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        if prev is not None:
-            labels = prev["labels"]
-            # which batch nodes are already labeled?  Narrow the store
-            # map-side first (broadcast semi — output is batch-sized),
-            # then anti-join the batch against THAT: a plain anti-join
-            # against the store would shuffle the whole accumulated
-            # label table every delivery.
-            known = labels.select("node").join(
-                F.broadcast(batch_nodes), "node", "left_semi"
-            )
-            fresh = batch_nodes.join(F.broadcast(known), "node", "left_anti")
-            labels = labels.unionByName(
-                fresh.select("node", F.col("node").alias("component"))
-            )
-        else:
-            labels = batch_nodes.select("node", F.col("node").alias("component"))
-        out = connected_components_incremental(labels, und)
-        return {"labels": out}
+        labels = _no_labels(und) if prev is None else prev["labels"]
+        return {"labels": _cc_insert(labels, und)}
 
     return _fold(spark, edge_batches, step, "labels")
 
 
 def run_stream_cc_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFrame:
-    """(node, component): connected-component labels maintained over
-    a CDC edge stream — each micro-batch carries ``(op, src, dst)``
-    rows with op ∈ {add, del}, and the update composes BOTH
-    commit-delta directions (operators/graph.py): deletes first
-    through ``connected_components_decremental`` (splits recomputed
-    only on the dirty components over the post-delete edge store),
-    then inserts through ``connected_components_incremental`` (label
-    pairs contract via a ≤|batch|-edge meta-graph, fresh nodes
-    entering as singletons).  Within one micro-batch the ops are an
-    UNORDERED CDC set: deletes apply against the pre-batch state and
-    inserts after them (an add+del of the same edge in one batch nets
-    to the edge present).  State = the canonical edge store + the
-    label table; the final labels equal batch CC of the NET edge set
-    under any batch split that respects that convention — per-batch
-    cost rides the delta and the dirty components, never the corpus."""
-    from terminus_server_spark.operators.graph import (
-        connected_components_decremental,
-        connected_components_incremental,
-    )
+    """(node, component): connected-component labels over a CDC edge
+    stream (the CDC step: module docstring).  Deletes run through
+    ``connected_components_decremental`` (splits recomputed only on
+    the dirty components over the post-delete store), inserts through
+    ``connected_components_incremental`` (label pairs contract via a
+    ≤|batch|-edge meta-graph, fresh nodes entering as singletons).
+    The final labels equal batch CC of the NET edge set; per-batch
+    cost rides the delta and the dirty components, never the
+    corpus."""
+    def on_delete(state, store, dels):
+        return {"labels": connected_components_decremental(state["labels"], store, dels)}
 
-    def canon(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+    def on_insert(state, store, adds):
+        return {"labels": _cc_insert(state["labels"], adds)}
 
-    def step(prev, batch_df: DataFrame) -> dict:
-        adds = canon(batch_df.where(F.col("op") == "add"))
-        dels = canon(batch_df.where(F.col("op") == "del"))
-        if prev is not None:
-            edges = prev["edges"]
-            labels = prev["labels"]
-        else:
-            edges = adds.limit(0)
-            labels = adds.select(
-                F.col("src").alias("node"),
-                F.col("src").alias("component"),
-            ).limit(0)
-        # deletes first: splits ride the dirty components.  The edge
-        # store is written canonical (a<b) + duplicate-free below, so
-        # canonical_base skips the full-store distinct() — the steady
-        # path never shuffles the accumulated edge set
-        labels = connected_components_decremental(labels, edges, dels, canonical_base=True)
-        edges = edges.join(F.broadcast(dels), ["src", "dst"], "left_anti")
-        # then inserts: fresh nodes as singletons, label pairs contract
-        add_nodes = (
-            adds.select(F.col("src").alias("node"))
-            .union(adds.select(F.col("dst")))
-            .distinct()
-        )
-        fresh = add_nodes.join(labels.select("node"), "node", "left_anti")
-        labels = labels.unionByName(
-            fresh.select("node", F.col("node").alias("component"))
-        )
-        labels = connected_components_incremental(labels, adds)
-        # store update stays DELTA-sized: narrow the store map-side to
-        # add-endpoint-incident rows (broadcast semi join, no store
-        # shuffle), anti-join the batch against that tiny slice, and
-        # append the disjoint remainder — never a distinct() over the
-        # accumulated edge set (the kcore_incremental store pattern,
-        # operators/graph.py).  An edge deleted and re-added in the
-        # same batch left the store in the delete step, so it is in
-        # adds_only and re-enters here (add+del nets to present).
-        adds_only = adds.join(
-            edges.join(
-                F.broadcast(adds.select("src").distinct()), "src", "left_semi"
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        edges = edges.unionByName(adds_only)
-        return {"edges": edges, "labels": labels}
-
-    return _fold(spark, batches, step, "labels")
+    empty = lambda adds: {"labels": _no_labels(adds)}
+    return _fold(spark, batches, _cdc_step(empty, on_delete, on_insert), "labels")
 
 
 def run_stream_gql_subscription(
@@ -1587,6 +1589,10 @@ def run_stream_json_docs(
     return _fold(spark, batches, step, "triples", heavy_batches=True)
 
 
+def _no_triangles(edges: DataFrame) -> DataFrame:
+    return edges.sparkSession.range(1).select(F.lit(0).cast("bigint").alias("n_triangles"))
+
+
 def run_stream_triangle_count(
     spark: SparkSession,
     batches: list[DataFrame],
@@ -1596,59 +1602,35 @@ def run_stream_triangle_count(
     exact inclusion-exclusion identity
     (operators/graph.py:triangle_count_incremental) against the
     accumulated edge set: cost per batch ∝ the BATCH's wedges, never
-    a recount of the whole graph.  State = the stored edge set (the
-    graph itself — already owned by any edge store) plus one number;
-    the final count is exactly the batch `triangle_count` over all
-    edges under any batch split, which is what the shared-closed-form
-    oracle checks.  Duplicate edges across batches are absorbed by
-    the incremental operator's effective-delta anti-join (insert
-    idempotence), so redelivered EDGES are safe; redelivered batches
-    are handled by the streaming checkpoint."""
-    from terminus_server_spark.operators.graph import (
-        triangle_count_incremental,
-    )
-
+    a recount of the whole graph.  State = the canonical edge store
+    (the graph itself — already owned by any edge store) plus one
+    number; the final count is exactly the batch `triangle_count`
+    over all edges under any batch split, which is what the
+    shared-closed-form oracle checks.  Duplicate edges across batches
+    are absorbed by the insert's anti join against the store
+    (``graph._fresh``), so redelivered EDGES are safe; redelivered
+    batches are handled by the streaming checkpoint.  The store is
+    INSERT-ONLY: only the edges it lacks are appended, after the
+    count snapshot is written, so the snapshot's lazy plan reads the
+    pre-batch store."""
     def step(prev, batch_df: DataFrame) -> dict:
-        s = batch_df.sparkSession
-        delta = batch_df.select("src", "dst")
-        if prev is not None:
-            stored = prev["edges"]
-            count = prev["count"]
+        delta = _und(batch_df)
+        if prev is None:
+            stored, count = delta.limit(0), _no_triangles(delta)
         else:
-            stored = delta.limit(0)
-            count = s.range(1).select(
-                F.lit(0).cast("bigint").alias("n_triangles")
-            )
-        new_count = triangle_count_incremental(count, stored, delta)
-        # the edge store is INSERT-ONLY: canonicalize the batch
-        # (batch-sized distinct), narrow the store map-side to
-        # batch-endpoint-incident rows via a broadcast semi join,
-        # anti-join the batch against that slice, and APPEND the
-        # disjoint remainder — the old unionByName+distinct
-        # re-shuffled AND rewrote the whole accumulated edge set
-        # every delivery; now both the shuffle and the store I/O are
-        # delta-sized.  The fold writes the count snapshot BEFORE the
-        # append, so its lazy plan reads the pre-batch store.
-        delta_c = (
-            delta.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        adds_only = delta_c.join(
-            stored.join(
-                F.broadcast(delta_c.select("src").distinct()),
-                "src",
-                "left_semi",
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        return {"count": new_count, "edges": adds_only}
+            stored, count = prev["edges"], prev["count"]
+        return {
+            "count": triangle_count_incremental(count, stored, delta),
+            "edges": _fresh(stored, delta),
+        }
 
     return _fold(spark, batches, step, "count", append=("edges",))
+
+
+def _no_core(adds: DataFrame) -> DataFrame:
+    return adds.select(
+        F.col("src").alias("node"), F.lit(0).cast("long").alias("degree")
+    ).limit(0)
 
 
 def run_stream_kcore(
@@ -1661,61 +1643,26 @@ def run_stream_kcore(
     ``kcore_incremental`` (operators/graph.py) against the stored
     edge set and core: per batch the candidate set is the batch's
     non-core adjacency closure, never a re-peel of the graph.  State
-    = the edge store + the core WITH stored per-node degrees, so the
-    steady-state update is fully delta-sized (candidate-incident
-    aggregates + delta-sized degree increments — the stored core's
-    internal edges are never re-aggregated, per batch or at read);
-    the final core is exactly the batch k-core of all edges under
-    any batch split (the shared oracle's claim).  Duplicate or
-    redelivered edges (either orientation) are absorbed by the
-    canonical edge-set union's distinct."""
-    from terminus_server_spark.operators.graph import kcore_incremental
-
+    = the canonical edge store + the core WITH stored per-node
+    degrees, so the steady-state update is fully delta-sized
+    (candidate-incident aggregates + delta-sized degree increments —
+    the stored core's internal edges are never re-aggregated, per
+    batch or at read); the final core is exactly the batch k-core of
+    all edges under any batch split (the shared oracle's claim).
+    Duplicate or redelivered edges (either orientation) are absorbed
+    by the insert's anti join against the store.  The store is
+    INSERT-ONLY and appended after the core snapshot is written, as
+    in ``run_stream_triangle_count``."""
     def step(prev, batch_df: DataFrame) -> dict:
-        delta = batch_df.select("src", "dst")
-        if prev is not None:
-            stored = prev["edges"]
-            core = prev["core"]
+        delta = _und(batch_df)
+        if prev is None:
+            stored, core = delta.limit(0), _no_core(delta)
         else:
-            stored = delta.limit(0)
-            core = delta.select(
-                F.col("src").alias("node"),
-                F.lit(0).cast("long").alias("degree"),
-            ).limit(0)
-        # the edge store is written canonical (least/greatest +
-        # distinct) — the update needs no full-base shuffle at all
-        new_core = kcore_incremental(
-            core, stored, delta, k=k, canonical_base=True
-        )
-        # store update stays DELTA-sized (the r11 stream_cc_cdc fix
-        # applied here too): canonicalize the batch (batch-sized
-        # distinct), narrow the store map-side to batch-endpoint-
-        # incident rows via a broadcast semi join, anti-join the
-        # batch against that slice, append the disjoint remainder —
-        # never a distinct() over the accumulated edge store
-        delta_c = (
-            delta.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        adds_only = delta_c.join(
-            stored.join(
-                F.broadcast(delta_c.select("src").distinct()),
-                "src",
-                "left_semi",
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        # INSERT-ONLY store: APPEND the disjoint delta instead of
-        # rewriting the whole accumulated edge set every delivery —
-        # store I/O per batch is now delta-sized like the update
-        # itself.  The fold writes the core snapshot (mutable state)
-        # FIRST, so its lazy plan reads the pre-batch store files.
-        return {"core": new_core, "edges": adds_only}
+            stored, core = prev["edges"], prev["core"]
+        return {
+            "core": kcore_incremental(core, stored, delta, k=k),
+            "edges": _fresh(stored, delta),
+        }
 
     # the state already carries the maintained per-node degrees —
     # read it back verbatim, no edge re-aggregation at the sink
@@ -1728,87 +1675,23 @@ def run_stream_kcore_cdc(
     k: int = 3,
 ) -> DataFrame:
     """(node, degree): streaming k-core maintenance over a CDC edge
-    stream — each micro-batch carries ``(op, src, dst)`` rows with
-    op ∈ {add, del}, and the update composes BOTH commit-delta
-    directions (operators/graph.py), the k-core analogue of
-    ``run_stream_cc_cdc``: deletes first through
-    ``kcore_decremental`` (a peel of the old core seeded at the
-    dirty frontier over the post-delete store — core_new ⊆ core_old
-    by maximality), then inserts through ``kcore_incremental``
-    (candidate closure over non-core delta endpoints; the stored
-    core's internal edges are never re-aggregated).  Within one
-    micro-batch the ops are an UNORDERED CDC set: deletes apply
-    against the pre-batch state and inserts after them (add+del of
-    the same edge in one batch nets to the edge present).  State =
-    the canonical edge store + the core WITH stored per-node degrees;
-    both maintenance calls run ``canonical_base=True`` and the store
-    updates are delta-sized (broadcast anti joins + disjoint union —
-    no full-store shuffle anywhere in the steady path).  The final
-    core equals the batch k-core of the NET edge set under any batch
-    split that respects the convention."""
-    from terminus_server_spark.operators.graph import (
-        kcore_decremental,
-        kcore_incremental,
-    )
+    stream (the CDC step: module docstring), the k-core analogue of
+    ``run_stream_cc_cdc``.  Deletes run through ``kcore_decremental``
+    (a peel of the old core seeded at the dirty frontier over the
+    post-delete store — core_new ⊆ core_old by maximality), inserts
+    through ``kcore_incremental`` (candidate closure over non-core
+    delta endpoints; the stored core's internal edges are never
+    re-aggregated).  State = the edge store + the core WITH stored
+    per-node degrees.  The final core equals the batch k-core of the
+    NET edge set."""
+    def on_delete(state, store, dels):
+        return {"core": kcore_decremental(state["core"], store, dels, k=k)}
 
-    def canon(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+    def on_insert(state, store, adds):
+        return {"core": kcore_incremental(state["core"], store, adds, k=k)}
 
-    def step(prev, batch_df: DataFrame) -> dict:
-        adds = canon(batch_df.where(F.col("op") == "add"))
-        dels = canon(batch_df.where(F.col("op") == "del"))
-        if prev is not None:
-            stored = prev["edges"]
-            core = prev["core"]
-        else:
-            stored = adds.limit(0)
-            core = adds.select(
-                F.col("src").alias("node"),
-                F.lit(0).cast("long").alias("degree"),
-            ).limit(0)
-        # all-del or all-add micro-batches skip the other direction's
-        # maintenance pass entirely (each would otherwise still pay
-        # its store-sized seed scan for a no-op delta) — the counts
-        # are batch-sized jobs
-        adds = adds.localCheckpoint(eager=True)
-        dels = dels.localCheckpoint(eager=True)
-        # deletes first: the peel rides the dirty frontier; the store
-        # is canonical by construction so no full-base shuffle
-        if dels.count():
-            core = kcore_decremental(
-                core, stored, dels, k=k, canonical_base=True
-            )
-            stored = stored.join(
-                F.broadcast(dels), ["src", "dst"], "left_anti"
-            )
-        # then inserts over the post-delete state.  An edge deleted
-        # and re-added in the same batch left the store above, so it
-        # is delta-only here and re-enters (add+del nets to present).
-        if adds.count():
-            core = kcore_incremental(
-                core, stored, adds, k=k, canonical_base=True
-            )
-            adds_only = adds.join(
-                stored.join(
-                    F.broadcast(adds.select("src").distinct()),
-                    "src",
-                    "left_semi",
-                ),
-                ["src", "dst"],
-                "left_anti",
-            )
-            stored = stored.unionByName(adds_only)
-        return {"edges": stored, "core": core}
-
-    return _fold(spark, batches, step, "core")
+    empty = lambda adds: {"core": _no_core(adds)}
+    return _fold(spark, batches, _cdc_step(empty, on_delete, on_insert), "core")
 
 
 def run_stream_ktruss_cdc(
@@ -1816,82 +1699,46 @@ def run_stream_ktruss_cdc(
     batches: list[DataFrame],
     k: int = 4,
 ) -> DataFrame:
-    """(a, b): streaming k-truss maintenance over a CDC edge stream —
-    the third member of the CDC composition family (stream_cc_cdc,
-    stream_kcore_cdc): each micro-batch carries ``(op, src, dst)``
-    rows with op ∈ {add, del}; deletes apply first through
+    """(a, b): streaming k-truss maintenance over a CDC edge stream
+    (the CDC step: module docstring).  Deletes run through
     ``ktruss_decremental`` (a peel of the old truss minus the deleted
     edges — truss_new ⊆ truss_old by maximality, support recomputed
-    only along the deletion cascade), then inserts through
+    only along the deletion cascade), inserts through
     ``ktruss_incremental`` (candidate set = the delta's
     shares-a-triangle closure intersected with non-truss edges;
     frozen old truss).  The decremental step needs no edge store at
     all (the truss IS its own support subgraph); the store feeds the
-    incremental step's triangle closure.  Within one micro-batch the
-    ops are an UNORDERED CDC set: deletes against the pre-batch
-    state, inserts after (add+del of one edge nets to present).
-    All-add / all-del batches skip the other direction's pass.  The
-    final truss equals the batch k-truss of the NET edge set under
-    any split respecting the convention."""
-    from terminus_server_spark.operators.graph import (
-        ktruss_decremental,
-        ktruss_incremental,
+    incremental step's triangle closure.  The final truss equals the
+    batch k-truss of the NET edge set."""
+    def on_delete(state, store, dels):
+        return {"truss": ktruss_decremental(state["truss"], dels, k=k)}
+
+    def on_insert(state, store, adds):
+        return {"truss": ktruss_incremental(state["truss"], store, adds, k=k)}
+
+    empty = lambda adds: {"truss": adds.toDF("a", "b").limit(0)}
+    return _fold(spark, batches, _cdc_step(empty, on_delete, on_insert), "truss")
+
+
+def _pagerank_step(edges, ranks, cold_iters, warm_iters, damping) -> DataFrame:
+    """The ranks of ``edges`` after one batch: ``cold_iters`` cold
+    rounds on the first batch (``ranks`` is None), else ``warm_iters``
+    rounds from the carried ranks, fresh nodes seeded at the uniform
+    share 1/|V|.  ``pagerank_warm`` starts from the carried ranks of
+    the current node set only, so a node that lost its last edge
+    stops receiving teleport mass and stops contributing."""
+    if ranks is None:
+        return pagerank(edges, damping=damping, iters=cold_iters)
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
-
-    def canon(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    def step(prev, batch_df: DataFrame) -> dict:
-        adds = canon(batch_df.where(F.col("op") == "add"))
-        dels = canon(batch_df.where(F.col("op") == "del"))
-        adds = adds.localCheckpoint(eager=True)
-        dels = dels.localCheckpoint(eager=True)
-        if prev is not None:
-            stored = prev["edges"]
-            truss = prev["truss"]
-        else:
-            stored = adds.limit(0)
-            truss = adds.select(
-                F.col("src").alias("a"), F.col("dst").alias("b")
-            ).limit(0)
-        if dels.count():
-            truss = ktruss_decremental(
-                truss, dels.select("src", "dst"), k=k
-            )
-            stored = stored.join(
-                F.broadcast(dels), ["src", "dst"], "left_anti"
-            )
-        if adds.count():
-            # the store is canonical + duplicate-free by construction
-            # — no full-store distinct inside the maintenance call
-            truss = ktruss_incremental(
-                truss,
-                stored,
-                adds.select("src", "dst"),
-                k=k,
-                canonical_base=True,
-            )
-            adds_only = adds.join(
-                stored.join(
-                    F.broadcast(adds.select("src").distinct()),
-                    "src",
-                    "left_semi",
-                ),
-                ["src", "dst"],
-                "left_anti",
-            )
-            stored = stored.unionByName(adds_only)
-        return {"edges": stored, "truss": truss}
-
-    return _fold(spark, batches, step, "truss")
+    n_new = nodes.count()
+    fresh = nodes.join(ranks.select("node"), "node", "left_anti")
+    seeded = ranks.unionByName(fresh.select("node", F.lit(1.0 / n_new).alias("rank")))
+    return pagerank_warm(edges, seeded, damping=damping, iters=warm_iters)
 
 
 def run_stream_pagerank(
@@ -1904,177 +1751,70 @@ def run_stream_pagerank(
     """(node, rank): streaming PageRank maintenance — the power
     method's warm-restart pattern (operators/graph.py:pagerank_warm;
     Langville & Meyer) run per micro-batch over the accumulated
-    DIRECTED edge store: batch 1 pays ``cold_iters`` cold iterations,
+    DIRECTED edge store (``graph._directed``: self-loops count, as in
+    batch ``pagerank``): batch 1 pays ``cold_iters`` cold iterations,
     every later batch restarts from the carried ranks and runs only
     ``warm_iters`` — the versioned-store "recompute only what moved"
     schedule, streaming.  Fresh nodes entering with a batch seed at
     the uniform share 1/|V_new| before the warm rounds (the carried
     table must cover every node of the updated graph).  The edge
-    store update is delta-sized (broadcast anti-join + disjoint
-    union, directed (src,dst) grain).  Arithmetic is the shared
-    floor-scaled fixed-point loop, so the final ranks replay
-    bit-exactly from the unrolled cold+warm schedule — that replay IS
-    the oracle."""
-    from terminus_server_spark.operators.graph import pagerank, pagerank_warm
-
+    store update is delta-sized (``graph._fresh``).  Arithmetic is
+    the shared floor-scaled fixed-point loop, so the final ranks
+    replay bit-exactly from the unrolled cold+warm schedule — that
+    replay IS the oracle."""
 
     def step(prev, batch_df: DataFrame) -> dict:
-        adds = (
-            batch_df.select("src", "dst")
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if prev is not None:
-            stored = prev["edges"]
-            ranks = prev["ranks"]
-        else:
-            stored, ranks = adds.limit(0), None
-        adds_only = adds.join(
-            stored.join(
-                F.broadcast(adds.select("src").distinct()), "src", "left_semi"
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        edges = stored.unionByName(adds_only)
-        if ranks is None:
-            new_ranks = pagerank(edges, damping=damping, iters=cold_iters)
-        else:
-            nodes = (
-                edges.select(F.col("src").alias("node"))
-                .union(edges.select(F.col("dst")))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            n_new = nodes.count()
-            fresh = nodes.join(ranks.select("node"), "node", "left_anti")
-            seeded = ranks.unionByName(
-                fresh.select("node", F.lit(1.0 / n_new).alias("rank"))
-            )
-            new_ranks = pagerank_warm(
-                edges, seeded, damping=damping, iters=warm_iters
-            )
-        return {"edges": edges, "ranks": new_ranks}
+        adds = _directed(batch_df).localCheckpoint(eager=True)
+        stored = adds.limit(0) if prev is None else prev["edges"]
+        edges = stored.unionByName(_fresh(stored, adds))
+        ranks = None if prev is None else prev["ranks"]
+        return {
+            "edges": edges,
+            "ranks": _pagerank_step(edges, ranks, cold_iters, warm_iters, damping),
+        }
 
     return _fold(spark, batches, step, "ranks")
 
 
 def run_stream_msf_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFrame:
     """(a, b, w): streaming minimum-spanning-forest maintenance over
-    a CDC edge stream — each micro-batch carries ``(op, src, dst, w)``
-    rows with op ∈ {add, del}, and the update composes BOTH
-    commit-delta directions (operators/graph.py), completing the CDC
-    maintenance family beside ``run_stream_cc_cdc`` /
-    ``run_stream_kcore_cdc`` / ``run_stream_ktruss_cdc``: deletes
-    first through ``msf_decremental`` (per-component locality — only
-    the DIRTY components re-run Borůvka over their post-delete edges,
-    so replacement edges rejoin exactly; the base store is scanned
-    map-side, never shuffled), then inserts through
-    ``msf_incremental`` (the Eppstein sparsification identity
-    MSF(E ∪ Δ) = MSF(MSF(E) ∪ Δ) — Borůvka re-runs over only the
-    carried forest + the batch, never the accumulated store).  The
-    decremental step needs base-component labels; they are CARRIED
-    STATE maintained by the same delta-sized CC pair
-    (``connected_components_decremental`` / ``_incremental``, both
-    riding the dirty components / the batch meta-graph) rather than
-    recomputed — no per-batch pass over the store or the forest.
-    Within one micro-batch the ops are an UNORDERED CDC set: deletes
-    apply against the pre-batch state and inserts after them (add+del
-    of one edge in a batch nets to the edge present).  State = the
-    canonical weighted edge store + the forest + the labels; all
-    store updates are delta-sized (broadcast anti joins + disjoint
-    union).  With globally distinct weights the final forest equals
-    the batch ``msf_boruvka`` of the NET edge set under any batch
-    split that respects the convention."""
-    from terminus_server_spark.operators.graph import (
-        connected_components_decremental,
-        connected_components_incremental,
-        msf_decremental,
-        msf_incremental,
-    )
+    a CDC edge stream of ``(op, src, dst, w)`` rows (the CDC step:
+    module docstring; the store is ``graph._und_w``'s, so a pair
+    restated in one batch keeps its minimum weight).  Deletes run
+    through ``msf_decremental`` (per-component locality — only the
+    DIRTY components re-run Borůvka over their post-delete edges, so
+    replacement edges rejoin exactly; the base store is scanned
+    map-side, never shuffled), inserts through ``msf_incremental``
+    (the Eppstein sparsification identity MSF(E ∪ Δ) = MSF(MSF(E) ∪
+    Δ) — Borůvka re-runs over only the carried forest + the batch,
+    never the accumulated store).  The decremental step needs
+    base-component labels; they are CARRIED STATE maintained by the
+    same delta-sized CC pair (``connected_components_decremental`` /
+    ``_incremental``, both riding the dirty components / the batch
+    meta-graph) rather than recomputed — no per-batch pass over the
+    store or the forest.  State = the weighted edge store + the
+    forest + the labels.  With globally distinct weights the final
+    forest equals the batch ``msf_boruvka`` of the NET edge set."""
+    def empty(adds):
+        return {"forest": adds.toDF("a", "b", "w").limit(0), "labels": _no_labels(adds)}
 
-    def canon(e, keep_w):
-        p = (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-                F.col("w").cast("double").alias("w"),
-            )
-            .where(F.col("src") != F.col("dst"))
-        )
-        if keep_w:
-            # batch-sized dedupe; min(w) keeps the pick deterministic
-            # if a batch restates one pair twice
-            return p.groupBy("src", "dst").agg(F.min("w").alias("w"))
-        return p.select("src", "dst").distinct()
+    def on_delete(state, store, dels):
+        # both maintainers read the SAME pre-delete labels
+        labels = state["labels"]
+        return {
+            "forest": msf_decremental(state["forest"], labels, store, dels),
+            "labels": connected_components_decremental(
+                labels, store.select("src", "dst"), dels
+            ),
+        }
 
-    def step(prev, batch_df: DataFrame) -> dict:
-        adds = canon(batch_df.where(F.col("op") == "add"), keep_w=True)
-        dels = canon(batch_df.where(F.col("op") == "del"), keep_w=False)
-        if prev is not None:
-            stored = prev["edges"]
-            forest = prev["forest"]
-            labels = prev["labels"]
-        else:
-            stored = adds.limit(0)
-            forest = adds.select(
-                F.col("src").alias("a"), F.col("dst").alias("b"), "w"
-            ).limit(0)
-            labels = adds.select(
-                F.col("src").alias("node"), F.col("src").alias("component")
-            ).limit(0)
-        adds = adds.localCheckpoint(eager=True)
-        dels = dels.localCheckpoint(eager=True)
-        # deletes first: dirty components re-run Borůvka over their
-        # post-delete store slice (replacement edges rejoin); labels
-        # split via the CC decremental path over the SAME pre-delete
-        # labels.  canonical_base=True — the store is written
-        # canonical + duplicate-free, no full-store shuffle.
-        if dels.count():
-            forest = msf_decremental(
-                forest,
-                labels,
-                stored,
-                dels.withColumn("w", F.lit(0.0)),
-            )
-            labels = connected_components_decremental(
-                labels,
-                stored.select("src", "dst"),
-                dels,
-                canonical_base=True,
-            )
-            stored = stored.join(
-                F.broadcast(dels), ["src", "dst"], "left_anti"
-            )
-        # then inserts over the post-delete state: sparsification
-        # re-runs Borůvka over forest ∪ Δ only; labels contract via
-        # the batch meta-graph, fresh nodes entering as singletons.
-        if adds.count():
-            forest = msf_incremental(forest, adds)
-            add_nodes = (
-                adds.select(F.col("src").alias("node"))
-                .union(adds.select(F.col("dst")))
-                .distinct()
-            )
-            fresh = add_nodes.join(labels.select("node"), "node", "left_anti")
-            labels = labels.unionByName(
-                fresh.select("node", F.col("node").alias("component"))
-            )
-            labels = connected_components_incremental(labels, adds.select("src", "dst"))
-            adds_only = adds.join(
-                stored.join(
-                    F.broadcast(adds.select("src").distinct()),
-                    "src",
-                    "left_semi",
-                ),
-                ["src", "dst"],
-                "left_anti",
-            )
-            stored = stored.unionByName(adds_only)
-        return {"edges": stored, "forest": forest, "labels": labels}
+    def on_insert(state, store, adds):
+        return {
+            "forest": msf_incremental(state["forest"], adds),
+            "labels": _cc_insert(state["labels"], adds),
+        }
 
+    step = _cdc_step(empty, on_delete, on_insert, _und_w)
     return _fold(spark, batches, step, "forest")
 
 
@@ -2083,75 +1823,22 @@ def run_stream_triangles_cdc(
     batches: list[DataFrame],
 ) -> DataFrame:
     """(n_triangles): streaming triangle-count maintenance over a CDC
-    edge stream — each micro-batch carries ``(op, src, dst)`` rows
-    with op ∈ {add, del}, applied through ONE
-    ``triangle_count_incremental`` call per batch (the mixed
-    inclusion-exclusion identity, operators/graph.py: deletions
-    subtract within E_old via the mirrored terms FIRST, then
-    insertions count against the post-delete edge set — so an edge
-    deleted and re-added in one batch cancels exactly, the same
-    within-batch convention as the other CDC runners).  Per-batch
-    cost rides the DELTA's wedge neighborhood, never a recount; the
-    base passes ``canonical_base=True`` (the store is written
-    canonical + duplicate-free) and the store update is delta-sized
-    (broadcast anti joins + disjoint union) — no full-store shuffle
-    anywhere in the steady path, unlike the insert-only
-    ``run_stream_triangle_count`` whose union+distinct store update
-    predates the pattern.  The final count equals the batch
-    ``triangle_count`` of the NET edge set under any batch split."""
-    from terminus_server_spark.operators.graph import (
-        triangle_count_incremental,
-    )
+    edge stream (the CDC step: module docstring).  Deletes run
+    through ``triangle_count_decremental`` (the triangles of the
+    pre-batch store through a deleted edge subtract), inserts through
+    ``triangle_count_incremental`` against the post-delete store, so
+    an edge deleted and re-added in one batch cancels exactly.
+    Per-batch cost rides the DELTA's wedge neighborhood, never a
+    recount.  The final count equals the batch ``triangle_count`` of
+    the NET edge set."""
+    def on_delete(state, store, dels):
+        return {"count": triangle_count_decremental(state["count"], store, dels)}
 
-    def canon(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+    def on_insert(state, store, adds):
+        return {"count": triangle_count_incremental(state["count"], store, adds)}
 
-    def step(prev, batch_df: DataFrame) -> dict:
-        s = batch_df.sparkSession
-        adds = canon(batch_df.where(F.col("op") == "add"))
-        dels = canon(batch_df.where(F.col("op") == "del"))
-        if prev is not None:
-            stored = prev["edges"]
-            count = prev["count"]
-        else:
-            stored = adds.limit(0)
-            count = s.range(1).select(
-                F.lit(0).cast("bigint").alias("n_triangles")
-            )
-        adds = adds.localCheckpoint(eager=True)
-        dels = dels.localCheckpoint(eager=True)
-        count = triangle_count_incremental(
-            count, stored, adds, delete_edges=dels, canonical_base=True
-        )
-        # delta-sized store update: deletes leave first (so a
-        # same-batch re-add is delta-only below and re-enters), adds
-        # append against the narrowed add-incident slice
-        if dels.count():
-            stored = stored.join(
-                F.broadcast(dels), ["src", "dst"], "left_anti"
-            )
-        if adds.count():
-            adds_only = adds.join(
-                stored.join(
-                    F.broadcast(adds.select("src").distinct()),
-                    "src",
-                    "left_semi",
-                ),
-                ["src", "dst"],
-                "left_anti",
-            )
-            stored = stored.unionByName(adds_only)
-        return {"edges": stored, "count": count}
-
-    return _fold(spark, batches, step, "count")
+    empty = lambda adds: {"count": _no_triangles(adds)}
+    return _fold(spark, batches, _cdc_step(empty, on_delete, on_insert), "count")
 
 
 def run_stream_pagerank_cdc(
@@ -2162,88 +1849,44 @@ def run_stream_pagerank_cdc(
     damping: float = 0.85,
 ) -> DataFrame:
     """(node, rank): streaming PageRank maintenance over a CDC edge
-    stream — ``(op, src, dst)`` rows with op ∈ {add, del}, the
-    delete-capable sibling of ``run_stream_pagerank`` (same
-    warm-restart schedule: ``cold_iters`` on batch 1, ``warm_iters``
-    from the carried ranks per later batch).  Deletes apply to the
-    DIRECTED store first (broadcast anti join), adds after
-    (delta-sized append), matching the CDC family's within-batch
-    convention.  The carried rank table is conformed to the UPDATED
-    node set before the warm rounds: VANISHED nodes (lost their last
-    edge) are dropped — they must stop receiving teleport mass and
-    stop contributing — and fresh nodes seed at 1/|V_new|; the
-    node-set conform is one semi join of the |V|-sized rank table,
-    the same order of work as the warm iteration itself.  Arithmetic
-    is the shared floor-scaled fixed-point loop, so the final ranks
+    stream — the delete-capable sibling of ``run_stream_pagerank``
+    (same DIRECTED store, self-loops kept, and the same warm-restart
+    schedule).  The CDC step (module docstring) updates the store;
+    the ranks follow from the updated store, cold on batch 1 and warm
+    from the carried ranks afterwards (``_pagerank_step``: vanished
+    nodes drop out, fresh nodes seed at 1/|V_new|).  Arithmetic is
+    the shared floor-scaled fixed-point loop, so the final ranks
     replay bit-exactly from the unrolled cold+warm schedule over the
     evolving net edge sets — that replay IS the oracle."""
-    from terminus_server_spark.operators.graph import pagerank, pagerank_warm
-
-
-    def canon(e):
-        return (
-            e.select("src", "dst")
-            .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
+    keep = lambda state, store, delta: state
+    cdc = _cdc_step(lambda adds: {}, keep, keep, _directed)
 
     def step(prev, batch_df: DataFrame) -> dict:
-        adds = canon(batch_df.where(F.col("op") == "add")).localCheckpoint(
-            eager=True
-        )
-        dels = canon(batch_df.where(F.col("op") == "del")).localCheckpoint(
-            eager=True
-        )
-        if prev is not None:
-            stored = prev["edges"]
-            ranks = prev["ranks"]
-        else:
-            stored, ranks = adds.limit(0), None
-        if dels.count():
-            stored = stored.join(
-                F.broadcast(dels), ["src", "dst"], "left_anti"
-            )
-        adds_only = adds.join(
-            stored.join(
-                F.broadcast(adds.select("src").distinct()), "src", "left_semi"
-            ),
-            ["src", "dst"],
-            "left_anti",
-        )
-        edges = stored.unionByName(adds_only)
-        if ranks is None:
-            new_ranks = pagerank(edges, damping=damping, iters=cold_iters)
-        else:
-            nodes = (
-                edges.select(F.col("src").alias("node"))
-                .union(edges.select(F.col("dst")))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            n_new = nodes.count()
-            # conform the carried table to the updated node set:
-            # vanished nodes drop (semi join), fresh nodes seed
-            carried = ranks.join(nodes, "node", "left_semi")
-            fresh = nodes.join(ranks.select("node"), "node", "left_anti")
-            seeded = carried.unionByName(
-                fresh.select("node", F.lit(1.0 / n_new).alias("rank"))
-            )
-            new_ranks = pagerank_warm(
-                edges, seeded, damping=damping, iters=warm_iters
-            )
-        return {"edges": edges, "ranks": new_ranks}
+        edges = cdc(prev, batch_df)["edges"]
+        ranks = None if prev is None else prev["ranks"]
+        return {
+            "edges": edges,
+            "ranks": _pagerank_step(edges, ranks, cold_iters, warm_iters, damping),
+        }
 
     return _fold(spark, batches, step, "ranks")
 
 
+def _ends(labels: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A label table as (src, _ls) and (dst, _ld) lookups."""
+    return (
+        labels.select(F.col("node").alias("src"), F.col("component").alias("_ls")),
+        labels.select(F.col("node").alias("dst"), F.col("component").alias("_ld")),
+    )
+
+
 def run_stream_scc_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFrame:
     """(node, component): streaming STRONGLY CONNECTED component
-    maintenance over a CDC edge stream — ``(op, src, dst)`` DIRECTED
-    rows, composing ``scc_decremental`` THEN ``scc_incremental``
-    per micro-batch (the directed completion of ``run_stream_cc_cdc``
-    and the last member of the CDC maintenance family).  State = the
-    directed edge store + the labels + the CONDENSATION, and the
+    maintenance over a CDC edge stream of DIRECTED rows (the CDC
+    step: module docstring, over the ``_directed`` store, so a node
+    whose only edge is a self-loop keeps its label), composing
+    ``scc_decremental`` THEN ``scc_incremental`` per micro-batch.
+    State = the edge store + the labels + the CONDENSATION, and the
     condensation is maintained INCREMENTALLY alongside the labels —
     never recomputed from the store:
 
@@ -2256,195 +1899,111 @@ def run_stream_scc_cdc(spark: SparkSession, batches: list[DataFrame]) -> DataFra
       label relabel itself) and the delta's inter-class pairs union
       in; self-loops (merged-away pairs) drop.
 
-    Within a batch, deletes apply against the pre-batch state and
-    inserts after them.  The final labels equal batch SCC of the NET
-    directed edge set under any batch split respecting that
-    convention."""
-    from terminus_server_spark.operators.graph import (
-        scc_decremental,
-        scc_incremental,
-    )
+    The final labels equal batch SCC of the NET directed edge set."""
+    def empty(adds):
+        return {
+            "labels": _no_labels(adds),
+            "cond": adds.toDF("src_comp", "dst_comp").limit(0),
+        }
 
-    def canon(e):
-        return (
-            e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-            .where(F.col("src") != F.col("dst"))
-            .select("src", "dst")
+    def on_delete(state, store, dels):
+        labels, cond = state["labels"], state["cond"]
+        lab_s, lab_d = _ends(labels)
+        real = store.join(F.broadcast(dels), ["src", "dst"], "left_semi")
+        hit = real.join(lab_s, "src").join(lab_d, "dst")
+        touched = (
+            hit.select(F.col("_ls").alias("component"))
+            .union(hit.select(F.col("_ld")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        new_labels = scc_decremental(labels, store, dels).localCheckpoint(eager=True)
+        # condensation maintenance: recompute only rows touching a
+        # touched class, from the post-delete touched-node-incident
+        # slice of the store
+        post = _delete(store, dels)
+        touched_nodes = labels.join(
+            F.broadcast(touched), "component", "left_semi"
+        ).select("node")
+        slice_ = post.join(
+            F.broadcast(touched_nodes.select(F.col("node").alias("src"))),
+            "src",
+            "left_semi",
+        ).unionByName(
+            post.join(
+                F.broadcast(touched_nodes.select(F.col("node").alias("dst"))),
+                "dst",
+                "left_semi",
+            )
+        )
+        nl_s, nl_d = _ends(new_labels)
+        recomputed = (
+            slice_.join(nl_s, "src")
+            .join(nl_d, "dst")
+            .where(F.col("_ls") != F.col("_ld"))
+            .select(F.col("_ls").alias("src_comp"), F.col("_ld").alias("dst_comp"))
             .distinct()
         )
+        untouched_cond = cond.join(
+            F.broadcast(touched.select(F.col("component").alias("src_comp"))),
+            "src_comp",
+            "left_anti",
+        ).join(
+            F.broadcast(touched.select(F.col("component").alias("dst_comp"))),
+            "dst_comp",
+            "left_anti",
+        )
+        cond = (
+            untouched_cond.select("src_comp", "dst_comp")
+            .unionByName(recomputed)
+            .distinct()
+        )
+        return {"labels": new_labels, "cond": cond}
 
-    def step(prev, batch_df: DataFrame) -> dict:
-        adds = canon(batch_df.where(F.col("op") == "add")).localCheckpoint(
-            eager=True
-        )
-        dels = canon(batch_df.where(F.col("op") == "del")).localCheckpoint(
-            eager=True
-        )
-        if prev is not None:
-            stored = prev["edges"]
-            labels = prev["labels"]
-            cond = prev["cond"]
-        else:
-            stored = adds.limit(0)
-            labels = adds.select(
-                F.col("src").alias("node"), F.col("src").alias("component")
-            ).limit(0)
-            cond = adds.select(
-                F.col("src").alias("src_comp"), F.col("dst").alias("dst_comp")
-            ).limit(0)
-        lab_s = labels.select(
-            F.col("node").alias("src"), F.col("component").alias("_ls")
-        )
-        lab_d = labels.select(
-            F.col("node").alias("dst"), F.col("component").alias("_ld")
-        )
-        if dels.count():
-            real = stored.join(F.broadcast(dels), ["src", "dst"], "left_semi")
-            touched = (
-                real.join(lab_s, "src")
-                .join(lab_d, "dst")
-                .select(F.col("_ls").alias("component"))
-                .union(
-                    real.join(lab_s, "src")
-                    .join(lab_d, "dst")
-                    .select(F.col("_ld"))
-                )
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            new_labels = scc_decremental(
-                labels, stored, dels, canonical_base=True
-            ).localCheckpoint(eager=True)
-            stored = stored.join(
-                F.broadcast(dels), ["src", "dst"], "left_anti"
-            )
-            # condensation maintenance: recompute only rows touching
-            # a touched class, from the touched-node-incident slice
-            touched_nodes = labels.join(
-                F.broadcast(touched), "component", "left_semi"
-            ).select("node")
-            nl_s = new_labels.select(
-                F.col("node").alias("src"), F.col("component").alias("_ns")
-            )
-            nl_d = new_labels.select(
-                F.col("node").alias("dst"), F.col("component").alias("_nd")
-            )
-            slice_ = stored.join(
-                F.broadcast(touched_nodes.select(F.col("node").alias("src"))),
-                "src",
-                "left_semi",
-            ).unionByName(
-                stored.join(
-                    F.broadcast(
-                        touched_nodes.select(F.col("node").alias("dst"))
-                    ),
-                    "dst",
-                    "left_semi",
-                )
-            )
-            recomputed = (
-                slice_.join(nl_s, "src")
-                .join(nl_d, "dst")
-                .where(F.col("_ns") != F.col("_nd"))
-                .select(
-                    F.col("_ns").alias("src_comp"),
-                    F.col("_nd").alias("dst_comp"),
-                )
-                .distinct()
-            )
-            untouched_cond = cond.join(
-                F.broadcast(touched.select(F.col("component").alias("src_comp"))),
-                "src_comp",
-                "left_anti",
-            ).join(
-                F.broadcast(touched.select(F.col("component").alias("dst_comp"))),
-                "dst_comp",
-                "left_anti",
-            )
-            cond = untouched_cond.select("src_comp", "dst_comp").unionByName(
-                recomputed
-            ).distinct()
-            labels = new_labels
-            lab_s = labels.select(
-                F.col("node").alias("src"), F.col("component").alias("_ls")
-            )
-            lab_d = labels.select(
-                F.col("node").alias("dst"), F.col("component").alias("_ld")
-            )
-        if adds.count():
-            new_labels = scc_incremental(labels, cond, adds).localCheckpoint(eager=True)
-            # merge relabel map: classes whose label changed
-            relab = (
-                labels.select(F.col("component").alias("old"))
-                .distinct()
-                .join(
-                    new_labels.select(
-                        F.col("node").alias("old"),
-                        F.col("component").alias("new"),
-                    ),
-                    "old",
-                    "left_outer",
-                )
-                .select(
-                    "old", F.coalesce("new", F.col("old")).alias("new")
-                )
-            )
-            cond_m = (
-                cond.join(
-                    relab.select(
-                        F.col("old").alias("src_comp"),
-                        F.col("new").alias("_ns"),
-                    ),
-                    "src_comp",
-                    "left_outer",
-                )
-                .join(
-                    relab.select(
-                        F.col("old").alias("dst_comp"),
-                        F.col("new").alias("_nd"),
-                    ),
-                    "dst_comp",
-                    "left_outer",
-                )
-                .select(
-                    F.coalesce(F.col("_ns"), F.col("src_comp")).alias(
-                        "src_comp"
-                    ),
-                    F.coalesce(F.col("_nd"), F.col("dst_comp")).alias(
-                        "dst_comp"
-                    ),
-                )
-            )
-            nl_s = new_labels.select(
-                F.col("node").alias("src"), F.col("component").alias("_ns")
-            )
-            nl_d = new_labels.select(
-                F.col("node").alias("dst"), F.col("component").alias("_nd")
-            )
-            delta_cond = (
-                adds.join(nl_s, "src")
-                .join(nl_d, "dst")
-                .select(
-                    F.col("_ns").alias("src_comp"),
-                    F.col("_nd").alias("dst_comp"),
-                )
-            )
-            cond = (
-                cond_m.unionByName(delta_cond)
-                .where(F.col("src_comp") != F.col("dst_comp"))
-                .distinct()
-            )
-            labels = new_labels
-            adds_only = adds.join(
-                stored.join(
-                    F.broadcast(adds.select("src").distinct()),
-                    "src",
-                    "left_semi",
+    def on_insert(state, store, adds):
+        labels, cond = state["labels"], state["cond"]
+        new_labels = scc_incremental(labels, cond, adds).localCheckpoint(eager=True)
+        # merge relabel map: classes whose label changed
+        relab = (
+            labels.select(F.col("component").alias("old"))
+            .distinct()
+            .join(
+                new_labels.select(
+                    F.col("node").alias("old"), F.col("component").alias("new")
                 ),
-                ["src", "dst"],
-                "left_anti",
+                "old",
+                "left_outer",
             )
-            stored = stored.unionByName(adds_only)
-        return {"edges": stored, "labels": labels, "cond": cond}
+            .select("old", F.coalesce("new", F.col("old")).alias("new"))
+        )
+        cond_m = (
+            cond.join(
+                relab.select(F.col("old").alias("src_comp"), F.col("new").alias("_ns")),
+                "src_comp",
+                "left_outer",
+            )
+            .join(
+                relab.select(F.col("old").alias("dst_comp"), F.col("new").alias("_nd")),
+                "dst_comp",
+                "left_outer",
+            )
+            .select(
+                F.coalesce(F.col("_ns"), F.col("src_comp")).alias("src_comp"),
+                F.coalesce(F.col("_nd"), F.col("dst_comp")).alias("dst_comp"),
+            )
+        )
+        nl_s, nl_d = _ends(new_labels)
+        delta_cond = (
+            adds.join(nl_s, "src")
+            .join(nl_d, "dst")
+            .select(F.col("_ls").alias("src_comp"), F.col("_ld").alias("dst_comp"))
+        )
+        cond = (
+            cond_m.unionByName(delta_cond)
+            .where(F.col("src_comp") != F.col("dst_comp"))
+            .distinct()
+        )
+        return {"labels": new_labels, "cond": cond}
 
+    step = _cdc_step(empty, on_delete, on_insert, _directed)
     return _fold(spark, batches, step, "labels")

@@ -4866,7 +4866,9 @@ def test_triangle_count_mixed_delta_equals_batch(spark):
     import random
 
     from terminus_server_spark.operators.graph import (
+        _delete,
         triangle_count,
+        triangle_count_decremental,
         triangle_count_incremental,
     )
 
@@ -4890,8 +4892,8 @@ def test_triangle_count_mixed_delta_equals_batch(spark):
         ddf = spark.createDataFrame(dels, "src long, dst long")
         final = sorted((set(base) - set(dels)) | set(adds))
         fdf = spark.createDataFrame(final, "src long, dst long")
-        old = triangle_count(bdf)
-        got = triangle_count_incremental(old, bdf, adf, delete_edges=ddf)
+        old = triangle_count_decremental(triangle_count(bdf), bdf, ddf)
+        got = triangle_count_incremental(old, _delete(bdf, ddf), adf)
         want = triangle_count(fdf)
         assert got.collect()[0].n_triangles == want.collect()[0].n_triangles, seed
 

@@ -690,3 +690,50 @@ def test_only_compile_path_picks_a_closure_plan():
         if needle in src.read_text()
     ]
     assert hits == []
+
+
+def test_one_canonical_edge_store():
+    """Every graph maintainer and stream harness shares one canonical
+    edge store: ``graph._pairs`` alone orders an undirected pair, and
+    ``graph._fresh`` alone narrows the store to the adds' rows before
+    the anti join.  No function takes a flag saying its base is
+    canonical (the base always is), and neither ``graph.py`` nor
+    ``events.py`` defines its own ``und``/``canon``."""
+    import ast
+    import pathlib
+    import re
+
+    import terminus_server_spark
+
+    root = pathlib.Path(terminus_server_spark.__file__).parent
+    owned = {
+        r'F\.least\("src", "dst"\)': ("operators/graph.py", "_pairs"),
+        r'\.select\("(?:src|a)"\)\.distinct\(\)\),\s*"(?:src|a)",\s*"left_semi"':
+            ("operators/graph.py", "_fresh"),
+    }
+    hits = []
+    for src in sorted(root.rglob("*.py")):
+        rel = src.relative_to(root).as_posix()
+        text = src.read_text()
+        tree = ast.parse(text)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.arg) and node.arg == "canonical_base":
+                hits.append(f"{rel}:{node.lineno} canonical_base")
+            if (
+                rel in ("operators/graph.py", "streaming/events.py")
+                and isinstance(node, ast.FunctionDef)
+                and node.name in ("und", "canon")
+            ):
+                hits.append(f"{rel}:{node.lineno} def {node.name}")
+        for pattern, (home, fn) in owned.items():
+            n = len(re.findall(pattern, text))
+            if rel == home:
+                body = "".join(
+                    ast.get_source_segment(text, f)
+                    for f in tree.body
+                    if isinstance(f, ast.FunctionDef) and f.name == fn
+                )
+                n -= len(re.findall(pattern, body))
+            if n:
+                hits.append(f"{rel}: {n} x {pattern}")
+    assert hits == []

@@ -24,6 +24,12 @@ def test_stream_cc_cdc_split_invariance(spark):
             for r in run_stream_cc_cdc(spark, three).collect()}
     got2 = {(r.node, r.component)
             for r in run_stream_cc_cdc(spark, two).collect()}
+    # a dirty batch 1: a reversed duplicate, a null endpoint, a
+    # self-loop and an edge added twice change nothing
+    junk = [("add", 1, 0), ("add", 3, None), ("add", 5, 5), ("add", 2, 3)]
+    dirty = [spark.createDataFrame(b, schema) for b in (b1 + junk, b2, b3)]
+    got_dirty = {(r.node, r.component)
+                 for r in run_stream_cc_cdc(spark, dirty).collect()}
     net = [(i, i + 1) for i in range(12) if (i, i + 1) != (8, 9)]
     want = {(r.node, r.component)
             for r in connected_components(
@@ -31,6 +37,7 @@ def test_stream_cc_cdc_split_invariance(spark):
     want |= {(20, 20), (21, 21)}  # vanished pair stays as singletons
     assert got3 == want
     assert got2 == want
+    assert got_dirty == want
 
 
 def test_stream_kcore_cdc_split_invariance(spark):
@@ -62,6 +69,12 @@ def test_stream_kcore_cdc_split_invariance(spark):
             for r in run_stream_kcore_cdc(spark, three, k=3).collect()}
     got2 = {(r.node, r.degree)
             for r in run_stream_kcore_cdc(spark, two, k=3).collect()}
+    # a dirty batch 1: a reversed duplicate, a null endpoint, a
+    # self-loop and an edge added twice change nothing
+    junk = [("add", 1, 0), ("add", 3, None), ("add", 4, 4), ("add", 10, 11)]
+    dirty = [spark.createDataFrame(b, schema) for b in (b1 + junk, b2, b3)]
+    got_dirty = {(r.node, r.degree)
+                 for r in run_stream_kcore_cdc(spark, dirty, k=3).collect()}
     net = [(i, j) for i in range(5) for j in range(i + 1, 5)
            if (i, j) != (0, 2)] + [
         (i, j) for i in range(10, 14) for j in range(i + 1, 14)
@@ -72,6 +85,7 @@ def test_stream_kcore_cdc_split_invariance(spark):
             ).collect()}
     assert got3 == want
     assert got2 == want
+    assert got_dirty == want
 
 
 def test_stream_ktruss_cdc_split_invariance(spark):
@@ -102,6 +116,12 @@ def test_stream_ktruss_cdc_split_invariance(spark):
             for r in run_stream_ktruss_cdc(spark, three, k=4).collect()}
     got2 = {(r.a, r.b)
             for r in run_stream_ktruss_cdc(spark, two, k=4).collect()}
+    # a dirty batch 1: a reversed duplicate, a null endpoint, a
+    # self-loop and an edge added twice change nothing
+    junk = [("add", 1, 0), ("add", 3, None), ("add", 4, 4), ("add", 10, 11)]
+    dirty = [spark.createDataFrame(b, schema) for b in (b1 + junk, b2, b3)]
+    got_dirty = {(r.a, r.b)
+                 for r in run_stream_ktruss_cdc(spark, dirty, k=4).collect()}
     net = [(i, j) for i in range(5) for j in range(i + 1, 5)
            if (i, j) != (3, 4)] + [
         (i, j) for i in range(10, 14) for j in range(i + 1, 14)
@@ -112,6 +132,7 @@ def test_stream_ktruss_cdc_split_invariance(spark):
             ).collect()}
     assert got3 == want
     assert got2 == want
+    assert got_dirty == want
 
 
 def test_stream_msf_cdc_split_invariance(spark):
@@ -146,6 +167,14 @@ def test_stream_msf_cdc_split_invariance(spark):
             for r in run_stream_msf_cdc(spark, three).collect()}
     got2 = {(r.a, r.b, r.w)
             for r in run_stream_msf_cdc(spark, two).collect()}
+    # a dirty batch 1: a reversed duplicate (its heavier weight loses
+    # to the pair's minimum), a null endpoint, a self-loop and an edge
+    # added twice change nothing
+    junk = [("add", 1, 0, 7.0), ("add", 3, None, 9.0),
+            ("add", 2, 2, 0.25), ("add", 11, 12, 22.0)]
+    dirty = [spark.createDataFrame(b, schema) for b in (b1 + junk, b2, b3)]
+    got_dirty = {(r.a, r.b, r.w)
+                 for r in run_stream_msf_cdc(spark, dirty).collect()}
     net = (
         [(i, (i + 1) % 5, 1.0 + i) for i in range(5) if i != 0]
         + [(0, 2, 0.5), (10, 11, 21.0), (11, 12, 22.0)]
@@ -156,6 +185,7 @@ def test_stream_msf_cdc_split_invariance(spark):
             ).collect()}
     assert got3 == want
     assert got2 == want
+    assert got_dirty == want
 
 
 def test_stream_triangles_cdc_split_invariance(spark):
@@ -187,6 +217,11 @@ def test_stream_triangles_cdc_split_invariance(spark):
     ]
     got3 = run_stream_triangles_cdc(spark, three).collect()[0].n_triangles
     got2 = run_stream_triangles_cdc(spark, two).collect()[0].n_triangles
+    # a dirty batch 1: a reversed duplicate, a null endpoint, a
+    # self-loop and an edge added twice change nothing
+    junk = [("add", 1, 0), ("add", 3, None), ("add", 4, 4), ("add", 10, 11)]
+    dirty = [spark.createDataFrame(b, schema) for b in (b1 + junk, b2, b3)]
+    got_dirty = run_stream_triangles_cdc(spark, dirty).collect()[0].n_triangles
     net = [(i, j) for i in range(5) for j in range(i + 1, 5)
            if (i, j) != (0, 2)] + [(10, 11), (11, 12), (10, 12)]
     want = triangle_count(
@@ -194,6 +229,7 @@ def test_stream_triangles_cdc_split_invariance(spark):
     ).collect()[0].n_triangles
     assert got3 == want == 7 + 1
     assert got2 == want
+    assert got_dirty == want
 
 
 def test_stream_scc_cdc_split_invariance(spark):
@@ -233,6 +269,41 @@ def test_stream_scc_cdc_split_invariance(spark):
             ).collect()}
     assert got3 == want
     assert got2 == want
+    # a node whose only edge is a self-loop is its own class, as in
+    # batch SCC
+    loop = [("add", 1, 2), ("add", 2, 1), ("add", 2, 3), ("add", 5, 5)]
+    got_loop = {(r.node, r.component)
+                for r in run_stream_scc_cdc(
+                    spark, [spark.createDataFrame(loop, schema)]).collect()}
+    want_loop = {(r.node, r.component)
+                 for r in strongly_connected_components(
+                     spark.createDataFrame(
+                         [e[1:] for e in loop], "src long, dst long")
+                 ).collect()}
+    assert (5, 5) in want_loop
+    assert got_loop == want_loop
+
+
+def test_stream_pagerank_cdc_keeps_self_loops(spark):
+    """The CDC PageRank harness keeps directed self-loops, as batch
+    ``pagerank`` and the insert-only ``run_stream_pagerank`` do: on
+    one add batch the three agree bit for bit."""
+    from terminus_server_spark.operators.graph import pagerank
+    from terminus_server_spark.streaming.events import (
+        run_stream_pagerank,
+        run_stream_pagerank_cdc,
+    )
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 3), (2, 4)]
+    plain = spark.createDataFrame(edges, "src long, dst long")
+    ops = spark.createDataFrame(
+        [("add", a, b) for a, b in edges], "op string, src long, dst long"
+    )
+    ranks = lambda df: {r.node: r.rank for r in df.collect()}
+    batch = ranks(pagerank(plain, iters=3))
+    assert abs(batch[3] - 0.2116171875) < 1e-12
+    assert ranks(run_stream_pagerank(spark, [plain], cold_iters=3)) == batch
+    assert ranks(run_stream_pagerank_cdc(spark, [ops], cold_iters=3)) == batch
 
 
 def test_stream_inverted_index_cross_batch_key_collisions(spark):
