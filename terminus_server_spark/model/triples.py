@@ -240,6 +240,16 @@ class TripleStore:
             pred: [self._conform(fr) for fr in frames]
             for pred, frames in (pred_frames or {}).items()
         }
+        self._memo: dict = {}
+
+    def memo(self, key, build):
+        """``build()``, computed once per store and ``key``: a store is
+        immutable (a commit yields a new one), so nothing invalidates
+        it.  Two threads may both build a missing entry; the last one
+        kept is as good as the first."""
+        if key not in self._memo:
+            self._memo[key] = build()
+        return self._memo[key]
 
     @classmethod
     def from_tables(cls, tables: dict[str, DataFrame], specs: dict[str, dict]) -> "TripleStore":

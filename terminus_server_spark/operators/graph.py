@@ -37,7 +37,7 @@ from terminus_server_spark.checkpoint import (
     run_loop,
 )
 
-from terminus_server_spark.operators.path import semi_naive
+from terminus_server_spark.operators.path import bfs, collect_small, semi_naive
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -256,9 +256,7 @@ def connected_components_incremental(
         .select(F.col("_ca").alias("src"), F.col("_cb").alias("dst"))
         .distinct()
     )
-    # The label-pair meta-graph is delta-bounded — label it through
-    # the adaptive cc_metadata path (driver union-find under the
-    # 100k-edge guard, distributed loop fallback above it).
+    # The label-pair meta-graph is delta-bounded (cc_metadata).
     mapping = cc_metadata(pairs).select(
         F.col("node").alias("component"), F.col("component").alias("_super")
     )
@@ -338,30 +336,21 @@ def connected_components_decremental(
     return untouched.unionByName(recomputed).unionByName(singles)
 
 
-def cc_metadata(edges: DataFrame, limit: int | None = None) -> DataFrame:
+def cc_metadata(edges: DataFrame) -> DataFrame:
     """(node, component): UNDIRECTED connected components of a graph
     expected to be delta/metadata-sized — the cc analogue of
     ``scc_metadata`` and the label engine for the incremental
     maintainers' meta-graphs (a commit delta's label pairs, a dirty
-    component's internal edges).  Under ``limit`` distinct edge rows
-    the graph is collected and labeled with driver-side union-find
-    (each round of the distributed loop costs more in plan analysis
-    and job scheduling than the whole walk); above it, the
-    distributed ``connected_components`` loop is the fallback, so a
-    pathological delta still converges at scale.  Labels are the
-    component-minimum node id — identical to the distributed
-    operator bit-for-bit (component membership is
+    component's internal edges).  Driver-side union-find under the
+    size guard of ``operators.path`` (its module docstring gives the
+    rule), the distributed ``connected_components`` loop above it.
+    Labels are the component-minimum node id — identical to the
+    distributed operator bit-for-bit (component membership is
     algorithm-independent; Python's string ordering agrees with
     Spark's binary UTF-8 ordering, both codepoint-monotone)."""
-    if limit is None:
-        limit = _METADATA_SCC_LIMIT
-    base = (
-        edges.select("src", "dst")
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    rows = base.limit(limit + 1).collect()
-    if len(rows) > limit:
+    base = _directed(edges)
+    rows = collect_small(base)
+    if rows is None:
         return connected_components(edges)
 
     parent: dict = {}
@@ -387,15 +376,15 @@ def cc_metadata(edges: DataFrame, limit: int | None = None) -> DataFrame:
         m = comp_min.get(root)
         if m is None or n < m:
             comp_min[root] = n
-    src_type = base.schema["src"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", src_type, True),
-            T.StructField("component", src_type, True),
-        ]
-    )
-    return edges.sparkSession.createDataFrame(
-        [(n, comp_min[find(n)]) for n in parent], out_schema
+    return _labels(base, [(n, comp_min[find(n)]) for n in parent])
+
+
+def _labels(base: DataFrame, rows: list) -> DataFrame:
+    """(node, component) rows of a driver-side labeling, typed as
+    ``base``'s nodes."""
+    t = base.schema["src"].dataType
+    return base.sparkSession.createDataFrame(
+        rows, T.StructType([T.StructField("node", t), T.StructField("component", t)])
     )
 
 
@@ -819,31 +808,14 @@ def shortest_hops(
     assume_undirected: bool = False,
 ) -> DataFrame:
     """Multi-source BFS: (source, node, hops) minimum hop counts from
-    each source node.  sources: DataFrame(node).  Semi-naive frontier
-    expansion like path closure (:func:`path.semi_naive`), but keyed
-    by (source, node).  ``max_hops`` is a hop radius for queries
-    that ask for a bounded ball; None runs to the fixpoint.
-
-    ``assume_undirected``: the caller guarantees ``edges`` is
-    symmetric — then BFS layers are exact distance classes, a level-d
-    expansion can only collide with levels d and d−1, and the
-    dedup anti-join runs against those two layers instead of the
-    cumulative reached set (frontier-sized rounds at any depth; the
-    general directed case keeps the full anti-join because a back
-    edge may jump to any earlier level)."""
-    return semi_naive(
-        edges.select("src", "dst").distinct(),
-        lambda e, s: s.select(
-            F.col("node").alias("source"), F.col("node").alias("node"), F.lit(0).alias("hops")
-        ),
-        lambda f, e: f.join(e, f["node"] == e["src"]).select(
-            "source", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
-        ),
-        ["source", "node"],
-        [F.min("hops").alias("hops")],
-        sources,
-        recent_only=assume_undirected,
-        max_rounds=max_hops,
+    each source node (sources: DataFrame(node)) — :func:`path.bfs`.
+    ``max_hops`` is a hop radius for queries that ask for a bounded
+    ball; None runs to the fixpoint.  ``assume_undirected``: the
+    caller guarantees ``edges`` is symmetric, so the distributed
+    loop's dedup anti-join reads only the last two layers (BFS layers
+    are exact distance classes over symmetric edges)."""
+    return bfs(edges, sources, max_hops, symmetric=assume_undirected).select(
+        F.col("src").alias("source"), F.col("dst").alias("node"), "hops"
     )
 
 
@@ -2131,35 +2103,22 @@ def _scc_loop(e, n_e, rem, n_rem) -> DataFrame:
     return out
 
 
-_METADATA_SCC_LIMIT = 100_000
-
-
-def scc_metadata(edges: DataFrame, limit: int = _METADATA_SCC_LIMIT) -> DataFrame:
+def scc_metadata(edges: DataFrame) -> DataFrame:
     """(node, component): SCCs of a METADATA-sized graph — the schema
     subsumption hierarchy, whose size is set by the human-authored
-    schema and does not grow with instance data.  Same design as
-    versioning/dag.py's driver walk over the commit graph: under
-    ``limit`` distinct edge rows the graph is collected and labeled
-    with an iterative Tarjan on the driver (each round of the
-    distributed loop costs more in plan analysis and job scheduling
-    than the whole walk — a dozen sequential one-task jobs for a
-    ten-edge hierarchy); above it, the distributed
-    ``strongly_connected_components`` loop is the fallback, so a
-    pathological caller still converges at scale.  The guard is one
-    ``limit(N+1)`` collect, not a count() job plus a second collect.
+    schema and does not grow with instance data.  An iterative Tarjan
+    on the driver under the size guard of ``operators.path`` (its
+    module docstring gives the rule), the distributed
+    ``strongly_connected_components`` loop above it.
 
     Labels are the class minimum node id — identical to the
     distributed operator (SCC membership is algorithm-independent and
     Python's string ordering agrees with Spark's binary UTF-8
     ordering, both being codepoint-monotone), so the two paths are
     interchangeable bit-for-bit."""
-    base = (
-        edges.select("src", "dst")
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    rows = base.limit(limit + 1).collect()
-    if len(rows) > limit:
+    base = _directed(edges)
+    rows = collect_small(base)
+    if rows is None:
         return strongly_connected_components(edges)
 
     adj: dict = {}
@@ -2217,16 +2176,7 @@ def scc_metadata(edges: DataFrame, limit: int = _METADATA_SCC_LIMIT) -> DataFram
                 for w in comp:
                     comp_of[w] = label
 
-    src_type = base.schema["src"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("node", src_type, True),
-            T.StructField("component", src_type, True),
-        ]
-    )
-    return edges.sparkSession.createDataFrame(
-        [(n, comp_of[n]) for n in nodes], out_schema
-    )
+    return _labels(base, [(n, comp_of[n]) for n in nodes])
 
 
 def scc_by_closure(edges: DataFrame) -> DataFrame:
@@ -3790,13 +3740,8 @@ def scc_incremental(
         .distinct()
     )
     # The merge runs over the QUOTIENT graph (condensation ∪ mapped
-    # delta) — typically orders of magnitude smaller than E.  Label
-    # it through the adaptive scc_metadata path: under the 100k-edge
-    # guard the distributed loop's ~60 driver-scheduled rounds cost
-    # more than collecting the whole quotient and running iterative
-    # Tarjan (bit-identical labels, see scc_metadata); above the
-    # guard the distributed loop is the fallback, so a huge quotient
-    # still converges at scale.
+    # delta) — typically orders of magnitude smaller than E
+    # (scc_metadata).
     mscc = scc_metadata(meta)
     relab = mscc.select(
         F.col("node").alias("component"), F.col("component").alias("_newc")
@@ -3879,9 +3824,7 @@ def scc_decremental(
         .select("src", "dst")
     )
     # Dirty-class internal edges are delta-bounded in the common
-    # case; the adaptive scc_metadata path labels them driver-side
-    # under the 100k-edge guard (bit-identical, see scc_incremental's
-    # quotient note) and falls back to the distributed loop above it.
+    # case (scc_metadata).
     relabeled = scc_metadata(sub)
     singletons = dirty_nodes.join(
         relabeled.select("node"), "node", "left_anti"

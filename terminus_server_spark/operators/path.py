@@ -6,20 +6,34 @@ scale translation is *set-at-a-time*: compile the pattern to an
 ``(src, dst, hops)`` DataFrame; closure operators (plus/star) run
 **semi-naive iteration** — join only the newest frontier against the
 base edges each step, dedupe against the accumulated result, stop on
-an empty frontier.  :func:`semi_naive` is that loop, written once; the
-closures here, the multi-source BFS in ``operators.graph`` and the
-distributed commit-DAG walk in ``versioning.dag`` are its callers.
+an empty frontier.  :func:`semi_naive` is that loop, written once.
+
+Small graphs walk on the driver.  Every per-round loop costs a Spark
+job and a checkpoint per round, more than a whole walk of a small
+graph, so :func:`bfs` (the one breadth-first search: the anchored
+closures, ``graph.shortest_hops`` and the commit-DAG walks of
+``versioning.dag``) collects its edges and sources through one guard,
+:func:`collect_small` (a ``limit(N+1)`` collect, ``None`` above
+``_DRIVER_LIMIT`` rows), walks an adjacency dict on the driver and
+returns a local frame; above the guard, or once a walk emits more
+rows than it, :func:`semi_naive` runs instead.  The driver-side
+labelings (``graph.cc_metadata``, ``graph.scc_metadata``) take the
+same guard.  Both branches give the same rows, in the edge frame's
+types, null ends dropped.  A closure part's adjacency, or its
+too-big verdict, is cached on the ``TripleStore`` (``memo``) per
+(part, graph): a store is immutable (a commit yields a new one), so
+nothing invalidates it.
 
 Anchoring: :func:`compile_path` takes the start node ``src`` when the
 caller has one, and it alone decides where a closure is anchored.
 Leaves filter ``src`` (pushed into the scan), ``Seq`` anchors its
 first part on ``src`` and every later ``Plus``/``Star`` part on the
-distinct ``dst`` of the rows so far, ``OrP`` anchors every part and
-``Times`` its first step (its later steps and ``{0,m}`` identity rows
-compose the unanchored part, which ``{1,1}`` never builds).  An
-anchored ``Plus``/``Star`` runs :func:`anchored_closure`, whose state
-is the anchors' reachable set, whatever the pattern's ``strategy``;
-only an unanchored one builds the all-pairs closure.
+distinct ``dst`` of the rows so far (collected through the guard),
+``OrP`` anchors every part, and ``Times`` is the ``Seq`` of its
+repetitions, its ``{0,m}`` identity rows read off the part's nodes.
+An anchored ``Plus``/``Star`` runs :func:`anchored_closure`, whose
+state is the anchors' reachable set, whatever the pattern's
+``strategy``; only an unanchored one builds the all-pairs closure.
 ``compile_path(p, src=x)`` equals ``compile_path(p)`` filtered on
 ``src == x``.
 
@@ -47,7 +61,7 @@ from __future__ import annotations
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from terminus_server_spark.checkpoint import (
     _checkpoint,
@@ -295,38 +309,143 @@ def transitive_closure_doubling(edges: DataFrame, with_hops: bool = False) -> Da
     return r if with_hops else r.select("src", "dst")
 
 
-def anchored_closure(
-    edges: DataFrame, anchors: DataFrame, with_zero: bool = False
-) -> DataFrame:
-    """(src, dst, hops): min-repetition closure pairs whose ``src``
-    is in ``anchors`` (one ``node`` column) — the ``from:``-bound
-    form of :func:`transitive_closure`.  THIS is the 100 TB shape for
-    anchored path traversal: state is the anchors' reachable set
-    (frontier-sized shuffles), never the all-pairs closure a
-    filter-after-closure plan would materialize first.
+# The one size guard: below it a walk or a labeling runs on the
+# driver (module docstring).  Tests force the distributed loops by
+# setting it to 0.
+_DRIVER_LIMIT = 100_000
 
-    Plus semantics: hops >= 1, INCLUDING cycle returns to the anchor
-    (the seed is the anchors' one-step successors, so the anchor
-    itself is reachable at hops >= 1 through a cycle — identical to
-    filtering the full plus-closure by src).  ``with_zero`` seeds the
-    hops-0 self row instead, so the anti-join drops any costlier self
-    pair (star) — ONLY for anchors that appear in the edge universe,
-    matching the un-anchored plan exactly: ``compile_path(Star)``
-    derives its zero rows from the graph's nodes, so an anchor absent
-    from the graph must yield zero rows, not a phantom (a, a, 0)."""
-    def seed(e: DataFrame, a: DataFrame) -> DataFrame:
-        if not with_zero:
-            return e.join(a, "src").select("src", "dst", F.lit(1).alias("hops"))
-        return _zero(a.join(_nodes(e), "src", "left_semi"))
+
+def collect_small(df: DataFrame) -> list | None:
+    """``df``'s rows on the driver, or ``None`` when there are more
+    than ``_DRIVER_LIMIT``: one ``limit(N+1)`` collect, not a count
+    and a second collect."""
+    rows = df.limit(_DRIVER_LIMIT + 1).collect()
+    return None if len(rows) > _DRIVER_LIMIT else rows
+
+
+def adjacency(edges: DataFrame) -> tuple[dict, T.StructType] | None:
+    """``edges``' driver adjacency: ``{node: [successor, ...]}`` with
+    every end of an edge a key, and the ``(src, dst)`` schema; ``None``
+    above the guard."""
+    rows = collect_small(edges)
+    if rows is None:
+        return None
+    adj: dict = {}
+    for r in rows:
+        s, d = r["src"], r["dst"]
+        if s is not None and d is not None:
+            adj.setdefault(s, []).append(d)
+            adj.setdefault(d, [])
+    return adj, T.StructType([edges.schema["src"], edges.schema["dst"]])
+
+
+def _walk(adj: dict, sources: list, radius: int | None, plus: bool) -> list | None:
+    """(source, node, hops) rows of a BFS from each source, or
+    ``None`` once they pass the guard."""
+    out: list = []
+    for s in sources:
+        hops = {} if plus else {s: 0}
+        frontier, d = [s], 0
+        while frontier and (radius is None or d < radius):
+            d += 1
+            nxt = []
+            for u in frontier:
+                for v in adj.get(u, ()):
+                    if v not in hops:
+                        hops[v] = d
+                        nxt.append(v)
+            frontier = nxt
+        out.extend((s, v, h) for v, h in hops.items())
+        if len(out) > _DRIVER_LIMIT:
+            return None
+    return out
+
+
+def bfs(
+    edges: DataFrame,
+    sources: list | DataFrame,
+    radius: int | None = None,
+    *,
+    plus: bool = False,
+    isolated: bool = True,
+    symmetric: bool = False,
+    lookup: Callable[[DataFrame], tuple | None] = adjacency,
+) -> DataFrame:
+    """(src, dst, hops): the minimum hops from each source to every
+    node it reaches within ``radius`` hops (no bound when None).  A
+    source reaches itself at hops 0 (a source that is no end of an
+    edge too, unless ``isolated`` is off); with ``plus`` every row has
+    hops >= 1 and a source reaches itself only through a cycle.
+
+    ``sources``: node values, or a frame with one ``node`` column.
+    ``symmetric``: the caller promises symmetric edges
+    (``semi_naive``'s ``recent_only``).  ``lookup(edges)`` gives their
+    :func:`adjacency`; a caller that caches it passes its cache
+    lookup.  Under the guard on the edges, the sources and the rows
+    emitted the walk runs on the driver; otherwise ``semi_naive`` runs
+    it.  Null ends never appear, and the rows keep the edge frame's
+    types."""
+    spark = edges.sparkSession
+    g = lookup(edges)
+    if g is not None:
+        adj, schema = g
+        vals = sources
+        if isinstance(sources, DataFrame):
+            rows = collect_small(sources.select("node"))
+            vals = None if rows is None else [r[0] for r in rows]
+        if vals is not None:
+            vals = [v for v in dict.fromkeys(vals) if v is not None and (isolated or v in adj)]
+            rows = _walk(adj, vals, radius, plus)
+            if rows is not None:
+                return spark.createDataFrame(
+                    rows, T.StructType([*schema.fields, T.StructField("hops", T.IntegerType())])
+                )
+    e = _not_null(edges)
+    if not isinstance(sources, DataFrame):
+        sources = spark.createDataFrame(
+            [(v,) for v in sources], T.StructType([T.StructField("node", e.schema["src"].dataType)])
+        )
+
+    def seed(e: DataFrame, s: DataFrame) -> DataFrame:
+        s = s.select(F.col("node").alias("src")).where(F.col("src").isNotNull()).distinct()
+        if plus:
+            return e.join(s, "src").select("src", "dst", F.lit(1).alias("hops")).distinct()
+        if not isolated:
+            s = s.join(_nodes(e), "src", "left_semi")
+        return _zero(s)
 
     return semi_naive(
-        _not_null(edges),
+        e,
         seed,
         _hop,
         ["src", "dst"],
         [F.min("hops").alias("hops")],
-        anchors.select(F.col("node").alias("src")).distinct(),
+        sources,
+        recent_only=symmetric,
+        max_rounds=None if radius is None else radius - int(plus),
     )
+
+
+def anchored_closure(
+    edges: DataFrame,
+    anchors: list | DataFrame,
+    with_zero: bool = False,
+    lookup: Callable[[DataFrame], tuple | None] = adjacency,
+) -> DataFrame:
+    """(src, dst, hops): min-repetition closure pairs whose ``src``
+    is one of ``anchors`` (values, or one ``node`` column) — the
+    ``from:``-bound form of :func:`transitive_closure`, a :func:`bfs`
+    whose state is the anchors' reachable set, never the all-pairs
+    closure a filter-after-closure plan would build first.
+
+    Plus semantics: hops >= 1, INCLUDING cycle returns to the anchor
+    (identical to filtering the full plus-closure by src).
+    ``with_zero`` gives the hops-0 self row instead (star) — ONLY for
+    an anchor that is an end of some edge, matching the un-anchored
+    plan exactly: ``compile_path(Star)`` derives its zero rows from
+    the graph's nodes, so an anchor absent from the graph yields no
+    row, not a phantom (a, a, 0)."""
+    return bfs(edges, anchors, plus=not with_zero, isolated=False, lookup=lookup)
 
 
 def _from(df: DataFrame, src: str | None) -> DataFrame:
@@ -334,17 +453,31 @@ def _from(df: DataFrame, src: str | None) -> DataFrame:
 
 
 def _closure(
-    store, pattern: P.Plus | P.Star, graph: str, anchors: DataFrame | None
+    store, pattern: P.Plus | P.Star, graph: str, anchors: list | DataFrame | None
 ) -> DataFrame:
-    """``pattern``'s closure grown from ``anchors`` (one ``node``
-    column), or the all-pairs closure when there are none."""
+    """``pattern``'s closure grown from ``anchors`` (values, or one
+    ``node`` column), or the all-pairs closure when there are none.
+    The anchored walk reads the part's adjacency cached on the store."""
     edges = compile_path(store, pattern.part, graph)
     star = isinstance(pattern, P.Star)
     if anchors is not None:
-        return anchored_closure(edges, anchors, with_zero=star)
+        return anchored_closure(
+            edges, anchors, with_zero=star,
+            lookup=lambda e: store.memo((pattern.part, graph), lambda: adjacency(e)),
+        )
     close = transitive_closure_doubling if pattern.strategy == "doubling" else transitive_closure
     plus = close(edges, with_hops=True)
     return _dedup_min_hops(plus.unionByName(_zero(_nodes(edges)))) if star else plus
+
+
+def _then(store, out: DataFrame, part: P.PathPattern, graph: str) -> DataFrame:
+    """``out ; part``: a ``Plus``/``Star`` part is grown only from the
+    middles the join can keep, ``out``'s distinct ``dst``."""
+    if not isinstance(part, (P.Plus, P.Star)):
+        return _compose(out, compile_path(store, part, graph))
+    out = _dedup_min_hops(out)
+    mids = out.select(F.col("dst").alias("node")).distinct()
+    return _compose(out, _closure(store, part, graph, mids))
 
 
 def compile_path(
@@ -378,38 +511,30 @@ def compile_path(
     if isinstance(pattern, P.Seq):
         out = compile_path(store, pattern.parts[0], graph, src)
         for part in pattern.parts[1:]:
-            if isinstance(part, (P.Plus, P.Star)):
-                # grow the closure only from the middles the join can keep
-                out = _dedup_min_hops(out)
-                nxt = _closure(
-                    store, part, graph, out.select(F.col("dst").alias("node")).distinct()
-                )
-            else:
-                nxt = compile_path(store, part, graph)
-            out = _compose(out, nxt)
+            out = _then(store, out, part, graph)
         return _dedup_min_hops(out)
     if isinstance(pattern, P.OrP):
         return _dedup_min_hops(
             _union([compile_path(store, p, graph, src) for p in pattern.parts])
         )
     if isinstance(pattern, (P.Plus, P.Star)):
-        anchors = None if src is None else store.df.sparkSession.createDataFrame(
-            [(src,)], "node string"
-        )
-        return _closure(store, pattern, graph, anchors)
+        return _closure(store, pattern, graph, None if src is None else [src])
     if isinstance(pattern, P.Times):
-        # the unanchored part, built only where it is read
-        base = None
-        if src is None or pattern.n == 0 or pattern.m > 1:
-            base = compile_path(store, pattern.part, graph)
-        # {0,m} admits the empty repetition ({0,0} is pure identity)
-        acc = [_zero(_from(_nodes(base), src))] if pattern.n == 0 else []
+        # {0,m} admits the empty repetition ({0,0} is pure identity) of
+        # the part's nodes, which a closure shares with its own part
+        acc = []
+        if pattern.n == 0:
+            inner = pattern.part
+            while isinstance(inner, (P.Plus, P.Star)):
+                inner = inner.part
+            acc.append(_zero(_from(_nodes(compile_path(store, inner, graph)), src)))
         cur = None
         for k in range(1, pattern.m + 1):
-            if cur is None:
-                cur = base if src is None else compile_path(store, pattern.part, graph, src)
-            else:
-                cur = _compose(cur, base)
+            cur = (
+                compile_path(store, pattern.part, graph, src)
+                if cur is None
+                else _then(store, cur, pattern.part, graph)
+            )
             cur = _dedup_min_hops(cur)
             if k >= pattern.n:
                 acc.append(cur)

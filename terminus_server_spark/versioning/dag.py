@@ -13,18 +13,17 @@ the graph: a ``commits`` DataFrame
 where a merge commit simply carries two parent ids.  ``log_walk`` is
 the ancestors-of-head traversal ``git log`` performs — a BFS over the
 parent edges yielding each ancestor once with its minimum distance
-from the head.  Commit graphs are tiny next to the data they version,
-so the walk runs on the driver (``_bfs_depths``); a pathological
-million-commit monorepo history falls back to the engine's
-semi-naive loop (``operators.path.semi_naive``).  Both walks run to
-the fixpoint: a commit DAG is acyclic and finite, so no depth cap.
+from the head: one ``operators.path.bfs``, which walks a commit graph
+on the driver under its size guard and runs the semi-naive loop above
+it (the ``operators.path`` docstring gives the rule).  Both walks run
+to the fixpoint: a commit DAG is acyclic and finite, so no depth cap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from terminus_server_spark.operators.path import semi_naive
+from terminus_server_spark.operators.path import bfs
 
 
 def parent_edges(commits: DataFrame) -> DataFrame:
@@ -39,79 +38,21 @@ def parent_edges(commits: DataFrame) -> DataFrame:
     )
 
 
-_DRIVER_WALK_LIMIT = 1_000_000
-
-
-def _collect_dag(commits: DataFrame):
-    """(ids, parents) of the commit graph collected to the driver, or
-    ``None`` when the edge list exceeds ``_DRIVER_WALK_LIMIT`` (the
-    caller then falls back to the distributed loop).  Commit graphs
-    are METADATA — the reference keeps refs and commit metadata in a
-    tiny in-memory graph, and this module's remote verbs already
-    treat heads as driver-side values — so a driver-side walk is the
-    honest engineering: each distributed BFS round costs more in plan
-    analysis than the whole walk.  The guard is a single
-    ``limit(N+1)`` collect (len-checked) instead of a dedicated
-    count() job followed by a second full collect — one Spark job per
-    walk, not three."""
-    rows = parent_edges(commits).limit(_DRIVER_WALK_LIMIT + 1).collect()
-    if len(rows) > _DRIVER_WALK_LIMIT:
-        return None
-    ids = {r.commit_id for r in commits.select("commit_id").collect()}
-    parents: dict[str, list[str]] = {}
-    for r in rows:
-        parents.setdefault(r.child, []).append(r.parent)
-    return ids, parents
+def _ancestors(commits: DataFrame, heads: list[str]) -> DataFrame:
+    """(src, dst, hops): every ancestor ``dst`` of each head ``src``
+    that is a commit (inclusive, hops 0), with its minimum parent-hop
+    distance."""
+    # at most one row per head, so a plain collect is bounded
+    known = commits.where(F.col("commit_id").isin(heads)).select("commit_id").collect()
+    return bfs(parent_edges(commits).toDF("src", "dst"), [r[0] for r in known])
 
 
 def log_walk(commits: DataFrame, head: str) -> DataFrame:
     """(commit_id, depth): every ancestor of ``head`` (inclusive,
     depth 0) with its minimum parent-hop distance — the commit set
-    ``git log <head>`` prints, with merge parents both followed.
-
-    Driver-side BFS under ``_DRIVER_WALK_LIMIT`` (see _collect_dag);
-    the distributed semi-naive loop remains the fallback for
-    pathological histories."""
-    dag = _collect_dag(commits)
-    if dag is not None:
-        depth = _bfs_depths(*dag, [head])
-        return commits.sparkSession.createDataFrame(
-            list(depth.items()), "commit_id string, depth int"
-        )
-    return _log_walk_distributed(commits, [head])
-
-
-def _bfs_depths(ids, parents, heads: list[str]) -> dict:
-    """{commit_id: depth} of every ancestor of any of ``heads``
-    (inclusive, depth 0), minimum over the heads."""
-    depth: dict[str, int] = {h: 0 for h in heads if h in ids}
-    frontier, d = list(depth), 0
-    while frontier:
-        d += 1
-        nxt = []
-        for c in frontier:
-            for p in parents.get(c, []):
-                if p not in depth:
-                    depth[p] = d
-                    nxt.append(p)
-        frontier = nxt
-    return depth
-
-
-def _log_walk_distributed(commits: DataFrame, heads: list[str]) -> DataFrame:
-    """(commit_id, depth) of :func:`_bfs_depths`, as a semi-naive loop
-    over the parent edges."""
-    return semi_naive(
-        parent_edges(commits),
-        lambda e, c: c.where(F.col("commit_id").isin(heads)).select(
-            "commit_id", F.lit(0).alias("depth")
-        ),
-        lambda f, e: f.join(e, f["commit_id"] == e["child"]).select(
-            F.col("parent").alias("commit_id"), (F.col("depth") + 1).alias("depth")
-        ),
-        ["commit_id"],
-        [F.min("depth").alias("depth")],
-        commits,
+    ``git log <head>`` prints, with merge parents both followed."""
+    return _ancestors(commits, [head]).select(
+        F.col("dst").alias("commit_id"), F.col("hops").alias("depth")
     )
 
 
@@ -137,16 +78,8 @@ def log_from(commits: DataFrame, head: str) -> DataFrame:
 
 def reachable_commits(commits: DataFrame, heads: list[str]) -> DataFrame:
     """(commit_id): the union of ancestors of all ``heads`` — one
-    multi-source BFS (all refs seed the same frontier), so the cost
-    is one walk of the reachable subgraph regardless of how many
-    branches exist.  Driver-side under the metadata guard, like
-    :func:`log_walk`."""
-    dag = _collect_dag(commits)
-    if dag is not None:
-        return commits.sparkSession.createDataFrame(
-            [(c,) for c in sorted(_bfs_depths(*dag, heads))], "commit_id string"
-        )
-    return _log_walk_distributed(commits, heads).select("commit_id")
+    multi-source BFS, which walks from each head."""
+    return _ancestors(commits, heads).select(F.col("dst").alias("commit_id")).distinct()
 
 
 def gc_commits(commits: DataFrame, refs: dict[str, str]) -> DataFrame:
@@ -175,39 +108,22 @@ def merge_base(commits: DataFrame, head_a: str, head_b: str) -> DataFrame:
     minimal combined distance to the two heads (then lowest id — a
     deterministic criss-cross tie-break).
 
-    Two ancestor walks over the parent edges (log_walk's BFS) and
-    one tiny join — commit graphs are
-    metadata-sized, so this is driver-latency work even on a store
-    whose DATA is 100 TB."""
-    dag = _collect_dag(commits)
-    if dag is not None:
-        da = _bfs_depths(*dag, [head_a])
-        db = _bfs_depths(*dag, [head_b])
-        common = [(c, da[c], db[c]) for c in da if c in db]
-        # disconnected histories (or a head missing from the commit
-        # table) have no merge base — report it as an empty frame,
-        # matching the distributed path's limit(1)-of-empty result
-        if not common:
-            return commits.sparkSession.createDataFrame(
-                [], "merge_base string, depth_a int, depth_b int"
-            )
-        best = min(common, key=lambda t: (t[1] + t[2], t[0]))
-        return commits.sparkSession.createDataFrame(
-            [best], "merge_base string, depth_a int, depth_b int"
-        )
-    wa = _log_walk_distributed(commits, [head_a]).withColumnRenamed("depth", "depth_a")
-    wb = _log_walk_distributed(commits, [head_b]).withColumnRenamed("depth", "depth_b")
+    One two-source ancestor walk over the parent edges and one tiny
+    grouped aggregate; disconnected histories (or a head missing from the commit
+    table) have no merge base, an empty frame."""
+    walk = _ancestors(commits, [head_a, head_b])
+
+    def depth(head: str) -> Column:
+        return F.min(F.when(F.col("src") == head, F.col("hops"))).cast("int")
+
     return (
-        wa.join(wb, "commit_id")
+        walk.groupBy(F.col("dst").alias("merge_base"))
+        .agg(depth(head_a).alias("depth_a"), depth(head_b).alias("depth_b"))
+        .where(F.col("depth_a").isNotNull() & F.col("depth_b").isNotNull())
         .orderBy(
-            (F.col("depth_a") + F.col("depth_b")).asc(), F.col("commit_id").asc()
+            (F.col("depth_a") + F.col("depth_b")).asc(), F.col("merge_base").asc()
         )
         .limit(1)
-        .select(
-            F.col("commit_id").alias("merge_base"),
-            F.col("depth_a").cast("int").alias("depth_a"),
-            F.col("depth_b").cast("int").alias("depth_b"),
-        )
     )
 
 
@@ -239,8 +155,7 @@ def describe(commits: DataFrame, tags: DataFrame, head: str) -> DataFrame:
     model).  Nearest = minimum parent-hop distance over the ancestor
     walk; ties break to the lexicographically smallest tag, so the
     name is deterministic under multiple tags at one depth.  One
-    ancestor walk (driver-side under the metadata guard) + one tiny
-    join — commit graphs are metadata even on a 100 TB store."""
+    ancestor walk + one tiny join."""
     walk = log_walk(commits, head)
     return (
         walk.join(tags, "commit_id")

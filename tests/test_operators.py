@@ -84,16 +84,22 @@ _N = len(_CHAIN)
     ],
     ids=["transitive_closure", "anchored_closure", "trace_paths", "shortest_hops"],
 )
-def test_frontier_loops_reach_the_end_of_a_long_chain(spark, run, want):
+def test_frontier_loops_reach_the_end_of_a_long_chain(spark, monkeypatch, run, want):
     """Every semi-naive loop runs to its fixpoint: a 70-edge chain
     yields the full answer, not the prefix a round cap would keep."""
+    from terminus_server_spark.operators import path
+
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
     assert run(spark) == want
 
 
-def test_closures_release_their_round_blocks(spark):
+def test_closures_release_their_round_blocks(spark, monkeypatch):
     """A closure leaves one persisted block set behind (its answer),
     not one per round plus its edge set."""
+    from terminus_server_spark.operators import path
     from terminus_server_spark.operators.path import anchored_closure, transitive_closure
+
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
 
     def held():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -158,6 +164,7 @@ def _anchor_patterns():
         "times_1_3": P.Times(nxt, 1, 3),
         "times_plus_1_1": P.Times(P.Plus(nxt), 1, 1),
         "times_plus_1_2": P.Times(P.Plus(nxt), 1, 2),
+        "times_plus_0_2": P.Times(P.Plus(nxt), 0, 2),
         "times_open": P.parse_path_string("next{2,}"),
         "star_doubling": P.Star(nxt, strategy="doubling"),
         "star_seq": P.Star(P.Seq(nxt, nxt)),
@@ -195,6 +202,124 @@ def test_anchored_times_1_1_never_builds_all_pairs(spark, monkeypatch):
         ).collect()
     )
     assert got == [("a", "a", 3), ("a", "b", 1), ("a", "c", 2), ("a", "d", 3)]
+
+
+@pytest.mark.parametrize("name", ["times_plus_1_2", "times_plus_0_2"])
+def test_anchored_times_never_builds_all_pairs(spark, monkeypatch, name):
+    """An anchored ``Times`` over a closure grows every later step from
+    the ``dst`` so far, so it never builds the all-pairs closure."""
+    from terminus_server_spark.operators import path
+
+    pattern = _anchor_patterns()[name]
+    want = sorted(
+        tuple(r) for r in path.compile_path(_cycle_store(spark), pattern).collect()
+        if r.src == "a"
+    )
+
+    def all_pairs(*args, **kwargs):
+        raise AssertionError("all-pairs closure built")
+
+    monkeypatch.setattr(path, "transitive_closure", all_pairs)
+    got = sorted(
+        tuple(r) for r in path.compile_path(_cycle_store(spark), pattern, src="a").collect()
+    )
+    assert got == want
+
+
+def _hierarchy_rows():
+    """A small ``parent`` hierarchy (child -> parent, one node with two
+    parents), ``link`` edges into it, a ``next`` 2-cycle and a
+    ``parent`` triple whose object is null."""
+    parent = [
+        ("n3", "n1"), ("n4", "n1"), ("n4", "n2"), ("n5", "n2"), ("n6", "n3"),
+        ("n7", "n4"), ("n8", "n5"), ("n1", "n0"), ("n2", "n0"),
+    ]
+    link = [("n8", "n1"), ("n6", "n2"), ("n0", "n5")]
+    nxt = [("x", "y"), ("y", "x"), ("y", "z")]
+    return [
+        ("instance", s, p, o, "iri", None)
+        for p, edges in (("parent", parent), ("link", link), ("next", nxt))
+        for s, o in edges
+    ] + [("instance", "n7", "parent", None, "iri", None)]
+
+
+def test_driver_walks_match_distributed_loops(spark, monkeypatch):
+    """Every caller of the one BFS answers alike on the driver walk
+    (the default limit) and on the distributed loop (limit 0): the
+    path_closure workload's shapes (perfbench/workloads.py) from
+    several anchors, a Plus cycle return, a Star anchor absent from
+    the edges, a null end, ``long`` nodes, the commit-DAG walks and
+    ``shortest_hops`` with and without ``max_hops`` and
+    ``assume_undirected``."""
+    import pathlib
+
+    from terminus_server_spark.model.triples import TripleStore
+    from terminus_server_spark.operators import path
+    from terminus_server_spark.operators.graph import shortest_hops
+    from terminus_server_spark.versioning import dag
+    from terminus_server_spark.woql import path_ast as P
+
+    monkeypatch.syspath_prepend(str(pathlib.Path(__file__).parents[1] / "perfbench"))
+    from workloads import PATH_PATTERNS
+
+    triples = spark.createDataFrame(
+        _hierarchy_rows(),
+        "graph string, subject string, predicate string, obj string, "
+        "obj_type string, obj_num double",
+    )
+    longs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, None), (None, 4), (4, 5), (6, 4)], "src long, dst long"
+    )
+    undirected = longs.unionByName(longs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    sources = spark.createDataFrame([(1,), (4,), (9,), (None,)], "node long")
+    commits = spark.createDataFrame(
+        [
+            ("a", []), ("b", ["a"]), ("c", ["a"]), ("d", ["b", "c"]),
+            ("e", ["d"]), ("x", ["c"]), ("y", ["x"]), ("solo", []),
+        ],
+        "commit_id string, parent_ids array<string>",
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    def answers():
+        store = TripleStore(triples)  # a fresh store caches no adjacency yet
+        out = {
+            (shape, x): rows(path.compile_path(store, make(P), src=x))
+            for shape, make in PATH_PATTERNS.items()
+            for x in ("n0", "n7", "n8")
+        }
+        out["plus_cycle"] = rows(path.compile_path(store, P.Plus(P.Pred("next")), src="x"))
+        out["star_ghost"] = rows(path.compile_path(store, P.Star(P.Pred("next")), src="ghost"))
+        out["long_plus"] = rows(path.anchored_closure(longs, [3, 6]))
+        out["long_star"] = rows(path.anchored_closure(longs, [3, 6], with_zero=True))
+        out["long_schema"] = path.anchored_closure(longs, [3]).schema.simpleString()
+        out["hops"] = rows(shortest_hops(longs, sources))
+        out["hops_2"] = rows(shortest_hops(longs, sources, max_hops=2))
+        out["hops_und"] = rows(shortest_hops(undirected, sources, assume_undirected=True))
+        out["hops_und_1"] = rows(
+            shortest_hops(undirected, sources, max_hops=1, assume_undirected=True)
+        )
+        out["log"] = rows(dag.log_walk(commits, "e"))
+        out["log_solo"] = rows(dag.log_walk(commits, "solo"))
+        out["reach"] = rows(dag.reachable_commits(commits, ["e", "y", "ghost"]))
+        out["base"] = rows(dag.merge_base(commits, "e", "y"))
+        out["no_base"] = rows(dag.merge_base(commits, "e", "solo"))
+        return out
+
+    driver = answers()
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
+    assert answers() == driver
+    assert driver["plus_cycle"] == [("x", "x", 2), ("x", "y", 1), ("x", "z", 2)]
+    assert driver["star_ghost"] == []
+    assert driver["long_plus"] == [
+        (3, 1, 1), (3, 2, 2), (3, 3, 3), (6, 4, 1), (6, 5, 2)
+    ]
+    assert driver["long_schema"] == "struct<src:bigint,dst:bigint,hops:int>"
+    assert (9, 9, 0) in driver["hops"] and not any(None in r for r in driver["hops"])
+    assert driver["log_solo"] == [("solo", 0)] and driver["no_base"] == []
+    assert driver["base"] == [("c", 2, 2)]
 
 
 def test_graphql_path_matches_woql_path(spark):
@@ -2951,8 +3076,10 @@ def test_loop_tuning_restores_conf_even_on_raise(spark, monkeypatch):
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
     assert spark.conf.get("spark.sql.adaptive.enabled") == prev_aqe
 
+    from terminus_server_spark.operators import path as path_mod
     from terminus_server_spark.operators.path import anchored_closure
 
+    monkeypatch.setattr(path_mod, "_DRIVER_LIMIT", 0)
     key = "spark.sql.constraintPropagation.enabled"
     prev_cp = spark.conf.get(key, "true")
     anchors = spark.createDataFrame([(1,)], "node long")
@@ -2964,7 +3091,6 @@ def test_loop_tuning_restores_conf_even_on_raise(spark, monkeypatch):
     from pyspark.core.rdd import RDD
 
     from terminus_server_spark.operators import graph as graph_mod
-    from terminus_server_spark.operators import path as path_mod
     from terminus_server_spark.operators.graph import strongly_connected_components
 
     def triple(session):
@@ -5403,12 +5529,9 @@ def test_scc_maintainers_distributed_fallback(spark, monkeypatch):
     shrinking the guard to zero and re-prove both maintainers against
     batch SCC — the two paths must be interchangeable bit-for-bit."""
     from terminus_server_spark.operators import graph as G
+    from terminus_server_spark.operators import path
 
-    monkeypatch.setattr(G, "_METADATA_SCC_LIMIT", 0)
-    orig = G.scc_metadata
-    monkeypatch.setattr(
-        G, "scc_metadata", lambda e, limit=0: orig(e, 0)
-    )
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
     base = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 4), (5, 6), (6, 5)],
         "src long, dst long",
@@ -5440,11 +5563,12 @@ def test_scc_maintainers_distributed_fallback(spark, monkeypatch):
     assert got2 == want2
 
 
-def test_cc_metadata_matches_distributed(spark):
+def test_cc_metadata_matches_distributed(spark, monkeypatch):
     """cc_metadata (driver union-find under the edge guard) must be
     interchangeable bit-for-bit with the distributed loop, including
     the over-limit fallback — it now labels the incremental
     maintainers' delta meta-graphs."""
+    from terminus_server_spark.operators import path
     from terminus_server_spark.operators.graph import (
         cc_metadata,
         connected_components,
@@ -5463,8 +5587,8 @@ def test_cc_metadata_matches_distributed(spark):
             for r in connected_components(edges).collect()}
     fast = {(r.node, r.component) for r in cc_metadata(edges).collect()}
     assert fast == dist
-    fallback = {(r.node, r.component)
-                for r in cc_metadata(edges, limit=2).collect()}
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
+    fallback = {(r.node, r.component) for r in cc_metadata(edges).collect()}
     assert fallback == dist
     empty = spark.createDataFrame([], "src string, dst string")
     assert cc_metadata(empty).count() == 0
@@ -5474,11 +5598,9 @@ def test_cc_maintainers_distributed_fallback(spark, monkeypatch):
     """Force the distributed fallback inside the cc maintainers and
     re-prove equality with batch CC."""
     from terminus_server_spark.operators import graph as G
+    from terminus_server_spark.operators import path
 
-    orig = G.cc_metadata
-    monkeypatch.setattr(
-        G, "cc_metadata", lambda e, limit=None: orig(e, 0)
-    )
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
     base = spark.createDataFrame(
         [(1, 2), (3, 4), (5, 6)], "src long, dst long"
     )
@@ -5500,7 +5622,8 @@ def test_cc_maintainers_distributed_fallback(spark, monkeypatch):
     assert got2 == want2
 
 
-def test_scc_metadata_matches_distributed(spark):
+def test_scc_metadata_matches_distributed(spark, monkeypatch):
+    from terminus_server_spark.operators import path
     from terminus_server_spark.operators.graph import (
         scc_metadata,
         strongly_connected_components,
@@ -5525,7 +5648,8 @@ def test_scc_metadata_matches_distributed(spark):
     assert meta == fast
 
     # over-limit guard: falls back to the distributed loop, same rows
-    fallback = {(r.node, r.component) for r in scc_metadata(edges, limit=3).collect()}
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
+    fallback = {(r.node, r.component) for r in scc_metadata(edges).collect()}
     assert fallback == fast
 
     # empty edge frame: empty typed result, not an error

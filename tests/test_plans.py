@@ -737,3 +737,42 @@ def test_one_canonical_edge_store():
             if n:
                 hits.append(f"{rel}: {n} x {pattern}")
     assert hits == []
+
+
+def test_one_driver_walk_guard():
+    """Small graphs walk on the driver under one size guard:
+    ``path.collect_small`` alone holds a ``limit(N + 1).collect()``,
+    and no module keeps its own limit or its own driver BFS."""
+    import ast
+    import pathlib
+    import re
+
+    import terminus_server_spark
+
+    root = pathlib.Path(terminus_server_spark.__file__).parent
+    gone = {"_DRIVER_WALK_LIMIT", "_METADATA_SCC_LIMIT", "_bfs_depths"}
+    guard = r"\.limit\([^()]*\+\s*1\s*\)\s*\.collect\(\)"
+    hits = []
+    for src in sorted(root.rglob("*.py")):
+        rel = src.relative_to(root).as_posix()
+        text = src.read_text()
+        tree = ast.parse(text)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Store):
+                name = node.id
+            elif isinstance(node, ast.FunctionDef):
+                name = node.name
+            else:
+                continue
+            if name in gone:
+                hits.append(f"{rel}:{node.lineno} {name}")
+        n = len(re.findall(guard, text))
+        if rel == "operators/path.py":
+            n -= sum(
+                len(re.findall(guard, ast.get_source_segment(text, f)))
+                for f in tree.body
+                if isinstance(f, ast.FunctionDef) and f.name == "collect_small"
+            )
+        if n:
+            hits.append(f"{rel}: {n} x limit(N + 1).collect()")
+    assert hits == []

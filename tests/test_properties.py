@@ -44,6 +44,23 @@ def test_transitive_closure_matches_python_oracle(spark, edges):
 
 
 @settings(**SETTINGS)
+@given(edge_lists, node_ids)
+def test_anchored_closure_matches_python_oracle(spark, edges, anchor):
+    """The anchored closure is the full closure filtered on its anchor,
+    on the driver walk and on the distributed loop alike."""
+    from unittest import mock
+
+    from terminus_server_spark.operators import path
+
+    df = spark.createDataFrame(edges, "src int, dst int")
+    want = {e for e in _py_closure(edges) if e[0] == anchor}
+    for limit in (path._DRIVER_LIMIT, 0):
+        with mock.patch.object(path, "_DRIVER_LIMIT", limit):
+            got = {(r.src, r.dst) for r in path.anchored_closure(df, [anchor]).collect()}
+        assert got == want, limit
+
+
+@settings(**SETTINGS)
 @given(edge_lists)
 def test_components_partition_the_node_set(spark, edges):
     from terminus_server_spark.operators.graph import connected_components

@@ -148,10 +148,11 @@ def test_log_walk_covers_a_long_linear_history(spark, monkeypatch, walk):
     """The ancestor walk reaches the root of a 1,200-commit chain, on
     the driver BFS and on the distributed semi-naive loop alike — no
     depth cap truncates the history."""
+    from terminus_server_spark.operators import path
     from terminus_server_spark.versioning import dag
 
     if walk == "distributed":
-        monkeypatch.setattr(dag, "_DRIVER_WALK_LIMIT", 0)
+        monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
     n = 1200
     ids = [f"c{i:04d}" for i in range(n)]
     commits = spark.createDataFrame(
@@ -165,6 +166,7 @@ def test_log_walk_covers_a_long_linear_history(spark, monkeypatch, walk):
 def test_distributed_walks_match_driver_walks(spark, monkeypatch):
     """log_walk, reachable_commits and merge_base give the same answer
     on the distributed loop as on the driver BFS (merges included)."""
+    from terminus_server_spark.operators import path
     from terminus_server_spark.versioning import dag
 
     commits = spark.createDataFrame(
@@ -183,7 +185,7 @@ def test_distributed_walks_match_driver_walks(spark, monkeypatch):
         )
 
     driver = answers()
-    monkeypatch.setattr(dag, "_DRIVER_WALK_LIMIT", 0)
+    monkeypatch.setattr(path, "_DRIVER_LIMIT", 0)
     assert answers() == driver
     assert driver[2] == [("c", 2, 2)]
 
